@@ -10692,10 +10692,9 @@ _register("x146_privacy_release_chain", _x146, _x146_sql())
 
 
 # --------------------------------------------------------------------------
-# Round-9 unfreeze: the five staged queries (staged_queries.py rounds 7-8)
-# registered per the r8 verdict. Each passed the exact staged gate
-# (tests/test_staged_queries.py) at sf0.001 AND sf0.01 plus the lint's core
-# bans before this move; the code is verbatim from the staging module.
+# Round-9 unfreeze: five queries registered per the r8 verdict. Each
+# passed the exact oracle gate at sf0.001 AND sf0.01 plus the lint's core
+# bans before registration.
 
 
 # Calibrated to the synthetic corpus: the driver embeddings are
@@ -10997,12 +10996,10 @@ _register("xs5_guarded_lsh_pairs", _xs5, _xs5_sql())
 
 
 # --------------------------------------------------------------------------
-# Round-11 registration: the nine staged queries (staged_queries.py round
-# 10) registered per the r10 verdict. Each passed the exact staged gate
-# (tests/test_staged_queries.py) at sf0.001 AND sf0.01 plus the lint's core
-# bans, the oracle dtype-pairing audit, and the registration rehearsal
-# before this move; the code is verbatim from the staging module (the one
-# refactor: xs12's oracle now composes _xs7_perdoc_sql() instead of
+# Round-11 registration: nine queries registered per the r10 verdict.
+# Each passed the exact oracle gate at sf0.001 AND sf0.01 plus the lint's
+# core bans and the oracle dtype-pairing audit before registration (the
+# one refactor: xs12's oracle now composes _xs7_perdoc_sql() instead of
 # string-splitting xs7's SQL — r10 ADVICE item 3).
 
 

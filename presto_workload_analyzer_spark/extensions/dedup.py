@@ -80,9 +80,9 @@ def gram_array_of(toks: Column, k: int) -> Column:
     for callers that hold a `__toks` projection (the LM scorers built
     gram_array(array_join(__toks, ' '), 2), paying a join + k+1 re-splits
     per row for tokens that whitespace-splitting guarantees contain no
-    whitespace, so join-then-resplit is the identity; a NULL array yields
-    an empty gram array where the string path yielded NULL — identical to
-    every consumer, which explodes the result)."""
+    whitespace, so join-then-resplit is the identity). A NULL array
+    yields an empty gram array; gram_array routes through here, so NULL
+    text yields the same empty array on the string path."""
     m = F.size(toks) - (k - 1)
     grams = F.slice(toks, 1, m)
     for j in range(1, k):

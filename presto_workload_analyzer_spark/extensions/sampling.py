@@ -590,140 +590,3 @@ def unimax_allocations_py(
             if src not in out:
                 out[src] = share
     return out
-
-
-def repeat_decay_powers(decay: float, max_epochs: int) -> list[float]:
-    """The exact IEEE doubles both engines embed as literals: decay^i for
-    i in 0..max_epochs, computed by repeated multiplication in Python and
-    passed into Spark and the SQL oracle via repr — so neither engine's
-    pow() rounding is ever on the hash path."""
-    out = [1.0]
-    for _ in range(max_epochs):
-        out.append(out[-1] * decay)
-    return out
-
-
-def repeat_decay_mix(
-    per_source: DataFrame,
-    source_col: str,
-    tokens_col: str,
-    budget: float,
-    decay: float = 0.5,
-    max_epochs: int = 8,
-) -> DataFrame:
-    """Data-constrained epoch allocation with diminishing repeat value —
-    the allocation shape of Muennighoff et al. 2023 ("Scaling
-    Data-Constrained Language Models", arXiv:2305.16264): repeating a
-    source's tokens for a k-th epoch is worth less than fresh data, here
-    a geometric decay (epoch k of source s carries marginal value
-    t_s * decay^(k-1)). Under a total token budget the value-maximizing
-    allocation is the plain greedy over (source, epoch) cells in
-    marginal-value order — optimal because marginals strictly decrease
-    in k within every source, so the greedy can never strand a
-    better cell (the fractional knapsack argument; the boundary cell
-    takes the leftover budget as a fractional epoch).
-
-    Deterministic contract (replayed verbatim by the SQL oracle):
-      * cell value = t_s * decay^(k-1), with decay powers embedded as
-        EXACT literals (repeat_decay_powers) — integer x literal
-        products, identical doubles on both engines;
-      * greedy order = (value DESC, source ASC, epoch ASC);
-      * cells whose exclusive prefix cost fits the budget fill whole;
-        the single boundary cell takes (budget - prefix)/t_s of an
-        epoch; later cells get nothing;
-      * effective tokens = t_s * (sum_{i<m} decay^i + f * decay^m) with
-        the geometric partial sums ALSO embedded as exact literals — no
-        engine-side pow(), no order-dependent float summation.
-
-    Input: a SOURCE-GRAIN table (one row per source, tokens >= 1 — the
-    unimax_mix precondition). The (source x epoch) grid is bounded
-    (#sources x max_epochs — sources are a curated enum at any corpus
-    scale), so the greedy's rank and prefix sums come from a broadcast
-    triangular self-join on the grid (kept deliberately: the r16
-    window form tripped the STAGED-query lint, which is stricter than
-    the registered one — every staged window must carry a partition
-    spec — and this operator's only consumer, xs41, is staged; nothing
-    corpus-grain past the caller's one token aggregate either way).
-
-    Output: (source, tokens_available, epochs_full, epoch_fraction,
-    tokens_allocated, effective_tokens); sum(tokens_allocated) =
-    min(budget, max_epochs * total) exactly (up to the 6dp emit
-    rounding)."""
-    if max_epochs < 1:
-        raise ValueError(f"max_epochs must be >= 1, got {max_epochs}")
-    if not 0.0 < decay <= 1.0:
-        raise ValueError(f"decay must be in (0, 1], got {decay}")
-    b = float(budget)
-    pows = repeat_decay_powers(decay, max_epochs)
-    geo = [0.0]
-    for i in range(max_epochs):
-        geo.append(geo[-1] + pows[i])
-
-    per = per_source.select(
-        F.col(source_col).alias("__src"),
-        F.col(tokens_col).cast("long").alias("__t"),
-    )
-    ks = F.array(*[F.lit(k) for k in range(1, max_epochs + 1)])
-    pow_of_k = F.element_at(
-        F.array(*[F.lit(p) for p in pows]), F.col("__k")
-    )  # pows[k-1] (1-based element_at)
-    grid = per.select(
-        "__src", "__t", F.explode(ks).alias("__k")
-    ).withColumn("__val", F.col("__t") * pow_of_k)
-    rhs = F.broadcast(
-        grid.select(
-            F.col("__src").alias("__src2"),
-            F.col("__t").alias("__t2"),
-            F.col("__k").alias("__k2"),
-            F.col("__val").alias("__val2"),
-        )
-    )
-    before = (
-        (F.col("__val2") > F.col("__val"))
-        | (
-            (F.col("__val2") == F.col("__val"))
-            & (
-                (F.col("__src2") < F.col("__src"))
-                | (
-                    (F.col("__src2") == F.col("__src"))
-                    & (F.col("__k2") < F.col("__k"))
-                )
-            )
-        )
-    )
-    walked = (
-        grid.join(rhs, before, "left")
-        .groupBy("__src", "__t", "__k")
-        .agg(F.coalesce(F.sum("__t2"), F.lit(0)).alias("__cum"))
-    )
-    full = (F.col("__cum") + F.col("__t")) <= F.lit(b)
-    frac = F.when(
-        ~full & (F.col("__cum") < F.lit(b)),
-        (F.lit(b) - F.col("__cum")) / F.col("__t"),
-    ).otherwise(F.lit(0.0))
-    cells = walked.select(
-        "__src",
-        "__t",
-        full.cast("long").alias("__full"),
-        frac.alias("__frac"),
-    )
-    agg = cells.groupBy("__src", "__t").agg(
-        F.sum("__full").cast("long").alias("__m"),
-        F.max("__frac").alias("__f"),
-    )
-    geo_of_m = F.element_at(
-        F.array(*[F.lit(g) for g in geo]), (F.col("__m") + 1).cast("int")
-    )  # geo[m]
-    pow_of_m = F.element_at(
-        F.array(*[F.lit(p) for p in pows]), (F.col("__m") + 1).cast("int")
-    )  # pows[m]
-    eff = F.col("__t") * (geo_of_m + F.col("__f") * pow_of_m)
-    alloc = F.col("__t") * (F.col("__m") + F.col("__f"))
-    return agg.select(
-        F.col("__src").alias(source_col),
-        F.col("__t").alias("tokens_available"),
-        F.col("__m").alias("epochs_full"),
-        F.round(F.col("__f") + 1e-9, 6).alias("epoch_fraction"),
-        F.round(alloc + 1e-9, 6).alias("tokens_allocated"),
-        F.round(eff + 1e-9, 6).alias("effective_tokens"),
-    )

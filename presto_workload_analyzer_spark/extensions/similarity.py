@@ -843,139 +843,3 @@ def mmr_rerank(
             if s > maxsim[i]:
                 maxsim[i] = s
     return out
-
-
-def _sqdist_to_literal(v: Column, center: list[float]) -> Column:
-    """Rounded squared euclidean distance from a vector column to a
-    DRIVER-HELD centroid, in the exact expression shape the SQL oracle
-    replays: (dot(v,v) - 2*dot(v,c)) + dot(c,c), each dot an in-order
-    fold, then round(x + 1e-9, 6). dot(c,c) is folded in Python over
-    the same rounded doubles (left-to-right — the order DuckDB's
-    list_dot_product uses), so both engines combine IDENTICAL operands
-    with identical parenthesization."""
-    c_lit = F.array([F.lit(float(x)) for x in center])
-    cc = 0.0
-    for x in center:
-        cc += float(x) * float(x)
-    d = (dot_expr(v, v) - F.lit(2.0) * dot_expr(v, c_lit)) + F.lit(cc)
-    return F.round(d + F.lit(1e-9), 6)
-
-
-def _kmeans_assign_cols(v: Column, cents: list[list[float]]) -> tuple[Column, Column]:
-    """(cluster, dist) columns: argmin over the centroid literals with
-    ties broken to the LOWEST cluster index (strict < keeps the earlier
-    winner)."""
-    dists = [_sqdist_to_literal(v, c) for c in cents]
-    # r16 shape fix: the previous when/least fold referenced each dist
-    # expression up to 3x (when-cond + least chain + the otherwise
-    # accumulation), so the k full dot products evaluated ~k^2/2 times
-    # per row. array_min over (dist, index) structs references each
-    # once; lexicographic struct comparison IS the old argmin (strict <
-    # keeps the earlier winner: equal dists compare on the index, lowest
-    # wins — and a NULL vector yields NULL dists in every slot, where
-    # NULL-first field ordering picks index 0 with a NULL dist, exactly
-    # the old fold's result).
-    best = F.array_min(
-        F.array(
-            *[
-                F.struct(d.alias("d"), F.lit(j).alias("j"))
-                for j, d in enumerate(dists)
-            ]
-        )
-    )
-    return best["j"].cast("long"), best["d"]
-
-
-def kmeans_centroids(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 4,
-    iters: int = 3,
-) -> list[list[float]]:
-    """Lloyd's k-means centroid trajectory, run to `iters` updates and
-    returned as the final k centroids (cluster index = position).
-
-    Published use: D4 (Tirumala et al. 2023) clusters the corpus
-    embeddings with k-means before pruning prototypes/duplicates per
-    cluster; SemDeDup (Abbas et al. 2023) scopes its cosine dedup to
-    k-means cells. This is the exact-replay grade of that step — MLlib's
-    KMeans (used inside ivf_topk, where only recall matters) cannot be
-    hash-gated across engines; this one can, via the x119/xs32
-    falsifiability pattern: every quantity either IS identical on both
-    engines (in-order dot folds over identical doubles) or is ROUNDED to
-    6dp before reuse (distances before the argmin, centroid components
-    after every mean), so one wrong argmax/tie-break/mean anywhere in
-    the trajectory is a hash mismatch, not drift.
-
-    Deterministic contract (replayed verbatim by the SQL oracle):
-      * seeds = the k LOWEST ids in id order; cluster j is the j-th
-        lowest (seed components rounded like any update);
-      * assignment: rounded squared-euclidean argmin, ties to the
-        lowest cluster index;
-      * update: per-dimension mean over members, rounded to 6dp;
-      * a cluster that empties raises ValueError (loud, named) — the
-        oracle has no silent keep-old-centroid branch to drift against.
-
-    Distributed shape (the BPE/k-center discipline): centroids are a
-    driver-held k x dims table (bounded, like BPE's merge list);
-    each iteration is ONE scan-speed assignment pass (k in-order folds
-    per row against broadcast literals) feeding label_centroids'
-    (k x dims)-grain mean — a shuffle independent of corpus rows — and
-    a k-row collect. iters+1 scans total; no window, no UDF, no
-    corpus-sized driver state.
-    """
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    if iters < 0:
-        raise ValueError(f"iters must be >= 0, got {iters}")
-    df = emb.select(
-        F.col(id_col).alias("id"), _to_double(F.col(vec_col)).alias("v")
-    )
-    seed_rows = df.orderBy("id").limit(k).collect()
-    if len(seed_rows) < k:
-        raise ValueError(
-            f"kmeans_centroids: {len(seed_rows)} rows < k={k}"
-        )
-    cents = [[round(x + 1e-9, 6) for x in r["v"]] for r in seed_rows]
-    for _ in range(iters):
-        cl, _d = _kmeans_assign_cols(F.col("v"), cents)
-        mem = df.select(cl.alias("cluster"), "v")
-        rows = label_centroids(mem, "cluster", "v").collect()
-        if len(rows) < k:
-            raise ValueError(
-                f"kmeans_centroids: a cluster emptied ({len(rows)} < {k})"
-            )
-        by_cl = {int(r["label"]): r["centroid"] for r in rows}
-        cents = [
-            [round(x + 1e-9, 6) for x in by_cl[j]] for j in range(k)
-        ]
-    return cents
-
-
-def kmeans_lloyd(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 4,
-    iters: int = 3,
-    cents: list[list[float]] | None = None,
-) -> DataFrame:
-    """Lloyd's k-means assignment under the post-`iters`-update
-    centroids (kmeans_centroids' contract): one final scan-speed
-    assignment pass. Returns (id, cluster, dist) — dist is the rounded
-    squared euclidean to the assigned centroid (the quantity the argmin
-    ran on, so the gate hashes the decision itself).
-
-    Pass `cents` (a kmeans_centroids result) to assign under an
-    already-computed trajectory — the shared-silver path: several
-    consumers (assignment, prototypicality rank, streaming cell
-    monitor) read the SAME trained centroids, so the iteration cost is
-    paid once per (session, corpus), not once per consumer."""
-    if cents is None:
-        cents = kmeans_centroids(emb, id_col, vec_col, k=k, iters=iters)
-    df = emb.select(
-        F.col(id_col).alias("id"), _to_double(F.col(vec_col)).alias("v")
-    )
-    cl, d = _kmeans_assign_cols(F.col("v"), cents)
-    return df.select("id", cl.alias("cluster"), d.alias("dist"))

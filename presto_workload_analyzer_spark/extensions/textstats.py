@@ -2361,116 +2361,3 @@ def heldout_jm_kn_nll(
             F.sum("nll_kn").alias("sum_nll_kn"),
         )
     )
-
-
-def readability_stats(
-    df: DataFrame, id_col: str, text_col: str
-) -> DataFrame:
-    """Per-document readability components + Flesch-Kincaid-style grade —
-    the curriculum-difficulty signal (easy-first data ordering and
-    difficulty-stratified reporting both consume it; Flesch 1948 /
-    Kincaid et al. 1975 are the published formula family).
-
-    Deterministic, engine-twinned definitions (the oracle replays each
-    verbatim):
-      * sentences: non-empty trimmed pieces of a `[.!?]+` split, floored
-        at 1 (a fragment with no terminal punctuation is one sentence);
-      * words: the engine's standard token stream (lowercased,
-        whitespace-split, empty-dropped);
-      * syllables(word): count of `[aeiouy]+` vowel GROUPS, floored at 1
-        (the classic cheap proxy — consonant-only tokens count 1);
-      * grade = 0.39*(words/sentences) + 11.8*(syllables/words) - 15.59,
-        computed from EXACT integer sums in one fixed expression, so both
-        engines produce the identical IEEE double per document.
-
-    Rows with zero words are dropped (no grade is defined). Output:
-    (id, n_sentences, n_words, n_syllables, fk_grade) — fk_grade is the
-    raw double; callers round at their grain.
-
-    100 TB: pure Column expressions at parquet scan speed — one regexp
-    split per definition, an in-row TRANSFORM/AGGREGATE fold for the
-    syllable sum, no shuffle at all at this grain."""
-    col = F.col(text_col)
-    sent = F.greatest(
-        F.size(
-            F.filter(
-                F.split(col, r"[.!?]+"), lambda x: F.trim(x) != ""
-            )
-        ),
-        F.lit(1),
-    )
-    words = F.filter(
-        F.transform(tokens(col), lambda t: F.lower(t)),
-        lambda w: w != "",
-    )
-    syl = F.aggregate(
-        F.transform(
-            words,
-            lambda w: F.greatest(
-                F.size(F.regexp_extract_all(w, F.lit(r"[aeiouy]+"), F.lit(0))),
-                F.lit(1),
-            ),
-        ),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
-    out = df.select(
-        F.col(id_col).alias("id"),
-        sent.cast("long").alias("n_sentences"),
-        F.size(words).cast("long").alias("n_words"),
-        syl.cast("long").alias("n_syllables"),
-    ).filter(F.col("n_words") > 0)
-    grade = (
-        0.39 * (F.col("n_words") / F.col("n_sentences"))
-        + 11.8 * (F.col("n_syllables") / F.col("n_words"))
-        - 15.59
-    )
-    return out.withColumn("fk_grade", grade)
-
-
-def row_local_term_counts(toks: Column) -> Column:
-    """Per-row (word, count) pairs over a token array — computed entirely
-    ROW-LOCALLY, so a streaming consumer can explode it into a
-    vocabulary-grain stateful aggregation without ever holding
-    (word, doc)-grain state (Spark supports only one stateful
-    aggregation per streaming query, so the per-doc count cannot be its
-    own groupBy stage there).
-
-    Single O(n log n) pass: sort the array, mark run starts/ends by
-    zipping the sorted array against its one-shifted selves (zip_with
-    pads nothing here — both shifts are built to length n), then pair
-    run words with run lengths positionally. No element_at rescans, no
-    per-step accumulator copies — the previous formulation
-    (array_distinct x an `aggregate` rescan per distinct word) was
-    O(distinct_words x doc_len) per row, ~2x10^9 comparisons for a
-    100k-token doc with a 20k vocabulary; this is ~1.7x10^6.
-
-    Empty arrays yield an empty pair array (explode then drops the row).
-    Returns array<struct<w string, c long>>.
-    """
-    s = F.array_sort(toks)
-    n = F.size(s)
-    tail_len = F.greatest(n - 1, F.lit(0))
-    null_s = F.array(F.lit(None).cast("string"))
-    prv = F.concat(null_s, F.slice(s, 1, tail_len))
-    nxt = F.concat(F.slice(s, 2, tail_len), null_s)
-    is_start = F.zip_with(s, prv, lambda a, b: b.isNull() | (a != b))
-    is_end = F.zip_with(s, nxt, lambda a, b: b.isNull() | (a != b))
-    starts = F.filter(
-        F.transform(is_start, lambda f, i: F.when(f, i)),
-        lambda v: v.isNotNull(),
-    )
-    ends = F.filter(
-        F.transform(is_end, lambda f, i: F.when(f, i)),
-        lambda v: v.isNotNull(),
-    )
-    run_words = F.filter(
-        F.zip_with(s, is_start, lambda a, f: F.when(f, a)),
-        lambda v: v.isNotNull(),
-    )
-    counts = F.zip_with(ends, starts, lambda e, st: (e - st + 1).cast("long"))
-    pairs = F.zip_with(
-        run_words, counts, lambda w, c: F.struct(w.alias("w"), c.alias("c"))
-    )
-    empty = F.array().cast("array<struct<w:string,c:bigint>>")
-    return F.when(n > 0, pairs).otherwise(empty)

@@ -147,10 +147,7 @@ def append_silver(silver: dict[str, DataFrame], out_dir: str) -> None:
     old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
-        for name, df in _dated(silver).items():
-            df.write.mode("overwrite").partitionBy("query_date").parquet(
-                f"{out_dir}/{name}"
-            )
+        write_silver(silver, out_dir)
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
 

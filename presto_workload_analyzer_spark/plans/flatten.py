@@ -141,7 +141,7 @@ def iter_plan_rows(query_id: str, fragments_json: str | None) -> Iterator[dict]:
         return
     try:
         fragments = json.loads(fragments_json)
-    except ValueError:
+    except (ValueError, RecursionError):
         return
     for frag in fragments or []:
         root = (frag or {}).get("root")
@@ -182,7 +182,10 @@ def iter_plan_rows(query_id: str, fragments_json: str | None) -> Iterator[dict]:
             return deepest_row
 
         emitted: list[dict] = []
-        walk(root, None, 0)
+        try:
+            walk(root, None, 0)
+        except RecursionError:  # too deep to walk: skip it like one too deep to parse
+            continue
         yield from emitted
 
 
@@ -207,7 +210,7 @@ def iter_task_rows(query_id: str, substages_json: str | None) -> Iterator[dict]:
         return
     try:
         stages = json.loads(substages_json)
-    except ValueError:
+    except (ValueError, RecursionError):
         return
 
     def walk(stage_list: list, path: str) -> Iterator[dict]:

@@ -201,8 +201,8 @@ def summarize_queryinfo(doc: dict) -> dict | None:
             "inputs": json.dumps(doc.get("inputs")) if doc.get("inputs") is not None else None,
             "output": json.dumps(doc.get("output")) if doc.get("output") is not None else None,
         }
-    except (KeyError, TypeError, ValueError):
-        return None
+    except (KeyError, TypeError, ValueError, RecursionError):
+        return None  # RecursionError: nesting too deep for json.dumps
 
 
 def extract_queryinfo(spark: SparkSession, input_path: str | list[str]) -> DataFrame:
@@ -226,8 +226,8 @@ def extract_queryinfo(spark: SparkSession, input_path: str | list[str]) -> DataF
             for txt in pdf["value"]:
                 try:
                     doc = json.loads(txt)
-                except ValueError:
-                    continue  # non-JSON file, skip (extract.py:204-205)
+                except (ValueError, RecursionError):
+                    continue  # non-JSON or too deeply nested, skip (extract.py:204-205)
                 rec = summarize_queryinfo(doc)
                 if rec is not None:
                     rows.append(rec)

@@ -4525,728 +4525,6 @@ def test_fused_reference_delta_equals_two_heldout_calls(spark):
         assert abs(r["delta"] - want) < 1e-9, i
 
 
-def test_xs37_kmeans_calibration_on_corpus():
-    """xs37/xs38/s23's calibration pins, checked over the shared oracle
-    chain at ALL THREE gate SFs (the tier-4 comment's claim — sf0.1
-    adds ~3 s, min rounding margin there 6.8e-4): (a) every cluster
-    stays non-empty at every
-    iteration (the Python side raises on an emptied cluster — the gates
-    prove the branch never fires on these corpora); (b) centroid MEAN
-    components — the ONE cross-engine-risky quantity (summation order
-    differs, everything else is identical-operand in-order arithmetic) —
-    sit >= 1e-6 away from their 6dp rounding cliff — the worst-case
-    cross-engine drift of a mean over n <= 20k unit-scale doubles is
-    ~n*eps ~ 4e-12, i.e. 4e-6 of one 1e-6 rounding step, so 1e-6 in
-    frac-of-step space is >= 10x that bound (observed minimum 2.2e-6 at
-    sf0.001); (c) the iterations genuinely move
-    assignments (a1 != final for some vector), so the trajectory is a
-    real decision sequence, not a fixed point hashed four times."""
-    from presto_workload_analyzer_spark.staged_queries import (
-        _XS37_ITERS,
-        _XS37_K,
-        _kmeans_sql_chain,
-    )
-
-    for sf in ("0.001", "0.01", "0.1"):
-        con = _staged_emb_con(sf)
-        chain = _kmeans_sql_chain()
-        for t in range(1, _XS37_ITERS + 2):
-            n_cl, n_min = con.sql(
-                chain + f" SELECT count(DISTINCT cl),"
-                f" min(cnt) FROM (SELECT cl, count(*) AS cnt FROM a{t}"
-                " GROUP BY 1) g"
-            ).fetchone()
-            assert n_cl == _XS37_K, f"sf{sf} iter {t}: {n_cl} clusters"
-            assert n_min >= 5, f"sf{sf} iter {t}: near-empty cluster {n_min}"
-        for t in range(1, _XS37_ITERS + 1):
-            margin = con.sql(
-                chain + f" SELECT min(abs((((m + 1e-9) * 1e6) % 1) - 0.5))"
-                f" FROM m{t}"
-            ).fetchone()[0]
-            assert margin > 1e-6, (
-                f"sf{sf} iter {t}: centroid mean within {margin} of its"
-                " rounding cliff — cross-engine flip risk; recalibrate k/iters."
-            )
-        moved = con.sql(
-            chain + f" SELECT count(*) FROM a1 JOIN a{_XS37_ITERS + 1} f"
-            " ON f.vec_id = a1.vec_id AND f.cl <> a1.cl"
-        ).fetchone()[0]
-        assert moved > 0, f"sf{sf}: Lloyd iterations never moved a vector"
-
-
-def test_xs39_coverage_discriminates_on_corpus():
-    """xs39's calibration pin: coverage must strictly increase across
-    the vocab sizes and genuinely discriminate at the small end (top-64
-    words cover well under everything) at both gate SFs."""
-    from presto_workload_analyzer_spark.staged_queries import xs39_sql
-
-    for sf in ("0.001", "0.01"):
-        con = _staged_con(sf)
-        rows = con.sql(
-            "SELECT vocab_size, coverage, n_words FROM ("
-            + xs39_sql()
-            + ") ORDER BY vocab_size"
-        ).fetchall()
-        covs = [r[1] for r in rows]
-        assert covs == sorted(covs) and len(set(covs)) == len(covs), (
-            f"sf{sf}: coverage not strictly increasing: {covs}"
-        )
-        assert covs[0] < 0.5, f"sf{sf}: top-2 already covers {covs[0]}"
-
-
-def test_kmeans_matches_python_reference(spark):
-    """similarity.kmeans_lloyd vs a pure-python Lloyd replay with the
-    identical contract (lowest-id seeds, rounded-distance argmin with
-    lowest-index ties, 6dp-rounded means) on a small synthetic frame —
-    the kcenter/KN falsifiability pattern: the distributed formulation
-    must reproduce the sequential semantics bit-for-bit."""
-    import random
-
-    from presto_workload_analyzer_spark.extensions.similarity import (
-        kmeans_lloyd,
-    )
-
-    rng = random.Random(7)
-    rows = [(i, [round(rng.uniform(-1, 1), 3) for _ in range(4)]) for i in range(40)]
-    df = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
-    got = {
-        r["id"]: (r["cluster"], r["dist"])
-        for r in kmeans_lloyd(df, "vec_id", "embedding", k=3, iters=2).collect()
-    }
-
-    def rnd(x):
-        import decimal
-        # python round() is banker's; replay Spark/DuckDB HALF_UP
-        return float(
-            decimal.Decimal(repr(x + 1e-9)).quantize(
-                decimal.Decimal("0.000001"), rounding=decimal.ROUND_HALF_UP
-            )
-        )
-
-    def dot(a, b):
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc += x * y
-        return acc
-
-    def sqd(v, c):
-        return rnd((dot(v, v) - 2.0 * dot(v, c)) + dot(c, c))
-
-    data = {i: v for i, v in rows}
-    cents = [[rnd(x) for x in data[i]] for i in sorted(data)[:3]]
-    for _ in range(2):
-        asg = {}
-        for i, v in data.items():
-            ds = [sqd(v, c) for c in cents]
-            best = min(range(3), key=lambda j: (ds[j], j))
-            asg[i] = best
-        for j in range(3):
-            mem = [data[i] for i in data if asg[i] == j]
-            assert mem, "python replay emptied a cluster"
-            cents[j] = [
-                rnd(sum(v[p] for v in mem) / len(mem)) for p in range(4)
-            ]
-    for i, v in data.items():
-        ds = [sqd(v, c) for c in cents]
-        best = min(range(3), key=lambda j: (ds[j], j))
-        assert got[i] == (best, ds[best]), (i, got[i], (best, ds[best]))
-
-
-# -- TIER5 staged batch calibration pins (round-17 registration) --------
-
-
-def test_xs40_budget_table_discriminates_on_corpus():
-    """xs40's calibration pin: the candidate lengths must genuinely
-    span the corpus (loss share strictly decreasing in L, near-total
-    truncation at L=16, tail-only at L=96) at both gate SFs, and the
-    exact mass identity kept+lost = total tokens must hold per L."""
-    from presto_workload_analyzer_spark.staged_queries import xs40_sql
-
-    for sf in ("0.001", "0.01"):
-        con = _staged_con(sf)
-        rows = con.sql(
-            "SELECT seq_len, n_docs_truncated, tokens_kept, tokens_lost,"
-            " loss_share FROM (" + xs40_sql() + ") ORDER BY seq_len"
-        ).fetchall()
-        tot = con.sql(
-            "SELECT sum(len(string_split_regex(trim(text), '\\s+'))),"
-            " count(*) FROM documents WHERE text IS NOT NULL"
-        ).fetchone()
-        shares = [r[4] for r in rows]
-        assert shares == sorted(shares, reverse=True) and len(set(shares)) == 4
-        # doc lengths start at 10 tokens, so L=16 truncates MOST (not
-        # all) docs — the head of the curve must still be near-total
-        assert rows[0][1] > tot[1] * 0.85, f"sf{sf}: L=16 head {rows[0][1]}"
-        assert 0 < rows[-1][1] < tot[1] * 0.2, f"sf{sf}: L=96 tail {rows[-1][1]}"
-        for r in rows:
-            assert r[2] + r[3] == tot[0], f"sf{sf}: mass identity broken at {r}"
-
-
-def test_xs41_greedy_allocation_invariants_on_corpus():
-    """xs41's calibration pin + the greedy's own invariants at both gate
-    SFs: (a) sum(tokens_allocated) = min(budget, K * total) exactly (to
-    the 6dp emit rounding x #sources); (b) at most ONE source holds a
-    fractional epoch (the single boundary cell); (c) the allocation
-    genuinely varies across sources; (d) effective_tokens equals
-    tokens_allocated exactly when a source got <= 1 epoch and is
-    strictly smaller once repeats begin (the diminishing-returns
-    signature the operator exists to price)."""
-    from presto_workload_analyzer_spark.staged_queries import (
-        _XS41_BUDGET,
-        _XS41_EPOCHS,
-        xs41_sql,
-    )
-
-    for sf in ("0.001", "0.01"):
-        con = _staged_con(sf)
-        rows = con.sql(
-            "SELECT tokens_available, epochs_full, epoch_fraction,"
-            " tokens_allocated, effective_tokens FROM (" + xs41_sql() + ")"
-        ).fetchall()
-        total = sum(r[0] for r in rows)
-        alloc = sum(r[3] for r in rows)
-        expect = min(_XS41_BUDGET, _XS41_EPOCHS * total)
-        assert abs(alloc - expect) < 1e-4 * len(rows), (sf, alloc, expect)
-        fracs = [r for r in rows if 1e-9 < r[2] < 1 - 1e-9]
-        assert len(fracs) <= 1, f"sf{sf}: {len(fracs)} fractional sources"
-        eps = [r[1] + r[2] for r in rows]
-        assert max(eps) - min(eps) > 0.01, f"sf{sf}: flat allocation {eps[:3]}"
-        for t, m, f, al, eff in rows:
-            if m + f <= 1.0 + 1e-9:
-                assert abs(eff - al) < 2e-6, (sf, t, m, f, al, eff)
-            else:
-                assert eff < al - 1e-6, (sf, t, m, f, al, eff)
-
-
-def test_xs42_readability_discriminates_on_corpus():
-    """xs42's calibration pin at both gate SFs: the synthesized corpus
-    must hold real sentence structure (strictly more sentences than
-    docs), the easy threshold must split genuinely (overall p_easy away
-    from 0 and 1), and per-source pooled grades must spread (the
-    curriculum signal varies by source)."""
-    from presto_workload_analyzer_spark.staged_queries import xs42_sql
-
-    for sf in ("0.001", "0.01"):
-        con = _staged_con(sf)
-        nd, ns, lo_g, hi_g, lo_p, hi_p = con.sql(
-            "SELECT sum(n_docs), sum(total_sentences), min(fk_grade),"
-            " max(fk_grade), min(p_easy), max(p_easy)"
-            " FROM (" + xs42_sql() + ")"
-        ).fetchall()[0]
-        assert ns > 2 * nd, f"sf{sf}: sentence structure vacuous ({ns}/{nd})"
-        assert hi_g - lo_g > 0.1, f"sf{sf}: pooled grades flat ({lo_g}..{hi_g})"
-        assert 0.0 < lo_p and hi_p < 1.0, f"sf{sf}: p_easy saturated"
-
-
-def test_xs43_curriculum_is_monotone_permutation_on_corpus():
-    """xs43's calibration pin at both gate SFs: `position` must be an
-    exact permutation of 1..N, deciles must cover >= 8 distinct values
-    (quantile ties can merge a couple), every decile's positions must
-    form a contiguous block (decile d exhausts before d+1 starts — the
-    easy-first contract), and mean difficulty must strictly increase
-    from the first to the last decile (the schedule orders by the real
-    signal, not noise)."""
-    from presto_workload_analyzer_spark.staged_queries import (
-        _readability_perdoc_sql,
-        xs43_sql,
-    )
-
-    for sf in ("0.001", "0.01"):
-        con = _staged_con(sf)
-        n, npos, lo, hi, ndec = con.sql(
-            "SELECT count(*), count(DISTINCT position), min(position),"
-            " max(position), count(DISTINCT decile) FROM (" + xs43_sql() + ")"
-        ).fetchall()[0]
-        assert (npos, lo, hi) == (n, 1, n), f"sf{sf}: not a permutation"
-        assert ndec >= 8, f"sf{sf}: only {ndec} deciles"
-        overlaps = con.sql(
-            "WITH q AS (" + xs43_sql() + "),"
-            " b AS (SELECT decile, min(position) AS lo, max(position) AS hi,"
-            "  count(*) AS n FROM q GROUP BY 1)"
-            " SELECT count(*) FROM b WHERE hi - lo + 1 <> n"
-        ).fetchone()[0]
-        assert overlaps == 0, f"sf{sf}: deciles interleave in the schedule"
-        first, last = con.sql(
-            "WITH q AS (" + xs43_sql() + "),"
-            " g AS (" + _readability_perdoc_sql() + " SELECT doc_id, gr"
-            "  FROM perdoc)"
-            " SELECT"
-            "  avg(CASE WHEN decile = (SELECT min(decile) FROM q)"
-            "   THEN gr END),"
-            "  avg(CASE WHEN decile = (SELECT max(decile) FROM q)"
-            "   THEN gr END)"
-            " FROM q JOIN g USING (doc_id)"
-        ).fetchall()[0]
-        assert last - first > 1.0, f"sf{sf}: decile grades flat ({first}..{last})"
-
-
-def test_xs43_decile_boundaries_match_cross_engine(spark):
-    """xs43's decile boundaries come from Spark approx_percentile, the
-    oracle's from DuckDB quantile_disc (the xs30 risk, on a different
-    value column): pin the two rank conventions agreeing
-    element-for-element on the rounded grade at all three gate SFs
-    before xs43 registers."""
-    from pyspark.sql import functions as F
-
-    from presto_workload_analyzer_spark.extensions import textstats
-    from presto_workload_analyzer_spark.staged_queries import (
-        _XS43_DECILES,
-        _readability_perdoc_sql,
-        _synth_sentence_docs,
-    )
-
-    for sf in ("0.001", "0.01", "0.1"):
-        synth = _synth_sentence_docs(spark, f"/root/testdata/sf{sf}")
-        lg = textstats.readability_stats(synth, "doc_id", "text").select(
-            F.round(F.col("fk_grade") + F.lit(1e-9), 6).alias("__g")
-        )
-        accuracy = min(max(1_000_000, 10 * lg.count()), 10_000_000)
-        pcts = ", ".join(f"{p}D" for p in _XS43_DECILES)
-        spark_b = lg.select(
-            F.expr(f"approx_percentile(__g, array({pcts}), {accuracy})")
-        ).collect()[0][0]
-        qpcts = ", ".join(repr(p) for p in _XS43_DECILES)
-        con = _staged_con(sf)
-        duck_b = con.sql(
-            _readability_perdoc_sql()
-            + f" SELECT quantile_disc(round(gr + 1e-9, 6), [{qpcts}])"
-            " FROM perdoc"
-        ).fetchone()[0]
-        assert list(spark_b) == list(duck_b), (
-            f"sf{sf}: decile boundary conventions diverge —"
-            f" spark {spark_b} vs duckdb {duck_b}"
-        )
-
-
-def test_readability_stats_definitions(spark):
-    """Unit pin for the engine-twinned readability definitions on
-    punctuated fixtures (the synthetic corpus has no native punctuation,
-    so the sentence path needs its own fixture): sentence floor,
-    terminal-split semantics, vowel-group syllables with the
-    consonant-only floor, and the exact FK expression."""
-    from presto_workload_analyzer_spark.extensions.textstats import (
-        readability_stats,
-    )
-
-    df = spark.createDataFrame(
-        [
-            (1, "The cat sat. The dog ran! Did it?"),
-            (2, "no punctuation here at all"),
-            (3, "Rhythm myths..."),
-            (4, "   "),
-        ],
-        "doc_id LONG, text STRING",
-    )
-    rows = {r["id"]: r for r in readability_stats(df, "doc_id", "text").collect()}
-    assert set(rows) == {1, 2, 3}  # the blank doc has no words -> dropped
-    r1 = rows[1]
-    assert r1["n_sentences"] == 3 and r1["n_words"] == 8
-    # the/cat/sat/the/dog/ran/did/it -> vowel groups 1 each
-    assert r1["n_syllables"] == 8
-    assert abs(
-        r1["fk_grade"] - (0.39 * (8 / 3) + 11.8 * (8 / 8) - 15.59)
-    ) < 1e-12
-    r2 = rows[2]
-    assert r2["n_sentences"] == 1 and r2["n_words"] == 5
-    r3 = rows[3]
-    # consonant-only words floor at 1 syllable each
-    assert r3["n_words"] == 2 and r3["n_syllables"] == 2
-
-
-def test_repeat_decay_matches_python_reference(spark):
-    """sampling.repeat_decay_mix vs a pure-python greedy replay of the
-    identical contract (marginal order value DESC / source ASC / epoch
-    ASC, whole cells while the budget holds, one fractional boundary
-    cell, exact-literal decay powers). The fixture engineers a marginal
-    TIE across sources (src_a holds 2x src_b's tokens, so a's epoch-2
-    cell equals b's epoch-1 cell exactly in IEEE at decay 0.5) — a wrong
-    tiebreak anywhere is a row mismatch, not drift."""
-    from presto_workload_analyzer_spark.extensions.sampling import (
-        repeat_decay_mix,
-        repeat_decay_powers,
-    )
-
-    data = [("a", 4000), ("b", 2000), ("c", 1500), ("d", 700), ("e", 1)]
-    decay, K, budget = 0.5, 4, 9000.0
-    per = spark.createDataFrame(data, "source STRING, tok LONG")
-    got = {
-        r["source"]: r
-        for r in repeat_decay_mix(
-            per, "source", "tok", budget=budget, decay=decay, max_epochs=K
-        ).collect()
-    }
-
-    pows = repeat_decay_powers(decay, K)
-    cells = sorted(
-        ((t * pows[k - 1], s, k, t) for s, t in data for k in range(1, K + 1)),
-        key=lambda c: (-c[0], c[1], c[2]),
-    )
-    spent, m, f = 0.0, {s: 0 for s, _ in data}, {s: 0.0 for s, _ in data}
-    for val, s, k, t in cells:
-        if spent + t <= budget:
-            m[s] += 1
-            spent += t
-        elif spent < budget:
-            f[s] = (budget - spent) / t
-            spent = budget
-    geo = [0.0]
-    for i in range(K):
-        geo.append(geo[-1] + pows[i])
-    for s, t in data:
-        row = got[s]
-        assert row["tokens_available"] == t
-        assert row["epochs_full"] == m[s], (s, row, m)
-        assert abs(row["epoch_fraction"] - round(f[s] + 1e-9, 6)) < 1e-12
-        assert abs(
-            row["tokens_allocated"] - round(t * (m[s] + f[s]) + 1e-9, 6)
-        ) < 1e-12
-        eff = t * (geo[m[s]] + f[s] * pows[m[s]])
-        assert abs(row["effective_tokens"] - round(eff + 1e-9, 6)) < 1e-12
-    # the fixture's intended shape actually occurred: the 2000.0 marginal
-    # TIE (a's epoch-2 vs b's epoch-1) resolved toward source 'a' (source
-    # ASC), leaving 'b' only the fractional boundary cell — and the
-    # budget landed mid-cell exactly once
-    assert m["a"] == 2 and m["b"] == 0 and 0 < f["b"] < 1
-    assert sum(1 for s, _ in data if 0 < f[s] < 1) == 1
-
-
-def test_repeat_decay_mix_validates_params(spark):
-    from presto_workload_analyzer_spark.extensions.sampling import (
-        repeat_decay_mix,
-    )
-
-    per = spark.createDataFrame([("a", 10)], "source STRING, tok LONG")
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="max_epochs"):
-        repeat_decay_mix(per, "source", "tok", budget=5.0, max_epochs=0)
-    with _pytest.raises(ValueError, match="decay"):
-        repeat_decay_mix(per, "source", "tok", budget=5.0, decay=0.0)
-
-
-# -- TIER6 staged batch calibration pins (round-18 registration) --------
-
-
-def test_xs44_diversity_discriminates_on_corpus():
-    """xs44's calibration pin at both gate SFs: ratios strictly increase
-    with n for every source (longer grams repeat less), the unigram
-    ratio is tiny (31-word vocabulary) while the trigram ratio is
-    substantial, and sources genuinely vary at n=3 (the template
-    structure differs by source)."""
-    from presto_workload_analyzer_spark.staged_queries import xs44_sql
-
-    for sf in ("0.001", "0.01"):
-        con = _staged_con(sf)
-        rows = con.sql(
-            "SELECT source, n, distinct_ratio FROM (" + xs44_sql() + ")"
-        ).fetchall()
-        by_src: dict = {}
-        for s, n, r in rows:
-            by_src.setdefault(s, {})[n] = r
-        for s, d in by_src.items():
-            assert d[1] < d[2] < d[3], f"sf{sf} {s}: not increasing {d}"
-            assert d[1] < 0.1, f"sf{sf} {s}: unigram ratio {d[1]}"
-        tri = [d[3] for d in by_src.values()]
-        assert max(tri) - min(tri) > 0.01, f"sf{sf}: trigram ratios flat"
-
-
-def test_xs45_split_exactness_on_corpus():
-    """xs45's calibration pin + the apportionment invariants at both
-    gate SFs: the val set holds EXACTLY floor(frac*N + 0.5) docs
-    globally; every source contributes floor(frac*n) or floor(frac*n)+1;
-    and the largest-remainder top-up is genuinely exercised (some source
-    got the +1 — floor sums undershoot on this corpus)."""
-    import math
-
-    from presto_workload_analyzer_spark.staged_queries import (
-        _XS45_FRAC,
-        xs45_sql,
-    )
-
-    for sf in ("0.001", "0.01"):
-        con = _staged_con(sf)
-        n_total, n_val = con.sql(
-            "SELECT count(*), sum(CASE WHEN split = 'val' THEN 1 ELSE 0 END)"
-            " FROM (" + xs45_sql() + ")"
-        ).fetchall()[0]
-        assert n_val == math.floor(_XS45_FRAC * n_total + 0.5), (sf, n_val)
-        per = con.sql(
-            "SELECT count(*) AS n,"
-            " sum(CASE WHEN split = 'val' THEN 1 ELSE 0 END) AS v"
-            " FROM (" + xs45_sql() + ") GROUP BY source"
-        ).fetchall()
-        topped = 0
-        for n, v in per:
-            base = math.floor(_XS45_FRAC * n)
-            assert v in (base, base + 1), (sf, n, v, base)
-            topped += v == base + 1
-        assert topped >= 1, f"sf{sf}: largest-remainder top-up never fired"
-
-
-def test_xs46_leakage_matrix_structure_on_corpus():
-    """xs46's calibration pin at both gate SFs: the matrix is non-empty
-    (cross-source near-dups exist on this corpus), cluster counts are
-    SYMMETRIC (a shares c clusters with b iff b shares c with a), no
-    diagonal rows, and exposure counts are positive wherever a pair
-    appears."""
-    from presto_workload_analyzer_spark.staged_queries import xs46_sql
-
-    for sf in ("0.001", "0.01"):
-        con = _staged_con(sf)
-        rows = con.sql(
-            "SELECT source_a, source_b, n_shared_clusters, n_docs_exposed"
-            " FROM (" + xs46_sql() + ")"
-        ).fetchall()
-        assert rows, f"sf{sf}: empty leakage matrix"
-        m = {(a, b): (c, d) for a, b, c, d in rows}
-        for (a, b), (c, d) in m.items():
-            assert a != b, f"sf{sf}: diagonal row {a}"
-            assert c > 0 and d > 0, f"sf{sf}: vacuous pair {(a, b)}"
-            assert (b, a) in m and m[(b, a)][0] == c, (
-                f"sf{sf}: asymmetric cluster counts at {(a, b)}"
-            )
-
-
-def test_xs47_burstiness_spreads_on_corpus():
-    """xs47's calibration pin at both gate SFs: the df floor keeps a
-    real table (>= 20 terms on the 31-word vocabulary), every VMR is
-    >= 1 - eps (the template generator clumps terms; sub-Poisson would
-    be suspicious here), and the ratios genuinely spread."""
-    from presto_workload_analyzer_spark.staged_queries import xs47_sql
-
-    for sf in ("0.001", "0.01"):
-        con = _staged_con(sf)
-        n, lo, hi = con.sql(
-            "SELECT count(*), min(vmr), max(vmr) FROM (" + xs47_sql() + ")"
-        ).fetchall()[0]
-        assert n >= 20, f"sf{sf}: only {n} terms over the df floor"
-        assert lo > 0.9, f"sf{sf}: sub-Poisson VMR {lo}"
-        assert hi - lo > 0.1, f"sf{sf}: VMR flat ({lo}..{hi})"
-
-
-def test_repeat_decay_budget_edges(spark):
-    """Boundary fixtures for the allocator: a budget below the smallest
-    source (single fractional cell on the largest-value source, zero
-    epochs everywhere), and a budget above K * total (every cell full,
-    no fraction, allocation = K * t per source)."""
-    from presto_workload_analyzer_spark.extensions.sampling import (
-        repeat_decay_mix,
-        repeat_decay_powers,
-    )
-
-    data = [("a", 300), ("b", 200)]
-    per = spark.createDataFrame(data, "source STRING, tok LONG")
-    K = 3
-
-    tiny = {
-        r["source"]: r
-        for r in repeat_decay_mix(
-            per, "source", "tok", budget=150.0, decay=0.5, max_epochs=K
-        ).collect()
-    }
-    assert tiny["a"]["epochs_full"] == 0 and tiny["b"]["epochs_full"] == 0
-    assert tiny["a"]["epoch_fraction"] == 0.5  # 150/300 into the top cell
-    assert tiny["b"]["epoch_fraction"] == 0.0
-    assert tiny["a"]["tokens_allocated"] == 150.0
-    assert tiny["a"]["effective_tokens"] == 150.0  # epoch-1 value is fresh
-
-    huge = {
-        r["source"]: r
-        for r in repeat_decay_mix(
-            per, "source", "tok", budget=1e9, decay=0.5, max_epochs=K
-        ).collect()
-    }
-    pows = repeat_decay_powers(0.5, K)
-    geo_k = sum(pows[:K])
-    for s, t in data:
-        assert huge[s]["epochs_full"] == K
-        assert huge[s]["epoch_fraction"] == 0.0
-        assert huge[s]["tokens_allocated"] == float(K * t)
-        assert abs(huge[s]["effective_tokens"] - round(t * geo_k + 1e-9, 6)) < 1e-12
-
-
-# -- TIER7 staged batch calibration pins (round-19 registration) --------
-
-
-def test_xs48_pmi_discriminates_on_corpus():
-    """xs48's calibration pin at both gate SFs: the PMI table keeps a
-    real set at the count floor (>= 500 pairs on this template corpus),
-    spreads across zero (genuine collocations AND anti-collocations),
-    and every pair's counts respect n_pair <= min(n_w1, n_w2)."""
-    from presto_workload_analyzer_spark.staged_queries import xs48_sql
-
-    for sf in ("0.001", "0.01"):
-        con = _staged_con(sf)
-        n, lo, hi, bad = con.sql(
-            "SELECT count(*), min(pmi), max(pmi),"
-            " sum(CASE WHEN n_pair > least(n_w1, n_w2) THEN 1 ELSE 0 END)"
-            " FROM (" + xs48_sql() + ")"
-        ).fetchall()[0]
-        assert n >= 500, f"sf{sf}: only {n} pairs over the floor"
-        assert lo < 0 < hi, f"sf{sf}: PMI does not straddle zero ({lo}..{hi})"
-        # the count floor trims the rare extreme-PMI tails (full-table
-        # spread is -0.7..+4.9; at n_pair >= 20 it is ~0.96 wide)
-        assert hi - lo > 0.5, f"sf{sf}: PMI flat ({lo}..{hi})"
-        assert bad == 0, f"sf{sf}: {bad} pairs exceed their marginals"
-
-
-def test_xs49_backoff_discriminates_on_corpus():
-    """xs49's calibration pin at both gate SFs: the md5 held-out slice
-    must cover nearly every source (the doc_id%k slices provably do NOT
-    on this corpus — only 4 sources survive %5), rates must sit strictly
-    inside (0, 1), and sources must genuinely vary."""
-    from presto_workload_analyzer_spark.staged_queries import xs49_sql
-
-    for sf in ("0.001", "0.01"):
-        con = _staged_con(sf)
-        ns, lo, hi = con.sql(
-            "SELECT count(*), min(backoff_rate), max(backoff_rate)"
-            " FROM (" + xs49_sql() + ")"
-        ).fetchall()[0]
-        assert ns >= 18, f"sf{sf}: held-out slice covers only {ns} sources"
-        assert 0.0 < lo and hi < 1.0, f"sf{sf}: saturated ({lo}..{hi})"
-        assert hi - lo > 0.05, f"sf{sf}: rates flat ({lo}..{hi})"
-
-
-def test_s25_moments_equal_xs47_on_corpus():
-    """s25's sufficient statistics must reproduce xs47's VMR exactly:
-    dividing the drained (df, total, sum_csq) by the corpus doc count
-    yields xs47's table term-for-term at both gate SFs — the
-    batch/stream contract the two queries share."""
-    from presto_workload_analyzer_spark.staged_queries import (
-        s25_sql,
-        xs47_sql,
-    )
-
-    for sf in ("0.001", "0.01"):
-        con = _staged_con(sf)
-        mismatches = con.sql(
-            "WITH s AS (" + s25_sql() + "),"
-            " nd AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),"
-            " v AS (SELECT word, round((n * sum_csq - total_count"
-            "   * total_count) / (1.0 * n * total_count) + 1e-9, 6) AS vmr"
-            "  FROM s, nd),"
-            " x AS (" + xs47_sql() + ")"
-            " SELECT count(*) FROM v FULL JOIN x USING (word)"
-            " WHERE v.vmr IS DISTINCT FROM x.vmr"
-        ).fetchone()[0]
-        assert mismatches == 0, f"sf{sf}: {mismatches} moment mismatches"
-
-
-def _empty_token_corpus(spark, tmp_path):
-    """A documents.parquet containing the degenerate texts the repo
-    treats as in-contract: empty string, whitespace-only, NULL — plus
-    enough repeated real text that xs48's pair floor keeps rows."""
-    rows = [(i, "s0", "en", "alpha beta alpha beta alpha beta", 32)
-            for i in range(60)]  # df=60 > the _XS47_MIN_DF=50 floor
-    rows += [(100, "s1", "en", "", 0), (101, "s1", "en", "   ", 3),
-             (102, "s1", "en", None, 0), (103, "s1", "en", "gamma", 5)]
-    df = spark.createDataFrame(
-        rows, "doc_id bigint, source string, lang string, text string,"
-        " n_chars bigint"
-    )
-    df.coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / "documents.parquet")
-    )
-    return str(tmp_path)
-
-
-def test_xs48_survives_empty_token_docs(spark, tmp_path):
-    """Regression for the slice-length guard: a doc whose text tokenizes
-    to ZERO non-empty tokens (empty or whitespace-only) used to make
-    F.slice(__toks, 1, size-1) throw INVALID_PARAMETER_VALUE.LENGTH;
-    the guarded plan must instead agree with the oracle exactly (the
-    oracle's range(0, greatest(len-1, 0)) yields zero rows for such
-    docs)."""
-    import duckdb
-
-    import pandas as pd
-
-    from presto_workload_analyzer_spark.staged_queries import (
-        xs48_pmi_collocations,
-        xs48_sql,
-    )
-
-    sf = _empty_token_corpus(spark, tmp_path)
-    got = (
-        xs48_pmi_collocations(spark, sf)
-        .toPandas()
-        .sort_values(["w1", "w2"])
-        .reset_index(drop=True)
-    )
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{sf}/documents.parquet/*.parquet')"
-    )
-    want = con.sql(xs48_sql()).df().sort_values(["w1", "w2"]).reset_index(
-        drop=True
-    )
-    assert len(got) > 0
-    pd.testing.assert_frame_equal(got, want, check_exact=True)
-
-
-def test_s25_survives_empty_token_docs(spark, tmp_path):
-    """s25's row-local term counts over the same degenerate corpus:
-    empty/whitespace/NULL texts contribute nothing, and the drained
-    vocabulary-grain moments equal the oracle exactly."""
-    import duckdb
-
-    import pandas as pd
-
-    from presto_workload_analyzer_spark.staged_queries import (
-        s25_stream_burstiness,
-        s25_sql,
-    )
-
-    sf = _empty_token_corpus(spark, tmp_path)
-    got = (
-        s25_stream_burstiness(spark, sf)
-        .toPandas()
-        .sort_values("word")
-        .reset_index(drop=True)
-    )
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{sf}/documents.parquet/*.parquet')"
-    )
-    want = con.sql(s25_sql()).df().sort_values("word").reset_index(drop=True)
-    for c in want.columns:
-        if want[c].dtype != got[c].dtype:
-            want[c] = want[c].astype(got[c].dtype)
-    assert len(got) > 0
-    pd.testing.assert_frame_equal(got, want, check_exact=True)
-
-
-def test_row_local_term_counts_matches_counter(spark):
-    """The sorted-run row-local term counter (s25's O(n log n) kernel)
-    must equal collections.Counter on random token arrays, including
-    empty and single-token rows."""
-    import random
-    from collections import Counter
-
-    from presto_workload_analyzer_spark.extensions.textstats import (
-        row_local_term_counts,
-    )
-    from pyspark.sql import functions as F
-
-    rng = random.Random(1514)
-    vocab = [f"w{i}" for i in range(12)]
-    data = [(i, [rng.choice(vocab) for _ in range(rng.randint(0, 40))])
-            for i in range(120)]
-    data += [(1000, []), (1001, ["solo"]), (1002, ["a"] * 17)]
-    df = spark.createDataFrame(data, "id long, toks array<string>")
-    got = {
-        r.id: sorted((p.w, p.c) for p in r.p)
-        for r in df.select(
-            "id", row_local_term_counts(F.col("toks")).alias("p")
-        ).collect()
-    }
-    for i, toks in data:
-        assert got[i] == sorted(Counter(toks).items()), i
-
-
 def test_frame_sample_zero_byte_payload(spark):
     """Regression for the descending-sequence trap: a zero-byte payload
     made frame_sample's sequence(0, ceil(0/64)-1) count DOWN ([0, -1] —

@@ -11,12 +11,13 @@ import gzip
 import json
 import math
 import os
+import sys
 
 import pytest
 from pyspark.sql import functions as F
 
 from presto_workload_analyzer_spark.pipeline import build_silver, run_analyzers
-from presto_workload_analyzer_spark.plans.flatten import resolve_table_name
+from presto_workload_analyzer_spark.plans.flatten import iter_plan_rows, resolve_table_name
 from presto_workload_analyzer_spark.sources.queryinfo import (
     extract_queryinfo,
     read_summary_jsonl,
@@ -317,3 +318,30 @@ def test_compact_dataset(spark, tmp_path):
     n_after = len(glob.glob(f"{p}/*.parquet"))
     assert n_target == 1 and n_after == 1
     assert {(r.id, r.v) for r in spark.read.parquet(p).collect()} == before
+
+
+def _deep_plan_json(depth):
+    """A chain of `depth` project nodes as JSON text (json.dumps itself
+    overflows the stack on a plan this deep)."""
+    node = '{"@type": "project", "id": "p", "source": '
+    return node * depth + '{"@type": "values", "id": "v"}' + "}" * depth
+
+
+def test_deep_document_is_skipped_not_fatal(spark, tmp_path):
+    """A plan nested past the interpreter's recursion limit makes
+    json.loads raise RecursionError, not ValueError; extract and the plan
+    flatten must skip that one document instead of failing the job."""
+    # 1,200 levels at the default limit of 1,000; a test run may have raised it
+    depth = max(1200, sys.getrecursionlimit() + 200)
+    for i, doc in enumerate(fixtures()):
+        (tmp_path / f"q{i:03d}.json").write_text(json.dumps(doc))
+    deep = make_queryinfo(
+        "20240101_090000_00099_deep0", plan_root={"@type": "values", "id": "DEEP"}
+    )
+    text = json.dumps(deep).replace('{"@type": "values", "id": "DEEP"}', _deep_plan_json(depth))
+    (tmp_path / "deep.json").write_text(text)
+    # the 13 fixture summaries (see test_extract_counts); the deep doc is dropped
+    assert extract_queryinfo(spark, str(tmp_path)).count() == 13
+
+    frags = '[{"id": "0", "root": ' + _deep_plan_json(depth) + "}]"
+    assert list(iter_plan_rows("q", frags)) == []

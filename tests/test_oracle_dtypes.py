@@ -64,63 +64,3 @@ def test_no_oracle_binds_to_spark_unrepresentable_dtype(con):
         "(wrap integer sums in CAST(... AS BIGINT), decimal literals in "
         f"CAST(... AS DOUBLE)): {offenders}"
     )
-
-
-def _all_staged(staged_queries):
-    """Every staging tier — the dtype bans must hold for entries
-    registering two and three rounds out, not just the next batch."""
-    return {
-        **staged_queries.STAGED,
-        **staged_queries.STAGED_NEXT,
-        **staged_queries.STAGED_TIER3,
-        **staged_queries.STAGED_TIER4,
-    }
-
-
-def test_no_staged_oracle_binds_to_spark_unrepresentable_dtype(con):
-    """Staged (not-yet-registered) oracles get the same ban BEFORE the r9
-    unfreeze moves them into the registry — a HUGEINT/DECIMAL binding
-    found at registration time would cost a driver round to discover."""
-    from presto_workload_analyzer_spark import staged_queries
-
-    offenders = []
-    for name, (_fn, sql) in _all_staged(staged_queries).items():
-        desc = con.execute(f"DESCRIBE ({sql})").fetchall()
-        for col, typ, *_ in desc:
-            if any(b in typ.upper() for b in _BANNED):
-                offenders.append((name, col, typ))
-    assert offenders == [], offenders
-
-
-def test_staged_spark_and_oracle_dtypes_pair_exactly(spark, con):
-    """The driver's value-hash serializes dtypes on BOTH sides, so a
-    staged query must pair its Spark schema with the oracle's bound
-    types column-for-column — not merely avoid the banned types. The
-    allowed pairings are the registry's audited ones (bigint↔BIGINT,
-    double↔DOUBLE, boolean↔BOOLEAN, string↔VARCHAR, int↔INTEGER);
-    anything else (an int32 Spark column against BIGINT, a missing or
-    reordered column) is caught HERE instead of costing a driver round
-    at registration."""
-    from presto_workload_analyzer_spark import staged_queries
-
-    allowed = {
-        ("bigint", "BIGINT"),
-        ("double", "DOUBLE"),
-        ("boolean", "BOOLEAN"),
-        ("string", "VARCHAR"),
-        ("int", "INTEGER"),
-    }
-    offenders = []
-    for name, (fn, sql) in _all_staged(staged_queries).items():
-        sdt = {
-            f.name: f.dataType.simpleString()
-            for f in fn(spark, SF_DIR).schema.fields
-        }
-        odt = {r[0]: r[1] for r in con.execute(f"DESCRIBE ({sql})").fetchall()}
-        if set(sdt) != set(odt):
-            offenders.append((name, "column-set", sorted(sdt), sorted(odt)))
-            continue
-        for c, t in sdt.items():
-            if (t, odt[c]) not in allowed:
-                offenders.append((name, c, t, odt[c]))
-    assert offenders == [], offenders

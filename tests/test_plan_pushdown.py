@@ -291,113 +291,3 @@ def test_round15_registrations_prune_document_scans(spark, name, allowed):
         if table != "documents":
             continue
         assert cols <= allowed, (name, sorted(cols), line)
-
-
-def test_staged_tier5_batch_prunes_scans(spark):
-    """Tier-5 scan pruning: xs40 reads ONLY `text` (no id at all — the
-    budget table is id-free); xs41 reads (source, text); xs42's synth
-    frame needs (doc_id, source, text); xs43 consumes the same synth but
-    drops `source` before any use, so its scan must prune down to
-    (doc_id, text). xs32/xs34-style driver-materialized frames don't
-    appear here; s24 is a streaming drain (xs40, its batch twin, pins
-    the scan)."""
-    from presto_workload_analyzer_spark import staged_queries
-
-    from pyspark.sql import functions as F
-
-    from presto_workload_analyzer_spark.extensions import textstats
-
-    allowed = {
-        "xs40_context_budget": {"text"},
-        "xs41_repeat_epochs": {"source", "text"},
-        "xs42_readability": {"doc_id", "source", "text"},
-    }
-    for name, cols_ok in allowed.items():
-        fn, _sql = staged_queries.STAGED_TIER5[name]
-        df = fn(spark, SF_DIR)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        scans = 0
-        for line in plan.splitlines():
-            m = _SCAN_RE.search(line)
-            if not m or m.group(2) != "documents":
-                continue
-            scans += 1
-            cols = {c.split("#")[0] for c in m.group(1).split(",") if c.strip()}
-            assert cols <= cols_ok, (name, sorted(cols), line)
-        assert scans > 0, f"{name}: expected documents scans in the plan"
-    # xs43's final plan hides its scan behind the grade localCheckpoint,
-    # so pin the scan on the frame it materializes: the per-doc grade
-    # select must prune the synth source down to (doc_id, text) — the
-    # `source` column xs42 needs must NOT leak into xs43's scan.
-    lg = textstats.readability_stats(
-        staged_queries._synth_sentence_docs(spark, SF_DIR), "doc_id", "text"
-    ).select(F.col("id"), F.round(F.col("fk_grade") + F.lit(1e-9), 6))
-    plan = lg._jdf.queryExecution().executedPlan().toString()
-    scans = 0
-    for line in plan.splitlines():
-        m = _SCAN_RE.search(line)
-        if not m or m.group(2) != "documents":
-            continue
-        scans += 1
-        cols = {c.split("#")[0] for c in m.group(1).split(",") if c.strip()}
-        assert cols <= {"doc_id", "text"}, ("xs43 lg", sorted(cols), line)
-    assert scans > 0, "xs43 lg: expected documents scans in the plan"
-
-
-def test_staged_tier6_batch_prunes_scans(spark):
-    """Tier-6 scan pruning: xs44 reads (source, text); xs45 reads ONLY
-    (doc_id, source) — the split never touches text at all (at 100 TB
-    that is the whole game for a metadata-only op); xs46's own scan is
-    (doc_id, source) (the dedup-CC silver's (doc_id, text) scan is
-    pinned by the xs20-batch test, and may be cached in-session); xs47
-    reads (doc_id, text)."""
-    from presto_workload_analyzer_spark import staged_queries
-
-    allowed = {
-        "xs44_distinct_ngrams": {"source", "text"},
-        "xs45_stratified_split": {"doc_id", "source"},
-        "xs46_dup_leakage_matrix": {"doc_id", "source", "text"},
-        "xs47_term_burstiness": {"doc_id", "text"},
-    }
-    must_scan = {"xs44_distinct_ngrams", "xs45_stratified_split",
-                 "xs47_term_burstiness"}
-    for name, cols_ok in allowed.items():
-        fn, _sql = staged_queries.STAGED_TIER6[name]
-        df = fn(spark, SF_DIR)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        scans = 0
-        for line in plan.splitlines():
-            m = _SCAN_RE.search(line)
-            if not m or m.group(2) != "documents":
-                continue
-            scans += 1
-            cols = {c.split("#")[0] for c in m.group(1).split(",") if c.strip()}
-            assert cols <= cols_ok, (name, sorted(cols), line)
-        if name in must_scan:
-            assert scans > 0, f"{name}: expected documents scans in the plan"
-
-
-def test_staged_tier7_batch_prunes_scans(spark):
-    """Tier-7 scan pruning: xs48 reads only `text`; xs49 reads
-    (doc_id, source, text) — doc_id feeds the md5 hash split; s25 is a
-    streaming drain (xs47, its batch twin, pins the (doc_id, text)
-    scan)."""
-    from presto_workload_analyzer_spark import staged_queries
-
-    allowed = {
-        "xs48_pmi_collocations": {"text"},
-        "xs49_backoff_rate": {"doc_id", "source", "text"},
-    }
-    for name, cols_ok in allowed.items():
-        fn, _sql = staged_queries.STAGED_TIER7[name]
-        df = fn(spark, SF_DIR)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        scans = 0
-        for line in plan.splitlines():
-            m = _SCAN_RE.search(line)
-            if not m or m.group(2) != "documents":
-                continue
-            scans += 1
-            cols = {c.split("#")[0] for c in m.group(1).split(",") if c.strip()}
-            assert cols <= cols_ok, (name, sorted(cols), line)
-        assert scans > 0, f"{name}: expected documents scans in the plan"
