@@ -25,15 +25,57 @@ Determinism rules (Spark vs DuckDB must agree bit-for-bit):
 
 from __future__ import annotations
 
+import glob
+import hashlib
+import json
+import math
+import os
+import re
 from collections.abc import Callable
+from datetime import timedelta
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F, types as T
 
+from presto_workload_analyzer_spark.extensions import (
+    dedup as X_dedup,
+    graph as X_graph,
+    multimodal as X_mm,
+    profile as X_prof,
+    sampling as X_samp,
+    similarity as X_sim,
+    sketches as X_sk,
+    temporal as X_temp,
+    textstats as X_text,
+)
+from presto_workload_analyzer_spark.extensions.gifcodec import encode_gif
+from presto_workload_analyzer_spark.extensions.jpegcodec import encode_jpeg
+from presto_workload_analyzer_spark.functions import (
+    normalize_sql,
+    parse_size,
+    parse_time,
+    query_timestamp,
+)
 from presto_workload_analyzer_spark.materialize import materialize
-
-from presto_workload_analyzer_spark.functions import parse_size, parse_time, query_timestamp
 from presto_workload_analyzer_spark.operators import analyzers as A
-from presto_workload_analyzer_spark.sources.tables import read_sf_table
+from presto_workload_analyzer_spark.operators.skew import salted_agg
+from presto_workload_analyzer_spark.privacy.obfuscate import (
+    build_translation,
+    generalize_quasi,
+    k_anonymize,
+    l_diversity,
+    laplace_noise,
+    noisy_counts,
+    t_closeness,
+)
+from presto_workload_analyzer_spark.sources.tables import min_row_parallelism, read_sf_table
+from presto_workload_analyzer_spark.streaming import (
+    drain,
+    funnel_conversions,
+    interval_join,
+    query_sessions,
+    stream_sf_table,
+)
+from presto_workload_analyzer_spark.streaming.cusum import cusum_alarms
 
 # --------------------------------------------------------------------------
 # Adapters: synthetic tables -> engine silver contracts
@@ -806,20 +848,15 @@ _GATE = [
 def _correctness_rounds() -> list[dict]:
     """Every CORRECTNESS_r*.json in round order (oldest first), parsed and
     shape-checked; unreadable or non-object files are skipped."""
-    import glob as _glob
-    import json as _json
-    import os as _os
-    import re as _re
-
-    root = _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     found = []
-    for p in _glob.glob(_os.path.join(root, "CORRECTNESS_r*.json")):
-        m = _re.search(r"CORRECTNESS_r(\d+)\.json$", p)
+    for p in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
+        m = re.search(r"CORRECTNESS_r(\d+)\.json$", p)
         if not m:
             continue
         try:
             with open(p) as fh:
-                rows = _json.load(fh)
+                rows = json.load(fh)
         except (OSError, ValueError):
             continue
         if not isinstance(rows, dict):
@@ -912,16 +949,6 @@ def oracle_sql() -> dict[str, str]:
 # Extension queries (SURVEY.md §7 phase 8): dedup / similarity / text /
 # multimodal over the documents + embeddings tables.
 # --------------------------------------------------------------------------
-
-from presto_workload_analyzer_spark.extensions import (  # noqa: E402
-    dedup as X_dedup,
-    multimodal as X_mm,
-    sampling as X_samp,
-    profile as X_prof,
-    similarity as X_sim,
-    temporal as X_temp,
-    textstats as X_text,
-)
 
 
 # The similarity-family ingest contract (similarity.indexable_expr): only
@@ -1336,8 +1363,6 @@ def _x33(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _x33_sql() -> str:
-    import hashlib
-
     def sign(p: int, i: int) -> int:
         return 1 if hashlib.md5(f"{p}|{i}".encode()).digest()[0] & 1 else -1
 
@@ -1472,8 +1497,6 @@ _register(
 
 
 def _x09(spark: SparkSession, sf: str) -> DataFrame:
-    from presto_workload_analyzer_spark.sources import min_row_parallelism
-
     # per-row marker battery is CPU-dense; core-count tasks when the
     # scan arrives as fewer splits (no-op at production file counts)
     docs = min_row_parallelism(read_sf_table(spark, sf, "documents"))
@@ -1568,8 +1591,6 @@ def _hyperplane_bucket_sql(n_planes: int = 8, n_dims: int = 64) -> str:
     """ANSI twin of similarity.hyperplane_bucket_expr's md5-derived sign
     planes, as a DuckDB expression over a DOUBLE[] column `v` — shared by
     the x12 LSH oracle and the x44 recall-eval oracle."""
-    import hashlib
-
     def sign(p: int, i: int) -> int:
         return 1 if hashlib.md5(f"{p}|{i}".encode()).digest()[0] & 1 else -1
 
@@ -1688,8 +1709,6 @@ _register(
 # distributed window kernel, driven by the real build_translation code.
 # --------------------------------------------------------------------------
 
-from presto_workload_analyzer_spark.privacy import build_translation  # noqa: E402
-
 
 def _p01(spark: SparkSession, sf: str) -> DataFrame:
     orders = read_sf_table(spark, sf, "orders")
@@ -1715,8 +1734,6 @@ _register(
 # --------------------------------------------------------------------------
 # Skew operator (salted two-phase aggregation) + Structured Streaming query
 # --------------------------------------------------------------------------
-
-from presto_workload_analyzer_spark.operators.skew import salted_agg  # noqa: E402
 
 
 def _p02(spark: SparkSession, sf: str) -> DataFrame:
@@ -1758,28 +1775,14 @@ def _s01(spark: SparkSession, sf: str) -> DataFrame:
     continuously (streaming/ingest.py); complete-mode memory sink makes the
     drained result comparable 1:1 with the batch oracle.
     """
-    import uuid
-
-    from presto_workload_analyzer_spark.streaming import (
-        run_to_memory,
-        state_partitions,
-        stream_sf_table,
-    )
-
     ev = stream_sf_table(spark, sf, "events")
     agg = ev.groupBy(F.window("ts", "1 day").alias("w")).agg(
         F.count(F.lit(1)).alias("n_events"),
         F.round(F.sum("value"), 6).alias("total_value"),
     )
-    name = f"s01_mem_{uuid.uuid4().hex[:8]}"
-    with state_partitions(spark, 8):
-        q = run_to_memory(agg, name, output_mode="complete")
-        q.awaitTermination(300)
-    out = spark.table(name).select(
+    return drain(agg, output_mode="complete", partitions=8).select(
         F.col("w.start").alias("bucket"), "n_events", "total_value"
     )
-    # materialize before the memory table goes stale, keep result small
-    return spark.createDataFrame(out.collect(), out.schema)
 
 
 _register(
@@ -1891,15 +1894,6 @@ def _s02(spark: SparkSession, sf: str) -> DataFrame:
     watermark (max_ts - delay) strictly passed last_seen + gap. The oracle
     reproduces exactly that predicate.
     """
-    import uuid
-
-    from presto_workload_analyzer_spark.streaming import (
-        run_to_memory,
-        state_partitions,
-        stream_sf_table,
-    )
-    from presto_workload_analyzer_spark.streaming.sessions import query_sessions
-
     ev = stream_sf_table(spark, sf, "events")
     stream = ev.select(
         F.col("user_id").cast("string").alias("user"),
@@ -1908,22 +1902,17 @@ def _s02(spark: SparkSession, sf: str) -> DataFrame:
         F.lit("FINISHED").alias("state"),
     ).withWatermark("query_ts", "1 minute")
     sessions = query_sessions(stream, gap_seconds=86400.0)
-    name = f"s02_mem_{uuid.uuid4().hex[:8]}"
     # 16 state partitions measured fastest for this drain on local[32]
     # (r12 sweep: 4 -> 4.29s, 8 -> 3.53s, 16 -> 3.09s, 32 -> 4.54s —
     # the single availableNow data batch wants more parallel Python
     # state workers; 32 over-partitions the no-data flush batch)
-    with state_partitions(spark, 16):
-        q = run_to_memory(sessions, name, output_mode="append")
-        q.awaitTermination(300)
-    out = spark.table(name).select(
+    return drain(sessions, partitions=16).select(
         F.col("user").cast("long").alias("user_id"),
         "session_start",
         "session_end",
         F.col("n_queries").cast("long").alias("n_events"),
         F.round("scheduled_sum", 6).alias("value_sum"),
     )
-    return spark.createDataFrame(out.collect(), out.schema)
 
 
 _register(
@@ -2004,14 +1993,6 @@ def _s03(spark: SparkSession, sf: str) -> DataFrame:
     broken dedup (doubled counts) hash-mismatches. State is bounded by the
     watermark horizon — the 100 TB answer to the reference's forever-growing
     dedup-by-file-existence set (collect.py:101-103)."""
-    import uuid
-
-    from presto_workload_analyzer_spark.streaming import (
-        run_to_memory,
-        state_partitions,
-        stream_sf_table,
-    )
-
     ev = stream_sf_table(spark, sf, "events")
     redelivered = ev.unionByName(stream_sf_table(spark, sf, "events"))
     deduped = redelivered.withWatermark("ts", "1 minute").dropDuplicatesWithinWatermark(
@@ -2020,12 +2001,9 @@ def _s03(spark: SparkSession, sf: str) -> DataFrame:
     agg = deduped.groupBy(F.window("ts", "1 day").alias("w")).agg(
         F.count(F.lit(1)).alias("n_events")
     )
-    name = f"s03_mem_{uuid.uuid4().hex[:8]}"
-    with state_partitions(spark, 8):
-        q = run_to_memory(agg, name, output_mode="complete")
-        q.awaitTermination(300)
-    out = spark.table(name).select(F.col("w.start").alias("bucket"), "n_events")
-    return spark.createDataFrame(out.collect(), out.schema)
+    return drain(agg, output_mode="complete", partitions=8).select(
+        F.col("w.start").alias("bucket"), "n_events"
+    )
 
 
 _register(
@@ -2118,15 +2096,6 @@ def _s04(spark: SparkSession, sf: str) -> DataFrame:
     evicts as the other side's watermark passes the horizon (bounded state
     at any corpus size); one availableNow drain makes the result equal to
     the batch SQL interval join the oracle runs."""
-    import uuid
-
-    from presto_workload_analyzer_spark.streaming import (
-        interval_join,
-        run_to_memory,
-        state_partitions,
-        stream_sf_table,
-    )
-
     signups = (
         stream_sf_table(spark, sf, "events")
         .filter(F.col("event_type") == "signup")
@@ -2157,12 +2126,7 @@ def _s04(spark: SparkSession, sf: str) -> DataFrame:
         "purchase_id",
         F.round("value", 6).alias("purchase_value"),
     )
-    name = f"s04_mem_{uuid.uuid4().hex[:8]}"
-    with state_partitions(spark, 8):
-        q = run_to_memory(joined, name, output_mode="append")
-        q.awaitTermination(300)
-    out = spark.table(name)
-    return spark.createDataFrame(out.collect(), out.schema)
+    return drain(joined, partitions=8)
 
 
 _register(
@@ -2256,8 +2220,6 @@ def _p03(spark: SparkSession, sf: str) -> DataFrame:
     the same capability extract.py needs for nested session properties)
     and roll up the extracted field per event type. The oracle extracts
     the same field by regex so it runs without DuckDB's JSON extension."""
-    from pyspark.sql import types as T
-
     ev = read_sf_table(spark, sf, "events")
     k = F.from_json(F.col("props"), T.StructType([T.StructField("k", T.LongType())]))["k"]
     return (
@@ -2292,8 +2254,6 @@ def _p04(spark: SparkSession, sf: str) -> DataFrame:
     dropped as re-identifiable (privacy.k_anonymize, suppress mode — one
     partitioned window, fully distributed). At sf0.01 this suppresses 107
     of 750 quasi-identifier groups."""
-    from presto_workload_analyzer_spark.privacy.obfuscate import k_anonymize
-
     ev = read_sf_table(spark, sf, "events").select(
         "event_id", "user_id", "event_type"
     )
@@ -2414,14 +2374,6 @@ def _s05(spark: SparkSession, sf: str) -> DataFrame:
     the SAME oracle as the custom applyInPandasWithState operator —
     demonstrating the two implementations agree exactly. session_window's
     window.end is last_event + gap, so session_end = end - gap."""
-    import uuid
-
-    from presto_workload_analyzer_spark.streaming import (
-        run_to_memory,
-        state_partitions,
-        stream_sf_table,
-    )
-
     gap = 86400
     ev = stream_sf_table(spark, sf, "events").withWatermark("ts", "1 minute")
     agg = (
@@ -2433,18 +2385,13 @@ def _s05(spark: SparkSession, sf: str) -> DataFrame:
             F.sum("value").alias("value_sum"),
         )
     )
-    name = f"s05_mem_{uuid.uuid4().hex[:8]}"
-    with state_partitions(spark, 8):
-        q = run_to_memory(agg, name, output_mode="append")
-        q.awaitTermination(300)
-    out = spark.table(name).select(
+    return drain(agg, partitions=8).select(
         F.col("user_id").cast("long").alias("user_id"),
         F.col("w.start").alias("session_start"),
         (F.col("w.end") - F.expr(f"INTERVAL {gap} SECONDS")).alias("session_end"),
         F.col("n_events").cast("long").alias("n_events"),
         F.round("value_sum", 6).alias("value_sum"),
     )
-    return spark.createDataFrame(out.collect(), out.schema)
 
 
 # the custom stateful operator (s02) and the native session_window (s05)
@@ -2581,27 +2528,14 @@ def _s06(spark: SparkSession, sf: str) -> DataFrame:
     tumbling rollups can't express — smoothing, trailing-window SLOs).
     Complete-mode drain == the batch answer; the oracle assigns each event
     to both its covering windows via a 2-row offset join."""
-    import uuid
-
-    from presto_workload_analyzer_spark.streaming import (
-        run_to_memory,
-        state_partitions,
-        stream_sf_table,
-    )
-
     ev = stream_sf_table(spark, sf, "events")
     agg = ev.groupBy(F.window("ts", "2 days", "1 day").alias("w")).agg(
         F.count(F.lit(1)).alias("n_events"),
         F.round(F.sum("value"), 6).alias("total_value"),
     )
-    name = f"s06_mem_{uuid.uuid4().hex[:8]}"
-    with state_partitions(spark, 8):
-        q = run_to_memory(agg, name, output_mode="complete")
-        q.awaitTermination(300)
-    out = spark.table(name).select(
+    return drain(agg, output_mode="complete", partitions=8).select(
         F.col("w.start").alias("bucket"), "n_events", "total_value"
     )
-    return spark.createDataFrame(out.collect(), out.schema)
 
 
 _register(
@@ -2624,14 +2558,6 @@ def _s07(spark: SparkSession, sf: str) -> DataFrame:
     and broadcast (no state store involved, unlike stream-stream joins);
     at scale the dimension re-reads pick up slowly-changing updates
     between micro-batches for free. Oracle: the identical batch join."""
-    import uuid
-
-    from presto_workload_analyzer_spark.streaming import (
-        run_to_memory,
-        state_partitions,
-        stream_sf_table,
-    )
-
     ev = stream_sf_table(spark, sf, "events")
     dim = F.broadcast(
         read_sf_table(spark, sf, "customer").select(
@@ -2646,17 +2572,12 @@ def _s07(spark: SparkSession, sf: str) -> DataFrame:
             F.round(F.sum("value"), 6).alias("value_sum"),
         )
     )
-    name = f"s07_mem_{uuid.uuid4().hex[:8]}"
-    with state_partitions(spark, 8):
-        q = run_to_memory(agg, name, output_mode="complete")
-        q.awaitTermination(300)
-    out = spark.table(name).select(
+    return drain(agg, output_mode="complete", partitions=8).select(
         F.col("w.start").alias("bucket"),
         F.col("nation").cast("long").alias("nation"),
         "n_events",
         "value_sum",
     )
-    return spark.createDataFrame(out.collect(), out.schema)
 
 
 _register(
@@ -2914,8 +2835,6 @@ def _a34(spark: SparkSession, sf: str) -> DataFrame:
     use to find the 5 query templates that cost 90% of the cluster).
     Statements come from _synthetic_sql_text (same construction in the
     oracle), and functions.normalize_sql does the literal stripping."""
-    from presto_workload_analyzer_spark.functions import normalize_sql
-
     ev = read_sf_table(spark, sf, "events")
     sql_text = _synthetic_sql_text()
     return (
@@ -3033,10 +2952,8 @@ def _x40(spark: SparkSession, sf: str) -> DataFrame:
     (extensions.profile.profile_columns — the DESCRIBE/data-quality
     operator; approx_count_distinct mode is the 100 TB default, exact mode
     is used here because the oracle needs exact numbers)."""
-    from presto_workload_analyzer_spark.extensions.profile import profile_columns
-
     ev = read_sf_table(spark, sf, "events")
-    return profile_columns(ev, ["event_id", "ts", "user_id", "event_type", "value"])
+    return X_prof.profile_columns(ev, ["event_id", "ts", "user_id", "event_type", "value"])
 
 
 def _x40_sql() -> str:
@@ -3075,8 +2992,6 @@ def _p05(spark: SparkSession, sf: str) -> DataFrame:
     key (privacy.noisy_counts) — reproducible across engines and reruns,
     so the oracle matches exactly; a real release swaps the fixed salt
     for per-release entropy."""
-    from presto_workload_analyzer_spark.privacy.obfuscate import noisy_counts
-
     ev = read_sf_table(spark, sf, "events")
     return noisy_counts(ev, ["user_id"], scale=1.0)
 
@@ -3302,8 +3217,6 @@ def _x42(spark: SparkSession, sf: str) -> DataFrame:
     repetition signal x18 covers within-doc): per document, the share of
     its distinct trigrams occurring in >= 1 other document
     (textstats.duplicate_ngram_fraction — inverted-index shape)."""
-    from presto_workload_analyzer_spark.sources import min_row_parallelism
-
     # the trigram explode is CPU-dense per row; core-count tasks when
     # the scan arrives as fewer splits (no-op at production file counts)
     docs = min_row_parallelism(read_sf_table(spark, sf, "documents"))
@@ -3416,8 +3329,6 @@ def _p06(spark: SparkSession, sf: str) -> DataFrame:
     the group carries, and whether it meets l=3 — k_anonymize's companion
     (privacy.l_diversity); groups failing either bound get suppressed or
     masked before release."""
-    from presto_workload_analyzer_spark.privacy.obfuscate import l_diversity
-
     ev = read_sf_table(spark, sf, "events")
     return l_diversity(ev, ["user_id"], "event_type", l=3)
 
@@ -3439,14 +3350,6 @@ def _s08(spark: SparkSession, sf: str) -> DataFrame:
     inside a streaming agg — the standard pattern is rank-in-foreachBatch
     / rank-after-drain over the complete-mode state, which is
     #windows x #types sized, never corpus-sized)."""
-    import uuid
-
-    from presto_workload_analyzer_spark.streaming import (
-        run_to_memory,
-        state_partitions,
-        stream_sf_table,
-    )
-
     ev = stream_sf_table(spark, sf, "events")
     agg = ev.groupBy(
         F.window("ts", "1 day").alias("w"), F.col("event_type")
@@ -3454,21 +3357,16 @@ def _s08(spark: SparkSession, sf: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         F.round(F.sum("value"), 6).alias("total_value"),
     )
-    name = f"s08_mem_{uuid.uuid4().hex[:8]}"
-    with state_partitions(spark, 8):
-        q = run_to_memory(agg, name, output_mode="complete")
-        q.awaitTermination(300)
-    drained = spark.table(name).select(
+    drained = drain(agg, output_mode="complete", partitions=8).select(
         F.col("w.start").alias("bucket"), "event_type", "n_events", "total_value"
     )
     w = Window.partitionBy("bucket").orderBy(
         F.desc("n_events"), F.asc("event_type")
     )
-    out = (
+    return (
         drained.withColumn("rnk", F.row_number().over(w).cast("long"))
         .filter(F.col("rnk") <= 3)
     )
-    return spark.createDataFrame(out.collect(), out.schema)
 
 
 _register(
@@ -3587,17 +3485,6 @@ def _s09(spark: SparkSession, sf: str) -> DataFrame:
     side's clock and later signups never get their outer NULL row). Left
     side restricted to signups >= 3h before that min-of-max — a STATIC
     cutoff read from the batch table, reproduced verbatim in the oracle."""
-    import uuid
-
-    from presto_workload_analyzer_spark.streaming import (
-        interval_join,
-        run_to_memory,
-        state_partitions,
-        stream_sf_table,
-    )
-
-    from datetime import timedelta
-
     side_max = (
         read_sf_table(spark, sf, "events")
         .agg(
@@ -3643,16 +3530,11 @@ def _s09(spark: SparkSession, sf: str) -> DataFrame:
         "purchase_id",
         F.round("value", 6).alias("purchase_value"),
     )
-    name = f"s09_mem_{uuid.uuid4().hex[:8]}"
-    with state_partitions(spark, 8):
-        q = run_to_memory(joined, name, output_mode="append")
-        q.awaitTermination(300)
-    out = (
-        spark.table(name)
+    return (
+        drain(joined, partitions=8)
         .filter(F.col("signup_ts") <= F.lit(cutoff))
         .drop("signup_ts")
     )
-    return spark.createDataFrame(out.collect(), out.schema)
 
 
 _register(
@@ -3679,8 +3561,6 @@ def _p07(spark: SparkSession, sf: str) -> DataFrame:
     into ranges of 10 (privacy.generalize_quasi) enlarges groups so far
     fewer rows fall under k. One row per treatment with its suppressed
     count — the utility/privacy trade made measurable."""
-    from presto_workload_analyzer_spark.privacy.obfuscate import generalize_quasi
-
     ev = read_sf_table(spark, sf, "events").select("user_id", "event_type")
     raw_w = Window.partitionBy("user_id", "event_type")
     raw = ev.withColumn("__gs", F.count(F.lit(1)).over(raw_w)).agg(
@@ -3717,8 +3597,6 @@ def _a37(spark: SparkSession, sf: str) -> DataFrame:
     analyzer an operator reads before capacity review. min-date per
     (user, shape) then a date rollup: two map-side-combinable aggregates,
     shuffle bounded by |users| x |shapes|, never by query count."""
-    from presto_workload_analyzer_spark.functions import normalize_sql
-
     ev = read_sf_table(spark, sf, "events")
     shape = normalize_sql(_synthetic_sql_text())
     first_seen = (
@@ -3813,10 +3691,8 @@ def _x50(spark: SparkSession, sf: str) -> DataFrame:
     One aggregate pass, norm via the same in-order fold the similarity
     module uses (NULL vectors contribute n_vectors + n_null_vectors
     only: size/norm are NULL and every other aggregate skips them)."""
-    from presto_workload_analyzer_spark.extensions.similarity import dot_expr
-
     emb = read_sf_table(spark, sf, "embeddings")
-    norm_sq = dot_expr(F.col("embedding"), F.col("embedding"))
+    norm_sq = X_sim.dot_expr(F.col("embedding"), F.col("embedding"))
     return (
         emb.groupBy(F.col("label").cast("long").alias("label"))
         .agg(
@@ -3961,8 +3837,6 @@ _register(
 # --------------------------------------------------------------------------
 # Round-5 additions: broadcast-Bloom incremental dedup, count-min sketches.
 # --------------------------------------------------------------------------
-
-from presto_workload_analyzer_spark.extensions import sketches as X_sk  # noqa: E402
 
 
 def _x52(spark: SparkSession, sf: str) -> DataFrame:
@@ -4142,14 +4016,6 @@ def _s10(spark: SparkSession, sf: str) -> DataFrame:
     picking up store updates for free); at scale the seen-set side is a
     parquet digest table, pruned by the join's runtime filter. Oracle:
     the identical batch anti-join."""
-    import uuid
-
-    from presto_workload_analyzer_spark.streaming import (
-        run_to_memory,
-        state_partitions,
-        stream_sf_table,
-    )
-
     ev = stream_sf_table(spark, sf, "events")
     seen = read_sf_table(spark, sf, "events").filter(
         F.col("event_id") % 3 == 0
@@ -4159,14 +4025,9 @@ def _s10(spark: SparkSession, sf: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         F.round(F.sum("value"), 6).alias("value_sum"),
     )
-    name = f"s10_mem_{uuid.uuid4().hex[:8]}"
-    with state_partitions(spark, 8):
-        q = run_to_memory(agg, name, output_mode="complete")
-        q.awaitTermination(300)
-    out = spark.table(name).select(
+    return drain(agg, output_mode="complete", partitions=8).select(
         F.col("w.start").alias("bucket"), "n_events", "value_sum"
     )
-    return spark.createDataFrame(out.collect(), out.schema)
 
 
 _register(
@@ -4606,14 +4467,6 @@ def _s11(spark: SparkSession, sf: str) -> DataFrame:
     standard ops-monitoring shape (static profile re-planned per
     micro-batch, so a nightly profile refresh is picked up for free; no
     stream-stream state). Oracle: the identical batch composition."""
-    import uuid
-
-    from presto_workload_analyzer_spark.streaming import (
-        run_to_memory,
-        state_partitions,
-        stream_sf_table,
-    )
-
     hist = (
         # ts IS NOT NULL: an undatable event is no day's count — the
         # batch profile must skip it exactly as the streaming window does
@@ -4631,12 +4484,8 @@ def _s11(spark: SparkSession, sf: str) -> DataFrame:
     agg = ev.groupBy(F.window("ts", "1 day").alias("w"), F.col("event_type")).agg(
         F.count(F.lit(1)).alias("n_events")
     )
-    name = f"s11_mem_{uuid.uuid4().hex[:8]}"
-    with state_partitions(spark, 8):
-        q = run_to_memory(agg, name, output_mode="complete")
-        q.awaitTermination(300)
-    out = (
-        spark.table(name)
+    return (
+        drain(agg, output_mode="complete", partitions=8)
         .join(F.broadcast(hist), on="event_type")
         .select(
             F.col("w.start").alias("bucket"),
@@ -4652,7 +4501,6 @@ def _s11(spark: SparkSession, sf: str) -> DataFrame:
             ).alias("z"),
         )
     )
-    return spark.createDataFrame(out.collect(), out.schema)
 
 
 _register(
@@ -4677,8 +4525,6 @@ def _p08(spark: SparkSession, sf: str) -> DataFrame:
     after k-anonymity (p04) and l-diversity (p06); computed in sparse
     form (no group × domain densification). Rounded for cross-engine
     float portability."""
-    from presto_workload_analyzer_spark.privacy.obfuscate import t_closeness
-
     ev = read_sf_table(spark, sf, "events")
     out = t_closeness(ev, ["user_id"], "event_type", t=0.2)
     return out.select(
@@ -4751,30 +4597,16 @@ def _s12(spark: SparkSession, sf: str) -> DataFrame:
     running min — the Page-CUSUM closed form), so the oracle is the exact
     window formulation S = P - min(0, running_min(P)); single-batch
     availableNow drain makes per-key processing order total."""
-    import uuid
-
-    from presto_workload_analyzer_spark.streaming import (
-        run_to_memory,
-        state_partitions,
-        stream_sf_table,
-    )
-    from presto_workload_analyzer_spark.streaming.cusum import cusum_alarms
-
     ev = stream_sf_table(spark, sf, "events")
     alarms = cusum_alarms(
         ev, "event_type", "ts", "event_id", "value",
         target=50.0, slack=2.0, threshold=300.0,
     )
-    name = f"s12_mem_{uuid.uuid4().hex[:8]}"
-    with state_partitions(spark, 8):
-        q = run_to_memory(alarms, name, output_mode="append")
-        q.awaitTermination(300)
-    out = spark.table(name).select(
+    return drain(alarms, partitions=8).select(
         F.col("key").alias("event_type"),
         "event_id",
         F.round(F.col("s_plus") + 1e-9, 6).alias("s_plus"),
     )
-    return spark.createDataFrame(out.collect(), out.schema)
 
 
 _register(
@@ -5572,14 +5404,6 @@ def _s13(spark: SparkSession, sf: str) -> DataFrame:
     declarative streaming agg (state = one row per key, no custom
     stateful op needed: max/max_by/count all merge incrementally).
     Deterministic argmax via the unique (ts, event_id) pair."""
-    import uuid
-
-    from presto_workload_analyzer_spark.streaming import (
-        run_to_memory,
-        state_partitions,
-        stream_sf_table,
-    )
-
     ev = stream_sf_table(spark, sf, "events")
     snap = ev.groupBy("user_id").agg(
         F.max("ts").alias("last_ts"),
@@ -5589,18 +5413,13 @@ def _s13(spark: SparkSession, sf: str) -> DataFrame:
         ).alias("__last"),
         F.count(F.lit(1)).cast("long").alias("n_events"),
     )
-    name = f"s13_mem_{uuid.uuid4().hex[:8]}"
-    with state_partitions(spark, 8):
-        q = run_to_memory(snap, name, output_mode="complete")
-        q.awaitTermination(300)
-    out = spark.table(name).select(
+    return drain(snap, output_mode="complete", partitions=8).select(
         "user_id",
         "last_ts",
         F.col("__last.v").alias("last_value"),
         F.col("__last.t").alias("last_type"),
         "n_events",
     )
-    return spark.createDataFrame(out.collect(), out.schema)
 
 
 _register(
@@ -5613,9 +5432,6 @@ _register(
     "  CAST(count(*) OVER (PARTITION BY user_id) AS BIGINT) AS n_events"
     " FROM events) WHERE rn = 1",
 )
-
-
-from presto_workload_analyzer_spark.extensions import graph as X_graph  # noqa: E402
 
 
 def shared_dup_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6028,14 +5844,6 @@ def _s14(spark: SparkSession, sf: str) -> DataFrame:
     cells. The streaming twin of x85, sharing its oracle: histograms are
     the percentile shape that streams, because cells merge and quantile
     state does not."""
-    import uuid
-
-    from presto_workload_analyzer_spark.streaming import (
-        run_to_memory,
-        state_partitions,
-        stream_sf_table,
-    )
-
     ev = stream_sf_table(spark, sf, "events")
     # NULL values are unmeasurable — excluded exactly as the batch
     # histogram_quantiles does (see sketches.py)
@@ -6043,13 +5851,8 @@ def _s14(spark: SparkSession, sf: str) -> DataFrame:
         "event_type",
         F.round(F.col("value") * 100, 0).cast("long").alias("__bin"),
     ).agg(F.count(F.lit(1)).alias("__n"))
-    name = f"s14_mem_{uuid.uuid4().hex[:8]}"
-    with state_partitions(spark, 8):
-        q = run_to_memory(bins, name, output_mode="complete")
-        q.awaitTermination(300)
-    hist = spark.table(name)
-    out = X_sk.histogram_readout(hist, "event_type", resolution=100, qs=(0.5, 0.9, 0.99))
-    return spark.createDataFrame(out.collect(), out.schema)
+    hist = drain(bins, output_mode="complete", partitions=8)
+    return X_sk.histogram_readout(hist, "event_type", resolution=100, qs=(0.5, 0.9, 0.99))
 
 
 _register(
@@ -6689,8 +6492,6 @@ def _p12(spark: SparkSession, sf: str) -> DataFrame:
     budget claim. The clip window is keyed by user_id (corpus
     cardinality); noise reuses p05's reproducible inverse-CDF hash
     mechanism (salt swap = real entropy in production)."""
-    from presto_workload_analyzer_spark.privacy.obfuscate import laplace_noise
-
     ev = read_sf_table(spark, sf, "events")
     # asc_nulls_last pins the clip order cross-engine: an undatable
     # (NULL-ts) event contributes only after every dated one — Spark's
@@ -6937,28 +6738,14 @@ def _s15(spark: SparkSession, sf: str) -> DataFrame:
     stream-stream interval join (s04) cannot express. Conversions emit
     in the purchase's own batch (no watermark-dependent residue), so
     the drained stream equals the batch lag() formulation exactly."""
-    import uuid
-
-    from presto_workload_analyzer_spark.streaming import (
-        funnel_conversions,
-        run_to_memory,
-        state_partitions,
-        stream_sf_table,
-    )
-
     ev = stream_sf_table(spark, sf, "events").withWatermark("ts", "1 minute")
     conv = funnel_conversions(ev, horizon_seconds=3600.0)
-    name = f"s15_mem_{uuid.uuid4().hex[:8]}"
-    with state_partitions(spark, 8):
-        q = run_to_memory(conv, name, output_mode="append")
-        q.awaitTermination(300)
-    out = spark.table(name).select(
+    return drain(conv, partitions=8).select(
         "user_id",
         "signup_ts",
         "purchase_ts",
         F.round("latency_s", 6).alias("latency_s"),
     )
-    return spark.createDataFrame(out.collect(), out.schema)
 
 
 _register(
@@ -7027,10 +6814,6 @@ def _p13(spark: SparkSession, sf: str) -> DataFrame:
     and a releasable artifact. Suppression happens AFTER noise, so the
     release is a pure function of (cell key, count) — engine-replayable.
     At sf0.01 both branches are exercised (18 of 97 cells clear tau)."""
-    import math
-
-    from presto_workload_analyzer_spark.privacy.obfuscate import laplace_noise
-
     tau = 1.0 + 2.0 * math.log(3.0 / (2.0 * 0.05))
     docs = read_sf_table(spark, sf, "documents")
     g = docs.groupBy("source", "lang").agg(
@@ -7047,8 +6830,6 @@ def _p13(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _p13_sql() -> str:
-    import math
-
     tau = 1.0 + 2.0 * math.log(3.0 / (2.0 * 0.05))
     hexpos = "(strpos('0123456789abcdef', substr(h, {i}, 1)) - 1)"
     v = " + ".join(f"{hexpos.format(i=i + 1)} * {16 ** (5 - i)}" for i in range(6))
@@ -7896,25 +7677,11 @@ def _s16(spark: SparkSession, sf: str) -> DataFrame:
     tokens), while near-uniform traffic ties at the k-th count and no
     margin can certify it; thresholds have no such cliff. The expected
     output is hash-free, so the oracle is plain SQL."""
-    import uuid
-
-    from presto_workload_analyzer_spark.streaming import (
-        run_to_memory,
-        state_partitions,
-        stream_sf_table,
-    )
-
     width, depth, threshold = 8192, 4, 85
     ev = stream_sf_table(spark, sf, "events")
     terms = ev.select(F.col("user_id").cast("string").alias("term"))
     cells = X_sk.countmin_sketch(terms, "term", width=width, depth=depth, mode="xxhash64")
-    name = f"s16_mem_{uuid.uuid4().hex[:8]}"
-    with state_partitions(spark, 8):
-        q = run_to_memory(cells, name, output_mode="complete")
-        q.awaitTermination(300)
-    sketch = spark.createDataFrame(
-        spark.table(name).collect(), spark.table(name).schema
-    )
+    sketch = drain(cells, output_mode="complete", partitions=8)
 
     evb = read_sf_table(spark, sf, "events").select(
         F.col("user_id").cast("string").alias("term")
@@ -8081,8 +7848,6 @@ def _x113(spark: SparkSession, sf: str) -> DataFrame:
     battery is CPU-dense per row — rows repartition to core-count tasks
     when the scan arrives as fewer splits (sources.min_row_parallelism;
     structural no-op at production file counts)."""
-    from presto_workload_analyzer_spark.sources import min_row_parallelism
-
     docs = min_row_parallelism(read_sf_table(spark, sf, "documents"))
     scores = X_text.language_scores(F.col("text"))
     order = list(scores)
@@ -8923,9 +8688,6 @@ def _jl_signs(d_out: int = 16, d_in: int = 64) -> list[list[float]]:
     """Deterministic ±1/sqrt(d_out) JL rows from md5 — shared constants
     for the Spark expression and the SQL oracle (the x12 hyperplane
     literal-array move)."""
-    import hashlib
-    import math
-
     s = 1.0 / math.sqrt(d_out)
     return [
         [
@@ -9262,13 +9024,11 @@ def _x128(spark: SparkSession, sf: str) -> DataFrame:
     Nesting (each sample contains the previous) comes free from bucket
     thresholds, and the whole curve is ONE conditional aggregate over
     one scan."""
-    from presto_workload_analyzer_spark.extensions.sampling import hash_bucket
-
     docs = read_sf_table(spark, sf, "documents")
     scored = docs.select(
         "source",
         F.round(X_text.quality_score("text") + 1e-9, 6).alias("q"),
-        hash_bucket("doc_id").alias("__b"),
+        X_samp.hash_bucket("doc_id").alias("__b"),
     )
     sizes = [4, 16, 64, 256]
     agg = scored.groupBy("source").agg(
@@ -9357,26 +9117,12 @@ def _s17(spark: SparkSession, sf: str) -> DataFrame:
     hll_estimate batch-side on the drained registers; the oracle replays
     registers + estimator exactly, plus the exact distinct for the
     honesty column."""
-    import uuid
-
-    from presto_workload_analyzer_spark.streaming import (
-        run_to_memory,
-        state_partitions,
-        stream_sf_table,
-    )
-
     ev = stream_sf_table(spark, sf, "events")
     terms = ev.select(
         F.col("event_type").alias("g"), F.col("user_id").cast("string").alias("w")
     )
     regs = X_sk.hll_registers(terms, "g", "w", p=8)
-    name = f"s17_mem_{uuid.uuid4().hex[:8]}"
-    with state_partitions(spark, 8):
-        q = run_to_memory(regs, name, output_mode="complete")
-        q.awaitTermination(300)
-    drained = spark.createDataFrame(
-        spark.table(name).collect(), spark.table(name).schema
-    )
+    drained = drain(regs, output_mode="complete", partitions=8)
     est = X_sk.hll_estimate(drained, p=8).withColumnRenamed("g", "event_type")
     exact = read_sf_table(spark, sf, "events").groupBy("event_type").agg(
         F.countDistinct("user_id").cast("long").alias("n_exact")
@@ -9500,8 +9246,6 @@ def _x129(spark: SparkSession, sf: str) -> DataFrame:
     batteries per row — rows repartition to core-count tasks when the
     scan arrives as fewer splits (sources.min_row_parallelism;
     structural no-op at production file counts)."""
-    from presto_workload_analyzer_spark.sources import min_row_parallelism
-
     docs = min_row_parallelism(read_sf_table(spark, sf, "documents"))
     half1 = F.substring(F.col("text"), 1, (F.length("text") / 2).cast("int"))
     half2 = F.substring(
@@ -9663,7 +9407,6 @@ def _x131(spark: SparkSession, sf: str) -> DataFrame:
     ).crossJoin(
         pos_probe.agg(F.count(F.lit(1)).cast("long").alias("n_false_pos"))
     )
-    import math
 
     theory = (1.0 - math.exp(-k * n_mem / m_bits)) ** k
     return stats.select(
@@ -9729,7 +9472,6 @@ def _x132(spark: SparkSession, sf: str) -> DataFrame:
         (F.col("est") - F.col("__n")).alias("__e")
     )
     tot = toks.count()
-    import math
 
     bound = (math.e / width) * tot
     buck = F.when(F.col("__e") == 0, F.lit(0)).otherwise(
@@ -9742,8 +9484,6 @@ def _x132(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _x132_sql() -> str:
-    import math
-
     digit = "(strpos('0123456789abcdef', substr(h, {i}, 1)) - 1)"
     val = " + ".join(f"{digit.format(i=i + 1)} * {16 ** (3 - i)}" for i in range(4))
     return (
@@ -9818,14 +9558,12 @@ def _x133(spark: SparkSession, sf: str) -> DataFrame:
                 rows.append((int(doc_id), payload))
             yield pd.DataFrame(rows, columns=["doc_id", "payload"])
 
-    from pyspark.sql import types as T_
-
     media = docs.mapInPandas(
         synth,
-        T_.StructType(
+        T.StructType(
             [
-                T_.StructField("doc_id", T_.LongType()),
-                T_.StructField("payload", T_.BinaryType()),
+                T.StructField("doc_id", T.LongType()),
+                T.StructField("payload", T.BinaryType()),
             ]
         ),
     )
@@ -9895,14 +9633,12 @@ def _x134(spark: SparkSession, sf: str) -> DataFrame:
                 rows.append((doc_id, payload))
             yield pd.DataFrame(rows, columns=["doc_id", "payload"])
 
-    from pyspark.sql import types as T_
-
     media = docs.mapInPandas(
         synth,
-        T_.StructType(
+        T.StructType(
             [
-                T_.StructField("doc_id", T_.LongType()),
-                T_.StructField("payload", T_.BinaryType()),
+                T.StructField("doc_id", T.LongType()),
+                T.StructField("payload", T.BinaryType()),
             ]
         ),
     )
@@ -9970,14 +9706,12 @@ def _x135(spark: SparkSession, sf: str) -> DataFrame:
                 rows.append((doc_id, payload))
             yield pd.DataFrame(rows, columns=["doc_id", "payload"])
 
-    from pyspark.sql import types as T_
-
     media = docs.mapInPandas(
         synth,
-        T_.StructType(
+        T.StructType(
             [
-                T_.StructField("doc_id", T_.LongType()),
-                T_.StructField("payload", T_.BinaryType()),
+                T.StructField("doc_id", T.LongType()),
+                T.StructField("payload", T.BinaryType()),
             ]
         ),
     )
@@ -10017,28 +9751,22 @@ def _x136(spark: SparkSession, sf: str) -> DataFrame:
     def synth(batches):
         import pandas as pd
 
-        from presto_workload_analyzer_spark.extensions.multimodal import (
-            _encode_png,
-        )
-
         for pdf in batches:
             rows = []
             for doc_id in pdf["doc_id"]:
                 doc_id = int(doc_id)
                 side = 4 + doc_id % 5
                 v = doc_id % 256
-                payload = _encode_png(side, side, 1, bytes([v]) * (side * side))
+                payload = X_mm._encode_png(side, side, 1, bytes([v]) * (side * side))
                 rows.append((doc_id, payload))
             yield pd.DataFrame(rows, columns=["doc_id", "payload"])
 
-    from pyspark.sql import types as T_
-
     media = docs.mapInPandas(
         synth,
-        T_.StructType(
+        T.StructType(
             [
-                T_.StructField("doc_id", T_.LongType()),
-                T_.StructField("payload", T_.BinaryType()),
+                T.StructField("doc_id", T.LongType()),
+                T.StructField("payload", T.BinaryType()),
             ]
         ),
     )
@@ -10075,10 +9803,6 @@ def _x137(spark: SparkSession, sf: str) -> DataFrame:
     def synth(batches):
         import pandas as pd
 
-        from presto_workload_analyzer_spark.extensions.multimodal import (
-            _encode_png,
-        )
-
         for pdf in batches:
             rows = []
             for doc_id in pdf["doc_id"]:
@@ -10089,17 +9813,15 @@ def _x137(spark: SparkSession, sf: str) -> DataFrame:
                     )
                 else:
                     px = bytes([128]) * 256
-                rows.append((doc_id, _encode_png(16, 16, 1, px)))
+                rows.append((doc_id, X_mm._encode_png(16, 16, 1, px)))
             yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    from pyspark.sql import types as T_
 
     media = docs.mapInPandas(
         synth,
-        T_.StructType(
+        T.StructType(
             [
-                T_.StructField("doc_id", T_.LongType()),
-                T_.StructField("payload", T_.BinaryType()),
+                T.StructField("doc_id", T.LongType()),
+                T.StructField("payload", T.BinaryType()),
             ]
         ),
     )
@@ -10130,8 +9852,6 @@ def _x138(spark: SparkSession, sf: str) -> DataFrame:
     def synth(batches):
         import pandas as pd
 
-        from presto_workload_analyzer_spark.extensions.gifcodec import encode_gif
-
         for pdf in batches:
             rows = []
             for doc_id in pdf["doc_id"]:
@@ -10143,14 +9863,12 @@ def _x138(spark: SparkSession, sf: str) -> DataFrame:
                 )
             yield pd.DataFrame(rows, columns=["doc_id", "payload"])
 
-    from pyspark.sql import types as T_
-
     media = docs.mapInPandas(
         synth,
-        T_.StructType(
+        T.StructType(
             [
-                T_.StructField("doc_id", T_.LongType()),
-                T_.StructField("payload", T_.BinaryType()),
+                T.StructField("doc_id", T.LongType()),
+                T.StructField("payload", T.BinaryType()),
             ]
         ),
     )
@@ -10187,10 +9905,6 @@ def _x139(spark: SparkSession, sf: str) -> DataFrame:
     def synth(batches):
         import pandas as pd
 
-        from presto_workload_analyzer_spark.extensions.multimodal import (
-            _encode_png,
-        )
-
         for pdf in batches:
             rows = []
             for doc_id in pdf["doc_id"]:
@@ -10198,18 +9912,16 @@ def _x139(spark: SparkSession, sf: str) -> DataFrame:
                 side = 8 + doc_id % 9
                 v = doc_id % 256
                 rows.append(
-                    (doc_id, _encode_png(side, side, 1, bytes([v]) * (side * side)))
+                    (doc_id, X_mm._encode_png(side, side, 1, bytes([v]) * (side * side)))
                 )
             yield pd.DataFrame(rows, columns=["doc_id", "payload"])
 
-    from pyspark.sql import types as T_
-
     media = docs.mapInPandas(
         synth,
-        T_.StructType(
+        T.StructType(
             [
-                T_.StructField("doc_id", T_.LongType()),
-                T_.StructField("payload", T_.BinaryType()),
+                T.StructField("doc_id", T.LongType()),
+                T.StructField("payload", T.BinaryType()),
             ]
         ),
     ).withColumn(
@@ -10639,10 +10351,6 @@ def _x146(spark: SparkSession, sf: str) -> DataFrame:
     runs, chained as ONE plan so contract drift between the privacy
     operators (key shapes, suppression-before-noise order, tau
     semantics) is hash-caught. Oracle replays every stage."""
-    import math
-
-    from presto_workload_analyzer_spark.privacy.obfuscate import laplace_noise
-
     tau = 1.0 + 2.0 * math.log(3.0 / (2.0 * 0.05))
     ev = read_sf_table(spark, sf, "events")
     gen = ev.select(
@@ -10666,8 +10374,6 @@ def _x146(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _x146_sql() -> str:
-    import math
-
     tau = 1.0 + 2.0 * math.log(3.0 / (2.0 * 0.05))
     hexpos = "(strpos('0123456789abcdef', substr(h, {i}, 1)) - 1)"
     v = " + ".join(f"{hexpos.format(i=i + 1)} * {16 ** (5 - i)}" for i in range(6))
@@ -10716,11 +10422,8 @@ def _xs1(spark: SparkSession, sf: str) -> DataFrame:
     published trick that makes semantic dedup tractable at scale: the
     quadratic pair join runs per-cluster (bounded fan-out equi-join on
     label), never corpus-wide."""
-    from presto_workload_analyzer_spark.extensions import dedup
-    from presto_workload_analyzer_spark.sources import read_table
-
-    emb = read_table(spark, f"{sf}/embeddings.parquet")
-    kept = dedup.semantic_dedup(
+    emb = read_sf_table(spark, sf, "embeddings")
+    kept = X_dedup.semantic_dedup(
         emb, "vec_id", "embedding", "label",
         threshold=_XS1_SEMDEDUP_THRESHOLD, impl="blas",
     )
@@ -10765,12 +10468,9 @@ def _xs2(spark: SparkSession, sf: str) -> DataFrame:
     add-1.0 smoothing. Target slice = doc_id % 10 == 0 (deterministic).
     The feature->ratio table is 4096 rows -> broadcast joined; per-doc
     cost is one groupBy over tokens."""
-    from presto_workload_analyzer_spark.extensions import sampling
-    from presto_workload_analyzer_spark.sources import read_table
-
-    docs = read_table(spark, f"{sf}/documents.parquet")
+    docs = read_sf_table(spark, sf, "documents")
     target = docs.filter(F.col("doc_id") % 10 == 0)
-    return sampling.dsir_log_weights(docs, target, "doc_id", "text", mode="md5")
+    return X_samp.dsir_log_weights(docs, target, "doc_id", "text", mode="md5")
 
 
 def _xs2_sql() -> str:
@@ -10824,16 +10524,10 @@ def _xs3(spark: SparkSession, sf: str) -> DataFrame:
     local_prune=K bounding the offset join to K rows per (source, shard).
     Ties rank on the ROUNDED weight with doc_id as tiebreak so the
     ordering is engine-portable."""
-    from presto_workload_analyzer_spark.extensions import sampling
-    from presto_workload_analyzer_spark.extensions.sampling import (
-        _hierarchical_row_number,
-    )
-    from presto_workload_analyzer_spark.sources import read_table
-
-    docs = read_table(spark, f"{sf}/documents.parquet")
+    docs = read_sf_table(spark, sf, "documents")
     target = docs.filter(F.col("doc_id") % 10 == 0)
-    w = sampling.dsir_log_weights(docs, target, "doc_id", "text", mode="md5")
-    ranked = _hierarchical_row_number(
+    w = X_samp.dsir_log_weights(docs, target, "doc_id", "text", mode="md5")
+    ranked = X_samp._hierarchical_row_number(
         docs.select("doc_id", "source").join(w, "doc_id"),
         ["source"],
         [F.col("log_w").desc(), F.col("doc_id")],
@@ -10875,27 +10569,15 @@ def _xs4(spark: SparkSession, sf: str) -> DataFrame:
     forms and any RIFF-walk, stride, DCT/quant or unfilter bug is a hash
     mismatch. Payloads are built and decoded executor-side (Arrow
     mapInPandas both sides); only frame-stat rows move."""
-    from pyspark.sql import types as T
-
-    from presto_workload_analyzer_spark.extensions import multimodal as X_mm
-    from presto_workload_analyzer_spark.sources import read_table
-
-    from presto_workload_analyzer_spark.sources import min_row_parallelism
-
     # JPEG encode+decode is pure CPU per row; the doc_id feed
     # repartitions to core-count tasks when the scan arrives as fewer
     # splits (structural no-op at production file counts)
     docs = min_row_parallelism(
-        read_table(spark, f"{sf}/documents.parquet").select("doc_id")
+        read_sf_table(spark, sf, "documents").select("doc_id")
     )
 
     def synth(batches):
         import pandas as pd
-
-        from presto_workload_analyzer_spark.extensions.jpegcodec import encode_jpeg
-        from presto_workload_analyzer_spark.extensions.multimodal import (
-            encode_avi_mjpeg,
-        )
 
         for pdf in batches:
             rows = []
@@ -10906,7 +10588,7 @@ def _xs4(spark: SparkSession, sf: str) -> DataFrame:
                     encode_jpeg(w, h, 1, bytes([(doc_id * 37 + i * 59) % 256]) * (w * h))
                     for i in range(2 + doc_id % 3)
                 ]
-                rows.append((doc_id, encode_avi_mjpeg(frames, fps=10, width=w, height=h)))
+                rows.append((doc_id, X_mm.encode_avi_mjpeg(frames, fps=10, width=w, height=h)))
             yield pd.DataFrame(rows, columns=["doc_id", "payload"])
 
     media = docs.mapInPandas(
@@ -10961,11 +10643,8 @@ def _xs5(spark: SparkSession, sf: str) -> DataFrame:
     100 TB the same code runs with cap ~10_000. The md5/k=3/h16/b4
     parameters match x02 exactly, so guard-on-vs-off is the ONLY
     difference between this oracle and x02's."""
-    from presto_workload_analyzer_spark.extensions import dedup
-    from presto_workload_analyzer_spark.sources import read_table
-
-    docs = read_table(spark, f"{sf}/documents.parquet")
-    return dedup.minhash_lsh_pairs(
+    docs = read_sf_table(spark, sf, "documents")
+    return X_dedup.minhash_lsh_pairs(
         docs, "doc_id", "text", k=3, num_hashes=16, bands=4, mode="md5",
         max_bucket_size=_XS5_MAX_BUCKET,
     )
@@ -11025,18 +10704,14 @@ def _xs6(spark: SparkSession, sf: str) -> DataFrame:
     arithmetic on #sources rows (broadcast self-join for rank/prefix sum,
     1-row broadcast cross joins for the scalars — no window, no global
     sort)."""
-    from presto_workload_analyzer_spark.extensions import sampling
-    from presto_workload_analyzer_spark.extensions import textstats
-    from presto_workload_analyzer_spark.sources import read_table
-
-    docs = read_table(spark, f"{sf}/documents.parquet")
+    docs = read_sf_table(spark, sf, "documents")
     # a NULL source is not an allocatable source — filtered on BOTH
     # sides (unimax_mix's rank/prefix broadcast self-join is
     # null-rejecting, while the oracle's window keeps the NULL group)
     per = docs.filter(F.col("source").isNotNull()).groupBy("source").agg(
-        F.sum(textstats.token_count("text").cast("long")).alias("__tok")
+        F.sum(X_text.token_count("text").cast("long")).alias("__tok")
     )
-    return sampling.unimax_mix(
+    return X_samp.unimax_mix(
         per, "source", "__tok", budget=_XS6_BUDGET, epoch_cap=_XS6_EPOCH_CAP
     )
 
@@ -11085,11 +10760,8 @@ def _xs7(spark: SparkSession, sf: str) -> DataFrame:
     the doc-grain sums up to source grain — the grain a mixing decision
     reads. Count tables at vocabulary grain, unseen keys LEFT-join to 0,
     scalars broadcast: x63's exact shuffle shape."""
-    from presto_workload_analyzer_spark.extensions import textstats
-    from presto_workload_analyzer_spark.sources import read_table
-
-    docs = read_table(spark, f"{sf}/documents.parquet")
-    nll = textstats.heldout_bigram_nll(
+    docs = read_sf_table(spark, sf, "documents")
+    nll = X_text.heldout_bigram_nll(
         docs, "doc_id", "text", holdout=F.col("doc_id") % 5 == 0, lam=_XS7_LAM
     )
     src = docs.filter(F.col("doc_id") % 5 == 0).select(
@@ -11183,12 +10855,9 @@ def _xs8(spark: SparkSession, sf: str) -> DataFrame:
     clustering consumers; the pick rank runs hierarchically
     (hash-prefix shards, local_prune=m) so even a viral mega-family
     never funnels through one sorting task."""
-    from presto_workload_analyzer_spark.extensions import sampling
-    from presto_workload_analyzer_spark.sources import read_table
-
-    docs = read_table(spark, f"{sf}/documents.parquet")
+    docs = read_sf_table(spark, sf, "documents")
     cc = shared_dedup_clusters(spark, sf)
-    return sampling.cluster_balanced_sample(docs, "doc_id", cc, m=_XS8_M).select(
+    return X_samp.cluster_balanced_sample(docs, "doc_id", cc, m=_XS8_M).select(
         "doc_id", "cluster_id", "cluster_size", "pick_rank"
     )
 
@@ -11230,15 +10899,11 @@ def _xs9(spark: SparkSession, sf: str) -> DataFrame:
     recipe picks from. One corpus-grain token aggregate; the power-law
     normalization folds in via a 1-row broadcast cross join (source-grain
     arithmetic, no window, no sort)."""
-    from presto_workload_analyzer_spark.extensions import sampling
-    from presto_workload_analyzer_spark.extensions import textstats
-    from presto_workload_analyzer_spark.sources import read_table
-
-    docs = read_table(spark, f"{sf}/documents.parquet")
+    docs = read_sf_table(spark, sf, "documents")
     per = docs.groupBy("source").agg(
-        F.sum(textstats.token_count("text").cast("long")).alias("__tok")
+        F.sum(X_text.token_count("text").cast("long")).alias("__tok")
     )
-    return sampling.temperature_mix(
+    return X_samp.temperature_mix(
         per, "source", "__tok",
         budget=_XS9_BUDGET, temperature=_XS9_TEMPERATURE,
     )
@@ -11276,11 +10941,8 @@ def _xs10(spark: SparkSession, sf: str) -> DataFrame:
     The '#' and '...' symbol ratios are tested SEPARATELY against 0.1
     each, per the paper's "either" wording (r10 ADVICE fix). Pure
     Column expressions — whole-stage codegen, no explode/join."""
-    from presto_workload_analyzer_spark.extensions import textstats
-    from presto_workload_analyzer_spark.sources import read_table
-
-    docs = read_table(spark, f"{sf}/documents.parquet")
-    return textstats.gopher_rules(docs, "doc_id", "text").withColumnRenamed(
+    docs = read_sf_table(spark, sf, "documents")
+    return X_text.gopher_rules(docs, "doc_id", "text").withColumnRenamed(
         "id", "doc_id"
     )
 
@@ -11359,17 +11021,11 @@ def _xs11(spark: SparkSession, sf: str) -> DataFrame:
     but run the full positional-coverage kernel. Group-bys and
     equi-joins at (doc, gram) / (doc, position) grain — no window, no
     UDF (textstats.gopher_repetition)."""
-    from presto_workload_analyzer_spark.extensions import textstats
-    from presto_workload_analyzer_spark.sources import (
-        min_row_parallelism,
-        read_table,
-    )
-
     # the positional n-gram explode is CPU-dense per row; rows
     # repartition to core-count tasks when the scan arrives as fewer
     # splits (structural no-op at production file counts)
-    docs = min_row_parallelism(read_table(spark, f"{sf}/documents.parquet"))
-    out = textstats.gopher_repetition(docs, "doc_id", "text")
+    docs = min_row_parallelism(read_sf_table(spark, sf, "documents"))
+    out = X_text.gopher_repetition(docs, "doc_id", "text")
     flags = {
         f"ok_{k}": F.col(f"{k}_frac") <= t for k, t in _XS11_THRESHOLDS.items()
     }
@@ -11471,11 +11127,8 @@ def _xs12(spark: SparkSession, sf: str) -> DataFrame:
     discipline: the keep flag compares the ROUNDED perplexity so the
     boundary cannot flip across engines, and the threshold's distance
     to the corpus is margin-pinned by test."""
-    from presto_workload_analyzer_spark.extensions import textstats
-    from presto_workload_analyzer_spark.sources import read_table
-
-    docs = read_table(spark, f"{sf}/documents.parquet")
-    nll = textstats.heldout_bigram_nll(
+    docs = read_sf_table(spark, sf, "documents")
+    nll = X_text.heldout_bigram_nll(
         docs, "doc_id", "text", holdout=F.col("doc_id") % 5 == 0, lam=_XS7_LAM
     )
     ppl = F.round(F.exp(F.col("sum_nll") / F.col("n_scored")) + 1e-9, 6)
@@ -11512,23 +11165,11 @@ def _s18(spark: SparkSession, sf: str) -> DataFrame:
     harness; the production sink is the foreachBatch parquet path
     (streaming/ingest.py). Oracle: identical to xs10's — a stateless
     stream drain IS the batch result."""
-    import uuid
-
-    from presto_workload_analyzer_spark.extensions import textstats
-    from presto_workload_analyzer_spark.streaming import (
-        run_to_memory,
-        stream_sf_table,
-    )
-
     docs = stream_sf_table(spark, sf, "documents")
-    gated = textstats.gopher_rules(docs, "doc_id", "text").withColumnRenamed(
+    gated = X_text.gopher_rules(docs, "doc_id", "text").withColumnRenamed(
         "id", "doc_id"
     )
-    name = f"s18_mem_{uuid.uuid4().hex[:8]}"
-    q = run_to_memory(gated, name, output_mode="append")
-    q.awaitTermination(300)
-    tbl = spark.table(name)
-    return spark.createDataFrame(tbl.collect(), tbl.schema)
+    return drain(gated)
 
 
 _register("s18_stream_quality_gate", _s18, _xs10_sql())
@@ -11550,12 +11191,9 @@ def _xs13(spark: SparkSession, sf: str) -> DataFrame:
     a global draw. The per-source top-K runs hierarchically (x99's
     range-sharded rank, local_prune=K); everything upstream is xs2's
     broadcast-ratio scoring pass."""
-    from presto_workload_analyzer_spark.extensions import sampling
-    from presto_workload_analyzer_spark.sources import read_table
-
-    docs = read_table(spark, f"{sf}/documents.parquet")
+    docs = read_sf_table(spark, sf, "documents")
     target = docs.filter(F.col("doc_id") % 10 == 0)
-    dw = sampling.dsir_log_weights(docs, target, "doc_id", "text", mode="md5")
+    dw = X_samp.dsir_log_weights(docs, target, "doc_id", "text", mode="md5")
     keyed = dw.join(docs.select("doc_id", "source"), "doc_id").select(
         "source",
         "doc_id",
@@ -11585,7 +11223,7 @@ def _xs13(spark: SparkSession, sf: str) -> DataFrame:
             / F.exp(F.col("log_w") / F.col("n_tokens"))
         ).alias("__key"),
     )
-    ranked = sampling._hierarchical_row_number(
+    ranked = X_samp._hierarchical_row_number(
         keyed,
         ["source"],
         [F.col("__key").desc(), F.col("doc_id")],
@@ -11639,7 +11277,6 @@ _register("xs13_dsir_resample", _xs13, _xs13_sql())
 # -- soft (reweighting) dedup, and the two streaming curation seams.
 # --------------------------------------------------------------------------
 
-from pyspark.sql import Column  # noqa: E402
 
 # Shared 8-token line grain for the xs14/xs15 reconstruction.
 _LINE_WIDTH = 8
@@ -11724,14 +11361,11 @@ def _xs14(spark: SparkSession, sf: str) -> DataFrame:
     verbatim in the oracle; the battery itself is
     textstats.c4_line_stats — pure Column expressions, no explode, no
     join, whole-stage codegen at scan speed."""
-    from presto_workload_analyzer_spark.extensions import textstats
-    from presto_workload_analyzer_spark.sources import read_table
-
-    docs = read_table(spark, f"{sf}/documents.parquet")
+    docs = read_sf_table(spark, sf, "documents")
     synth = _toked(docs, "doc_id").select(
         "doc_id", F.array_join(_chunk_lines(markers=True), "\n").alias("text")
     )
-    return textstats.c4_line_stats(synth, "doc_id", "text").withColumnRenamed(
+    return X_text.c4_line_stats(synth, "doc_id", "text").withColumnRenamed(
         "id", "doc_id"
     )
 
@@ -11776,14 +11410,11 @@ def _xs15(spark: SparkSession, sf: str) -> DataFrame:
     document (dedup.duplicated_line_removal docstring has the 100 TB
     shuffle-shape audit: one line-digest-grain shuffle + a digest-grain
     canonical table, no window)."""
-    from presto_workload_analyzer_spark.extensions import dedup
-    from presto_workload_analyzer_spark.sources import read_table
-
-    docs = read_table(spark, f"{sf}/documents.parquet")
+    docs = read_sf_table(spark, sf, "documents")
     synth = _toked(docs, "doc_id").select(
         "doc_id", F.array_join(_chunk_lines(markers=False), "\n").alias("text")
     )
-    return dedup.duplicated_line_removal(synth, "doc_id", "text").withColumnRenamed(
+    return X_dedup.duplicated_line_removal(synth, "doc_id", "text").withColumnRenamed(
         "id", "doc_id"
     )
 
@@ -11827,11 +11458,8 @@ def _xs16(spark: SparkSession, sf: str) -> DataFrame:
     statistics (x110). textstats.bm25_scores: the exploded token stream
     is filtered to the query vocabulary BEFORE the (id, term) groupBy,
     df is query-term-grain broadcast, N/avgdl one broadcast row."""
-    from presto_workload_analyzer_spark.extensions import textstats
-    from presto_workload_analyzer_spark.sources import read_table
-
-    docs = read_table(spark, f"{sf}/documents.parquet")
-    return textstats.bm25_scores(
+    docs = read_sf_table(spark, sf, "documents")
+    return X_text.bm25_scores(
         docs, "doc_id", "text", _XS16_TERMS, k1=_XS16_K1, b=_XS16_B
     ).withColumnRenamed("id", "doc_id")
 
@@ -11884,10 +11512,7 @@ def _xs17(spark: SparkSession, sf: str) -> DataFrame:
     one Arrow applyInPandas with a bisect-sorted open-bin list
     (textstats.best_fit_decreasing_pack docstring has the 100 TB
     posture). The oracle replays every decision with a recursive CTE."""
-    from presto_workload_analyzer_spark.extensions import textstats
-    from presto_workload_analyzer_spark.sources import read_table
-
-    docs = read_table(spark, f"{sf}/documents.parquet")
+    docs = read_sf_table(spark, sf, "documents")
     # NULL text has no token count and cannot be packed, and a NULL
     # source no pack group (the oracle's recursive replay joins on
     # source, which is null-rejecting) — both filtered on BOTH sides;
@@ -11896,9 +11521,9 @@ def _xs17(spark: SparkSession, sf: str) -> DataFrame:
     sized = docs.filter(
         F.col("text").isNotNull() & F.col("source").isNotNull()
     ).select(
-        "source", "doc_id", textstats.token_count("text").cast("long").alias("sz")
+        "source", "doc_id", X_text.token_count("text").cast("long").alias("sz")
     )
-    out = textstats.best_fit_decreasing_pack(
+    out = X_text.best_fit_decreasing_pack(
         sized, "source", "doc_id", "sz",
         budget=_XS17_BUDGET, shard_size=_XS17_SHARD,
     )
@@ -11954,8 +11579,6 @@ def _xs17_sql() -> str:
     )
 
 
-
-
 # Calibrated to the synthetic corpus: after the dedup + C4 gates the
 # surviving per-source token totals sit at ~500-1400 (gate SFs); with
 # epoch cap 1.0 a 14k budget caps 4 of 20 sources at BOTH gate SFs
@@ -11979,10 +11602,7 @@ def _xs18(spark: SparkSession, sf: str) -> DataFrame:
     drift between the dedup, quality and mixing operators (id/keep
     column shapes, survivor semantics, allocation arithmetic) is a hash
     mismatch, not a silent skew. Oracle replays every stage."""
-    from presto_workload_analyzer_spark.extensions import sampling, textstats
-    from presto_workload_analyzer_spark.sources import read_table
-
-    docs = read_table(spark, f"{sf}/documents.parquet")
+    docs = read_sf_table(spark, sf, "documents")
     cc = shared_dedup_clusters(spark, sf)
     losers = cc.filter(F.col("id") != F.col("cluster_id")).select(
         F.col("id").alias("doc_id")
@@ -11991,7 +11611,7 @@ def _xs18(spark: SparkSession, sf: str) -> DataFrame:
         "doc_id", F.array_join(_chunk_lines(markers=True), "\n").alias("text")
     )
     quality = (
-        textstats.c4_line_stats(synth, "doc_id", "text")
+        X_text.c4_line_stats(synth, "doc_id", "text")
         .filter(F.col("keep"))
         .select(F.col("id").alias("doc_id"))
     )
@@ -11999,9 +11619,9 @@ def _xs18(spark: SparkSession, sf: str) -> DataFrame:
         docs.join(losers, "doc_id", "left_anti")
         .join(quality, "doc_id")
         .groupBy("source")
-        .agg(F.sum(textstats.token_count("text").cast("long")).alias("__tok"))
+        .agg(F.sum(X_text.token_count("text").cast("long")).alias("__tok"))
     )
-    return sampling.unimax_mix(
+    return X_samp.unimax_mix(
         surv, "source", "__tok", budget=_XS18_BUDGET, epoch_cap=_XS18_EPOCH_CAP
     )
 
@@ -12050,9 +11670,7 @@ def _xs19(spark: SparkSession, sf: str) -> DataFrame:
     clusters (the shared CC silver — the same component definition every
     other dedup consumer uses, so the three strategies compose). Output:
     (doc_id, cluster_id, cluster_size, weight)."""
-    from presto_workload_analyzer_spark.sources import read_table
-
-    docs = read_table(spark, f"{sf}/documents.parquet")
+    docs = read_sf_table(spark, sf, "documents")
     cc = shared_dedup_clusters(spark, sf)
     mem = docs.select("doc_id").join(
         cc.select(F.col("id").alias("doc_id"), "cluster_id"), "doc_id", "left"
@@ -12098,16 +11716,8 @@ def _s19(spark: SparkSession, sf: str) -> DataFrame:
     the arriving stream (83 of 1,859 arriving lines hit the corpus at
     sf0.01 — the decision genuinely bifurcates). Oracle: the identical
     batch join."""
-    import uuid
-
-    from presto_workload_analyzer_spark.sources import read_table
-    from presto_workload_analyzer_spark.streaming import (
-        run_to_memory,
-        stream_sf_table,
-    )
-
     corpus = (
-        read_table(spark, f"{sf}/documents.parquet")
+        read_sf_table(spark, sf, "documents")
         .filter(F.col("doc_id") % 2 == 0)
         .transform(_toked)
         .select(F.explode(_chunk_lines(markers=False)).alias("__line"))
@@ -12135,11 +11745,7 @@ def _s19(spark: SparkSession, sf: str) -> DataFrame:
         "dig",
         F.coalesce(F.col("__hit"), F.lit(False)).alias("dropped"),
     )
-    name = f"s19_mem_{uuid.uuid4().hex[:8]}"
-    q = run_to_memory(flagged, name, output_mode="append")
-    q.awaitTermination(300)
-    tbl = spark.table(name)
-    return spark.createDataFrame(tbl.collect(), tbl.schema)
+    return drain(flagged)
 
 
 def _s19_sql() -> str:
@@ -12169,17 +11775,8 @@ def _s20(spark: SparkSession, sf: str) -> DataFrame:
     hashes. Complete-mode memory drain in the gate (10 source rows);
     the production sink is foreachBatch upsert. Oracle: the identical
     batch join + group-by."""
-    import uuid
-
-    from presto_workload_analyzer_spark.sources import read_table
-    from presto_workload_analyzer_spark.streaming import (
-        run_to_memory,
-        state_partitions,
-        stream_sf_table,
-    )
-
     corpus = (
-        read_table(spark, f"{sf}/documents.parquet")
+        read_sf_table(spark, sf, "documents")
         .filter(F.col("doc_id") % 2 == 0)
         .transform(_toked)
         .select(F.explode(_chunk_lines(markers=False)).alias("__line"))
@@ -12203,12 +11800,7 @@ def _s20(spark: SparkSession, sf: str) -> DataFrame:
         .cast("long")
         .alias("kept_tokens"),
     )
-    name = f"s20_mem_{uuid.uuid4().hex[:8]}"
-    with state_partitions(spark, 8):
-        q = run_to_memory(agg, name, output_mode="complete")
-        q.awaitTermination(300)
-    tbl = spark.table(name)
-    return spark.createDataFrame(tbl.collect(), tbl.schema)
+    return drain(agg, output_mode="complete", partitions=8)
 
 
 def _s20_sql() -> str:
@@ -12292,11 +11884,8 @@ def xs20_dup_spans(spark: SparkSession, sf: str) -> DataFrame:
     md5 span digest. dedup.maximal_duplicate_spans has the gram-anchor
     semantics and the 100 TB shuffle-shape audit (one gram-grain
     shuffle + doc-partitioned gaps-and-islands window)."""
-    from presto_workload_analyzer_spark.extensions import dedup
-    from presto_workload_analyzer_spark.sources import read_table
-
-    docs = read_table(spark, f"{sf}/documents.parquet")
-    return dedup.maximal_duplicate_spans(
+    docs = read_sf_table(spark, sf, "documents")
+    return X_dedup.maximal_duplicate_spans(
         docs, "doc_id", "text", k=_XS20_K, min_len=_XS20_MIN_LEN
     ).withColumnRenamed("id", "doc_id")
 
@@ -12321,14 +11910,11 @@ def xs23_exactsubstr_removal(spark: SparkSession, sf: str) -> DataFrame:
     between x47 (strip any duplicated trigram) and xs15 (line grain,
     keep-first). dedup.exactsubstr_removal docstring has the
     every-occurrence semantics note and the scale audit."""
-    from presto_workload_analyzer_spark.extensions import dedup
-    from presto_workload_analyzer_spark.sources import read_table
-
-    docs = read_table(spark, f"{sf}/documents.parquet")
+    docs = read_sf_table(spark, sf, "documents")
     # NULL text has no tokens to remove — filtered on BOTH sides (the
     # oracle's tok CTE would otherwise drop the doc while the kernel
     # passes it through with NULL stats)
-    return dedup.exactsubstr_removal(
+    return X_dedup.exactsubstr_removal(
         docs.filter(F.col("text").isNotNull()),
         "doc_id", "text", k=_XS20_K, min_len=_XS20_MIN_LEN,
     ).withColumnRenamed("id", "doc_id")
@@ -12367,21 +11953,18 @@ def xs21_quality_ensemble(spark: SparkSession, sf: str) -> DataFrame:
     pure functions except the LM (fit on the %% 5 != 0 train slice), so
     computing them on the candidate subset equals computing corpus-wide
     and filtering."""
-    from presto_workload_analyzer_spark.extensions import textstats
-    from presto_workload_analyzer_spark.sources import read_table
-
-    docs = read_table(spark, f"{sf}/documents.parquet")
+    docs = read_sf_table(spark, sf, "documents")
     cand = docs.filter(F.col("doc_id") % 5 == 0)
-    gop = textstats.gopher_rules(cand, "doc_id", "text").select(
+    gop = X_text.gopher_rules(cand, "doc_id", "text").select(
         F.col("id").alias("doc_id"), F.col("ok_word_count").alias("wc_ok")
     )
     synth = _toked(cand, "doc_id").select(
         "doc_id", F.array_join(_chunk_lines(markers=True), "\n").alias("text")
     )
-    c4 = textstats.c4_line_stats(synth, "doc_id", "text").select(
+    c4 = X_text.c4_line_stats(synth, "doc_id", "text").select(
         F.col("id").alias("doc_id"), F.col("keep").alias("c4_ok")
     )
-    nll = textstats.heldout_bigram_nll(
+    nll = X_text.heldout_bigram_nll(
         docs, "doc_id", "text", holdout=F.col("doc_id") % 5 == 0, lam=_XS7_LAM
     )
     ppl = F.round(F.exp(F.col("sum_nll") / F.col("n_scored")) + 1e-9, 6)
@@ -12444,17 +12027,14 @@ def xs22_fineweb_funnel(spark: SparkSession, sf: str) -> DataFrame:
     single (stage, source) aggregation produces the funnel — no
     five-way union, one shuffle. Strictly shrinking at every stage on
     this corpus (calibration pinned by test)."""
-    from presto_workload_analyzer_spark.extensions import textstats
-    from presto_workload_analyzer_spark.sources import read_table
-
-    docs = read_table(spark, f"{sf}/documents.parquet")
-    gop = textstats.gopher_rules(docs, "doc_id", "text").select(
+    docs = read_sf_table(spark, sf, "documents")
+    gop = X_text.gopher_rules(docs, "doc_id", "text").select(
         F.col("id").alias("doc_id"), F.col("ok_word_count").alias("__q")
     )
     synth = _toked(docs, "doc_id").select(
         "doc_id", F.array_join(_chunk_lines(markers=True), "\n").alias("text")
     )
-    c4 = textstats.c4_line_stats(synth, "doc_id", "text").select(
+    c4 = X_text.c4_line_stats(synth, "doc_id", "text").select(
         F.col("id").alias("doc_id"), F.col("keep").alias("__c")
     )
     losers = (
@@ -12467,7 +12047,7 @@ def xs22_fineweb_funnel(spark: SparkSession, sf: str) -> DataFrame:
             "doc_id",
             "source",
             (F.col("lang") == "en").alias("__l"),
-            textstats.token_count("text").cast("long").alias("__nt"),
+            X_text.token_count("text").cast("long").alias("__nt"),
         )
         .join(gop, "doc_id")
         .join(c4, "doc_id")
@@ -12578,11 +12158,8 @@ def xs24_rho_delta_select(spark: SparkSession, sf: str) -> DataFrame:
     use of xs7's scoring machinery (textstats.reference_delta_scores).
     Boundary pinned: the rounded delta sits >= 0.003 from 0 at both
     gate SFs."""
-    from presto_workload_analyzer_spark.extensions import textstats
-    from presto_workload_analyzer_spark.sources import read_table
-
-    docs = read_table(spark, f"{sf}/documents.parquet")
-    scored = textstats.reference_delta_scores(
+    docs = read_sf_table(spark, sf, "documents")
+    scored = X_text.reference_delta_scores(
         docs,
         "doc_id",
         "text",
@@ -12677,9 +12254,7 @@ def xs25_decontaminate(spark: SparkSession, sf: str) -> DataFrame:
     slice-in-transform form (O(len) expression tree; the zip-shift
     chain is O(k*len) codegen and measured 2x-slower first runs at
     k >= 10 — BASELINE round-10)."""
-    from presto_workload_analyzer_spark.sources import read_table
-
-    docs = read_table(spark, f"{sf}/documents.parquet")
+    docs = read_sf_table(spark, sf, "documents")
     grams = _xs25_grams()
     ev = (
         _toked(docs.filter(F.col("doc_id") % 10 == 0))
@@ -12744,12 +12319,9 @@ def xs26_delta_source_weights(spark: SparkSession, sf: str) -> DataFrame:
     candidates. The softmax denominator is one broadcast scalar row
     (the engine's broadcast-NL convention); everything upstream is
     reference_delta_scores' audited two-LM shape."""
-    from presto_workload_analyzer_spark.extensions import textstats
-    from presto_workload_analyzer_spark.sources import read_table
-
-    docs = read_table(spark, f"{sf}/documents.parquet")
+    docs = read_sf_table(spark, sf, "documents")
     did = F.col("doc_id")
-    scored = textstats.reference_delta_scores(
+    scored = X_text.reference_delta_scores(
         docs,
         "doc_id",
         "text",
@@ -12835,15 +12407,12 @@ def xs27_curation_v2_chain(spark: SparkSession, sf: str) -> DataFrame:
     mismatch, not a silent skew. 18 of 20 sources survive with token
     totals spread ~2.5x at both gate SFs, so the power-law weights
     genuinely vary."""
-    from presto_workload_analyzer_spark.extensions import sampling, textstats
-    from presto_workload_analyzer_spark.sources import read_table
-
-    docs = read_table(spark, f"{sf}/documents.parquet")
+    docs = read_sf_table(spark, sf, "documents")
     clean = xs25_decontaminate(spark, sf).filter(~F.col("contaminated")).select(
         "doc_id"
     )
     wc = (
-        textstats.gopher_rules(docs, "doc_id", "text")
+        X_text.gopher_rules(docs, "doc_id", "text")
         .filter(F.col("ok_word_count"))
         .select(F.col("id").alias("doc_id"))
     )
@@ -12851,7 +12420,7 @@ def xs27_curation_v2_chain(spark: SparkSession, sf: str) -> DataFrame:
         "doc_id", F.array_join(_chunk_lines(markers=True), "\n").alias("text")
     )
     c4 = (
-        textstats.c4_line_stats(synth, "doc_id", "text")
+        X_text.c4_line_stats(synth, "doc_id", "text")
         .filter(F.col("keep"))
         .select(F.col("id").alias("doc_id"))
     )
@@ -12860,9 +12429,9 @@ def xs27_curation_v2_chain(spark: SparkSession, sf: str) -> DataFrame:
         .join(wc, "doc_id")
         .join(c4, "doc_id")
         .groupBy("source")
-        .agg(F.sum(textstats.token_count("text").cast("long")).alias("__tok"))
+        .agg(F.sum(X_text.token_count("text").cast("long")).alias("__tok"))
     )
-    return sampling.temperature_mix(
+    return X_samp.temperature_mix(
         per, "source", "__tok", budget=_XS27_BUDGET, temperature=_XS27_T
     )
 
@@ -12935,12 +12504,8 @@ def xs28_ccnet_ppl_buckets(spark: SparkSession, sf: str) -> DataFrame:
     with skewed languages the inner ORDER BY key is the rounded ppl,
     mergeable by range partitioning within the language. Oracle: the
     shared _xs7_perdoc_sql chain + the identical NTILE(3)."""
-    from presto_workload_analyzer_spark.extensions import textstats
-    from presto_workload_analyzer_spark.sources import read_table
-    from pyspark.sql import Window
-
-    docs = read_table(spark, f"{sf}/documents.parquet")
-    nll = textstats.heldout_bigram_nll(
+    docs = read_sf_table(spark, sf, "documents")
+    nll = X_text.heldout_bigram_nll(
         docs, "doc_id", "text", holdout=F.col("doc_id") % 5 == 0, lam=_XS7_LAM
     )
     ppl = F.round(F.exp(F.col("sum_nll") / F.col("n_scored")) + 1e-9, 6)
@@ -13031,16 +12596,12 @@ def xs29_d4_prototypes(spark: SparkSession, sf: str) -> DataFrame:
 
     Output: (vec_id, cluster_id, cluster_size, cos_centroid, proto_rank);
     rank window partitions by cluster (group grain)."""
-    from presto_workload_analyzer_spark.extensions import similarity
-    from presto_workload_analyzer_spark.sources import read_table
-    from pyspark.sql import Window
-
-    emb = read_table(spark, f"{sf}/embeddings.parquet")
+    emb = read_sf_table(spark, sf, "embeddings")
     cc = shared_embedding_clusters(spark, sf)
     mem = emb.join(
         cc.select(F.col("id").alias("vec_id"), "cluster_id"), "vec_id"
     )
-    cen = similarity.label_centroids(mem, "cluster_id", "embedding").select(
+    cen = X_sim.label_centroids(mem, "cluster_id", "embedding").select(
         F.col("label").alias("cluster_id"),
         F.col("n").alias("cluster_size"),
         F.transform(
@@ -13048,7 +12609,7 @@ def xs29_d4_prototypes(spark: SparkSession, sf: str) -> DataFrame:
         ).alias("__cv"),
     )
     cos = F.round(
-        similarity.cosine_expr(F.col("embedding"), F.col("__cv")) + F.lit(1e-9),
+        X_sim.cosine_expr(F.col("embedding"), F.col("__cv")) + F.lit(1e-9),
         6,
     )
     w = Window.partitionBy("cluster_id").orderBy(
@@ -13109,14 +12670,11 @@ def xs30_quality_calibration(spark: SparkSession, sf: str) -> DataFrame:
     with the corpus), broadcast back over the scan — no global sort, no
     unpartitioned window. Oracle: quantile_disc + the shared
     _xs7_perdoc_sql chain."""
-    from presto_workload_analyzer_spark.extensions import textstats
-    from presto_workload_analyzer_spark.sources import read_table
-
-    docs = read_table(spark, f"{sf}/documents.parquet")
+    docs = read_sf_table(spark, sf, "documents")
     hold = docs.filter(F.col("doc_id") % 5 == 0)
     lg = hold.select(
         "doc_id",
-        F.round(textstats.quality_logit("text") + F.lit(1e-9), 6).alias("__q"),
+        F.round(X_text.quality_logit("text") + F.lit(1e-9), 6).alias("__q"),
     )
     accuracy = min(max(1_000_000, 10 * lg.count()), 10_000_000)
     pcts = ", ".join(f"{p}D" for p in _XS30_DECILES)
@@ -13126,7 +12684,7 @@ def xs30_quality_calibration(spark: SparkSession, sf: str) -> DataFrame:
     decile = F.lit(1)
     for i in range(len(_XS30_DECILES)):
         decile = decile + (F.col("__q") > F.col("qb")[i]).cast("int")
-    nll = textstats.heldout_bigram_nll(
+    nll = X_text.heldout_bigram_nll(
         docs, "doc_id", "text", holdout=F.col("doc_id") % 5 == 0, lam=_XS7_LAM
     )
     j = (
@@ -13189,9 +12747,7 @@ def xs31_cluster_purity(spark: SparkSession, sf: str) -> DataFrame:
     algebraic one-pass form H = log2(S) - sum(c*log2(c))/S on BOTH
     sides, so a single aggregation computes it without a second
     grouping pass (counts shuffle at (cluster, label) grain only)."""
-    from presto_workload_analyzer_spark.sources import read_table
-
-    emb = read_table(spark, f"{sf}/embeddings.parquet")
+    emb = read_sf_table(spark, sf, "embeddings")
     cc = shared_embedding_clusters(spark, sf)
     mem = emb.select("vec_id", "label").join(
         cc.select(F.col("id").alias("vec_id"), "cluster_id"), "vec_id"
@@ -13238,11 +12794,8 @@ def xs32_kcenter_coreset(spark: SparkSession, sf: str) -> DataFrame:
     sequential SQL (the x119 BPE-replay pattern): one divergence at any
     round — wrong argmax, wrong tie-break, wrong running min — is a
     hash mismatch."""
-    from presto_workload_analyzer_spark.extensions import similarity
-    from presto_workload_analyzer_spark.sources import read_table
-
-    emb = read_table(spark, f"{sf}/embeddings.parquet")
-    rows = similarity.kcenter_coreset(emb, "vec_id", "embedding", k=_XS32_K)
+    emb = read_sf_table(spark, sf, "embeddings")
+    rows = X_sim.kcenter_coreset(emb, "vec_id", "embedding", k=_XS32_K)
     return spark.createDataFrame(
         rows, "pick_round LONG, vec_id LONG, dist DOUBLE"
     )
@@ -13307,15 +12860,12 @@ def xs33_source_unigram_kl(spark: SparkSession, sf: str) -> DataFrame:
     (never the reverse; vocab is the big side). One shuffle per count
     table, all map-side combinable; the KL rollup shuffles source-grain
     partials only."""
-    from presto_workload_analyzer_spark.extensions.textstats import tokens
-    from presto_workload_analyzer_spark.sources import read_table
-
-    docs = read_table(spark, f"{sf}/documents.parquet")
+    docs = read_sf_table(spark, sf, "documents")
     toks = (
         docs.filter(F.col("text").isNotNull())
         .select(
             "source",
-            F.explode(F.transform(tokens("text"), lambda t: F.lower(t))).alias(
+            F.explode(F.transform(X_text.tokens("text"), lambda t: F.lower(t))).alias(
                 "w"
             ),
         )
@@ -13394,12 +12944,9 @@ def xs34_mmr_rerank(spark: SparkSession, sf: str) -> DataFrame:
     m{r+1} takes greatest(ms, coalesce(s, 0.0)) from a 0.0 seed.
 
     Output: (pick_rank, vec_id, relevance, mmr_score)."""
-    from presto_workload_analyzer_spark.extensions import similarity
-    from presto_workload_analyzer_spark.sources import read_table
-
-    emb = read_table(spark, f"{sf}/embeddings.parquet")
+    emb = read_sf_table(spark, sf, "embeddings")
     q = emb.filter(F.col("vec_id") == _XS34_QUERY)
-    top = similarity.cosine_topk(emb, q, k=_XS34_POOL).select(
+    top = X_sim.cosine_topk(emb, q, k=_XS34_POOL).select(
         "neighbor_id", F.round(F.col("cosine") + F.lit(1e-9), 6).alias("rel")
     )
     pool = emb.join(
@@ -13411,12 +12958,12 @@ def xs34_mmr_rerank(spark: SparkSession, sf: str) -> DataFrame:
         "id_a",
         "id_b",
         F.round(
-            similarity.cosine_expr(F.col("va"), F.col("vb")) + F.lit(1e-9), 6
+            X_sim.cosine_expr(F.col("va"), F.col("vb")) + F.lit(1e-9), 6
         ).alias("s"),
     )
     rel = {r["neighbor_id"]: r["rel"] for r in top.collect()}
     psim = {(r["id_a"], r["id_b"]): r["s"] for r in pairs.collect()}
-    picks = similarity.mmr_rerank(rel, psim, k=_XS34_K, lam=_XS34_LAM)
+    picks = X_sim.mmr_rerank(rel, psim, k=_XS34_K, lam=_XS34_LAM)
     out = spark.createDataFrame(
         picks, "pick_rank LONG, vec_id LONG, relevance DOUBLE, __raw DOUBLE"
     )
@@ -13486,7 +13033,6 @@ def xs34_sql() -> str:
     return "WITH " + ", ".join(parts) + " " + " UNION ALL ".join(sel)
 
 
-
 def s21_stream_decontaminate(spark: SparkSession, sf: str) -> DataFrame:
     """The STREAMING seam of xs25's benchmark decontamination: pool
     documents arrive continuously; each micro-batch's k-grams hit the
@@ -13498,16 +13044,7 @@ def s21_stream_decontaminate(spark: SparkSession, sf: str) -> DataFrame:
     memory drain in the gate; the production sink is the foreachBatch
     upsert path. Oracle: xs25's own chain, hit rows only — spliced from
     xs25_sql so the two contracts cannot drift."""
-    import uuid
-
-    from presto_workload_analyzer_spark.sources import read_table
-    from presto_workload_analyzer_spark.streaming import (
-        run_to_memory,
-        state_partitions,
-        stream_sf_table,
-    )
-
-    docs = read_table(spark, f"{sf}/documents.parquet")
+    docs = read_sf_table(spark, sf, "documents")
     ev = (
         _toked(docs.filter(F.col("doc_id") % 10 == 0))
         .select(F.explode(_xs25_grams()).alias("gram"))
@@ -13522,12 +13059,7 @@ def s21_stream_decontaminate(spark: SparkSession, sf: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).cast("long").alias("n_overlap_grams"))
     )
-    name = f"s21_mem_{uuid.uuid4().hex[:8]}"
-    with state_partitions(spark, 8):
-        q = run_to_memory(hits, name, output_mode="complete")
-        q.awaitTermination(300)
-    tbl = spark.table(name)
-    return spark.createDataFrame(tbl.collect(), tbl.schema)
+    return drain(hits, output_mode="complete", partitions=8)
 
 
 def s21_sql() -> str:
@@ -13612,15 +13144,12 @@ def xs36_kneser_ney_filter(spark: SparkSession, sf: str) -> DataFrame:
     more natural than JM does). Both scores share one oracle CTE chain
     (the _xs7_perdoc_sql token stream), so a drift in either smoothing
     — or in the shared tokenization — is a hash mismatch."""
-    from presto_workload_analyzer_spark.extensions import textstats
-    from presto_workload_analyzer_spark.sources import read_table
-
-    docs = read_table(spark, f"{sf}/documents.parquet")
+    docs = read_sf_table(spark, sf, "documents")
     ho = F.col("doc_id") % 5 == 0
     # the FUSED scorer: one held-bigram stream, one join tree, both
     # smoothings (equality to the standalone scorers pinned by
     # test_fused_lm_scorer_equals_standalones)
-    both = textstats.heldout_jm_kn_nll(
+    both = X_text.heldout_jm_kn_nll(
         docs, "doc_id", "text", holdout=ho, lam=_XS7_LAM, discount=_XS36_D
     )
     j = both.select(
@@ -13686,21 +13215,12 @@ def s22_stream_source_kl(spark: SparkSession, sf: str) -> DataFrame:
     (the production deployment reads the state store per trigger via
     foreachBatch and publishes the KL time-series). Token stream is
     xs33's verbatim (lowercased, empty-dropped)."""
-    import uuid
-
-    from presto_workload_analyzer_spark.extensions.textstats import tokens
-    from presto_workload_analyzer_spark.streaming import (
-        run_to_memory,
-        state_partitions,
-        stream_sf_table,
-    )
-
     counts = (
         stream_sf_table(spark, sf, "documents")
         .filter(F.col("text").isNotNull())
         .select(
             "source",
-            F.explode(F.transform(tokens("text"), lambda t: F.lower(t))).alias(
+            F.explode(F.transform(X_text.tokens("text"), lambda t: F.lower(t))).alias(
                 "w"
             ),
         )
@@ -13708,15 +13228,9 @@ def s22_stream_source_kl(spark: SparkSession, sf: str) -> DataFrame:
         .groupBy("source", "w")
         .agg(F.count(F.lit(1)).cast("double").alias("cs"))
     )
-    name = f"s22_mem_{uuid.uuid4().hex[:8]}"
-    with state_partitions(spark, 8):
-        q = run_to_memory(counts, name, output_mode="complete")
-        q.awaitTermination(300)
-    # materialize the drained state before self-joining it (deriving
-    # multiple join branches from a live memory-sink table trips a
-    # Spark-internal plan error; every s-query materializes its drain)
-    tbl = spark.table(name)
-    st = spark.createDataFrame(tbl.collect(), tbl.schema)
+    # the drained state is a batch table, so it can feed the several
+    # join branches below
+    st = drain(counts, output_mode="complete", partitions=8)
 
     corpus = st.groupBy("w").agg(F.sum("cs").alias("c"))
     scal = corpus.agg(
@@ -13731,12 +13245,11 @@ def s22_stream_source_kl(spark: SparkSession, sf: str) -> DataFrame:
     )
     p = (F.col("__cs") + F.lit(1.0)) / (F.col("ns") + F.col("v"))
     q_ = F.col("c") / F.col("n")
-    out = x.groupBy("source").agg(
+    return x.groupBy("source").agg(
         F.min("ns").cast("long").alias("n_tokens"),
         F.min("v").cast("long").alias("corpus_vocab"),
         F.round(F.sum(p * F.log(p / q_)) + F.lit(1e-9), 6).alias("kl_nats"),
     )
-    return spark.createDataFrame(out.collect(), out.schema)
 
 
 _register("xs35_contrastive_pairs", xs35_contrastive_pairs, xs35_sql())

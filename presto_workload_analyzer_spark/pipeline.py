@@ -58,25 +58,25 @@ ANALYZERS: dict[str, tuple[Callable[..., DataFrame], tuple[str, ...]]] = {
 }
 
 
-def build_silver(summary: DataFrame, cache: bool = True) -> dict[str, DataFrame]:
+def build_silver(summary: DataFrame) -> dict[str, DataFrame]:
     """Summary records -> {queries, operators, plan_nodes, tasks}.
 
     FAILED queries are dropped up front (reference analyze.py:1233-1234);
-    all downstream tables derive from the filtered corpus.
+    all downstream tables derive from the filtered corpus. queries,
+    operators and plan_nodes are cached; tasks is not.
     """
-    queries = summary.filter(F.col("state") != "FAILED").withColumn(
-        "query_ts", query_timestamp("query_id")
+    queries = (
+        summary.filter(F.col("state") != "FAILED")
+        .withColumn("query_ts", query_timestamp("query_id"))
+        .cache()
     )
-    if cache:
-        queries = queries.cache()
-    operators = queries.select("query_id", F.explode("operators").alias("op")).select(
-        "query_id", "op.*"
+    operators = (
+        queries.select("query_id", F.explode("operators").alias("op"))
+        .select("query_id", "op.*")
+        .cache()
     )
-    plan_nodes = flatten_plan_nodes(queries)
+    plan_nodes = flatten_plan_nodes(queries).cache()
     tasks = flatten_tasks(queries)
-    if cache:
-        operators = operators.cache()
-        plan_nodes = plan_nodes.cache()
     return {
         "queries": queries,
         "operators": operators,

@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import json
 import zipfile
+from concurrent.futures import ThreadPoolExecutor
 from typing import Any
 
 from pyspark.sql import DataFrame
@@ -115,49 +116,37 @@ def _json_safe(v: Any) -> Any:
     return v
 
 
+# driver threads collecting charts; measured neutral on warm local[32]
+_CHART_THREADS = 8
+
+
 def build_report(
     silver: dict[str, DataFrame],
     only: list[str] | None = None,
     scatter_limit: int = 50_000,
     fail_on_error: bool = False,
     high_contrast: bool = False,
-    parallelism: int = 8,
 ) -> dict[str, Any]:
     """Run analyzers + metrics, return the report document (pure data).
 
-    Charts are collected concurrently (Spark schedules jobs from multiple
-    driver threads): useful on a busy cluster where per-job queueing
-    latency dominates small aggregates — overlapping requests hides it.
-    Measured neutral on warm local[32] (job latency there is already
-    sub-second); results and chart order are identical either way, so the
-    knob is safe to leave on. Output ordering stays deterministic
-    (registry order) regardless of completion order.
+    Charts are collected from a pool of driver threads (Spark schedules
+    jobs from several threads): on a busy cluster, per-job queueing latency
+    dominates small aggregates, and overlapping requests hides it. Output
+    ordering stays deterministic (registry order) regardless of completion
+    order.
     """
-    from concurrent.futures import ThreadPoolExecutor
-
     errors: dict[str, str] = {}
     outputs = run_analyzers(silver, only=only)
-
-    def run_one(item):
-        name, df = item
-        return name, _chart_payload(name, df, scatter_limit, high_contrast)
-
     results: dict[str, Any] = {}
-    if parallelism > 1:
-        with ThreadPoolExecutor(max_workers=parallelism) as pool:
-            futures = {name: pool.submit(run_one, (name, df)) for name, df in outputs.items()}
-            for name, fut in futures.items():
-                try:
-                    results[name] = fut.result()[1]
-                except Exception as e:  # noqa: BLE001 — per-chart tolerance, analyze.py:1269-1272
-                    if fail_on_error:
-                        raise
-                    errors[name] = f"{type(e).__name__}: {e}"
-    else:
-        for name, df in outputs.items():
+    with ThreadPoolExecutor(max_workers=_CHART_THREADS) as pool:
+        futures = {
+            name: pool.submit(_chart_payload, name, df, scatter_limit, high_contrast)
+            for name, df in outputs.items()
+        }
+        for name, fut in futures.items():
             try:
-                results[name] = run_one((name, df))[1]
-            except Exception as e:  # noqa: BLE001
+                results[name] = fut.result()
+            except Exception as e:  # noqa: BLE001 — per-chart tolerance, analyze.py:1269-1272
                 if fail_on_error:
                     raise
                 errors[name] = f"{type(e).__name__}: {e}"

@@ -3,7 +3,6 @@
 from presto_workload_analyzer_spark.sources.tables import (
     min_row_parallelism,
     read_table,
-    register_tables,
 )
 
-__all__ = ["min_row_parallelism", "read_table", "register_tables"]
+__all__ = ["min_row_parallelism", "read_table"]

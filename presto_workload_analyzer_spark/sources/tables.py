@@ -21,19 +21,6 @@ import pyarrow.parquet as pq
 import pyarrow.types as pat
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-TABLE_NAMES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
-
 
 def _nano_ts_columns(path: str) -> list[str]:
     """Column names stored as timestamp[ns] in the parquet footer."""
@@ -89,16 +76,3 @@ def min_row_parallelism(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
-
-
-def register_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> dict[str, DataFrame]:
-    """Register every testdata table as a temp view; returns the DataFrames."""
-    out = {}
-    for name in names or TABLE_NAMES:
-        p = os.path.join(sf_dir, f"{name}.parquet")
-        if not os.path.exists(p):
-            continue
-        df = read_table(spark, p)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out

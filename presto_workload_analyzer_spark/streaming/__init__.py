@@ -1,9 +1,13 @@
+"""Structured Streaming: file-source ingest, windowed and stateful
+operators, production sinks, and `drain`, which runs a stream to
+completion and returns its result as a batch DataFrame."""
+
 from presto_workload_analyzer_spark.streaming.funnel import funnel_conversions
 from presto_workload_analyzer_spark.streaming.joins import interval_join
 from presto_workload_analyzer_spark.streaming.sessions import query_sessions
 from presto_workload_analyzer_spark.streaming.ingest import (
+    drain,
     idempotent_parquet_batch_sink,
-    input_by_window,
     queries_by_window,
     run_to_memory,
     scheduled_by_window,
@@ -18,8 +22,8 @@ __all__ = [
     "funnel_conversions",
     "interval_join",
     "query_sessions",
+    "drain",
     "idempotent_parquet_batch_sink",
-    "input_by_window",
     "queries_by_window",
     "run_to_memory",
     "scheduled_by_window",

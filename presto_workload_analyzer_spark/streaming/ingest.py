@@ -19,12 +19,16 @@ Scale posture:
     query_id) keeps state proportional to the late-data horizon;
   * windowed aggs emit in append mode after watermark close — the sink
     receives each hour bucket exactly once, so the downstream report read
-    is a plain parquet scan, no upsert logic.
+    is a plain parquet scan, no upsert logic;
+  * `drain` runs a stream to completion and hands back a batch DataFrame
+    (the registry's streaming queries and their tests): one bounded wait,
+    no leftover memory-sink view, no partial result on timeout.
 """
 
 from __future__ import annotations
 
 import contextlib as _contextlib
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
@@ -87,16 +91,6 @@ def queries_by_window(df: DataFrame, duration: str = "1 hour") -> DataFrame:
         .groupBy(F.window("query_ts", duration).alias("bucket"))
         .agg(F.count(F.lit(1)).alias("n_queries"))
         .select(F.col("bucket.start").alias("bucket"), "n_queries")
-    )
-
-
-def input_by_window(df: DataFrame, duration: str = "1 hour") -> DataFrame:
-    """Streaming twin of input_by_hour/date (analyze.py:133-172); TB read."""
-    return (
-        _finished(df)
-        .groupBy(F.window("query_ts", duration).alias("bucket"))
-        .agg((F.sum("input_size") / 1e12).alias("input_tb"))
-        .select(F.col("bucket.start").alias("bucket"), "input_tb")
     )
 
 
@@ -256,3 +250,39 @@ def run_to_memory(df: DataFrame, name: str, output_mode: str = "append"):
         return writer.start()
     finally:
         spark.conf.set(key, old)
+
+
+def drain(
+    df: DataFrame,
+    output_mode: str = "append",
+    partitions: int | None = None,
+    timeout: float = 300,
+) -> DataFrame:
+    """Run a streaming DataFrame to completion and return its result as a
+    batch DataFrame.
+
+    The stream runs through `run_to_memory` under a generated query name,
+    inside `state_partitions(spark, partitions)` when `partitions` is
+    given. A stream still running after `timeout` seconds is stopped and
+    raises TimeoutError, so a partial table is never returned. The memory
+    sink's temp view is dropped on every exit path.
+    """
+    spark = df.sparkSession
+    name = f"drain_{uuid.uuid4().hex}"
+    scope = (
+        state_partitions(spark, partitions)
+        if partitions is not None
+        else _contextlib.nullcontext()
+    )
+    try:
+        with scope:
+            q = run_to_memory(df, name, output_mode=output_mode)
+            if not q.awaitTermination(timeout):
+                q.stop()
+                raise TimeoutError(f"stream drain {name} did not finish in {timeout} s")
+        table = spark.table(name)
+        rows, schema = table.collect(), table.schema
+    finally:
+        spark.catalog.dropTempView(name)
+    # a live memory-sink table goes stale and cannot feed several plan branches
+    return spark.createDataFrame(rows, schema)

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from presto_workload_analyzer_spark.sources.queryinfo import SUMMARY_SCHEMA
 from presto_workload_analyzer_spark.streaming import (
+    drain,
     queries_by_window,
     run_to_memory,
     scheduled_by_window,
@@ -58,16 +59,10 @@ def landing(tmp_path):
     return d
 
 
-def _drain(spark, name, df, output_mode="append"):
-    q = run_to_memory(df, name, output_mode=output_mode)
-    q.awaitTermination(120)
-    return spark.table(name)
-
-
 def test_stream_dedup_and_schema(spark, landing):
     stream = stream_summaries(spark, str(landing))
     assert stream.isStreaming
-    out = _drain(spark, "t_raw", stream)
+    out = drain(stream, timeout=120)
     assert out.count() == 4
     assert {f.name for f in SUMMARY_SCHEMA.fields} <= {c for c in out.columns}
 
@@ -97,7 +92,7 @@ def test_windowed_scheduled_matches_batch(spark, landing):
     stream = stream_summaries(spark, str(landing), dedup=False)
     agg = scheduled_by_window(stream, "1 hour")
     # complete mode: emit every open window (no watermark wait in one drain)
-    out = _drain(spark, "t_sched", agg, output_mode="complete")
+    out = drain(agg, output_mode="complete", timeout=120)
     rows = {str(r.bucket): r.scheduled for r in out.collect()}
     # 08:00 bucket: (1800+1800)/3600 = 1.0 h; 09:00: 7200/3600 = 2.0 (FAILED dropped)
     assert rows["2024-01-01 08:00:00"] == pytest.approx(1.0)
@@ -106,11 +101,32 @@ def test_windowed_scheduled_matches_batch(spark, landing):
 
 def test_windowed_counts(spark, landing):
     stream = stream_summaries(spark, str(landing), dedup=False)
-    out = _drain(spark, "t_cnt", queries_by_window(stream, "1 hour"), "complete")
+    out = drain(queries_by_window(stream, "1 hour"), "complete", timeout=120)
     rows = {str(r.bucket): r.n_queries for r in out.collect()}
     assert rows["2024-01-01 08:00:00"] == 2
     assert rows["2024-01-01 09:00:00"] == 1  # FAILED dropped
 
+
+def test_registry_stream_query_leaves_no_view_or_stream(spark, sf_dir):
+    """A registered streaming query drops its memory-sink view and stops
+    its stream before returning."""
+    from presto_workload_analyzer_spark.driver_queries import queries
+
+    before = {t.name for t in spark.catalog.listTables()}
+    out = queries()["s01_stream_events_by_day"](spark, sf_dir)
+    assert out.count() > 0
+    assert {t.name for t in spark.catalog.listTables()} == before
+    assert spark.streams.active == []
+
+
+def test_drain_timeout_stops_stream_and_raises(spark, landing):
+    """A drain that outlives its timeout stops the stream and raises
+    instead of returning a partial table."""
+    before = {t.name for t in spark.catalog.listTables()}
+    with pytest.raises(TimeoutError):
+        drain(stream_summaries(spark, str(landing)), timeout=0.001)
+    assert spark.streams.active == []
+    assert {t.name for t in spark.catalog.listTables()} == before
 
 def test_append_mode_emits_closed_windows(spark, landing, tmp_path):
     """Watermark semantics: a later batch advancing the watermark closes the

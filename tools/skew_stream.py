@@ -77,11 +77,7 @@ def planted_events(spark, n: int):
 def run_sessions(spark, events, tmp: str) -> tuple[int, float]:
     """Write the planted frame as a file-source stream, drain
     query_sessions through a memory sink, return (closed sessions, wall)."""
-    from presto_workload_analyzer_spark.streaming.ingest import (
-        run_to_memory,
-        state_partitions,
-    )
-    from presto_workload_analyzer_spark.streaming.sessions import query_sessions
+    from presto_workload_analyzer_spark.streaming import drain, query_sessions
 
     src = os.path.join(tmp, f"ev_{uuid.uuid4().hex[:8]}")
     events.write.mode("overwrite").parquet(src)
@@ -93,11 +89,8 @@ def run_sessions(spark, events, tmp: str) -> tuple[int, float]:
         .withWatermark("query_ts", WM)
     )
     t0 = time.time()
-    name = f"skew_{uuid.uuid4().hex[:8]}"
-    with state_partitions(spark, 8):
-        q = run_to_memory(query_sessions(stream, gap_seconds=GAP_S), name)
-        q.awaitTermination(600)
-    n_closed = spark.table(name).count()
+    sessions = query_sessions(stream, gap_seconds=GAP_S)
+    n_closed = drain(sessions, partitions=8, timeout=600).count()
     return n_closed, time.time() - t0
 
 
