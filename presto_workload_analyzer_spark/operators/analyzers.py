@@ -21,8 +21,11 @@ Silver-table contracts (see sources/ and plans/):
 
 Design notes for 100 TB:
   * analyzers never collect; they return lazy aggregates over the cached
-    silver tables, so all 28 run off ONE corpus scan (vs. the reference's 28
-    eager passes, analyze.py:1229-1241);
+    silver tables. Charts declared with `_over` are projections of a shared
+    frame (a per-key aggregate, a join, a row set): the report collects all
+    charts over one frame in one pass, and all pies under one
+    pie_collapse_by, so the 30 charts cost about 10 Spark actions (vs. the
+    reference's 28 eager passes over the corpus, analyze.py:1229-1241);
   * scatter "charts" are row-level projections; at cluster scale the report
     layer caps them (`limit`) before collect — the cap lives in the emitter,
     not here, to keep analyzer semantics identical to the reference;
@@ -32,7 +35,10 @@ Design notes for 100 TB:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+import functools
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, functions as F
 
 from presto_workload_analyzer_spark.materialize import materialize
 
@@ -49,129 +55,170 @@ SECONDS_PER_DAY = 86400.0
 SECONDS_PER_HOUR = 3600.0
 BYTES_PER_TB = 1e12  # decimal TB, reference analyze.py:138,1181
 
+
+def _over(base: Callable[..., DataFrame], kernel: Callable[[DataFrame], DataFrame] | None = None):
+    """Declare a chart as a projection of the shared frame `base(*silver)`.
+
+    The decorated function returns the chart's columns over that frame and
+    becomes the chart, called with the silver tables `base` takes:
+    `kernel(base(*silver).select(*columns))`. The report collects all charts
+    over one base in one pass through `chart.base` and `chart.columns`
+    (report.emitter), so the columns define the chart on both paths.
+    """
+
+    def declare(columns: Callable[[], list[Column | str]]):
+        @functools.wraps(columns)
+        def chart(*frames: DataFrame) -> DataFrame:
+            rows = base(*frames).select(*columns())
+            return kernel(rows) if kernel else rows
+
+        chart.base, chart.columns = base, columns
+        return chart
+
+    return declare
+
+
 # --- per-query time series (reference analyze.py:83-214) ---------------------
 
 
-def scheduled_by_date(queries: DataFrame) -> DataFrame:
+def _time_sums(queries: DataFrame, trunc: Callable[[str], Column]) -> DataFrame:
+    """Per-bucket sums shared by the three time series of one grain, in bucket order."""
+    return (
+        queries.groupBy(trunc("query_ts").alias("bucket"))
+        .agg(
+            F.sum("scheduled_time").alias("scheduled"),
+            F.sum("input_size").alias("input"),
+            F.count(F.lit(1)).alias("n_queries"),
+        )
+        # one task finishes and sorts the few buckets: a global orderBy
+        # would add a sampling job and a shuffle
+        .coalesce(1)
+        .sortWithinPartitions("bucket")
+    )
+
+
+_per_day = functools.partial(_time_sums, trunc=trunc_date)
+_per_hour = functools.partial(_time_sums, trunc=trunc_hour)
+
+
+@_over(_per_day)
+def scheduled_by_date():
     """Sum of scheduled days by calendar day. Reference analyze.py:83-100."""
-    return (
-        queries.groupBy(trunc_date("query_ts").alias("bucket"))
-        .agg((F.sum("scheduled_time") / SECONDS_PER_DAY).alias("scheduled_days"))
-        .orderBy("bucket")
-    )
+    return ["bucket", (F.col("scheduled") / SECONDS_PER_DAY).alias("scheduled_days")]
 
 
-def scheduled_by_hour(queries: DataFrame) -> DataFrame:
+@_over(_per_hour)
+def scheduled_by_hour():
     """Sum of scheduled hours by hour. Reference analyze.py:112-130."""
-    return (
-        queries.groupBy(trunc_hour("query_ts").alias("bucket"))
-        .agg((F.sum("scheduled_time") / SECONDS_PER_HOUR).alias("scheduled_hours"))
-        .orderBy("bucket")
-    )
+    return ["bucket", (F.col("scheduled") / SECONDS_PER_HOUR).alias("scheduled_hours")]
 
 
-def input_by_date(queries: DataFrame) -> DataFrame:
+@_over(_per_day)
+def input_by_date():
     """Sum of input TB by day. Reference analyze.py:133-151."""
-    return (
-        queries.groupBy(trunc_date("query_ts").alias("bucket"))
-        .agg((F.sum("input_size") / BYTES_PER_TB).alias("input_tb"))
-        .orderBy("bucket")
-    )
+    return ["bucket", (F.col("input") / BYTES_PER_TB).alias("input_tb")]
 
 
-def input_by_hour(queries: DataFrame) -> DataFrame:
+@_over(_per_hour)
+def input_by_hour():
     """Sum of input TB by hour. Reference analyze.py:154-172."""
-    return (
-        queries.groupBy(trunc_hour("query_ts").alias("bucket"))
-        .agg((F.sum("input_size") / BYTES_PER_TB).alias("input_tb"))
-        .orderBy("bucket")
-    )
+    return ["bucket", (F.col("input") / BYTES_PER_TB).alias("input_tb")]
 
 
-def queries_by_date(queries: DataFrame) -> DataFrame:
+@_over(_per_day)
+def queries_by_date():
     """Query count by day. Reference analyze.py:175-193."""
-    return (
-        queries.groupBy(trunc_date("query_ts").alias("bucket"))
-        .agg(F.count(F.lit(1)).alias("n_queries"))
-        .orderBy("bucket")
-    )
+    return ["bucket", "n_queries"]
 
 
-def queries_by_hour(queries: DataFrame) -> DataFrame:
+@_over(_per_hour)
+def queries_by_hour():
     """Query count by hour. Reference analyze.py:196-214."""
-    return (
-        queries.groupBy(trunc_hour("query_ts").alias("bucket"))
-        .agg(F.count(F.lit(1)).alias("n_queries"))
-        .orderBy("bucket")
-    )
+    return ["bucket", "n_queries"]
 
 
 # --- per-query scatters (reference analyze.py:217-302, 374-457) --------------
 
 
-def peak_mem_by_query(queries: DataFrame) -> DataFrame:
+def _queries(queries: DataFrame) -> DataFrame:
+    return queries
+
+
+@_over(_queries)
+def peak_mem_by_query():
     """Scatter (query_ts, peak_mem); 10 GB advisory. Reference analyze.py:217-243."""
-    return queries.select("query_ts", "peak_mem", "query_id")
+    return ["query_ts", "peak_mem", "query_id"]
 
 
-def input_size_by_query(queries: DataFrame) -> DataFrame:
+@_over(_queries)
+def input_size_by_query():
     """Scatter (query_ts, input_size); 1 TB advisory. Reference analyze.py:246-274."""
-    return queries.select("query_ts", "input_size", "query_id")
+    return ["query_ts", "input_size", "query_id"]
 
 
-def elapsed_time_by_query(queries: DataFrame) -> DataFrame:
+@_over(_queries)
+def elapsed_time_by_query():
     """Scatter (query_ts, elapsed_time); 300 s advisory. Reference analyze.py:277-302."""
-    return queries.select("query_ts", "elapsed_time", "query_id")
+    return ["query_ts", "elapsed_time", "query_id"]
 
 
-def output_vs_input(queries: DataFrame) -> DataFrame:
+@_over(_queries)
+def output_vs_input():
     """Scatter (input_size, output_size), log-log. Reference analyze.py:374-399."""
-    return queries.select("input_size", "output_size", "query_id")
+    return ["input_size", "output_size", "query_id"]
 
 
-def scheduled_vs_input(queries: DataFrame) -> DataFrame:
+@_over(_queries)
+def scheduled_vs_input():
     """Scatter (input_size, scheduled_time). Reference analyze.py:402-428."""
-    return queries.select("input_size", "scheduled_time", "query_id")
+    return ["input_size", "scheduled_time", "query_id"]
 
 
-def elapsed_vs_input(queries: DataFrame) -> DataFrame:
+@_over(_queries)
+def elapsed_vs_input():
     """Scatter (input_size, elapsed_time). Reference analyze.py:431-457."""
-    return queries.select("input_size", "elapsed_time", "query_id")
+    return ["input_size", "elapsed_time", "query_id"]
 
 
 # --- per-query pies (reference analyze.py:305-371) ---------------------------
 
 
-def queries_by_user(queries: DataFrame, top: int = 20) -> DataFrame:
-    """Query count by user -> pie. Reference analyze.py:305-318."""
-    agg = queries.groupBy(F.col("user").alias("label")).agg(
-        F.count(F.lit(1)).cast("double").alias("val")
+def _per_user(queries: DataFrame) -> DataFrame:
+    return queries.groupBy(F.col("user").alias("label")).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum("scheduled_time").alias("scheduled"),
+        F.sum("input_size").alias("input"),
     )
-    return pie_collapse(agg, top=top)
 
 
-def scheduled_by_user(queries: DataFrame, top: int = 20) -> DataFrame:
-    """Scheduled days by user -> pie. Reference analyze.py:321-335."""
-    agg = queries.groupBy(F.col("user").alias("label")).agg(
-        (F.sum("scheduled_time") / SECONDS_PER_DAY).alias("val")
-    )
-    return pie_collapse(agg, top=top)
-
-
-def scheduled_by_update(queries: DataFrame, top: int = 20) -> DataFrame:
-    """Scheduled days by query type; NULL update => 'SELECT' (analyze.py:345)."""
-    agg = queries.groupBy(
+def _per_update(queries: DataFrame) -> DataFrame:
+    return queries.groupBy(
         F.coalesce(F.col("update"), F.lit("SELECT")).alias("label")
-    ).agg((F.sum("scheduled_time") / SECONDS_PER_DAY).alias("val"))
-    return pie_collapse(agg, top=top)
+    ).agg(F.sum("scheduled_time").alias("scheduled"))
 
 
-def input_by_user(queries: DataFrame, top: int = 20) -> DataFrame:
+@_over(_per_user, pie_collapse)
+def queries_by_user():
+    """Query count by user -> pie. Reference analyze.py:305-318."""
+    return ["label", F.col("n").cast("double").alias("val")]
+
+
+@_over(_per_user, pie_collapse)
+def scheduled_by_user():
+    """Scheduled days by user -> pie. Reference analyze.py:321-335."""
+    return ["label", (F.col("scheduled") / SECONDS_PER_DAY).alias("val")]
+
+
+@_over(_per_update, pie_collapse)
+def scheduled_by_update():
+    """Scheduled days by query type; NULL update => 'SELECT' (analyze.py:345)."""
+    return ["label", (F.col("scheduled") / SECONDS_PER_DAY).alias("val")]
+
+
+@_over(_per_user, pie_collapse)
+def input_by_user():
     """Input TB by user -> pie. Reference analyze.py:357-371."""
-    agg = queries.groupBy(F.col("user").alias("label")).agg(
-        (F.sum("input_size") / BYTES_PER_TB).alias("val")
-    )
-    return pie_collapse(agg, top=top)
+    return ["label", (F.col("input") / BYTES_PER_TB).alias("val")]
 
 
 # --- operator-level analyzers (reference analyze.py:524-990) -----------------
@@ -181,32 +228,38 @@ def _wall():
     return F.col("input_wall") + F.col("output_wall") + F.col("finish_wall")
 
 
-def operator_wall(operators: DataFrame, top: int = 20) -> DataFrame:
+def _per_operator(operators: DataFrame) -> DataFrame:
+    return operators.groupBy(strip_operator_suffix("op_type").alias("label")).agg(
+        F.sum(_wall()).alias("wall")
+    )
+
+
+def _per_op_type(operators: DataFrame) -> DataFrame:
+    return operators.groupBy(F.col("op_type").alias("label")).agg(
+        F.sum("input_size").alias("input"), F.sum("input_rows").alias("rows")
+    )
+
+
+@_over(_per_operator, pie_collapse)
+def operator_wall():
     """Wall time by operator type ('Operator' stripped) -> pie.
 
     Reference analyze.py:524-543 (its `selectivity` list at 532-534 is dead
     code, not reproduced).
     """
-    agg = operators.groupBy(
-        strip_operator_suffix("op_type").alias("label")
-    ).agg(F.sum(_wall()).alias("val"))
-    return pie_collapse(agg, top=top)
+    return ["label", F.col("wall").alias("val")]
 
 
-def operator_input(operators: DataFrame, top: int = 20) -> DataFrame:
+@_over(_per_op_type, pie_collapse)
+def operator_input():
     """Input bytes by operator type (full name) -> pie. Reference analyze.py:961-975."""
-    agg = operators.groupBy(F.col("op_type").alias("label")).agg(
-        F.sum("input_size").alias("val")
-    )
-    return pie_collapse(agg, top=top)
+    return ["label", F.col("input").alias("val")]
 
 
-def operator_rows(operators: DataFrame, top: int = 20) -> DataFrame:
+@_over(_per_op_type, pie_collapse)
+def operator_rows():
     """Input rows by operator type -> pie. Reference analyze.py:978-990."""
-    agg = operators.groupBy(F.col("op_type").alias("label")).agg(
-        F.sum("input_rows").cast("double").alias("val")
-    )
-    return pie_collapse(agg, top=top)
+    return ["label", F.col("rows").cast("double").alias("val")]
 
 
 def filter_selectivity_1(operators: DataFrame) -> DataFrame:
@@ -233,22 +286,23 @@ def _scan_ops_with_table(operators: DataFrame, plan_nodes: DataFrame, type_subst
     return ops.join(nodes, on=["query_id", "node_id"])
 
 
-def wall_by_table_scan(operators: DataFrame, plan_nodes: DataFrame, top: int = 20) -> DataFrame:
+def _per_scan_table(operators: DataFrame, plan_nodes: DataFrame) -> DataFrame:
+    scans = _scan_ops_with_table(operators, plan_nodes, "Scan")
+    return scans.groupBy(F.col("deepest_scan_table").alias("label")).agg(
+        F.sum(_wall()).alias("wall"), F.sum("input_size").alias("input")
+    )
+
+
+@_over(_per_scan_table, pie_collapse)
+def wall_by_table_scan():
     """Scan wall time by scanned table -> pie. Reference analyze.py:587-619."""
-    scans = _scan_ops_with_table(operators, plan_nodes, "Scan")
-    agg = scans.groupBy(F.col("deepest_scan_table").alias("label")).agg(
-        F.sum(_wall()).alias("val")
-    )
-    return pie_collapse(agg, top=top)
+    return ["label", F.col("wall").alias("val")]
 
 
-def input_size_by_table_scan(operators: DataFrame, plan_nodes: DataFrame, top: int = 20) -> DataFrame:
+@_over(_per_scan_table, pie_collapse)
+def input_size_by_table_scan():
     """Scan input bytes by scanned table -> pie. Reference analyze.py:926-958."""
-    scans = _scan_ops_with_table(operators, plan_nodes, "Scan")
-    agg = scans.groupBy(F.col("deepest_scan_table").alias("label")).agg(
-        F.sum("input_size").alias("val")
-    )
-    return pie_collapse(agg, top=top)
+    return ["label", F.col("input").alias("val")]
 
 
 def wall_by_selectivity_10(operators: DataFrame) -> DataFrame:
@@ -277,7 +331,7 @@ def _wall_by_selectivity(operators: DataFrame, bins: int, max_selectivity: float
     )
 
 
-def _scanfilter_selectivity(operators: DataFrame, plan_nodes: DataFrame, top_k: int) -> DataFrame:
+def _scanfilter_selectivity(operators: DataFrame, plan_nodes: DataFrame, top_k: int = 5) -> DataFrame:
     """Shared top-K-tables machinery of analyzers 22/23 (analyze.py:747-923).
 
     *ScanFilter* ops with input_rows > 0, joined to their table; keep only
@@ -303,50 +357,43 @@ def _scanfilter_selectivity(operators: DataFrame, plan_nodes: DataFrame, top_k: 
     return ops.join(F.broadcast(top), on="table_name", how="left_semi")
 
 
-def walltime_vs_selectivity(operators: DataFrame, plan_nodes: DataFrame, top_k: int = 5) -> DataFrame:
+@_over(_scanfilter_selectivity)
+def walltime_vs_selectivity():
     """Scatter (selectivity, wall) for ops on the top-5 tables. Reference analyze.py:747-834."""
-    return _scanfilter_selectivity(operators, plan_nodes, top_k).select(
-        "selectivity", "wall", "table_name", "query_id"
-    )
+    return ["selectivity", "wall", "table_name", "query_id"]
 
 
-def inputrows_vs_selectivity(operators: DataFrame, plan_nodes: DataFrame, top_k: int = 5) -> DataFrame:
+@_over(_scanfilter_selectivity)
+def inputrows_vs_selectivity():
     """Scatter (selectivity, input_rows) for ops on the top-5 tables. Reference analyze.py:837-923."""
-    return _scanfilter_selectivity(operators, plan_nodes, top_k).select(
-        "selectivity", "input_rows", "table_name", "query_id"
-    )
+    return ["selectivity", "input_rows", "table_name", "query_id"]
 
 
 # --- join analyzers (reference analyze.py:1083-1174) -------------------------
 
 
-def joins_sides(operators: DataFrame, plan_nodes: DataFrame) -> DataFrame:
+@_over(join_pairs)
+def joins_sides():
     """Scatter build-side vs probe-side input bytes per physical join.
 
     x = build (right/side) input_size, y = probe (left) input_size, colored
     by the plan node's distributionType. Reference analyze.py:1083-1136.
     """
-    pairs = join_pairs(operators, plan_nodes)
-    return pairs.select(
-        F.col("build_input_size"),
-        F.col("probe_input_size"),
-        F.col("distribution_type"),
-        F.col("query_id"),
-    )
+    return ["build_input_size", "probe_input_size", "distribution_type", "query_id"]
 
 
-def joins_selectivity(operators: DataFrame, plan_nodes: DataFrame) -> DataFrame:
+@_over(join_pairs)
+def joins_selectivity():
     """Scatter max(probe, build) input rows vs probe output rows per join.
 
     Reference analyze.py:1139-1174 (x = max of the sides' input_rows,
     y = probe output_rows).
     """
-    pairs = join_pairs(operators, plan_nodes)
-    return pairs.select(
+    return [
         F.greatest("probe_input_rows", "build_input_rows").alias("max_input_rows"),
         F.col("probe_output_rows").alias("output_rows"),
-        F.col("query_id"),
-    )
+        "query_id",
+    ]
 
 
 # --- task-tree analysis (beyond-reference) -----------------------------------

@@ -6,10 +6,11 @@ ordinary hash aggregations / window stages — no driver-side loops, no UDFs.
 
 Scale posture: every kernel's input is a *grouped aggregate* (one row per
 label / bin), i.e. tiny regardless of corpus size. The windows below use an
-un-partitioned frame, which would be a single-reducer bottleneck only if the
-label cardinality were huge; pie charts are top-20 by construction and the
-histogram has <= bins+1 rows. The heavy lifting (the groupBy feeding these)
-is partial+final hash aggregation over the full corpus.
+un-partitioned frame (pie_collapse_by: one partition per pie), which would
+be a single-reducer bottleneck only if the label cardinality were huge; pie
+charts are top-20 by construction and the histogram has <= bins+1 rows.
+The heavy lifting (the groupBy feeding these) is partial+final hash
+aggregation over the full corpus.
 """
 
 from __future__ import annotations
@@ -62,15 +63,30 @@ def pie_collapse(
     desc with 'All the rest' last. Returns an empty frame when the total is
     zero (reference returns None / no chart, analyze.py:463-464).
     """
-    w_all = Window.partitionBy()
-    w_rank = Window.orderBy(F.desc("__val"), F.asc(label_col))
-    base = (
-        df.select(F.col(label_col).cast("string").alias(label_col), F.col(val_col).cast("double").alias("__val"))
-        .withColumn("__total", F.sum("__val").over(w_all))
-        .filter(F.col("__total") > 0)
-        .withColumn("__rnk", F.row_number().over(w_rank))
-        .withColumn("__keep", (100.0 * F.col("__val") / F.col("__total") > 0.1) & (F.col("__rnk") < top))
-    )
+    return pie_collapse_by(df, (), label_col, val_col, top)
+
+
+def pie_collapse_by(
+    df: DataFrame,
+    by: tuple[str, ...],
+    label_col: str = "label",
+    val_col: str = "val",
+    top: int = 20,
+) -> DataFrame:
+    """`pie_collapse` of each group of the `by` columns (say, a chart tag),
+    all in one pass: every window is partitioned by `by`. Output columns:
+    (*by, label, val, pct); each group's rows are contiguous, in slice order.
+    """
+    label, val = F.col(label_col).cast("string"), F.col(val_col).cast("double")
+    w = Window.partitionBy(*by)
+    keep = (100.0 * F.col("__val") / F.col("__total") > 0.1) & (F.col("__rnk") < top)
+    base = df.select(
+        *by,
+        label.alias(label_col),
+        val.alias("__val"),
+        F.sum(val).over(w).alias("__total"),
+        F.row_number().over(w.orderBy(val.desc(), label.asc())).alias("__rnk"),
+    ).filter(F.col("__total") > 0)
     # Collapse kept labels + 'All the rest' in ONE aggregation instead of a
     # union of two filtered branches: a union would make Catalyst evaluate
     # the (potentially heavy) upstream aggregate twice — once per branch —
@@ -78,35 +94,30 @@ def pie_collapse(
     # rows group by (label, rank) so they never merge; all dropped rows
     # share the sentinel ord and fold into one 'All the rest' row, which
     # exists iff at least one label was dropped (possibly with val=0.0).
-    merged = (
-        base.groupBy(
-            F.when(F.col("__keep"), F.col(label_col)).otherwise(F.lit(REST_LABEL)).alias("label"),
-            F.when(F.col("__keep"), F.col("__rnk")).otherwise(F.lit(2_000_000_000)).alias("__ord"),
-        )
-        .agg(F.sum("__val").alias("val"))
-        .select("label", "val", "__ord")
+    merged = base.groupBy(
+        *by,
+        F.when(keep, F.col(label_col)).otherwise(F.lit(REST_LABEL)).alias("label"),
+        F.when(keep, F.col("__rnk")).otherwise(F.lit(2_000_000_000)).alias("__ord"),
+    ).agg(F.sum("__val").alias("val"))
+    out = merged.select(
+        *by, "label", "val", "__ord",
+        F.round(100.0 * F.col("val") / F.sum("val").over(w), 2).alias("__pct_raw"),
+        (F.row_number().over(w.orderBy(F.desc("__ord"))) == 1).alias("__is_last"),
+    ).select(
+        *by, "label", "val", "__ord",
+        # Last slice absorbs the rounding residual so the pie sums to 100
+        # (analyze.py:474-476). We re-round the residual to the 2-decimal
+        # grid: mathematically identical, but bit-stable across summation
+        # orders (numpy pairwise vs Spark/DuckDB sequential) so the
+        # oracle hash-compare can't be tripped by 1-ulp noise.
+        F.when(
+            F.col("__is_last"),
+            F.round(F.lit(100.0) - (F.sum("__pct_raw").over(w) - F.col("__pct_raw")), 2),
+        ).otherwise(F.col("__pct_raw")).alias("pct"),
     )
-    w_all2 = Window.partitionBy()
-    w_last = Window.orderBy(F.desc("__ord"))
-    out = (
-        merged.withColumn("__pct_raw", F.round(100.0 * F.col("val") / F.sum("val").over(w_all2), 2))
-        .withColumn("__is_last", F.row_number().over(w_last) == 1)
-        .withColumn(
-            # Last slice absorbs the rounding residual so the pie sums to 100
-            # (analyze.py:474-476). We re-round the residual to the 2-decimal
-            # grid: mathematically identical, but bit-stable across summation
-            # orders (numpy pairwise vs Spark/DuckDB sequential) so the
-            # oracle hash-compare can't be tripped by 1-ulp noise.
-            "pct",
-            F.when(
-                F.col("__is_last"),
-                F.round(F.lit(100.0) - (F.sum("__pct_raw").over(w_all2) - F.col("__pct_raw")), 2),
-            ).otherwise(F.col("__pct_raw")),
-        )
-        .orderBy("__ord")
-        .select("label", "val", "pct")
-    )
-    return out
+    # each pie is one partition of the windows above: a sort within it
+    # orders the slices without the sampling job and shuffle of a global sort
+    return out.sortWithinPartitions(*by, "__ord").select(*by, "label", "val", "pct")
 
 
 def selectivity_histogram(

@@ -2,9 +2,9 @@
 
 The reference materializes the whole corpus in RAM and makes 28 eager
 passes (analyze.py:1229-1241). Here the corpus is ONE cached DataFrame
-per silver table and the 28 analyzers are lazy aggregates over them:
-Catalyst prunes columns per analyzer, and the cache is populated by the
-first action.
+per silver table, populated by the first action, and the 30 analyzers are
+lazy frames over them: one Spark action each when run alone (run_analyzers,
+--filter), about 10 shared passes in the report (report.emitter).
 
 100 TB posture: `build_silver` accepts any summary DataFrame — at scale
 that is a date-partitioned parquet silver layer (write_silver) rather than
@@ -21,40 +21,45 @@ from presto_workload_analyzer_spark.functions.timeutil import query_timestamp
 from presto_workload_analyzer_spark.operators import analyzers as A
 from presto_workload_analyzer_spark.plans.flatten import flatten_plan_nodes, flatten_tasks
 
-# analyzer name -> (callable, silver inputs it takes)
-ANALYZERS: dict[str, tuple[Callable[..., DataFrame], tuple[str, ...]]] = {
-    "scheduled_by_date": (A.scheduled_by_date, ("queries",)),
-    "scheduled_by_hour": (A.scheduled_by_hour, ("queries",)),
-    "input_by_date": (A.input_by_date, ("queries",)),
-    "input_by_hour": (A.input_by_hour, ("queries",)),
-    "queries_by_date": (A.queries_by_date, ("queries",)),
-    "queries_by_hour": (A.queries_by_hour, ("queries",)),
-    "peak_mem_by_query": (A.peak_mem_by_query, ("queries",)),
-    "input_size_by_query": (A.input_size_by_query, ("queries",)),
-    "elapsed_time_by_query": (A.elapsed_time_by_query, ("queries",)),
-    "queries_by_user": (A.queries_by_user, ("queries",)),
-    "scheduled_by_user": (A.scheduled_by_user, ("queries",)),
-    "scheduled_by_update": (A.scheduled_by_update, ("queries",)),
-    "input_by_user": (A.input_by_user, ("queries",)),
-    "output_vs_input": (A.output_vs_input, ("queries",)),
-    "scheduled_vs_input": (A.scheduled_vs_input, ("queries",)),
-    "elapsed_vs_input": (A.elapsed_vs_input, ("queries",)),
-    "operator_wall": (A.operator_wall, ("operators",)),
-    "wall_by_table_scan": (A.wall_by_table_scan, ("operators", "plan_nodes")),
-    "wall_by_selectivity_10": (A.wall_by_selectivity_10, ("operators",)),
-    "wall_by_selectivity_100_first_20": (A.wall_by_selectivity_100_first_20, ("operators",)),
-    "filter_selectivity_1": (A.filter_selectivity_1, ("operators",)),
-    "walltime_vs_selectivity": (A.walltime_vs_selectivity, ("operators", "plan_nodes")),
-    "inputrows_vs_selectivity": (A.inputrows_vs_selectivity, ("operators", "plan_nodes")),
-    "input_size_by_table_scan": (A.input_size_by_table_scan, ("operators", "plan_nodes")),
-    "operator_input": (A.operator_input, ("operators",)),
-    "operator_rows": (A.operator_rows, ("operators",)),
-    "joins_sides": (A.joins_sides, ("operators", "plan_nodes")),
-    "joins_selectivity": (A.joins_selectivity, ("operators", "plan_nodes")),
+# Chart kinds decide how the report formats rows: a pie's labels are shortened
+# and a palette attached; a ROWS chart (one row per query or operator) is
+# capped before collect; a PLAIN chart is a small aggregate collected whole.
+PIE, ROWS, PLAIN = "pie", "rows", "plain"
+
+# analyzer name -> (callable, silver inputs it takes, kind)
+ANALYZERS: dict[str, tuple[Callable[..., DataFrame], tuple[str, ...], str]] = {
+    "scheduled_by_date": (A.scheduled_by_date, ("queries",), PLAIN),
+    "scheduled_by_hour": (A.scheduled_by_hour, ("queries",), PLAIN),
+    "input_by_date": (A.input_by_date, ("queries",), PLAIN),
+    "input_by_hour": (A.input_by_hour, ("queries",), PLAIN),
+    "queries_by_date": (A.queries_by_date, ("queries",), PLAIN),
+    "queries_by_hour": (A.queries_by_hour, ("queries",), PLAIN),
+    "peak_mem_by_query": (A.peak_mem_by_query, ("queries",), ROWS),
+    "input_size_by_query": (A.input_size_by_query, ("queries",), ROWS),
+    "elapsed_time_by_query": (A.elapsed_time_by_query, ("queries",), ROWS),
+    "queries_by_user": (A.queries_by_user, ("queries",), PIE),
+    "scheduled_by_user": (A.scheduled_by_user, ("queries",), PIE),
+    "scheduled_by_update": (A.scheduled_by_update, ("queries",), PIE),
+    "input_by_user": (A.input_by_user, ("queries",), PIE),
+    "output_vs_input": (A.output_vs_input, ("queries",), ROWS),
+    "scheduled_vs_input": (A.scheduled_vs_input, ("queries",), ROWS),
+    "elapsed_vs_input": (A.elapsed_vs_input, ("queries",), ROWS),
+    "operator_wall": (A.operator_wall, ("operators",), PIE),
+    "wall_by_table_scan": (A.wall_by_table_scan, ("operators", "plan_nodes"), PIE),
+    "wall_by_selectivity_10": (A.wall_by_selectivity_10, ("operators",), PLAIN),
+    "wall_by_selectivity_100_first_20": (A.wall_by_selectivity_100_first_20, ("operators",), PLAIN),
+    "filter_selectivity_1": (A.filter_selectivity_1, ("operators",), ROWS),
+    "walltime_vs_selectivity": (A.walltime_vs_selectivity, ("operators", "plan_nodes"), ROWS),
+    "inputrows_vs_selectivity": (A.inputrows_vs_selectivity, ("operators", "plan_nodes"), ROWS),
+    "input_size_by_table_scan": (A.input_size_by_table_scan, ("operators", "plan_nodes"), PIE),
+    "operator_input": (A.operator_input, ("operators",), PIE),
+    "operator_rows": (A.operator_rows, ("operators",), PIE),
+    "joins_sides": (A.joins_sides, ("operators", "plan_nodes"), ROWS),
+    "joins_selectivity": (A.joins_selectivity, ("operators", "plan_nodes"), ROWS),
     # beyond-reference: task-tree straggler analysis (SURVEY.md §1.2 reserve)
-    "task_stage_stats": (A.task_stage_stats, ("tasks",)),
+    "task_stage_stats": (A.task_stage_stats, ("tasks",), ROWS),
     # beyond-reference: per-user latency SLO percentiles
-    "latency_percentiles": (A.latency_percentiles, ("queries",)),
+    "latency_percentiles": (A.latency_percentiles, ("queries",), PLAIN),
 }
 
 
@@ -92,7 +97,7 @@ def run_analyzers(
     names = only or list(ANALYZERS)
     out = {}
     for name in names:
-        fn, inputs = ANALYZERS[name]
+        fn, inputs, _ = ANALYZERS[name]
         out[name] = fn(*[silver[i] for i in inputs])
     return out
 

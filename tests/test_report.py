@@ -1,15 +1,16 @@
 """Report emitter: chart payload contract, pie label shortening, palettes,
-scatter caps, error tolerance, and the html/zip/json sinks."""
+scatter caps, error tolerance, shared passes, and the html/zip/json sinks."""
 
 import json
 import zipfile
 
 import pytest
 
-from presto_workload_analyzer_spark.pipeline import build_silver
+from presto_workload_analyzer_spark.pipeline import ANALYZERS, PIE, build_silver, run_analyzers
 from presto_workload_analyzer_spark.report.emitter import (
     _PALETTE_DEFAULT,
     _PALETTE_HIGH_CONTRAST,
+    _json_safe,
     build_report,
     render_html,
     shorten,
@@ -20,13 +21,21 @@ from presto_workload_analyzer_spark.sources.queryinfo import extract_queryinfo
 import queryinfo_fixtures as QF
 
 
-@pytest.fixture(scope="module")
-def silver(spark, tmp_path_factory):
-    d = tmp_path_factory.mktemp("report_corpus")
-    docs = QF.golden_corpus()  # shared with tools/regen_golden_report.py
+def _build_silver(spark, d, docs):
     for i, doc in enumerate(docs):
         (d / f"q{i:03d}.json").write_text(json.dumps(doc))
     return build_silver(extract_queryinfo(spark, str(d)))
+
+
+@pytest.fixture(scope="module")
+def silver(spark, tmp_path_factory):
+    # shared with tools/regen_golden_report.py
+    return _build_silver(spark, tmp_path_factory.mktemp("report_corpus"), QF.golden_corpus())
+
+
+@pytest.fixture(scope="module")
+def wide_silver(spark, tmp_path_factory):
+    return _build_silver(spark, tmp_path_factory.mktemp("wide_corpus"), QF.wide_corpus())
 
 
 @pytest.fixture(scope="module")
@@ -265,3 +274,35 @@ def test_filter_mode_zip_render_both_backends(silver, tmp_path):
             .replace("<\\/", "</")
         )
         assert payload["fallback"]["data"] == report["charts"][0]["data"]
+
+
+def test_report_job_count(spark, silver, report):
+    """The full report runs its 30 charts in about 10 shared passes. Run as
+    one Spark action per chart, it launched 97 jobs on this corpus at
+    local[2] and 106 at the tests' local[8]. `report` has filled the
+    silver caches, so only the report's own jobs are counted."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    build_report(silver)
+    jobs = set(tracker.getJobIdsForGroup(None)) - before
+    assert len(jobs) <= 50, f"build_report launched {len(jobs)} jobs"
+
+
+@pytest.mark.parametrize("corpus", ["silver", "wide_silver"])
+def test_shared_passes_match_per_chart_analyzers(request, corpus):
+    """Every chart of the full report (shared passes) carries exactly the
+    rows of its own analyzer run alone (run_analyzers, as --filter and the
+    registered queries run it), after the same payload formatting."""
+    silver = request.getfixturevalue(corpus)
+    report = build_report(silver)
+    assert report["errors"] == {}
+    charts = {c["id"]: c for c in report["charts"]}
+    for name, df in run_analyzers(silver).items():
+        rows = [[_json_safe(v) for v in row] for row in df.collect()]
+        if ANALYZERS[name][2] == PIE:
+            rows = [[shorten(row[0]), *row[1:]] for row in rows]
+        if not rows:
+            assert name not in charts
+            continue
+        assert charts[name]["columns"] == df.columns, name
+        assert charts[name]["data"] == rows, name
