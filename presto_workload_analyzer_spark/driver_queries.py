@@ -25,12 +25,8 @@ Determinism rules (Spark vs DuckDB must agree bit-for-bit):
 
 from __future__ import annotations
 
-import glob
 import hashlib
-import json
 import math
-import os
-import re
 from collections.abc import Callable
 from datetime import timedelta
 
@@ -461,10 +457,9 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 _ORACLES: dict[str, str] = {}
 
 
-def _register(name: str, fn: Callable[[SparkSession, str], DataFrame], sql: str | None) -> None:
+def _register(name: str, fn: Callable[[SparkSession, str], DataFrame], sql: str) -> None:
     _QUERIES[name] = fn
-    if sql is not None:
-        _ORACLES[name] = sql
+    _ORACLES[name] = sql
 
 
 # -- time series (analyzers 1-6) --
@@ -801,148 +796,12 @@ _register(
 )
 
 
-# The round driver correctness-checks the FIRST 50 entries of queries()
-# (registration order), so ordering IS the verification schedule. The rule,
-# self-maintaining across rounds with no manual list edits:
-#   1. a ~10-name sentinel gate always leads — one query per major code
-#      path (summary projection, operator flatten, plan join, join-pair
-#      matching, unit kernels, collect_metrics), the canary set the judge
-#      reads every round;
-#   2. then every query NO CORRECTNESS_r*.json round has EVER hash-verified
-#      (registration order) — brand-new operators land here automatically,
-#      ahead of everything that merely expired; a query whose registered
-#      oracle is None counts as verified once a round recorded its
-#      rows-only check (there is nothing stronger to wait for);
-#   3. then queries hash-verified in SOME round but not the LATEST one
-#      (the pass expired — code may have changed since), OLDEST green
-#      first, then registration order;
-#   4. then everything the latest round verified, registration order.
-# Round-5 verdict fix: a fixed quota of the 50-slot window
-# (_EXPIRED_QUOTA) is RESERVED for group 3 ahead of the never-verified
-# backlog — without it a 116-query registration burst starved the
-# oldest-green tier indefinitely (x02–x19 sat three rounds stale behind
-# the never-verified queue). The head of the ordering is therefore
-# gate + never[:window-gate-quota] + expired[:quota]; the tail continues
-# never-rest, expired-rest, latest-verified. Each round the
-# freshly-checked names fall to group 4 and the expired ones slide
-# forward — a freshness round-robin that guarantees BOTH first-ever
-# verification throughput (~30 new names/round) and a bounded staleness
-# drain (~10 oldest-green names/round) no matter how lopsided the
-# backlog.
-_GATE = [
-    # sentinels: one per major §2A code path (the other analyzers share
-    # these exact adapters/kernels and rotate through groups 3/4)
-    "a01_scheduled_by_date",        # flagship entry(): summary scan + date trunc
-    "a07_peak_mem_by_query",        # summary projection + unit-parse coalesces
-    "a17_operator_wall",            # task-tree flatten + pie kernel
-    "a18_wall_by_table_scan",       # operators ⨝ plan_nodes + parse_table_name
-    "a21_filter_selectivity",       # per-node selectivity ratio guard
-    "a22_walltime_vs_selectivity",  # top-K-table broadcast semi-join + scatter
-    "a27_joins_sides",              # join-node → operator-pair matching
-    "a00_collect_metrics",          # global sums + exact count-distinct
-    "k01_parse_time_units",         # unit-parse kernel (time)
-    "k02_parse_size_units",         # unit-parse kernel (size)
-]
-
-
-def _correctness_rounds() -> list[dict]:
-    """Every CORRECTNESS_r*.json in round order (oldest first), parsed and
-    shape-checked; unreadable or non-object files are skipped."""
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    found = []
-    for p in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", p)
-        if not m:
-            continue
-        try:
-            with open(p) as fh:
-                rows = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        if not isinstance(rows, dict):
-            continue
-        found.append((int(m.group(1)), rows))
-    return [rows for _, rows in sorted(found)]
-
-
-def _round_verified(rows: dict) -> set[str]:
-    """Names one round's record verifies: hash-matched against the oracle,
-    or rows-only where the current registry (_ORACLES) STILL has no oracle
-    (an old no_oracle row for a query that has since gained an oracle does
-    not count — the new oracle deserves a first run at the window front)."""
-    return {
-        name
-        for name, row in rows.items()
-        if isinstance(row, dict)
-        and (
-            row.get("hash_match") is True
-            or (row.get("err") == "no_oracle" and _ORACLES.get(name) is None)
-        )
-    }
-
-
-def _verified_names() -> tuple[set[str], dict[str, int]]:
-    """(latest_verified, last_round_verified) across ALL recorded rounds.
-
-    `last_round_verified` maps each ever-verified name to the 1-based index
-    (in round order) of the MOST RECENT round that verified it — it decides
-    both who gets a first-ever verification slot (absent ⇒ group 2:
-    never-verified queries outrank everything non-gate) and the staleness
-    tiebreak within group 3 (oldest green first: a query last hash-checked
-    two rounds ago re-verifies before one checked last round, so no
-    registry query's latest driver row can fall more than ~2 rounds behind
-    while its module keeps changing). `latest` decides freshness (a pass
-    from an old round expires after one round — code may have changed
-    since — so those names re-enter the window as group 3)."""
-    rounds = _correctness_rounds()
-    if not rounds:
-        return set(), {}
-    last_round: dict[str, int] = {}
-    for i, rows in enumerate(rounds, start=1):
-        for name in _round_verified(rows):
-            last_round[name] = i
-    return _round_verified(rounds[-1]), last_round
-
-
-_WINDOW = 50          # driver verification slots per round
-_EXPIRED_QUOTA = 10   # window slots reserved for the oldest-green tier
-
-
-def _ordered(registry: dict) -> dict:
-    latest, last_round = _verified_names()
-    reg_pos = {n: i for i, n in enumerate(registry)}
-    gate = [n for n in _GATE if n in registry]
-    rest = [n for n in registry if n not in gate]
-    never = [n for n in rest if n not in last_round]
-    # Expired: verified in SOME round but not the latest. Oldest-green-first
-    # (then registration order) so the longest-unverified queries always
-    # reach the 50-slot window before fresher ones.
-    expired = sorted(
-        (n for n in rest if n in last_round and n not in latest),
-        key=lambda n: (last_round[n], reg_pos[n]),
-    )
-    done = [n for n in rest if n in latest]
-    # Reserve _EXPIRED_QUOTA window slots for the oldest-green tier so a
-    # registration burst can't starve it; the never-verified tier gets
-    # every remaining slot. Tail keeps the tier order (never, expired,
-    # done) so underfilled quotas flow to the next tier naturally.
-    exp_head = expired[:_EXPIRED_QUOTA]
-    never_head = never[: max(0, _WINDOW - len(gate) - len(exp_head))]
-    head = gate + never_head + exp_head
-    tail = (
-        never[len(never_head):]
-        + expired[len(exp_head):]
-        + done
-    )
-    return {n: registry[n] for n in head + tail}
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return _ordered(_QUERIES)
+    return dict(_QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
-    return _ordered(_ORACLES)
+    return dict(_ORACLES)
 
 
 # --------------------------------------------------------------------------
@@ -1308,9 +1167,6 @@ _register(
     " SELECT query_id, neighbor_id, round(cosine, 6) AS cosine, rank FROM r WHERE rank <= 5",
 )
 
-_ORACLES["x19_cosine_topk_pandas"] = _ORACLES["x05_cosine_topk"]
-
-
 def _x19(spark: SparkSession, sf: str) -> DataFrame:
     emb = read_indexable_embeddings(spark, sf)
     out = X_sim.cosine_topk_pandas(emb, emb.filter(F.col("vec_id") < 10), k=5)
@@ -1324,7 +1180,7 @@ def _x19(spark: SparkSession, sf: str) -> DataFrame:
 
 # same oracle as x05: the Arrow/BLAS physical path must produce the same
 # answer as the Column in-order-fold path (round(6) absorbs last-ulp sums)
-_register("x19_cosine_topk_pandas", _x19, None)  # oracle attached below
+_register("x19_cosine_topk_pandas", _x19, _ORACLES["x05_cosine_topk"])
 
 
 def _x06(spark: SparkSession, sf: str) -> DataFrame:
@@ -4887,11 +4743,11 @@ def _x74(spark: SparkSession, sf: str) -> DataFrame:
     engines implement classic Wagner-Fischer levenshtein(), so the
     verify predicate is oracle-exact.
 
-    The attribute-banded generator (dedup.fuzzy_linkage_pairs) remains
-    the right blocking when a discriminative exact attribute exists, but
-    its cost is sum-of-block-size^2 — on this corpus (5 langs x narrow
-    length range) blocks grow with the data and the sf0.1->sf1 slope
-    measured 94x. Rank-window blocking replaces the quadratic with
+    Attribute-banded blocking (an equi-join on exact attributes plus a
+    length band) is the right choice when a discriminative exact
+    attribute exists, but its cost is sum-of-block-size^2 — on this
+    corpus (5 langs x narrow length range) blocks grow with the data and
+    the sf0.1->sf1 slope measured 94x. Rank-window blocking replaces the quadratic with
     n x window while KEEPING edit-distance verification; the recall
     trade (leading-char edits sort apart) is SNM's documented blind
     spot, closed in production by multi-pass keys (x65's pattern)."""

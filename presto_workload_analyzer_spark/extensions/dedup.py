@@ -804,7 +804,7 @@ def blocked_embedding_near_dup_pairs(
     The honest trade: a BORDERLINE member whose cosine clears the
     threshold against a neighbor but not against the bucket root loses
     that pair — the primary control for bucket size remains raising
-    n_planes with log2(n) (similarity.recommended_planes); the cap is the
+    n_planes as log2(n / target bucket rows); the cap is the
     backstop against the pathological spike. Default None = exact.
     """
     from presto_workload_analyzer_spark.extensions.similarity import (
@@ -1269,73 +1269,6 @@ def contamination_matrix(
     )
 
 
-def fuzzy_linkage_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    block_cols: list[str],
-    band_col: str,
-    band_width: int = 64,
-    prefix_len: int = 48,
-    max_dist: int = 8,
-) -> DataFrame:
-    """Blocked fuzzy record linkage: `(id_a, id_b, dist)` for record pairs
-    whose `prefix_len`-char text prefixes are within Levenshtein distance
-    `max_dist`, compared only INSIDE blocks.
-
-    The classic record-linkage shape: an edit-distance predicate cannot be
-    an equi-join key, so candidate generation is a BLOCKING equi-join —
-    records agree on `block_cols` (exact attributes, e.g. lang) and fall
-    in the same or ADJACENT `band_col // band_width` band (a numeric
-    attribute such as length; two near-matches may straddle a band
-    boundary, so each record probes its own band and band+1 — a same-band
-    pair meets once under the id_a < id_b order and an adjacent-band pair
-    meets exactly once through the lower record's +1 probe, so no dedup
-    pass is needed). Levenshtein then verifies candidates only.
-
-    100 TB posture: never all-pairs — candidates are equi-join buckets
-    (block x band), quadratic only within a block band, which is the
-    tunable knob (tighter bands -> fewer candidates, lower recall re
-    length-shifted edits; wider -> more). levenshtein() is a JVM codegen
-    builtin on both engines (Spark functions.scala, DuckDB identical
-    definition), O(prefix_len^2) per CANDIDATE, not per pair-of-all.
-    """
-    band = (F.col(band_col) / band_width).cast("long")
-    base = df.select(
-        F.col(id_col).alias("id"),
-        F.substring(F.col(text_col), 1, prefix_len).alias("__p"),
-        *[F.col(c) for c in block_cols],
-        band.alias("__band"),
-    )
-    # probe side: each record registered under its own band (offset 0) and
-    # band + 1 (offset 1). A same-band pair meets twice through offset-0
-    # probes (once per orientation) — the id order keeps one; an
-    # adjacent-band pair meets exactly once, as (upper-band base,
-    # offset-1 probe of the lower record) — kept unconditionally, with
-    # the output pair canonicalized to id_a < id_b.
-    probe = base.select(
-        F.col("id").alias("__idp"),
-        F.col("__p").alias("__pb"),
-        *[F.col(c) for c in block_cols],
-        F.col("__band"),
-        F.explode(F.array(F.lit(0), F.lit(1))).alias("__d"),
-    ).withColumn("__band", F.col("__band") + F.col("__d"))
-    cand = (
-        base.withColumnRenamed("id", "__ida")
-        .withColumnRenamed("__p", "__pa")
-        .join(probe, on=[*block_cols, "__band"])
-        .filter((F.col("__d") == 1) | (F.col("__ida") < F.col("__idp")))
-    )
-    return (
-        cand.select(
-            F.least("__ida", "__idp").alias("id_a"),
-            F.greatest("__ida", "__idp").alias("id_b"),
-            F.levenshtein("__pa", "__pb").alias("dist"),
-        )
-        .filter(F.col("dist") <= max_dist)
-    )
-
-
 def truncation_dedup_groups(
     df: DataFrame, id_col: str, text_col: str, head: int = 64, tail: int = 64
 ) -> DataFrame:
@@ -1604,9 +1537,10 @@ def cluster_scoped_cosine_pairs(
     first clustered (k-means cells, IVF lists, or any label column), and
     duplicate scoring runs only inside a cluster — the quadratic
     comparison is bounded by the largest cluster, never the corpus. The
-    production control is the clustering grain itself: k grows with n
-    (the same log/ratio law as `similarity.recommended_planes`), so
-    cluster size stays ~constant as the corpus scales.
+    production control is the clustering grain itself: k grows as
+    n / target cluster size (the law that sets hyperplane planes to
+    log2(n / target rows)), so cluster size stays ~constant as the
+    corpus scales.
 
     `max_cluster_size` is the mega-cluster backstop, identical in shape
     and trade to the lsh_candidate_pairs guard: oversized clusters emit

@@ -3,8 +3,7 @@
 Images/audio/video ride through the engine as `binary` columns plus a
 metadata struct; decode / feature-extract / resize / frame-sample run as
 Arrow-batched Pandas stages over `mapInPandas`. The image kernels are
-fully REAL with zero codec-library dependencies: `image_dims` (PNG/JPEG/
-GIF dimensions parsed from container headers), and the pixel paths of
+fully REAL with zero codec-library dependencies: the pixel paths of
 `decode_media`/`resize_media` for all three containers — PNG (stdlib-zlib
 inflate + full scanline unfilter, `_decode_png`; matching `_encode_png`),
 baseline JPEG (`extensions.jpegcodec`: Huffman entropy decode, dequant,
@@ -213,82 +212,6 @@ def _decode_bytes(payload: bytes) -> tuple[int, int, int, float]:
     height = 16 + (n // 64) % 64
     mean = (sum(payload[:256]) / max(min(n, 256), 1)) / 255.0
     return width, height, 3, mean
-
-
-DIMS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("format", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-    ]
-)
-
-
-def _parse_image_dims(b: bytes) -> tuple[str | None, int | None, int | None]:
-    """REAL (not stubbed) container-header parse: PNG / JPEG / GIF
-    dimensions from the first bytes, no codec library needed.
-
-    PNG: 8-byte signature, IHDR width/height at offsets 16/20 (big-endian).
-    GIF: 'GIF87a'/'GIF89a', logical screen w/h at 6/8 (little-endian).
-    JPEG: walk marker segments to the first SOFn (C0-CF minus C4/C8/CC);
-    height/width are bytes 3-6 of that segment's payload.
-    Unknown/truncated input -> (None, None, None), never an exception.
-    """
-    try:
-        if b[:8] == b"\x89PNG\r\n\x1a\n" and len(b) >= 24:
-            return (
-                "png",
-                int.from_bytes(b[16:20], "big"),
-                int.from_bytes(b[20:24], "big"),
-            )
-        if b[:6] in (b"GIF87a", b"GIF89a") and len(b) >= 10:
-            return (
-                "gif",
-                int.from_bytes(b[6:8], "little"),
-                int.from_bytes(b[8:10], "little"),
-            )
-        if b[:2] == b"\xff\xd8":
-            i = 2
-            while i + 9 < len(b):
-                if b[i] != 0xFF:
-                    i += 1
-                    continue
-                marker = b[i + 1]
-                if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-                    i += 2
-                    continue
-                seg_len = int.from_bytes(b[i + 2 : i + 4], "big")
-                if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
-                    return (
-                        "jpeg",
-                        int.from_bytes(b[i + 7 : i + 9], "big"),
-                        int.from_bytes(b[i + 5 : i + 7], "big"),
-                    )
-                i += 2 + seg_len
-    except (IndexError, ValueError):
-        pass
-    return None, None, None
-
-
-def image_dims(media: DataFrame) -> DataFrame:
-    """Binary payloads -> (doc_id, format, width, height), header-parsed.
-
-    The one fully real multimodal kernel: dimensions come from the actual
-    container bytes (see _parse_image_dims), so corpus filters like
-    'drop images under 64px' run without any decode. Arrow-batched
-    mapInPandas, payloads never leave the executors.
-    """
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                fmt, w, h = _parse_image_dims(bytes(payload))
-                rows.append((doc_id, fmt, w, h))
-            yield pd.DataFrame(rows, columns=["doc_id", "format", "width", "height"])
-
-    return media.select("doc_id", "payload").mapInPandas(gen, DIMS_SCHEMA)
 
 
 def _batched_rows_gen(columns: list[str], row_fn, batch_size: int):
@@ -756,7 +679,7 @@ def video_meta(media: DataFrame, batch_size_hint: int = 1024) -> DataFrame:
     """Binary payloads -> real MP4 container metadata (duration, display
     dims, track count) at header-parse cost — the video filter stage
     ('drop clips under 2s / over 4k') without any codec. Arrow-batched
-    mapInPandas like image_dims; non-MP4 payloads yield nulls (loud
+    mapInPandas; non-MP4 payloads yield nulls (loud
     absence). Frame PIXEL decode remains the declared stub boundary —
     this parses the real container structure, not fake frames."""
 
@@ -818,7 +741,7 @@ AUDIO_META_SCHEMA = T.StructType(
 
 def audio_meta(media: DataFrame, batch_size_hint: int = 1024) -> DataFrame:
     """Binary payloads -> real WAV container metadata; Arrow-batched like
-    image_dims / video_meta. Non-WAV payloads yield nulls. PCM sample
+    video_meta. Non-WAV payloads yield nulls. PCM sample
     DECODE is trivial from here (the data chunk IS the samples) but out
     of scope for the metadata stage."""
 

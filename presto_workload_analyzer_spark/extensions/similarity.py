@@ -674,33 +674,6 @@ def ann_recall(ann: DataFrame, exact: DataFrame, k: int) -> DataFrame:
     )
 
 
-def recommended_planes(n_rows: int, target_bucket_rows: int = 64) -> int:
-    """Hyperplane count that keeps expected bucket occupancy near
-    `target_bucket_rows` for an `n_rows` corpus: ceil(log2(n / target)),
-    floored at 4.
-
-    The density law behind blocked_embedding_near_dup_pairs: candidate
-    cost is sum-of-bucket-size^2 over 2^planes buckets, so at FIXED
-    planes a k-times larger corpus pays ~k^2 candidate comparisons
-    (measured: 10x rows at 4 planes -> 100.5x candidate pairs on the
-    scaling bench, BASELINE.md round 5). Scaling planes with log2(n)
-    holds expected occupancy — and therefore per-row candidate work —
-    constant; each extra plane costs one more sign bit per band and
-    lowers per-band recall by the plane collision factor, so raise
-    n_bands alongside when recall matters (recall math in the operator's
-    docstring).
-    """
-    import math
-
-    if n_rows <= 0:
-        raise ValueError(f"n_rows must be positive, got {n_rows}")
-    if target_bucket_rows <= 0:
-        raise ValueError(
-            f"target_bucket_rows must be positive, got {target_bucket_rows}"
-        )
-    return max(4, math.ceil(math.log2(max(1.0, n_rows / target_bucket_rows))))
-
-
 def kcenter_coreset(
     emb: DataFrame,
     id_col: str = "vec_id",

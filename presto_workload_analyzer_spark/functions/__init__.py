@@ -16,8 +16,6 @@ from presto_workload_analyzer_spark.functions.timeutil import (
 )
 from presto_workload_analyzer_spark.functions.labels import (
     normalize_sql,
-    node_type_from_attype,
-    shorten,
     strip_operator_suffix,
 )
 
@@ -30,7 +28,5 @@ __all__ = [
     "query_timestamp",
     "trunc_date",
     "trunc_hour",
-    "node_type_from_attype",
-    "shorten",
     "strip_operator_suffix",
 ]

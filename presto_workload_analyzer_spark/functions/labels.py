@@ -14,26 +14,6 @@ def strip_operator_suffix(op_type: Column | str) -> Column:
     return F.regexp_replace(col, "Operator", "")
 
 
-def node_type_from_attype(attype: Column | str) -> Column:
-    """Normalize a plan node '@type' to a lowercase node kind.
-
-    PrestoDB uses Java FQCNs ('com...TableScanNode'); Trino uses short names
-    ('tablescan'). The reference extracts `\\.(\\w+)Node$` and lowercases,
-    falling back to the raw value (reference analyze.py:999-1004).
-    """
-    col = F.col(attype) if isinstance(attype, str) else attype
-    extracted = F.regexp_extract(col, r"\.(\w+)Node$", 1)
-    return F.lower(F.when(extracted != "", extracted).otherwise(col))
-
-
-def shorten(label: Column | str, max_len: int = 30) -> Column:
-    """Truncate long labels to max_len chars + '...'. Reference analyze.py:518-521."""
-    col = F.col(label) if isinstance(label, str) else label
-    return F.when(
-        F.length(col) > max_len, F.concat(F.substring(col, 1, max_len), F.lit("..."))
-    ).otherwise(col)
-
-
 def normalize_sql(sql: Column | str) -> Column:
     """SQL text -> its literal-free shape: string literals ('...', with ''
     escapes) then bare numbers become '?'. Two chained regexp_replace

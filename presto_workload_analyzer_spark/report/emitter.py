@@ -30,8 +30,9 @@ from typing import Any
 
 from pyspark.sql import DataFrame, functions as F
 
+from presto_workload_analyzer_spark.operators.analyzers import collect_metrics
 from presto_workload_analyzer_spark.operators.kernels import pie_collapse_by
-from presto_workload_analyzer_spark.pipeline import ANALYZERS, PIE, ROWS, collect_metrics
+from presto_workload_analyzer_spark.pipeline import ANALYZERS, PIE, ROWS
 
 # default: the reference uses Bokeh Category20; high-contrast: Okabe-Ito
 # colorblind-safe palette (the reference's --high-contrast-mode switches to
@@ -101,7 +102,9 @@ def _chart_payload(
     chart, analyze.py:1250-1252)."""
     df, split = _pass_frame(silver, names)
     if ANALYZERS[names[0]][2] == ROWS:
-        df = df.limit(scatter_limit)
+        # coalesce(1): one job; a bare limit collects through take(), which
+        # scans 1 partition, then 4, then the rest, a job each
+        df = df.limit(scatter_limit).coalesce(1)
     return {
         name: _payload(name, columns, rows, high_contrast) if rows else None
         for name, columns, rows in split(df.collect())
@@ -157,7 +160,7 @@ def build_report(
     errors: dict[str, str] = {}
     results: dict[str, Any] = {}
     with ThreadPoolExecutor(max_workers=_CHART_THREADS) as pool:
-        metrics = pool.submit(lambda: collect_metrics(silver).collect()[0])
+        metrics = pool.submit(lambda: collect_metrics(silver["queries"]).collect()[0])
         futures = [
             (group, pool.submit(_chart_payload, silver, group, scatter_limit, high_contrast))
             for group in _passes(names)

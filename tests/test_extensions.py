@@ -759,45 +759,6 @@ def test_unigram_logprob(spark):
     assert got[2].avg_neg_logprob > got[1].avg_neg_logprob
 
 
-def test_image_dims_real_headers(spark):
-    """image_dims parses REAL container bytes (no codec lib): a valid
-    minimal PNG, GIF and JPEG header each yield their true dimensions."""
-    import struct
-    import zlib
-
-    def png(w, h):
-        ihdr = struct.pack(">II", w, h) + b"\x08\x02\x00\x00\x00"
-        chunk = b"IHDR" + ihdr
-        return (
-            b"\x89PNG\r\n\x1a\n"
-            + struct.pack(">I", len(ihdr)) + chunk
-            + struct.pack(">I", zlib.crc32(chunk) & 0xFFFFFFFF)
-        )
-
-    def gif(w, h):
-        return b"GIF89a" + struct.pack("<HH", w, h) + b"\x00\x00\x00"
-
-    def jpeg(w, h):
-        # SOI + APP0 (JFIF) + SOF0 with the real dims
-        app0 = b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00\x01\x01\x00" + b"\x00" * 6
-        sof0 = b"\xff\xc0" + struct.pack(">H", 11) + b"\x08" + struct.pack(">HH", h, w) + b"\x01\x11\x00"
-        return b"\xff\xd8" + app0 + sof0 + b"\xff\xd9"
-
-    rows = [
-        Row(doc_id=1, payload=bytearray(png(640, 480))),
-        Row(doc_id=2, payload=bytearray(gif(320, 200))),
-        Row(doc_id=3, payload=bytearray(jpeg(1024, 768))),
-        Row(doc_id=4, payload=bytearray(b"not an image at all")),
-    ]
-    df = spark.createDataFrame(rows)
-    got = {r.doc_id: (r.format, r.width, r.height)
-           for r in multimodal.image_dims(df).collect()}
-    assert got[1] == ("png", 640, 480)
-    assert got[2] == ("gif", 320, 200)
-    assert got[3] == ("jpeg", 1024, 768)
-    assert got[4] == (None, None, None)  # unknown bytes degrade, never throw
-
-
 def _encode_png(width, height, color_type, samples, row_filters=None, palette=None):
     """Test-side PNG encoder: applies real PNG filters forward so the
     decoder's unfilter path is exercised against known pixel truth."""
@@ -1848,53 +1809,6 @@ def test_winnowing_guarantee_and_density(spark):
         textstats.winnowing_fingerprints(df, "doc_id", "text", mode="sha9")
 
 
-# ------------------------------------------------------- fuzzy record linkage
-
-
-def test_fuzzy_linkage_same_and_adjacent_band(spark):
-    # a/b: same band, 1 edit; c: adjacent band (length straddle), 1 edit
-    # from a; d: same text as a but different lang -> blocked out;
-    # e: same block, > max_dist edits -> verified out
-    rows = [
-        Row(doc_id=1, text="the quick brown fox jumps over the dog", lang="en", n=100),
-        Row(doc_id=2, text="the quick brown fox jumps over the cat", lang="en", n=110),
-        Row(doc_id=3, text="the quick brown fox jumps over the do", lang="en", n=129),
-        Row(doc_id=4, text="the quick brown fox jumps over the dog", lang="fr", n=100),
-        Row(doc_id=5, text="completely different text with no overlap", lang="en", n=105),
-    ]
-    df = spark.createDataFrame(rows)
-    got = {
-        (r.id_a, r.id_b): r.dist
-        for r in dedup.fuzzy_linkage_pairs(
-            df, "doc_id", "text", block_cols=["lang"], band_col="n",
-            band_width=64, prefix_len=48, max_dist=4,
-        ).collect()
-    }
-    # bands: 100->1, 110->1, 129->2, 105->1
-    assert (1, 2) in got and got[(1, 2)] == 3  # dog -> cat
-    assert (1, 3) in got and got[(1, 3)] == 1  # adjacent band via +1 probe
-    assert not any(4 in p for p in got)  # lang block
-    assert not any(5 in p for p in got)  # distance verify
-    # no pair may appear twice (exactly-once meeting guarantee)
-    pairs = dedup.fuzzy_linkage_pairs(
-        df, "doc_id", "text", block_cols=["lang"], band_col="n",
-        band_width=64, prefix_len=48, max_dist=4,
-    )
-    assert pairs.count() == pairs.select("id_a", "id_b").distinct().count()
-
-
-def test_fuzzy_linkage_distance_is_levenshtein(spark):
-    rows = [
-        Row(doc_id=1, text="kitten", lang="en", n=6),
-        Row(doc_id=2, text="sitting", lang="en", n=7),
-    ]
-    got = dedup.fuzzy_linkage_pairs(
-        spark.createDataFrame(rows), "doc_id", "text", block_cols=["lang"],
-        band_col="n", band_width=64, prefix_len=48, max_dist=10,
-    ).collect()
-    assert len(got) == 1 and got[0].dist == 3
-
-
 # ------------------------------------------------------- truncation dedup
 
 
@@ -1940,24 +1854,6 @@ def test_fd_audit_holds_and_violations(spark):
     # the reverse FD b->r: b=p maps to {x, y} -> violated with 3 rows
     r2 = profile.fd_audit(df, "b", "a", "b->a").collect()[0]
     assert r2.n_groups == 3 and r2.n_violating == 1 and r2.rows_in_violating == 3
-
-
-def test_recommended_planes_density_law(spark):
-    from presto_workload_analyzer_spark.extensions.similarity import (
-        recommended_planes,
-    )
-
-    assert recommended_planes(1000, 64) == 4      # floor applies
-    assert recommended_planes(64 * 16, 64) == 4
-    assert recommended_planes(64 * 1024, 64) == 10
-    # 10x data -> +4 planes at most (log law), occupancy stays ~target
-    assert recommended_planes(640 * 1024, 64) - recommended_planes(64 * 1024, 64) <= 4
-    import pytest as _pt
-
-    with _pt.raises(ValueError):
-        recommended_planes(0)
-    with _pt.raises(ValueError):
-        recommended_planes(100, 0)
 
 
 def test_prefix_filter_join_is_lossless_vs_brute_force(spark):

@@ -301,25 +301,6 @@ def test_read_summary_drops_corrupt_lines(spark, tmp_path):
     assert df.filter(F.col("query_id").isNull()).count() == 0
 
 
-def test_compact_dataset(spark, tmp_path):
-    """Many tiny files -> few target-sized files, identical content."""
-    import glob
-
-    from presto_workload_analyzer_spark.pipeline import compact_dataset
-
-    p = str(tmp_path / "frag")
-    # 40 partitions of a small frame -> 40 tiny files
-    spark.range(0, 4000).withColumn("v", F.col("id") * 2).repartition(40).write.parquet(p)
-    n_before = len(glob.glob(f"{p}/*.parquet"))
-    assert n_before >= 40
-    before = {(r.id, r.v) for r in spark.read.parquet(p).collect()}
-
-    n_target = compact_dataset(spark, p, target_file_bytes=10**12)  # everything -> 1
-    n_after = len(glob.glob(f"{p}/*.parquet"))
-    assert n_target == 1 and n_after == 1
-    assert {(r.id, r.v) for r in spark.read.parquet(p).collect()} == before
-
-
 def _deep_plan_json(depth):
     """A chain of `depth` project nodes as JSON text (json.dumps itself
     overflows the stack on a plan this deep)."""
@@ -345,3 +326,25 @@ def test_deep_document_is_skipped_not_fatal(spark, tmp_path):
 
     frags = '[{"id": "0", "root": ' + _deep_plan_json(depth) + "}]"
     assert list(iter_plan_rows("q", frags)) == []
+
+
+def test_min_row_parallelism_is_noop_when_scan_is_wide(spark):
+    """The repartition must vanish exactly where it would be expensive:
+    an input already at >= core-count partitions passes through
+    IDENTICALLY (same plan object — no exchange added), while a
+    single-split input comes back at core-count partitions."""
+    from presto_workload_analyzer_spark.sources import min_row_parallelism
+
+    target = spark.sparkContext.defaultParallelism
+    wide = spark.range(1000).repartition(target)
+    assert min_row_parallelism(wide) is wide
+
+    wider = spark.range(1000).repartition(target + 4)
+    assert min_row_parallelism(wider) is wider
+
+    narrow = spark.range(1000).coalesce(1)
+    out = min_row_parallelism(narrow)
+    assert out is not narrow
+    assert out.rdd.getNumPartitions() == target
+    # row set unchanged
+    assert out.count() == 1000

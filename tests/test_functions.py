@@ -11,11 +11,9 @@ from pyspark.sql import Row, functions as F
 from presto_workload_analyzer_spark.functions import (
     SIZE_UNITS,
     TIME_UNITS,
-    node_type_from_attype,
     parse_size,
     parse_time,
     query_timestamp,
-    shorten,
     strip_operator_suffix,
     trunc_date,
     trunc_hour,
@@ -98,20 +96,6 @@ def test_query_timestamp(spark):
     assert str(r.h) == "2024-01-02 03:00:00"
 
 
-def test_node_type_from_attype(spark):
-    cases = {
-        "tablescan": "tablescan",
-        "com.facebook.presto.sql.planner.plan.TableScanNode": "tablescan",
-        ".JoinNode": "join",
-        "ExchangeNode-ish": "exchangenode-ish",  # no FQCN match -> lowercased raw
-    }
-    out = _run(spark, list(cases), node_type_from_attype)
-    assert out == list(cases.values())
-
-
-def test_strip_operator_and_shorten(spark):
+def test_strip_operator_suffix(spark):
     out = _run(spark, ["ScanFilterAndProjectOperator"], strip_operator_suffix)
     assert out == ["ScanFilterAndProject"]
-    long = "x" * 40
-    out = _run(spark, [long, "short"], shorten)
-    assert out == ["x" * 30 + "...", "short"]

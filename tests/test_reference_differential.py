@@ -29,11 +29,8 @@ from unittest.mock import MagicMock
 
 import pytest
 
-from presto_workload_analyzer_spark.pipeline import (
-    build_silver,
-    collect_metrics,
-    run_analyzers,
-)
+from presto_workload_analyzer_spark.operators.analyzers import collect_metrics
+from presto_workload_analyzer_spark.pipeline import build_silver, run_analyzers
 from presto_workload_analyzer_spark.sources.queryinfo import extract_queryinfo
 
 import queryinfo_fixtures as QF
@@ -205,7 +202,7 @@ def ours(spark, tmp_path_factory, corpus):
         (d / f"q{i:04d}.json").write_text(json.dumps(doc))
     silver = build_silver(extract_queryinfo(spark, str(d)))
     outputs = run_analyzers(silver)
-    outputs["collect_metrics"] = collect_metrics(silver)
+    outputs["collect_metrics"] = collect_metrics(silver["queries"])
     return outputs
 
 

@@ -10,6 +10,7 @@ from presto_workload_analyzer_spark.pipeline import ANALYZERS, PIE, build_silver
 from presto_workload_analyzer_spark.report.emitter import (
     _PALETTE_DEFAULT,
     _PALETTE_HIGH_CONTRAST,
+    _chart_payload,
     _json_safe,
     build_report,
     render_html,
@@ -80,6 +81,18 @@ def test_high_contrast_palette(silver):
 def test_scatter_limit(silver):
     rep = build_report(silver, only=["elapsed_time_by_query"], scatter_limit=2)
     assert len(rep["charts"][0]["data"]) == 2
+
+
+def test_capped_rows_pass_is_one_job(spark, silver, report):
+    """A capped ROWS pass is one Spark job. A bare limit().collect()
+    plans a CollectLimit, whose take() scans 1 partition, then 4, then the
+    rest, one job each: 3 jobs for this pass at local[8]. `report` has
+    filled the silver caches, so only the pass's own jobs are counted."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    _chart_payload(silver, ["filter_selectivity_1"], 50_000)
+    jobs = set(tracker.getJobIdsForGroup(None)) - before
+    assert len(jobs) == 1, f"the pass launched {len(jobs)} jobs"
 
 
 def test_sinks(report, tmp_path):

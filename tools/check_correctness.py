@@ -12,9 +12,8 @@ Usage: python tools/check_correctness.py [--sf-dir DIR] [--only name1,name2]
 `--json PATH` additionally writes a machine-readable ledger (one entry
 per checked query: rows/schema/values match flags, row counts, elapsed,
 error text) plus a header with the git commit and timestamp — the
-committed artifact form of a full-registry local gate run, so a round's
-"local-gate green" claim for queries the 50-slot driver window hasn't
-reached is checkable without re-running 222 queries.
+committed artifact form of a full-registry run, so a claim that every
+query matches its oracle is checkable without re-running the registry.
 """
 
 from __future__ import annotations

@@ -37,7 +37,7 @@ OUTPUT_BOUND = {
     # 4-plane/2-band oracle parameters 10x rows in a 16-bucket space give
     # ~100x bucket pairs (measured 256,949 -> 25,834,562) while wall grew
     # only 18.6x/9.6x — per-candidate throughput improved >5x. Production
-    # scaling raises planes with log2(n): similarity.recommended_planes.
+    # scaling holds bucket occupancy with planes = log2(n / target rows).
     "x33_blocked_embedding_dedup",
     "x64_embedding_dedup_keep",
     # x81 evaluates x02 candidates against the COMPLETE shingle-sharing
