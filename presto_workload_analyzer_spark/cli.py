@@ -15,6 +15,8 @@ from __future__ import annotations
 import argparse
 import sys
 
+from pyspark.sql import Observation, functions as F
+
 from presto_workload_analyzer_spark.pipeline import ANALYZERS, build_silver
 from presto_workload_analyzer_spark.report.emitter import build_report, write_report
 from presto_workload_analyzer_spark.session import get_spark
@@ -26,14 +28,20 @@ from presto_workload_analyzer_spark.sources.queryinfo import (
 )
 
 
-def _write_summary(df, output: str, single_file: bool) -> None:
+def _write_summary(df, output: str, single_file: bool) -> int:
     """Directory sink by default; ONE reference-compatible .jsonl.gz file
     when asked (--single-file) or when the output path says so — the
-    reference invocation style is `-o summary.jsonl.gz` (extract.py:189)."""
+    reference invocation style is `-o summary.jsonl.gz` (extract.py:189).
+
+    Returns the number of summaries written, observed during the write:
+    the non-null query_ids, exactly the rows `read_summary_jsonl` keeps."""
+    written = Observation()
+    df = df.observe(written, F.count("query_id").alias("n"))
     if single_file or output.endswith(".jsonl.gz"):
         write_summary_jsonl_file(df, output)
     else:
         write_summary_jsonl(df, output)
+    return written.get["n"]
 
 
 def cmd_extract(args: argparse.Namespace) -> int:
@@ -41,8 +49,7 @@ def cmd_extract(args: argparse.Namespace) -> int:
     df = extract_queryinfo(spark, args.input_dir)
     if args.limit:
         df = df.limit(args.limit)
-    _write_summary(df, args.output, args.single_file)
-    n = read_summary_jsonl(spark, args.output).count()
+    n = _write_summary(df, args.output, args.single_file)
     print(f"extracted {n} summaries -> {args.output}")
     return 0
 
@@ -114,14 +121,13 @@ def cmd_process(args: argparse.Namespace) -> int:
         rename_user=args.rename_user,
         rename_partitions=args.rename_partitions,
     )
-    _write_summary(out, args.output, args.single_file)
-    n = read_summary_jsonl(spark, args.output).count()
+    n = _write_summary(out, args.output, args.single_file)
     print(f"processed {n} summaries -> {args.output}")
     # translation tables (reference jsonl_process.py:186-194)
-    for group, tdf in tables.items():
+    for group, table in tables.items():
         print(f"{group.capitalize()}s translation table:")
-        for r in tdf.orderBy("new_name").collect():
-            print(f"  {r['name']!r}: {r['new_name']!r}")
+        for name, new_name in sorted(table.items(), key=lambda kv: kv[1]):
+            print(f"  {name!r}: {new_name!r}")
     return 0
 
 

@@ -26,9 +26,11 @@ produces are an artifact of file iteration order. Rebuild:
      ordinals follow file arrival order, which is nondeterministic under
      partition parallelism; first-seen-by-sorted-query_id is deterministic
      and stable under re-partitioning.
-  3. APPLY broadcasts the (small, by construction — it is printed as a
-     translation table) name map and rewrites each record in one
-     `mapInPandas` pass.
+  3. APPLY collects the (small, by construction — it is printed as a
+     translation table) name map once, as {group: {name: new_name}}, ships
+     it to every task and rewrites each record in one `mapInPandas` pass.
+     The printed translation tables are that same dict: no Spark job and
+     no cached DataFrame.
 
 At 100 TB this is two scans of the corpus with no shuffle besides the tiny
 name aggregation; the broadcast map is bounded by the distinct-name count.
@@ -228,28 +230,22 @@ def build_translation(names: DataFrame) -> DataFrame:
 
 def apply_obfuscation(
     df: DataFrame,
-    translation: DataFrame | None = None,
-    rename_groups: set[str] | None = None,
+    name_map: dict[str, dict[str, str]] | None = None,
     remove_query: bool = False,
     remove_locations: bool = False,
 ) -> DataFrame:
-    """Rewrite summary records with the broadcast translation map.
+    """Rewrite summary records with the translation map.
 
-    `translation` is the small (group, name, new_name) DataFrame from
-    build_translation; collected once on the driver and shipped to every
-    task (the reference keeps the same dict driver-side). Unknown names
-    pass through unchanged (cannot happen when translation was built from
-    the same corpus); '' passes through (jsonl_process.py:59-61).
+    `name_map` is {group: {name: new_name}}, the collected build_translation
+    table, shipped to every task (the reference keeps the same dict
+    driver-side); its keys are the groups renamed. Unknown names pass
+    through unchanged (cannot happen when the map was built from the same
+    corpus); '' passes through (jsonl_process.py:59-61).
     """
-    rename_groups = rename_groups or set()
-    name_map: dict[str, dict[str, str]] = {g: {} for g in rename_groups}
-    if translation is not None and rename_groups:
-        for r in translation.collect():
-            if r["group"] in name_map:
-                name_map[r["group"]][r["name"]] = r["new_name"]
+    name_map = name_map or {}
 
     def rename_fn(group: str):
-        m = name_map.get(group, {})
+        m = name_map[group]
 
         def fn(v):
             if group == "partition" and isinstance(v, list):
@@ -262,7 +258,7 @@ def apply_obfuscation(
 
     alter: dict = {}
     for key, group in RENAME_KEY_GROUPS.items():
-        if group in rename_groups:
+        if group in name_map:
             alter[key] = rename_fn(group)
     if remove_query:
         for key in REMOVE_QUERY_KEYS:
@@ -277,7 +273,7 @@ def apply_obfuscation(
             for rec in recs:
                 if remove_query:
                     rec["query"] = ""
-                if "user" in rename_groups and isinstance(rec.get("user"), str):
+                if "user" in name_map and isinstance(rec.get("user"), str):
                     rec["user"] = name_map["user"].get(rec["user"], rec["user"])
                 if alter:
                     for col, parsed in _record_json_parts(rec):
@@ -296,12 +292,12 @@ def process_summary(
     remove_locations: bool = False,
     rename_user: bool = False,
     rename_partitions: bool = False,
-) -> tuple[DataFrame, dict[str, DataFrame]]:
+) -> tuple[DataFrame, dict[str, dict[str, str]]]:
     """Full jsonl_process pipeline: filter -> obfuscate.
 
-    Returns (processed summary DF, {group: translation DF}) — the
+    Returns (processed summary DF, {group: {name: new_name}}) — the
     translation tables are the reference's printed maps
-    (jsonl_process.py:186-194), as DataFrames.
+    (jsonl_process.py:186-194), collected once when any group is renamed.
     """
     if filter_schema:
         df = filter_by_schema(df, filter_schema)
@@ -316,17 +312,14 @@ def process_summary(
     if rename_partitions:
         groups.add("partition")
 
-    translation = None
-    tables: dict[str, DataFrame] = {}
+    tables: dict[str, dict[str, str]] = {g: {} for g in sorted(groups)}
     if groups:
-        translation = build_translation(collect_names(df, groups)).cache()
-        for g in sorted(groups):
-            tables[g] = translation.filter(F.col("group") == g).select("name", "new_name")
+        for r in build_translation(collect_names(df, groups)).collect():
+            tables[r["group"]][r["name"]] = r["new_name"]
 
     out = apply_obfuscation(
         df,
-        translation=translation,
-        rename_groups=groups,
+        name_map=tables,
         remove_query=remove_query,
         remove_locations=remove_locations,
     )

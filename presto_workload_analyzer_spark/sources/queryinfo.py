@@ -206,19 +206,32 @@ def summarize_queryinfo(doc: dict) -> dict | None:
 
 
 def extract_queryinfo(spark: SparkSession, input_path: str | list[str]) -> DataFrame:
-    """Directory (or glob) of *.json / *.json.gz QueryInfo files -> summary DF.
+    """Directory (or list of files) of *.json / *.json.gz QueryInfo files
+    -> summary DF.
 
     `wholetext` keeps one document per row; gzip decompression is
     transparent. Each task parses its own files — the reference's per-file
     loop (extract.py:190-206) becomes partition parallelism.
+
+    A directory is listed once, on the driver, keeping its *.json* files
+    (a collector landing dir holds only .json.gz). A glob `dir/*.json*`
+    would expand to one root path per file, and past
+    spark.sql.sources.parallelPartitionDiscovery.threshold (32) Spark
+    lists those files again in a job of its own. Subdirectories are not
+    read, except `key=value` partition directories, which are all read;
+    loose files beside partition directories raise ValueError, because
+    Spark would silently skip them.
     """
     if isinstance(input_path, str):
-        # one glob for both *.json and *.json.gz: a collector landing dir
-        # typically holds only .json.gz, and a non-matching glob is an error
-        paths = [f"{input_path}/*.json*"]
+        raw = spark.read.option("pathGlobFilter", "*.json*").text(input_path, wholetext=True)
+        if len(raw.columns) > 1 and _has_loose_files(spark, input_path):
+            raise ValueError(
+                f"{input_path} holds *.json* files beside partition directories "
+                f"({', '.join(raw.columns[1:])}); pass one partition directory, "
+                "or move the loose files into a partition"
+            )
     else:
-        paths = list(input_path)
-    raw = spark.read.text(paths, wholetext=True)
+        raw = spark.read.text(list(input_path), wholetext=True)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -234,6 +247,14 @@ def extract_queryinfo(spark: SparkSession, input_path: str | list[str]) -> DataF
             yield pd.DataFrame(rows, columns=_SUMMARY_COLUMNS)
 
     return raw.mapInPandas(gen, SUMMARY_SCHEMA)
+
+
+def _has_loose_files(spark: SparkSession, directory: str) -> bool:
+    """Whether `directory` itself holds *.json* files (one listing)."""
+    jvm = spark.sparkContext._jvm
+    pattern = jvm.org.apache.hadoop.fs.Path(directory, "*.json*")
+    fs = pattern.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    return any(status.isFile() for status in fs.globStatus(pattern) or [])
 
 
 def read_summary_jsonl(spark: SparkSession, path: str) -> DataFrame:

@@ -301,6 +301,54 @@ def test_read_summary_drops_corrupt_lines(spark, tmp_path):
     assert df.filter(F.col("query_id").isNull()).count() == 0
 
 
+def _landing(root, layout):
+    """Write {relative path: fixture index, or None for a non-JSON file}."""
+    docs = fixtures()
+    for rel, i in layout.items():
+        path = root / rel
+        path.parent.mkdir(parents=True, exist_ok=True)
+        if i is None:
+            path.write_text("not a QueryInfo document")
+        else:
+            with gzip.open(path, "wt") as f:
+                json.dump(docs[i], f)
+
+
+@pytest.mark.parametrize(
+    "layout, read",
+    [
+        # a collector's flat directory, with a marker and a stray file
+        ({"q0.json.gz": 0, "q1.json.gz": 1, "_SUCCESS": None, "notes.txt": None}, [0, 1]),
+        # a plain subdirectory is not read
+        ({"q0.json.gz": 0, "q1.json.gz": 1, "old/q2.json.gz": 2}, [0, 1]),
+        # partition directories are all read
+        ({"dt=2024-01-01/q0.json.gz": 0, "dt=2024-01-02/q1.json.gz": 1}, [0, 1]),
+    ],
+    ids=["flat", "plain_subdir", "partitions_only"],
+)
+def test_extract_landing_layouts(spark, tmp_path, layout, read):
+    _landing(tmp_path, layout)
+    df = extract_queryinfo(spark, str(tmp_path))
+    got = sorted(r.query_id for r in df.select("query_id").collect())
+    assert got == sorted(fixtures()[i]["queryId"] for i in read)
+
+
+@pytest.mark.parametrize(
+    "layout, error",
+    [
+        # Spark's partition discovery would read dt=2024-01-01/ and silently
+        # skip q0.json.gz; extract raises instead
+        ({"q0.json.gz": 0, "dt=2024-01-01/q1.json.gz": 1}, "beside partition directories"),
+        ({"old/q0.json.gz": 0, "dt=2024-01-01/q1.json.gz": 1}, "CONFLICTING_DIRECTORY_STRUCTURES"),
+    ],
+    ids=["loose_files", "plain_subdir"],
+)
+def test_extract_rejects_partitions_mixed_with_other_data(spark, tmp_path, layout, error):
+    _landing(tmp_path, layout)
+    with pytest.raises(Exception, match=error):
+        extract_queryinfo(spark, str(tmp_path))
+
+
 def _deep_plan_json(depth):
     """A chain of `depth` project nodes as JSON text (json.dumps itself
     overflows the stack on a plan this deep)."""

@@ -177,8 +177,7 @@ def test_process_summary_full(summary_df):
     assert json.loads(r4["output"])["catalogName"] == "catalog1"
 
     # translation tables surface the same maps
-    schema_tbl = {r["name"]: r["new_name"] for r in tables["schema"].collect()}
-    assert schema_tbl == {"web": "schema0", "sales": "schema1"}
+    assert tables["schema"] == {"web": "schema0", "sales": "schema1"}
 
 
 def test_obfuscation_schema_stable(summary_df):
@@ -198,8 +197,7 @@ def test_filter_then_obfuscate_pipeline(summary_df):
     # kept rows: q1 (alice), q3 (alice), q4 (carol) -> user0, user1
     assert users == {"user0", "user1"}
     assert out.count() == 3
-    tbl = {r["name"]: r["new_name"] for r in tables["user"].collect()}
-    assert tbl == {"alice": "user0", "carol": "user1"}
+    assert tables["user"] == {"alice": "user0", "carol": "user1"}
 
 
 def test_t_closeness_hand_computed(spark):
