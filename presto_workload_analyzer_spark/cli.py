@@ -18,7 +18,12 @@ import sys
 from pyspark.sql import Observation, functions as F
 
 from presto_workload_analyzer_spark.pipeline import ANALYZERS, build_silver
-from presto_workload_analyzer_spark.report.emitter import build_report, write_report
+from presto_workload_analyzer_spark.report.emitter import (
+    build_report,
+    render_html,
+    render_html_template_contract,
+    write_report,
+)
 from presto_workload_analyzer_spark.session import get_spark
 from presto_workload_analyzer_spark.sources.queryinfo import (
     extract_queryinfo,
@@ -55,49 +60,47 @@ def cmd_extract(args: argparse.Namespace) -> int:
 
 
 def cmd_analyze(args: argparse.Namespace) -> int:
+    if args.template_contract and not args.output.endswith((".html", ".zip")):
+        print(
+            "--template-contract requires an .html or .zip output "
+            f"(got {args.output!r})",
+            file=sys.stderr,
+        )
+        return 2
+    if args.filter and args.filter not in ANALYZERS:
+        print(
+            f"unknown analyzer {args.filter!r}; available: {', '.join(sorted(ANALYZERS))}",
+            file=sys.stderr,
+        )
+        return 2
     spark = get_spark(app_name="pwa-analyze")
     summary = read_summary_jsonl(spark, args.input)
     if args.limit:
         summary = summary.limit(args.limit)
-    only = None
-    if args.filter:
-        if args.filter not in ANALYZERS:
-            print(
-                f"unknown analyzer {args.filter!r}; available: {', '.join(sorted(ANALYZERS))}",
-                file=sys.stderr,
-            )
-            return 2
-        only = [args.filter]
+    persisted = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
     silver = build_silver(summary)
-    report = build_report(
-        silver,
-        only=only,
-        scatter_limit=args.scatter_limit,
-        fail_on_error=args.fail_on_error,
-        high_contrast=args.high_contrast_mode,
-    )
-    if args.template_contract:
-        from presto_workload_analyzer_spark.report.emitter import (
-            render_html_template_contract,
+    try:
+        report = build_report(
+            silver,
+            only=[args.filter] if args.filter else None,
+            scatter_limit=args.scatter_limit,
+            fail_on_error=args.fail_on_error,
+            high_contrast=args.high_contrast_mode,
         )
-
-        if args.output.endswith(".html"):
-            with open(args.output, "w") as f:
-                f.write(render_html_template_contract(report))
-        elif args.output.endswith(".zip"):
-            import zipfile
-
-            with zipfile.ZipFile(args.output, "w", zipfile.ZIP_DEFLATED) as z:
-                z.writestr("output.html", render_html_template_contract(report))
+        if args.template_contract:
+            write_report(report, args.output, render_html_template_contract)
         else:
-            print(
-                "--template-contract requires an .html or .zip output "
-                f"(got {args.output!r})",
-                file=sys.stderr,
-            )
-            return 2
-    else:
-        write_report(report, args.output)
+            write_report(report, args.output)
+    finally:
+        # leave the session's persistent RDDs as found: the silver caches
+        # (dependents first: unpersisting `queries` first would rebuild the
+        # caches planned over it), then the analyzers' checkpoints, which
+        # only the report's dead frames reference
+        for name in ("plan_nodes", "operators", "queries"):
+            silver[name].unpersist(blocking=False)
+        rdds = spark.sparkContext._jsc.getPersistentRDDs()
+        for rdd_id in set(rdds.keySet()) - persisted:
+            rdds.get(rdd_id).unpersist(False)
     n_charts = len(report["charts"])
     n_err = len(report["errors"])
     print(f"wrote {args.output}: {n_charts} charts, {n_err} errors")
@@ -165,7 +168,6 @@ def cmd_curation_report(args: "argparse.Namespace") -> int:
     from presto_workload_analyzer_spark.report.curation import (
         CURATION_CHARTS,
         build_curation_report,
-        write_curation_report,
     )
 
     spark = get_spark(app_name="pwa-curation-report")
@@ -182,7 +184,9 @@ def cmd_curation_report(args: "argparse.Namespace") -> int:
     report = build_curation_report(
         spark, args.data_dir, only=only, fail_on_error=args.fail_on_error
     )
-    write_curation_report(report, args.output)
+    write_report(
+        report, args.output, lambda r: render_html(r, r["structure"]["title"]), "curation.html"
+    )
     print(f"wrote {args.output} ({len(report['charts'])} charts)")
     return 0
 

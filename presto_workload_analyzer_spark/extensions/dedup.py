@@ -320,8 +320,9 @@ def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
         # the edges subtree — persisted lineage keeps the full upstream
         # candidate-pair pipeline in each round's plan (and recomputes it
         # if the cache is evicted mid-loop); the checkpoint truncates to a
-        # flat edge-grain RDD scan (r15 plan-audit fix; pagerank/kcore
-        # already follow this convention for their loop frames).
+        # flat edge-grain RDD scan (r15 plan-audit fix). graph.kcore_nodes
+        # checkpoints its edges the same way; graph.pagerank checkpoints
+        # only its per-round ranks and persists its edge frame.
         .distinct()
         .transform(materialize)
     )
@@ -331,68 +332,62 @@ def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
         .select("id", F.col("id").alias("cluster_id"))
         .localCheckpoint(eager=True)
     )
-    try:
-        for _ in range(max_iter):
-            nbr_min = (
-                edges.join(
-                    labels.select(
-                        F.col("id").alias("dst"), F.col("cluster_id").alias("dst_cluster")
-                    ),
-                    on="dst",
-                )
-                .groupBy("src")
-                .agg(F.min("dst_cluster").alias("nbr_cluster"))
+    for _ in range(max_iter):
+        nbr_min = (
+            edges.join(
+                labels.select(
+                    F.col("id").alias("dst"), F.col("cluster_id").alias("dst_cluster")
+                ),
+                on="dst",
             )
-            # materialized: the pointer-jump below self-joins `stepped`
-            # (as `parent`), and an unmaterialized frame would inline the
-            # labels-join-nbr_min subtree into BOTH sides of that join —
-            # doubling the per-round plan and re-merging the intermediate
-            # on each side. The frame is three id-width columns; the
-            # checkpoint is cheap and keeps every round's plan flat.
-            stepped = labels.join(
-                nbr_min, labels["id"] == nbr_min["src"], "left"
-            ).select(
-                labels["id"],
-                F.col("cluster_id").alias("__old"),
-                F.least(
-                    F.col("cluster_id"),
-                    F.coalesce(F.col("nbr_cluster"), F.col("cluster_id")),
-                ).alias("cluster_id"),
-            ).localCheckpoint(eager=True)
-            # pointer jumping: substitute each label with its label's label.
-            # Labels are always node ids and only ever shrink, so the
-            # grandparent lookup is total (left join is belt-and-braces) and
-            # monotone — this is what turns O(diameter) into O(log diameter).
-            parent = stepped.select(
-                F.col("id").alias("__pid"), F.col("cluster_id").alias("__grand")
-            )
-            updated = (
-                stepped.join(parent, stepped["cluster_id"] == parent["__pid"], "left")
-                .select(
-                    stepped["id"],
-                    F.coalesce(F.col("__grand"), stepped["cluster_id"]).alias(
-                        "cluster_id"
-                    ),
-                    (
-                        F.coalesce(F.col("__grand"), stepped["cluster_id"])
-                        < F.col("__old")
-                    ).alias("__chg"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            n_changed = updated.filter(F.col("__chg")).count()
-            labels = updated.drop("__chg")
-            if n_changed == 0:
-                return labels
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds; "
-            "raise max_iter (needed rounds ~ graph diameter)"
+            .groupBy("src")
+            .agg(F.min("dst_cluster").alias("nbr_cluster"))
         )
-    finally:
-        # checkpointed RDD blocks are released when the frame is GC'd;
-        # unpersist() is the no-op spelling that keeps the old contract
-        # visible for persisted callers of earlier revisions
-        edges.unpersist()
+        # materialized: the pointer-jump below self-joins `stepped`
+        # (as `parent`), and an unmaterialized frame would inline the
+        # labels-join-nbr_min subtree into BOTH sides of that join —
+        # doubling the per-round plan and re-merging the intermediate
+        # on each side. The frame is three id-width columns; the
+        # checkpoint is cheap and keeps every round's plan flat.
+        stepped = labels.join(
+            nbr_min, labels["id"] == nbr_min["src"], "left"
+        ).select(
+            labels["id"],
+            F.col("cluster_id").alias("__old"),
+            F.least(
+                F.col("cluster_id"),
+                F.coalesce(F.col("nbr_cluster"), F.col("cluster_id")),
+            ).alias("cluster_id"),
+        ).localCheckpoint(eager=True)
+        # pointer jumping: substitute each label with its label's label.
+        # Labels are always node ids and only ever shrink, so the
+        # grandparent lookup is total (left join is belt-and-braces) and
+        # monotone — this is what turns O(diameter) into O(log diameter).
+        parent = stepped.select(
+            F.col("id").alias("__pid"), F.col("cluster_id").alias("__grand")
+        )
+        updated = (
+            stepped.join(parent, stepped["cluster_id"] == parent["__pid"], "left")
+            .select(
+                stepped["id"],
+                F.coalesce(F.col("__grand"), stepped["cluster_id"]).alias(
+                    "cluster_id"
+                ),
+                (
+                    F.coalesce(F.col("__grand"), stepped["cluster_id"])
+                    < F.col("__old")
+                ).alias("__chg"),
+            )
+            .localCheckpoint(eager=True)
+        )
+        n_changed = updated.filter(F.col("__chg")).count()
+        labels = updated.drop("__chg")
+        if n_changed == 0:
+            return labels
+    raise RuntimeError(
+        f"connected_components did not converge in {max_iter} rounds; "
+        "raise max_iter (needed rounds ~ graph diameter)"
+    )
 
 
 def drop_near_duplicates(

@@ -145,7 +145,9 @@ def selectivity_histogram(
         if empty (analyze.py:643-644);
       * bins beyond max_selectivity + 1e-9 are labelled 'Above'
         (analyze.py:647-648); labels are '%0.2f' strings otherwise, and the
-        output sorts by label string asc, which puts 'Above' last.
+        output sorts by label string asc, which puts 'Above' last;
+      * a total weight of 0 (no rows, or all weights 0) gives no rows,
+        where the reference would divide by zero.
 
     Output columns: (bin STRING, wall_pct DOUBLE).
     """
@@ -179,7 +181,10 @@ def selectivity_histogram(
         )
         .groupBy("bin")
         .agg(F.sum("__w").alias("__wsum"))
-        .withColumn("wall_pct", 100.0 * F.col("__wsum") / F.sum("__wsum").over(w_all))
-        .select("bin", "wall_pct")
+        .withColumn("__total", F.sum("__wsum").over(w_all))
+        # a total of 0 (no rows besides the zero scaffold, or all weights
+        # 0) has no shares: no rows, where ANSI division would raise
+        .filter(F.col("__total") != 0)
+        .select("bin", (100.0 * F.col("__wsum") / F.col("__total")).alias("wall_pct"))
         .orderBy("bin")
     )

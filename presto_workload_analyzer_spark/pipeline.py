@@ -64,7 +64,8 @@ def build_silver(summary: DataFrame) -> dict[str, DataFrame]:
 
     FAILED queries are dropped up front (reference analyze.py:1233-1234);
     all downstream tables derive from the filtered corpus. queries,
-    operators and plan_nodes are cached; tasks is not.
+    operators and plan_nodes are cached (tasks is not); the caller
+    unpersists them, as `cli analyze` does once its report is written.
     """
     queries = (
         summary.filter(F.col("state") != "FAILED")

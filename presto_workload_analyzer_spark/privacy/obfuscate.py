@@ -3,7 +3,7 @@
 Reference surface (jsonl_process.py:37-50, 53-86, 122-152, 186-194):
   * `filter_line` — keep a summary record iff a nested key from the filter
     dict occurs with the wanted value anywhere in the record (OR semantics),
-    OR no such key occurs at all (include_absent);
+    OR no such key occurs at all;
   * `NameObfuscator` — first-encounter ordinal renaming (name -> prefixN),
     shared across key aliases (schema/schemaName; user/principal), empty
     string passthrough; `ListObfuscator` element-wise variant for
@@ -119,32 +119,18 @@ def _record_json_parts(row: dict) -> Iterator[tuple[str, object]]:
 # --------------------------------------------------------------------------
 
 
-def filter_by_schema(
-    df: DataFrame,
-    schema: str,
-    or_and: bool = True,
-    include_absent: bool = True,
-) -> DataFrame:
+def filter_by_schema(df: DataFrame, schema: str) -> DataFrame:
     """Keep summary rows touching `schema` (filter_line semantics).
 
-    filter_dict = {schema: X, schemaName: X}; a row passes iff
-      * no `schema`/`schemaName` key occurs anywhere and include_absent, OR
-      * any (OR) / every (AND) filter key has an occurrence equal to X.
+    filter_dict = {schema: X, schemaName: X}; a row passes iff no
+    `schema`/`schemaName` key occurs anywhere in it, or some occurrence of
+    either key equals X.
     """
     keys = frozenset(("schema", "schemaName"))
 
     def keep(row: dict) -> bool:
-        occurrences: dict[str, list] = {"schema": [], "schemaName": []}
-        for _, parsed in _record_json_parts(row):
-            for k, v in _iter_nested(parsed, keys):
-                occurrences[k].append(v)
-        num_exist = sum(len(v) for v in occurrences.values())
-        found = [schema in occurrences[k] for k in occurrences]
-        return (
-            (include_absent and num_exist == 0)
-            or (or_and and any(found))
-            or (not or_and and all(found))
-        )
+        found = [v for _, parsed in _record_json_parts(row) for _, v in _iter_nested(parsed, keys)]
+        return not found or schema in found
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

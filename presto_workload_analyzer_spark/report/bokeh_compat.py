@@ -30,6 +30,13 @@ import json
 from typing import Any
 
 
+def script_json(obj: Any, **kw: Any) -> str:
+    """`obj` as JSON to inline in a ``<script>`` block. Every '<' is escaped
+    as \\u003c, so no string in it can close the block or open a comment;
+    JSON.parse (and a JS literal) reads the same document back."""
+    return json.dumps(obj, **kw).replace("<", "\\u003c")
+
+
 def bokeh_available() -> bool:
     try:
         import bokeh  # noqa: F401
@@ -104,7 +111,7 @@ def script_blocks(report: dict[str, Any]) -> list[str]:
         item = chart_json_item(chart)
         scripts.append(
             '<script type="application/json" id="{}">\n{}\n</script>\n'.format(
-                chart["id"], json.dumps(item).replace("</", "<\\/")
+                chart["id"], script_json(item)
             )
         )
         structure_charts.append(
@@ -120,10 +127,10 @@ def script_blocks(report: dict[str, Any]) -> list[str]:
     }
     scripts.append(
         "<script>\nconst structure = {}</script>".format(
-            json.dumps(structure, indent=4).replace("</", "<\\/")
+            script_json(structure, indent=4)
         )
     )
     return scripts
 
 
-__all__ = ["bokeh_available", "chart_json_item", "script_blocks"]
+__all__ = ["bokeh_available", "chart_json_item", "script_blocks", "script_json"]

@@ -7,10 +7,9 @@ mixing allocations, retrieval health, and sketch-accuracy audits.
 This is BEYOND-REFERENCE surface (the reference analyzes Presto
 workload logs only); it reuses the engine's registered driver queries
 as chart sources — every chart here is an oracle-verified query, so the
-report can never drift from the gated semantics — and the emitter's
-chart-payload conventions (id/title/description/columns/data), but
-ships its OWN template so the reference-parity report contract
-(emitter._HTML_TEMPLATE, pinned by the golden test) stays untouched.
+report can never drift from the gated semantics. Charts are built by the
+emitter's chart_entry, and the page and sink are the emitter's
+render_html and write_report (zip member `curation.html`).
 
 At scale every chart source is an aggregate-grain query (per-source,
 per-threshold, per-method rows — never corpus grain); the report build
@@ -19,13 +18,13 @@ is a handful of small collects over plans Catalyst already prunes.
 
 from __future__ import annotations
 
-import json
-import zipfile
 from typing import Any
 
-from pyspark.sql import SparkSession
+from pyspark.sql import SparkSession, functions as F
 
-from presto_workload_analyzer_spark.report.emitter import _json_safe
+from presto_workload_analyzer_spark import driver_queries
+from presto_workload_analyzer_spark.report.emitter import chart_entry
+from presto_workload_analyzer_spark.sources import read_table
 
 # name -> (section, row cap). Names resolve through driver_queries.queries(),
 # so each chart is an oracle-gated query; caps bound the payload for the
@@ -70,9 +69,6 @@ def build_curation_report(
     """Run the curation chart sources over the tables in `sf_dir` and
     return the report document (pure data, emitter-shaped):
     {structure: {title, metrics}, charts: [...], errors: {...}}."""
-    from presto_workload_analyzer_spark import driver_queries
-    from presto_workload_analyzer_spark.sources import read_table
-
     registry = driver_queries.queries()
     names = [n for n in CURATION_CHARTS if only is None or n in only]
     errors: dict[str, str] = {}
@@ -87,19 +83,13 @@ def build_curation_report(
                 # the registry degrades to a per-chart error, not a
                 # report-killing KeyError
                 fn = registry[name]
-                df = fn(spark, sf_dir).limit(cap)
+                # coalesce(1): one job; a bare limit collects through
+                # take(), a job per partition batch
+                df = fn(spark, sf_dir).limit(cap).coalesce(1)
                 rows = df.collect()
-                if not rows:
-                    continue
-                charts.append(
-                    {
-                        "id": name,
-                        "title": f"[{section}] " + name.replace("_", " "),
-                        "description": (fn.__doc__ or "").strip(),
-                        "columns": df.columns,
-                        "data": [[_json_safe(v) for v in r] for r in rows],
-                    }
-                )
+                if rows:
+                    title = f"[{section}] " + name.replace("_", " ")
+                    charts.append(chart_entry(name, title, fn, df.columns, rows))
             except Exception as e:  # noqa: BLE001 — per-chart tolerance
                 if fail_on_error:
                     raise
@@ -107,8 +97,6 @@ def build_curation_report(
 
     docs = read_table(spark, f"{sf_dir}/documents.parquet")
     emb = read_table(spark, f"{sf_dir}/embeddings.parquet")
-    from pyspark.sql import functions as F
-
     m = docs.agg(
         F.count(F.lit(1)).alias("n_documents"),
         F.sum(F.size(F.split(F.trim("text"), r"\s+"))).alias("n_tokens"),
@@ -127,86 +115,3 @@ def build_curation_report(
         "charts": charts,
         "errors": errors,
     }
-
-
-_CURATION_TEMPLATE = """<!DOCTYPE html>
-<html><head><meta charset="utf-8"><title>Corpus curation report</title>
-<style>
- body {{ font-family: sans-serif; margin: 2em; }}
- .metrics td {{ padding: 2px 12px; }}
- .chart {{ margin: 2em 0; border-top: 1px solid #ccc; padding-top: 1em; }}
- .chart table {{ border-collapse: collapse; }}
- .chart td, .chart th {{ border: 1px solid #ddd; padding: 2px 8px; font-size: 12px; }}
- .desc {{ color: #555; max-width: 60em; white-space: pre-wrap; }}
- .err {{ color: #a00; }}
-</style></head>
-<body>
-<h1>Corpus curation report</h1>
-<div id="report"></div>
-<script id="payload" type="application/json">{payload}</script>
-<script>
-// Corpus-derived strings (cells, descriptions, error messages) are
-// UNTRUSTED — an adversarial document in a web-crawled corpus must not
-// be able to inject markup. Everything renders through createElement +
-// textContent; no string-concatenated markup assignment anywhere.
-const doc = JSON.parse(document.getElementById('payload').textContent);
-const root = document.getElementById('report');
-function el(tag, attrs, text) {{
-  const n = document.createElement(tag);
-  for (const [k, v] of Object.entries(attrs || {{}})) n.setAttribute(k, v);
-  if (text !== undefined) n.textContent = String(text);
-  return n;
-}}
-root.appendChild(el('h2', null, 'Corpus'));
-const mt = el('table', {{class: 'metrics'}});
-for (const [k, v] of Object.entries(doc.structure.metrics)) {{
-  const tr = el('tr');
-  tr.appendChild(el('td', null, k));
-  tr.appendChild(el('td', null, v));
-  mt.appendChild(tr);
-}}
-root.appendChild(mt);
-for (const c of doc.charts) {{
-  const box = el('div', {{class: 'chart'}});
-  box.appendChild(el('h2', {{id: c.id}}, c.title));
-  box.appendChild(el('div', {{class: 'desc'}}, c.description));
-  const tbl = el('table');
-  const hr = el('tr');
-  for (const x of c.columns) hr.appendChild(el('th', null, x));
-  tbl.appendChild(hr);
-  for (const row of c.data.slice(0, 200)) {{
-    const tr = el('tr');
-    for (const x of row) tr.appendChild(el('td', null, x));
-    tbl.appendChild(tr);
-  }}
-  box.appendChild(tbl);
-  if (c.data.length > 200)
-    box.appendChild(el('div', {{class: 'desc'}},
-                       '… ' + (c.data.length - 200) + ' more rows in payload'));
-  root.appendChild(box);
-}}
-for (const [k, v] of Object.entries(doc.errors))
-  root.appendChild(el('div', {{class: 'err'}}, k + ': ' + v));
-</script>
-</body></html>
-"""
-
-
-def render_curation_html(report: dict[str, Any]) -> str:
-    # '<' is escaped so corpus text containing '</script>' cannot close
-    # the payload block (still byte-identical JSON after parsing)
-    payload = json.dumps(report, ensure_ascii=False).replace("<", "\\u003c")
-    return _CURATION_TEMPLATE.format(payload=payload)
-
-
-def write_curation_report(report: dict[str, Any], output_path: str) -> None:
-    """html / zip / json sink by extension — the emitter's convention."""
-    if output_path.endswith(".json"):
-        with open(output_path, "w", encoding="utf-8") as f:
-            json.dump(report, f, ensure_ascii=False, indent=1)
-    elif output_path.endswith(".zip"):
-        with zipfile.ZipFile(output_path, "w", zipfile.ZIP_DEFLATED) as z:
-            z.writestr("curation.html", render_curation_html(report))
-    else:
-        with open(output_path, "w", encoding="utf-8") as f:
-            f.write(render_curation_html(report))

@@ -8,11 +8,18 @@ opt-in --fail-on-error (analyze.py:1269-1272), "not enough data" charts
 skipped (analyze.py:1250-1252), and an `.html` / `.zip` (deflated
 output.html member) / `.json` sink (analyze.py:1284-1292).
 
-The reference renders through Bokeh; Bokeh isn't available in this
-environment and is presentation-only, so the HTML here embeds the same
-chart payloads as JSON and renders them with a small inline script
-(tables + SVG bars/pies). The DATA contract — ids, titles, descriptions,
-rows — is the parity surface.
+The reference renders through Bokeh; Bokeh is optional here and
+presentation-only, so the page embeds the chart payloads as JSON and
+renders them as tables with a small inline script. The DATA contract —
+ids, titles, descriptions, rows — is the parity surface.
+
+This module is the one path from a report document to a page or a file,
+for the workload report, its reference-template rendering
+(--template-contract) and the curation report (report.curation): one page
+(render_html), one escaper for JSON inside <script> (script_json) and one
+sink (write_report). Every string in a report is untrusted — user, table
+and operator names arrive verbatim from QueryInfo — so the page builds DOM
+nodes through textContent and the payload escapes every '<'.
 
 Scale: every analyzer output is a small aggregate or a capped projection;
 `scatter_limit` bounds row-level chart payloads before collect so the
@@ -22,17 +29,19 @@ everything, analyze.py:1229).
 
 from __future__ import annotations
 
+import html
 import json
 import zipfile
 from concurrent.futures import ThreadPoolExecutor
 from functools import reduce
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, functions as F
 
 from presto_workload_analyzer_spark.operators.analyzers import collect_metrics
 from presto_workload_analyzer_spark.operators.kernels import pie_collapse_by
 from presto_workload_analyzer_spark.pipeline import ANALYZERS, PIE, ROWS
+from presto_workload_analyzer_spark.report.bokeh_compat import script_blocks, script_json
 
 # default: the reference uses Bokeh Category20; high-contrast: Okabe-Ito
 # colorblind-safe palette (the reference's --high-contrast-mode switches to
@@ -111,18 +120,23 @@ def _chart_payload(
     }
 
 
-def _payload(name: str, columns: list[str], rows: list, high_contrast: bool) -> dict[str, Any]:
-    fn, _, kind = ANALYZERS[name]
-    data = [[_json_safe(v) for v in row] for row in rows]
-    payload: dict[str, Any] = {
+def chart_entry(name: str, title: str, fn: Callable, columns: list[str], rows: list) -> dict[str, Any]:
+    """One chart of a report document: its id, title, description (the
+    docstring of `fn`, its source), columns and JSON-safe cells."""
+    return {
         "id": name,
-        "title": name.replace("_", " "),
+        "title": title,
         "description": (fn.__doc__ or "").strip(),
         "columns": list(columns),
-        "data": data,
+        "data": [[_json_safe(v) for v in row] for row in rows],
     }
+
+
+def _payload(name: str, columns: list[str], rows: list, high_contrast: bool) -> dict[str, Any]:
+    fn, _, kind = ANALYZERS[name]
+    payload = chart_entry(name, name.replace("_", " "), fn, columns, rows)
     if kind == PIE:  # label first, as pie_collapse returns it
-        for row in data:
+        for row in payload["data"]:
             row[0] = shorten(row[0])
         payload["palette"] = _PALETTE_HIGH_CONTRAST if high_contrast else _PALETTE_DEFAULT
     return payload
@@ -182,8 +196,8 @@ def build_report(
     }
 
 
-_HTML_TEMPLATE = """<!DOCTYPE html>
-<html><head><meta charset="utf-8"><title>Workload Analysis</title>
+_PAGE = """<!DOCTYPE html>
+<html><head><meta charset="utf-8"><title>{title}</title>
 <style>
  body {{ font-family: sans-serif; margin: 2em; }}
  .metrics td {{ padding: 2px 12px; }}
@@ -191,39 +205,63 @@ _HTML_TEMPLATE = """<!DOCTYPE html>
  .chart table {{ border-collapse: collapse; }}
  .chart td, .chart th {{ border: 1px solid #ddd; padding: 2px 8px; font-size: 12px; }}
  .desc {{ color: #555; max-width: 60em; white-space: pre-wrap; }}
+ .err {{ color: #a00; }}
 </style></head>
 <body>
-<h1>Presto workload analysis</h1>
+<h1>{title}</h1>
 <div id="report"></div>
 <script id="payload" type="application/json">{payload}</script>
 <script>
+// Report strings are untrusted: user, table and operator names come from
+// QueryInfo, cells from corpus text. Everything renders through
+// createElement + textContent; no string becomes markup.
 const doc = JSON.parse(document.getElementById('payload').textContent);
 const root = document.getElementById('report');
-const m = doc.structure.metrics;
-let h = '<h2>Summary</h2><table class="metrics">';
-for (const [k, v] of Object.entries(m)) h += `<tr><td>${{k}}</td><td>${{v}}</td></tr>`;
-h += '</table>';
-for (const c of doc.charts) {{
-  h += `<div class="chart"><h2 id="${{c.id}}">${{c.title}}</h2>`;
-  h += `<div class="desc">${{c.description}}</div>`;
-  const shown = c.data.slice(0, 200);
-  h += '<table><tr>' + c.columns.map(x => `<th>${{x}}</th>`).join('') + '</tr>';
-  for (const row of shown) h += '<tr>' + row.map(x => `<td>${{x}}</td>`).join('') + '</tr>';
-  h += '</table>';
-  if (c.data.length > 200) h += `<div class="desc">… ${{c.data.length - 200}} more rows in payload</div>`;
-  h += '</div>';
+function el(tag, attrs, text) {{
+  const n = document.createElement(tag);
+  for (const [k, v] of Object.entries(attrs || {{}})) n.setAttribute(k, v);
+  if (text !== undefined) n.textContent = String(text);
+  return n;
 }}
-root.innerHTML = h;
+root.appendChild(el('h2', null, 'Summary'));
+const mt = el('table', {{class: 'metrics'}});
+for (const [k, v] of Object.entries(doc.structure.metrics)) {{
+  const tr = el('tr');
+  tr.appendChild(el('td', null, k));
+  tr.appendChild(el('td', null, v));
+  mt.appendChild(tr);
+}}
+root.appendChild(mt);
+for (const c of doc.charts) {{
+  const box = el('div', {{class: 'chart'}});
+  box.appendChild(el('h2', {{id: c.id}}, c.title));
+  box.appendChild(el('div', {{class: 'desc'}}, c.description));
+  const tbl = el('table');
+  const hr = el('tr');
+  for (const x of c.columns) hr.appendChild(el('th', null, x));
+  tbl.appendChild(hr);
+  for (const row of c.data.slice(0, 200)) {{
+    const tr = el('tr');
+    for (const x of row) tr.appendChild(el('td', null, x));
+    tbl.appendChild(tr);
+  }}
+  box.appendChild(tbl);
+  if (c.data.length > 200)
+    box.appendChild(el('div', {{class: 'desc'}},
+                       '… ' + (c.data.length - 200) + ' more rows in payload'));
+  root.appendChild(box);
+}}
+for (const [k, v] of Object.entries(doc.errors))
+  root.appendChild(el('div', {{class: 'err'}}, k + ': ' + v));
 </script>
 </body></html>
 """
 
 
-def render_html(report: dict[str, Any]) -> str:
-    payload = json.dumps(report)
-    # </script> inside JSON strings would break the inline block
-    payload = payload.replace("</", "<\\/")
-    return _HTML_TEMPLATE.format(payload=payload)
+def render_html(report: dict[str, Any], title: str = "Presto workload analysis") -> str:
+    """The report page: the document as a JSON payload block, rendered in
+    the browser by a script that builds DOM nodes (_PAGE)."""
+    return _PAGE.format(title=html.escape(title), payload=script_json(report))
 
 
 _TEMPLATE_CONTRACT_PAGE = """<!DOCTYPE html>
@@ -246,32 +284,39 @@ def render_html_template_contract(report: dict[str, Any]) -> str:
     report.bokeh_compat). A user pointing reference-style template JS at
     this output finds every block under the same id it would find there.
     """
-    from presto_workload_analyzer_spark.report.bokeh_compat import script_blocks
-
     placeholder = "<!-- PLACEHOLDER_FOR_BOKEH_JSONS -->"
     return _TEMPLATE_CONTRACT_PAGE.replace(
         placeholder, "\n".join(script_blocks(report))
     )
 
 
-def write_report(report: dict[str, Any], output_path: str) -> None:
-    """Sink: .zip (deflated output.html member), .html, or .json.
+def write_report(
+    report: dict[str, Any],
+    output_path: str,
+    render: Callable[[dict[str, Any]], str] = render_html,
+    member: str = "output.html",
+) -> None:
+    """Sink by extension: .json writes the document, .zip one deflated
+    `member` page, anything else the page itself, rendered by `render`.
 
     Reference analyze.py:1284-1292.
     """
+    if output_path.endswith(".json"):
+        with open(output_path, "w", encoding="utf-8") as f:
+            json.dump(report, f, indent=1)
+        return
+    page = render(report)
     if output_path.endswith(".zip"):
         with zipfile.ZipFile(output_path, "w", zipfile.ZIP_DEFLATED) as z:
-            z.writestr("output.html", render_html(report))
-    elif output_path.endswith(".json"):
-        with open(output_path, "w") as f:
-            json.dump(report, f, indent=1)
+            z.writestr(member, page)
     else:
-        with open(output_path, "w") as f:
-            f.write(render_html(report))
+        with open(output_path, "w", encoding="utf-8") as f:
+            f.write(page)
 
 
 __all__ = [
     "build_report",
+    "chart_entry",
     "render_html",
     "render_html_template_contract",
     "write_report",

@@ -1,14 +1,12 @@
 """Structured Streaming ingest: continuous workload-log analytics.
 
 Reference surface: the collector's poll loop (collect.py:83-122) — an
-unbounded, at-least-once, dedup-by-file-id ingest of completed queries —
-plus the hourly/daily analyzers which, on a live cluster, are naturally
-continuous (SURVEY.md §2B-streaming). The reference has no streaming
-engine; it re-runs analyze.py over the whole corpus. Rebuild: the landing
-directory written by a thin collector becomes a file-source stream, and the
-time-bucketed analyzers become watermarked tumbling-window aggregations, so
-the cluster-load dashboards update incrementally instead of re-scanning
-history.
+unbounded, at-least-once, dedup-by-file-id ingest of completed queries
+(SURVEY.md §2B-streaming). The reference has no streaming engine; it
+re-runs analyze.py over the whole corpus. Here the landing directory
+written by a thin collector becomes a file-source stream
+(`stream_summaries`), which the registry's streaming queries and the
+stateful operators (sessions, joins, funnel) consume.
 
 Scale posture:
   * file source with `maxFilesPerTrigger` — bounded micro-batches no matter
@@ -17,9 +15,6 @@ Scale posture:
     dedups by file existence forever (collect.py:101-103), which is
     unbounded state; a watermark on the query timestamp (encoded in
     query_id) keeps state proportional to the late-data horizon;
-  * windowed aggs emit in append mode after watermark close — the sink
-    receives each hour bucket exactly once, so the downstream report read
-    is a plain parquet scan, no upsert logic;
   * `drain` runs a stream to completion and hands back a batch DataFrame
     (the registry's streaming queries and their tests): one bounded wait,
     no leftover memory-sink view, no partial result on timeout.
@@ -64,60 +59,6 @@ def stream_summaries(
     return df
 
 
-def _finished(df: DataFrame) -> DataFrame:
-    # FAILED rows are collected but not analyzed (reference analyze.py:1233-1234)
-    return df.filter(F.col("state") != "FAILED")
-
-
-def scheduled_by_window(df: DataFrame, duration: str = "1 hour") -> DataFrame:
-    """Streaming twin of scheduled_by_hour/date (analyze.py:83-130).
-
-    Tumbling window over query_ts; sum of scheduled time scaled to hours
-    (1h windows) or days (1d windows).
-    """
-    divisor = 86400.0 if duration in ("1 day", "24 hours") else 3600.0
-    return (
-        _finished(df)
-        .groupBy(F.window("query_ts", duration).alias("bucket"))
-        .agg((F.sum("scheduled_time") / divisor).alias("scheduled"))
-        .select(F.col("bucket.start").alias("bucket"), "scheduled")
-    )
-
-
-def queries_by_window(df: DataFrame, duration: str = "1 hour") -> DataFrame:
-    """Streaming twin of queries_by_hour/date (analyze.py:175-214)."""
-    return (
-        _finished(df)
-        .groupBy(F.window("query_ts", duration).alias("bucket"))
-        .agg(F.count(F.lit(1)).alias("n_queries"))
-        .select(F.col("bucket.start").alias("bucket"), "n_queries")
-    )
-
-
-def write_stream_parquet(
-    df: DataFrame,
-    path: str,
-    checkpoint: str,
-    output_mode: str = "append",
-    available_now: bool = False,
-):
-    """Windowed aggregate stream -> parquet sink with checkpointing.
-
-    append mode + watermark ⇒ each closed window lands exactly once.
-    `available_now=True` drains the backlog and stops (batch-like runs and
-    tests); otherwise the query runs until stopped.
-    """
-    writer = (
-        df.writeStream.format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode(output_mode)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def stream_sf_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """A synthetic testdata table as a file-source stream.
 
@@ -154,47 +95,6 @@ def stream_sf_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         if f.name not in nano_cols and isinstance(f.dataType, T.TimestampNTZType):
             df = df.withColumn(f.name, F.col(f.name).cast("timestamp"))
     return df
-
-
-def idempotent_parquet_batch_sink(base_path: str):
-    """foreachBatch sink function: each micro-batch lands in its own
-    `batch=<id>/` directory with overwrite semantics.
-
-    Structured Streaming guarantees a replayed micro-batch keeps its
-    batchId, so overwrite-by-batchId makes redelivery idempotent — the
-    standard exactly-once recipe for sinks with no transactional commit
-    (reference collect.py achieves the same with skip-if-file-exists,
-    collect.py:101-103). Downstream reads `base_path` recursively as one
-    partitioned dataset.
-    """
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(f"{base_path}/batch={batch_id}")
-
-    return _sink
-
-
-def write_stream_foreach_batch(
-    df: DataFrame,
-    checkpoint: str,
-    batch_fn,
-    available_now: bool = False,
-):
-    """Arbitrary-sink streaming write via foreachBatch.
-
-    `batch_fn(batch_df, batch_id)` runs on the driver per micro-batch with
-    a BATCH DataFrame — full batch API available (merge/upsert, JDBC,
-    multi-table fan-out). Exactly-once is the sink's job: make batch_fn
-    idempotent in batch_id (see idempotent_parquet_batch_sink); the
-    checkpoint guarantees a batch is redelivered with the same id after a
-    crash, never skipped and never renumbered.
-    """
-    writer = df.writeStream.foreachBatch(batch_fn).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 @_contextlib.contextmanager

@@ -147,6 +147,34 @@ def test_process_leaves_no_cached_data(spark, corpus, tmp_path, capsys):
     capsys.readouterr()
 
 
+def _persistent_rdds(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_analyze_leaves_no_cached_data(spark, corpus, tmp_path, capsys):
+    """analyze unpersists the silver tables build_silver caches: it adds
+    nothing to the session's persistent RDDs."""
+    summary = str(tmp_path / "summary")
+    main(["extract", "-i", str(corpus), "-o", summary])
+    before = _persistent_rdds(spark)
+    assert main(["analyze", "-i", summary, "-o", str(tmp_path / "r.json")]) == 0
+    assert _persistent_rdds(spark) <= before
+    capsys.readouterr()
+
+
+def test_analyze_over_an_empty_landing_directory(spark, tmp_path, capsys):
+    """A corpus without scan operators renders no charts and no errors:
+    the selectivity histograms have no scan wall to share out, so they are
+    skipped like every other chart without rows, not failed with
+    DIVIDE_BY_ZERO."""
+    land, summary = tmp_path / "landing", str(tmp_path / "summary")
+    land.mkdir()
+    assert main(["extract", "-i", str(land), "-o", summary]) == 0
+    out = str(tmp_path / "r.json")
+    assert main(["analyze", "-i", summary, "-o", out]) == 0
+    assert f"wrote {out}: 0 charts, 0 errors" in capsys.readouterr().out
+
+
 @pytest.fixture(scope="module")
 def junk_corpus(tmp_path_factory):
     """The fixture corpus plus one file of each kind extract skips or

@@ -1,15 +1,23 @@
 """Curation report (beyond-reference surface): the chart registry must
 resolve entirely to oracle-gated driver queries, the document must build
-non-vacuously over the test corpus, and the CLI sink must round-trip the
-payload through each extension."""
+non-vacuously over the test corpus, the emitter's page and sink must
+round-trip it through each extension, and no report page (workload,
+template-contract, curation) lets a hostile string break the document."""
 
 import json
 import os
+import re
 import zipfile
 
 import pytest
 
 from presto_workload_analyzer_spark.report import curation
+from presto_workload_analyzer_spark.report.bokeh_compat import bokeh_available
+from presto_workload_analyzer_spark.report.emitter import (
+    render_html,
+    render_html_template_contract,
+    write_report,
+)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TINY_SF", "/root/testdata/sf0.001")
 
@@ -53,62 +61,80 @@ def test_report_builds_nonvacuously(report):
     assert secs == sorted(secs, key=order.__getitem__)
 
 
+def _payload(page):
+    return json.loads(
+        page.split('<script id="payload" type="application/json">', 1)[1].split("</script>", 1)[0]
+    )
+
+
+def _curation_page(report):
+    return render_html(report, report["structure"]["title"])
+
+
 def test_html_and_sinks_roundtrip(report, tmp_path):
-    html = curation.render_curation_html(report)
-    payload = html.split('<script id="payload" type="application/json">', 1)[
-        1
-    ].split("</script>", 1)[0]
-    doc = json.loads(payload)
-    assert doc["structure"]["title"] == "Corpus curation report"
-    assert len(doc["charts"]) == len(report["charts"])
+    doc = _payload(_curation_page(report))
+    assert doc == report
+    assert "<h1>Corpus curation report</h1>" in _curation_page(report)
 
-    jp = tmp_path / "r.json"
-    curation.write_curation_report(report, str(jp))
-    assert json.loads(jp.read_text())["structure"]["metrics"] == report[
-        "structure"
-    ]["metrics"]
+    for suffix in ("json", "zip", "html"):
+        write_report(report, str(tmp_path / f"r.{suffix}"), _curation_page, "curation.html")
+    assert json.loads((tmp_path / "r.json").read_text()) == report
+    with zipfile.ZipFile(tmp_path / "r.zip") as z:
+        assert z.namelist() == ["curation.html"]
+        assert _payload(z.read("curation.html").decode()) == report
+    assert (tmp_path / "r.html").read_text().startswith("<!DOCTYPE html>")
 
-    zp = tmp_path / "r.zip"
-    curation.write_curation_report(report, str(zp))
-    with zipfile.ZipFile(zp) as z:
-        assert "curation.html" in z.namelist()
 
-    hp = tmp_path / "r.html"
-    curation.write_curation_report(report, str(hp))
-    assert hp.read_text().startswith("<!DOCTYPE html>")
+HOSTILE = ["</script><img src=x onerror=alert(1)>", "<!--<script>", "</SCRIPT >"]
 
 
 def test_adversarial_corpus_strings_cannot_break_the_document():
-    """Corpus-derived strings are UNTRUSTED (web-crawled text can carry
-    markup): '</script>' inside a cell must not close the payload block,
-    and no corpus string may reach the static HTML shell unescaped —
-    rendering happens exclusively through textContent in the browser."""
-    hostile = "</script><img src=x onerror=alert(1)>"
+    """Report strings are untrusted: QueryInfo user, table and operator
+    names and web-crawled corpus text can carry markup. Placed in a cell,
+    a column, a title, a description, a metric and an error, no hostile
+    string appears raw in any of the three pages (workload,
+    reference-template contract, curation); no '<' is left inside any
+    script block, so nothing can close one; no page assigns markup
+    (innerHTML), its script builds DOM nodes through textContent; and the
+    embedded document parses back to the report."""
+    charts = [
+        {
+            "id": f"c{i}",
+            "title": "t " + h,
+            "description": "d " + h,
+            "columns": ["a", h],
+            "data": [[h, 1], ["x", h]],
+        }
+        for i, h in enumerate(HOSTILE)
+    ]
     report = {
-        "structure": {"title": "Corpus curation report", "metrics": {"n": 1}},
-        "charts": [
-            {
-                "id": "c1",
-                "title": "t " + hostile,
-                "description": "d " + hostile,
-                "columns": ["a"],
-                "data": [[hostile]],
-            }
-        ],
-        "errors": {"q": hostile},
+        "structure": {"title": "Corpus curation report", "metrics": {"n": 1, HOSTILE[1]: HOSTILE[0]}},
+        "charts": charts,
+        "errors": {f"q{i}": h for i, h in enumerate(HOSTILE)},
     }
-    html = curation.render_curation_html(report)
-    # the raw markup never appears in the document source...
-    assert hostile not in html
-    # ...and the payload still round-trips byte-identical through JSON
-    payload = html.split('<script id="payload" type="application/json">', 1)[
-        1
-    ].split("</script>", 1)[0]
-    doc = json.loads(payload)
-    assert doc["charts"][0]["data"][0][0] == hostile
-    assert doc["errors"]["q"] == hostile
-    # the template builds DOM nodes; it never concatenates innerHTML
-    assert "innerHTML" not in curation._CURATION_TEMPLATE
+    pages = {
+        "workload": render_html(report),
+        "template-contract": render_html_template_contract(report),
+        "curation": _curation_page(report),
+    }
+    for name, page in pages.items():
+        for h in HOSTILE:
+            assert h not in page, (name, h)
+        scripts = re.findall(r"<script[^>]*>(.*?)</script>", page, re.S)
+        assert scripts, name
+        for body in scripts:
+            assert "<" not in body, (name, body[:80])
+        assert "innerHTML" not in page, name
+        if name == "template-contract":
+            structure = json.loads(scripts[-1].split("const structure = ", 1)[1])
+            assert structure["metrics"] == report["structure"]["metrics"]
+            assert structure["charts"] == [
+                {k: c[k] for k in ("title", "description", "id")} for c in charts
+            ]
+            if not bokeh_available():
+                assert [json.loads(b)["fallback"] for b in scripts[:-1]] == charts
+        else:
+            assert _payload(page) == report, name
 
 
 def test_unregistered_chart_name_degrades_to_per_chart_error(spark):

@@ -1,6 +1,6 @@
 """Privacy transforms (jsonl_process parity): schema filter + obfuscation.
 
-Covers filter_line semantics (OR + include_absent, jsonl_process.py:37-50),
+Covers filter_line semantics (OR, keep-if-absent, jsonl_process.py:37-50),
 first-seen ordinal renaming shared across key aliases (NameObfuscator,
 jsonl_process.py:53-64), list-valued partitionIds (ListObfuscator,
 jsonl_process.py:67-76), removal obfuscators (query/rows, locations), and
@@ -107,18 +107,11 @@ def summary_df(spark):
 def test_filter_by_schema_or_semantics(summary_df):
     kept = filter_by_schema(summary_df, "web").select("query_id").collect()
     ids = sorted(r.query_id for r in kept)
-    # web rows 1 & 4 match; row 3 has NO schema key -> include_absent keeps it
+    # web rows 1 & 4 match; row 3 has NO schema key, so it is kept
     assert ids == [
         "20240101_080000_00001_aaaaa",
         "20240101_100000_00003_aaaaa",
         "20240101_110000_00004_aaaaa",
-    ]
-
-
-def test_filter_exclude_absent(summary_df):
-    kept = filter_by_schema(summary_df, "sales", include_absent=False)
-    assert [r.query_id for r in kept.select("query_id").collect()] == [
-        "20240101_090000_00002_aaaaa"
     ]
 
 

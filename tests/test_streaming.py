@@ -1,22 +1,18 @@
-"""Structured Streaming ingest: dedup, windowed aggs, incremental drain.
+"""Structured Streaming ingest: dedup, drains, stateful sessions.
 
 Strategy: write summary JSONL files into a landing dir, drain with
-availableNow triggers, assert against the batch analyzer results on the
-same data (stream/batch parity), then append late + duplicate files and
-assert dedup and incremental window emission.
+availableNow triggers, then append late + duplicate files and assert
+dedup and incremental emission across checkpointed restarts.
 """
 
 import json
 
 import pytest
-from pyspark.sql import functions as F
 
 from presto_workload_analyzer_spark.sources.queryinfo import SUMMARY_SCHEMA
 from presto_workload_analyzer_spark.streaming import (
     drain,
-    queries_by_window,
     run_to_memory,
-    scheduled_by_window,
     stream_summaries,
 )
 
@@ -88,25 +84,6 @@ def test_stream_dedup_and_schema(spark, landing):
     ]
 
 
-def test_windowed_scheduled_matches_batch(spark, landing):
-    stream = stream_summaries(spark, str(landing), dedup=False)
-    agg = scheduled_by_window(stream, "1 hour")
-    # complete mode: emit every open window (no watermark wait in one drain)
-    out = drain(agg, output_mode="complete", timeout=120)
-    rows = {str(r.bucket): r.scheduled for r in out.collect()}
-    # 08:00 bucket: (1800+1800)/3600 = 1.0 h; 09:00: 7200/3600 = 2.0 (FAILED dropped)
-    assert rows["2024-01-01 08:00:00"] == pytest.approx(1.0)
-    assert rows["2024-01-01 09:00:00"] == pytest.approx(2.0)
-
-
-def test_windowed_counts(spark, landing):
-    stream = stream_summaries(spark, str(landing), dedup=False)
-    out = drain(queries_by_window(stream, "1 hour"), "complete", timeout=120)
-    rows = {str(r.bucket): r.n_queries for r in out.collect()}
-    assert rows["2024-01-01 08:00:00"] == 2
-    assert rows["2024-01-01 09:00:00"] == 1  # FAILED dropped
-
-
 def test_registry_stream_query_leaves_no_view_or_stream(spark, sf_dir):
     """A registered streaming query drops its memory-sink view and stops
     its stream before returning."""
@@ -128,71 +105,24 @@ def test_drain_timeout_stops_stream_and_raises(spark, landing):
     assert spark.streams.active == []
     assert {t.name for t in spark.catalog.listTables()} == before
 
-def test_append_mode_emits_closed_windows(spark, landing, tmp_path):
-    """Watermark semantics: a later batch advancing the watermark closes the
-    earlier window, which then lands exactly once in append mode."""
-    # event at 10:00 advances the watermark to 09:30 >= 09:00, closing the
-    # 08:00-09:00 window; the 09:00 window (ends 10:00 > 09:30) stays open.
-    (landing / "late.jsonl").write_text(_line("20240101_100000_00009_aaaaa"))
-    stream = stream_summaries(spark, str(landing), watermark="30 minutes", dedup=False)
-    agg = scheduled_by_window(stream, "1 hour")
-    q = run_to_memory(agg, "t_append", output_mode="append")
-    q.awaitTermination(120)
-    emitted = {str(r.bucket) for r in spark.table("t_append").collect()}
-    assert emitted == {"2024-01-01 08:00:00"}
-
-
-def test_parquet_sink_checkpoint_restart(spark, landing, tmp_path):
-    """Production sink: windowed agg -> parquet with checkpoint. A restart
-    with new data must append only newly-closed windows (exactly-once)."""
-    from presto_workload_analyzer_spark.streaming import write_stream_parquet
-
-    out, ckpt = str(tmp_path / "gold"), str(tmp_path / "ckpt")
-
-    def run():
-        stream = stream_summaries(spark, str(landing), watermark="30 minutes", dedup=False)
-        q = write_stream_parquet(
-            scheduled_by_window(stream, "1 hour"), out, ckpt, available_now=True
-        )
-        q.awaitTermination(120)
-
-    # batch1 max ts 09:15 -> watermark 08:45: nothing closed yet
-    run()
-    first = spark.read.parquet(out)
-    assert first.count() == 0
-
-    # a 10:00 event closes the 08:00 window
-    (landing / "late1.jsonl").write_text(_line("20240101_100000_00010_aaaaa"))
-    run()
-    second = spark.read.parquet(out).collect()
-    assert {str(r.bucket) for r in second} == {"2024-01-01 08:00:00"}
-    assert second[0].scheduled == pytest.approx(1.0)
-
-    # an 11:00 event (watermark 10:30) closes 09:00; 10:00 (ends 11:00)
-    # stays open, and 08:00 must NOT be re-emitted
-    (landing / "late2.jsonl").write_text(_line("20240101_110000_00011_aaaaa"))
-    run()
-    rows = {str(r.bucket): r.scheduled for r in spark.read.parquet(out).collect()}
-    assert sorted(rows) == [
-        "2024-01-01 08:00:00",
-        "2024-01-01 09:00:00",
-    ]
-    assert rows["2024-01-01 09:00:00"] == pytest.approx(2.0)  # FAILED dropped
-
 
 def test_query_sessions_stateful(spark, landing, tmp_path):
     """applyInPandasWithState sessionization: in-batch gap splits emit
     immediately; the open session closes only when the watermark passes
     last_seen + gap (checkpointed across restarts)."""
-    from presto_workload_analyzer_spark.streaming import write_stream_parquet
     from presto_workload_analyzer_spark.streaming.sessions import query_sessions
 
     out, ckpt = str(tmp_path / "sessions"), str(tmp_path / "ckpt_s")
 
     def run():
         stream = stream_summaries(spark, str(landing), watermark="10 minutes", dedup=False)
-        q = write_stream_parquet(
-            query_sessions(stream, gap_seconds=1800.0), out, ckpt, available_now=True
+        q = (
+            query_sessions(stream, gap_seconds=1800.0)
+            .writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
         )
         q.awaitTermination(120)
 
@@ -219,46 +149,6 @@ def test_query_sessions_stateful(spark, landing, tmp_path):
         ("2024-01-01 08:05:00", 2),
         ("2024-01-01 09:10:00", 1),
     ]
-
-
-def test_foreach_batch_idempotent_sink(spark, landing, tmp_path):
-    """foreachBatch + overwrite-by-batchId: a drained stream lands exactly
-    once; re-draining the same checkpoint delivers nothing; a REPLAYED
-    batch (same id) overwrites rather than duplicates."""
-    from presto_workload_analyzer_spark.streaming import (
-        idempotent_parquet_batch_sink,
-        stream_summaries,
-        write_stream_foreach_batch,
-    )
-
-    out = tmp_path / "fb_out"
-    ckpt = tmp_path / "fb_ckpt"
-    sink = idempotent_parquet_batch_sink(str(out))
-
-    stream = stream_summaries(spark, str(landing), dedup=False)
-    q = write_stream_foreach_batch(stream, str(ckpt), sink, available_now=True)
-    q.awaitTermination(120)
-    read = lambda: spark.read.option("basePath", str(out)).parquet(f"{out}/batch=*")
-    n_first = read().count()
-    expected = spark.read.json(str(landing)).count()
-    assert n_first == expected > 0
-
-    # second drain over the same checkpoint: no new batches, nothing changes
-    stream2 = stream_summaries(spark, str(landing), dedup=False)
-    q2 = write_stream_foreach_batch(stream2, str(ckpt), sink, available_now=True)
-    q2.awaitTermination(120)
-    assert read().count() == n_first
-
-    # simulate crash-replay: the SAME batch id redelivered -> overwrite, no dupes
-    batch_ids = [int(r.batch) for r in read().select("batch").distinct().collect()]
-    sink(spark.read.json(str(landing)), batch_ids[0])
-    per_batch = {
-        int(r.batch): r["count"] for r in read().groupBy("batch").count().collect()
-    }
-    assert per_batch[batch_ids[0]] == expected  # replaced, not appended
-    assert sum(per_batch.values()) == expected * 1 + sum(
-        v for k, v in per_batch.items() if k != batch_ids[0]
-    )
 
 
 def test_cusum_alarms_stateful(spark, tmp_path):
