@@ -11,7 +11,7 @@ Layout:
   operators/   aggregation kernels (pie collapse, histograms) + the 28 analyzers
   sources/     summary-JSONL and raw-QueryInfo ingest to silver DataFrames
   plans/       recursive plan-tree flatten -> plan_nodes / tasks silver tables
-  streaming/   Structured Streaming ingest of the collector landing dir
+  streaming/   Structured Streaming operators over file-source table streams
   extensions/  LLM-data-pipeline ops: dedup, similarity search, text stats, multimodal
   report/      chart-payload + HTML/zip report emitter
   privacy/     jsonl_process parity: schema filter + obfuscation maps

@@ -1260,11 +1260,9 @@ def _x34(spark: SparkSession, sf: str) -> DataFrame:
     """Sparse-text twin of the embedding near-dup operators: document-pair
     cosine over L2-normalized TF-IDF via an inverted index (posting-list
     self-join on term) — no all-pairs anywhere; max-df stop-terming bounds
-    posting-list skew (extensions.textstats.tfidf_cosine_pairs; lossless
-    Bayardo-style L2 prefix filtering available as prefix_filter=True —
-    see its docstring and BASELINE.md's round-5 scaling table for why the
-    measured sf1 slope is output-cardinality, not plan shape, and why the
-    prefix cut cannot bind on the flat-weight synthetic templates)."""
+    posting-list skew (extensions.textstats.tfidf_cosine_pairs — see its
+    docstring and BASELINE.md's round-5 scaling table for why the measured
+    sf1 slope is output-cardinality, not plan shape)."""
     docs = read_sf_table(spark, sf, "documents")
     out = X_text.tfidf_cosine_pairs(
         docs, "doc_id", "text", threshold=0.4, max_df_ratio=0.5
@@ -2107,8 +2105,8 @@ _register(
 def _p04(spark: SparkSession, sf: str) -> DataFrame:
     """k-anonymity suppression over the event log: rows whose
     (user_id, event_type) combination occurs fewer than k=10 times are
-    dropped as re-identifiable (privacy.k_anonymize, suppress mode — one
-    partitioned window, fully distributed). At sf0.01 this suppresses 107
+    dropped as re-identifiable (privacy.k_anonymize — group sizes joined
+    back to the rows, fully distributed). At sf0.01 this suppresses 107
     of 750 quasi-identifier groups."""
     ev = read_sf_table(spark, sf, "events").select(
         "event_id", "user_id", "event_type"
@@ -2806,8 +2804,7 @@ def _x40(spark: SparkSession, sf: str) -> DataFrame:
     """Table profiling over the event log: per-column null/distinct counts
     and portable min/max strings, one aggregation pass + stack() unpivot
     (extensions.profile.profile_columns — the DESCRIBE/data-quality
-    operator; approx_count_distinct mode is the 100 TB default, exact mode
-    is used here because the oracle needs exact numbers)."""
+    operator; exact distinct counts, as the oracle needs)."""
     ev = read_sf_table(spark, sf, "events")
     return X_prof.profile_columns(ev, ["event_id", "ts", "user_id", "event_type", "value"])
 
@@ -4031,6 +4028,8 @@ def _x60(spark: SparkSession, sf: str) -> DataFrame:
         )
         .groupBy("source_a", "source_b")
         .agg(F.count(F.lit(1)).cast("long").alias("n_pairs"))
+        # sorted so the curation report's chart reads the same every run
+        .orderBy("source_a", "source_b")
     )
 
 
@@ -10326,7 +10325,7 @@ def _xs2(spark: SparkSession, sf: str) -> DataFrame:
     cost is one groupBy over tokens."""
     docs = read_sf_table(spark, sf, "documents")
     target = docs.filter(F.col("doc_id") % 10 == 0)
-    return X_samp.dsir_log_weights(docs, target, "doc_id", "text", mode="md5")
+    return X_samp.dsir_log_weights(docs, target, "doc_id", "text")
 
 
 def _xs2_sql() -> str:
@@ -10382,7 +10381,7 @@ def _xs3(spark: SparkSession, sf: str) -> DataFrame:
     ordering is engine-portable."""
     docs = read_sf_table(spark, sf, "documents")
     target = docs.filter(F.col("doc_id") % 10 == 0)
-    w = X_samp.dsir_log_weights(docs, target, "doc_id", "text", mode="md5")
+    w = X_samp.dsir_log_weights(docs, target, "doc_id", "text")
     ranked = X_samp._hierarchical_row_number(
         docs.select("doc_id", "source").join(w, "doc_id"),
         ["source"],
@@ -11049,7 +11048,7 @@ def _xs13(spark: SparkSession, sf: str) -> DataFrame:
     broadcast-ratio scoring pass."""
     docs = read_sf_table(spark, sf, "documents")
     target = docs.filter(F.col("doc_id") % 10 == 0)
-    dw = X_samp.dsir_log_weights(docs, target, "doc_id", "text", mode="md5")
+    dw = X_samp.dsir_log_weights(docs, target, "doc_id", "text")
     keyed = dw.join(docs.select("doc_id", "source"), "doc_id").select(
         "source",
         "doc_id",

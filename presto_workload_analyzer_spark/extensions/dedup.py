@@ -464,9 +464,7 @@ def ngram_jaccard(
     )
 
 
-def shingle_containment(
-    shingle_df: DataFrame, pairs: DataFrame | None = None, threshold: float = 0.0
-) -> DataFrame:
+def shingle_containment(shingle_df: DataFrame) -> DataFrame:
     """Containment similarity |A∩B| / min(|A|, |B|) over shingle sets.
 
     The signal Jaccard misses: a short document quoted verbatim inside a
@@ -475,12 +473,9 @@ def shingle_containment(
     dedup (the "substring dedup" family, approximated at shingle
     granularity so it stays a pure shuffle-on-key join — no suffix arrays).
 
-    With `pairs` given, scores only those candidates via the pair-driven
-    join (cost |pairs| x shingles-per-doc — same shape as ngram_jaccard's
-    verify mode, never the corpus-wide shingle self-join); without, every
-    pair sharing >= 1 shingle (quadratic per shingle bucket — blocked
-    upstream at 100 TB, same contract as ngram_jaccard).
-    Output: (id_a, id_b, containment) with containment > threshold.
+    Scores every pair sharing >= 1 shingle (quadratic per shingle bucket —
+    blocked upstream at 100 TB, same contract as ngram_jaccard).
+    Output: (id_a, id_b, containment).
     """
     # materialize the shingle table once: three consumers (sizes + both
     # join sides) would otherwise each re-execute the upstream
@@ -490,25 +485,12 @@ def shingle_containment(
     sizes = shingle_df.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
     a = shingle_df.select(F.col("id").alias("id_a"), "shingle")
     b = shingle_df.select(F.col("id").alias("id_b"), "shingle")
-    if pairs is not None:
-        inter = (
-            # distinct: duplicate candidate rows (raw per-band collisions)
-            # would each contribute a full copy of the intersection and
-            # inflate the intersection count past the true set size
-            pairs.select("id_a", "id_b")
-            .distinct()
-            .join(a, on="id_a")
-            .join(b, on=["id_b", "shingle"])
-            .groupBy("id_a", "id_b")
-            .agg(F.count(F.lit(1)).alias("n_inter"))
-        )
-    else:
-        inter = (
-            a.join(b, on="shingle")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .groupBy("id_a", "id_b")
-            .agg(F.count(F.lit(1)).alias("n_inter"))
-        )
+    inter = (
+        a.join(b, on="shingle")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("n_inter"))
+    )
     sa = sizes.select(F.col("id").alias("id_a"), F.col("n").alias("n_a"))
     sb = sizes.select(F.col("id").alias("id_b"), F.col("n").alias("n_b"))
     return (
@@ -522,7 +504,6 @@ def shingle_containment(
                 / F.least(F.col("n_a"), F.col("n_b"))
             ).alias("containment"),
         )
-        .filter(F.col("containment") > threshold)
     )
 
 
@@ -986,14 +967,12 @@ def bloom_positions(text_col: str, m_bits: int, k_hashes: int, mode: str = "xxha
     raise ValueError(f"unknown mode {mode!r}")
 
 
-def bloom_bitmap(
-    df: DataFrame, text_col: str, m_bits: int, k_hashes: int, mode: str = "xxhash64"
-) -> DataFrame:
+def bloom_bitmap(df: DataFrame, text_col: str, m_bits: int, k_hashes: int) -> DataFrame:
     """Fold a column's values into an m-bit Bloom bitmap: (word_idx, bits)
     with at most m/64 rows, each row one long of the bitmap.
 
     Each non-null value sets k bit positions pos_i = hash(i, value) mod
-    m (bloom_positions; xxhash64 production mode, md5 oracle mode);
+    m (bloom_positions, xxhash64 mode);
     positions become (word_idx = pos / 64, mask = 1 << (pos % 64)) rows
     and bit_or-aggregate per word. Everything is JVM Column expressions
     inside whole-stage codegen; the aggregation's map-side partial bit_or
@@ -1003,7 +982,7 @@ def bloom_bitmap(
     """
     if m_bits % 64:
         raise ValueError(f"m_bits must be a multiple of 64, got {m_bits}")
-    pos = F.explode(bloom_positions(text_col, m_bits, k_hashes, mode)).alias("__pos")
+    pos = F.explode(bloom_positions(text_col, m_bits, k_hashes)).alias("__pos")
     return (
         df.where(F.col(text_col).isNotNull())
         .select(pos)

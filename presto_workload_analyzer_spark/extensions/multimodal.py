@@ -214,16 +214,19 @@ def _decode_bytes(payload: bytes) -> tuple[int, int, int, float]:
     return width, height, 3, mean
 
 
-def _batched_rows_gen(columns: list[str], row_fn, batch_size: int):
-    """mapInPandas generator factory shared by every media kernel that
-    takes a `batch_size_hint`: applies `row_fn(doc_id, payload) -> iterator
-    of output tuples` per input row and flushes the output every
-    `batch_size` rows. For 1:1 kernels this just caps the yielded frame at
-    the hint; for exploding kernels (mjpeg_frame_stats emits one row per
-    sampled video frame) it is the memory bound — no more than
-    `batch_size` output rows are ever materialized per yield, regardless
-    of how many frames one payload expands into."""
-    size = max(int(batch_size), 1)
+# output rows a media kernel materializes per yielded Arrow frame
+_OUTPUT_BATCH_ROWS = 1024
+
+
+def _batched_rows_gen(columns: list[str], row_fn):
+    """mapInPandas generator factory shared by every media kernel:
+    applies `row_fn(doc_id, payload) -> iterator of output tuples` per
+    input row and flushes the output every `_OUTPUT_BATCH_ROWS` rows. For
+    1:1 kernels this just caps the yielded frame; for exploding kernels
+    (mjpeg_frame_stats emits one row per sampled video frame) it is the
+    memory bound — no more than `_OUTPUT_BATCH_ROWS` output rows are ever
+    materialized per yield, regardless of how many frames one payload
+    expands into."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -231,7 +234,7 @@ def _batched_rows_gen(columns: list[str], row_fn, batch_size: int):
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 for row in row_fn(doc_id, bytes(payload)):
                     rows.append(row)
-                    if len(rows) >= size:
+                    if len(rows) >= _OUTPUT_BATCH_ROWS:
                         yield pd.DataFrame(rows, columns=columns)
                         rows = []
             if rows:
@@ -240,13 +243,12 @@ def _batched_rows_gen(columns: list[str], row_fn, batch_size: int):
     return gen
 
 
-def decode_media(media: DataFrame, batch_size_hint: int = 1024) -> DataFrame:
+def decode_media(media: DataFrame) -> DataFrame:
     """Arrow-batched decode stage: media frame -> decoded feature frame.
 
     mapInPandas keeps the payload bytes inside the executor (never on the
     driver) and amortizes Python transition cost per batch. Partitioning is
     inherited; repartition upstream by size if payloads are skewed.
-    `batch_size_hint` caps output rows materialized per yielded frame.
     """
 
     def one(doc_id, payload):
@@ -255,7 +257,7 @@ def decode_media(media: DataFrame, batch_size_hint: int = 1024) -> DataFrame:
 
     gen = _batched_rows_gen(
         ["doc_id", "width", "height", "n_channels", "mean_intensity"],
-        one, batch_size_hint,
+        one,
     )
     return media.select("doc_id", "payload").mapInPandas(gen, DECODED_SCHEMA)
 
@@ -502,8 +504,7 @@ MJPEG_FRAME_SCHEMA = T.StructType(
 )
 
 
-def mjpeg_frame_stats(media: DataFrame, every_n_frames: int = 1,
-                      batch_size_hint: int = 1024) -> DataFrame:
+def mjpeg_frame_stats(media: DataFrame, every_n_frames: int = 1) -> DataFrame:
     """REAL video frame pixel decode for MJPEG-in-AVI payloads: walk the
     RIFF container lazily (_iter_avi_mjpeg_frames with the stride built
     in, so a skipped frame costs a 2-byte header peek, never a payload
@@ -512,7 +513,7 @@ def mjpeg_frame_stats(media: DataFrame, every_n_frames: int = 1,
     with its true dimensions and mean intensity. Non-AVI payloads emit NO
     rows (filter semantics — loud absence, like video_meta's nulls).
     Arrow-batched mapInPandas; frame pixels never leave the executors,
-    and `batch_size_hint` flushes the output every N rows so a long video
+    and the output flushes every `_OUTPUT_BATCH_ROWS` rows so a long video
     never materializes its whole frame-stat explosion at once. This is
     the production shape for 'sample every Nth frame and feature-extract'
     at 100 TB: the explode happens executor-side, partitioning inherited
@@ -534,7 +535,7 @@ def mjpeg_frame_stats(media: DataFrame, every_n_frames: int = 1,
 
     gen = _batched_rows_gen(
         ["doc_id", "frame_idx", "width", "height", "channels", "mean_intensity"],
-        one, batch_size_hint,
+        one,
     )
     return media.select("doc_id", "payload").mapInPandas(gen, MJPEG_FRAME_SCHEMA)
 
@@ -581,7 +582,7 @@ def _dhash_bytes(payload: bytes, hash_size: int = 8) -> tuple[str, str] | None:
     return container, f"{val:0{hash_size * hash_size // 4}x}"
 
 
-def dhash_media(media: DataFrame, hash_size: int = 8, batch_size_hint: int = 1024) -> DataFrame:
+def dhash_media(media: DataFrame, hash_size: int = 8) -> DataFrame:
     """Perceptual difference-hash per media row: (doc_id, container,
     dhash) — the dedup key for images where exact byte digests miss
     re-encodes/resizes. Arrow-batched mapInPandas like decode_media
@@ -594,7 +595,7 @@ def dhash_media(media: DataFrame, hash_size: int = 8, batch_size_hint: int = 102
         got = _dhash_bytes(payload, hash_size)
         yield (doc_id, None, None) if got is None else (doc_id, got[0], got[1])
 
-    gen = _batched_rows_gen(["doc_id", "container", "dhash"], one, batch_size_hint)
+    gen = _batched_rows_gen(["doc_id", "container", "dhash"], one)
     return media.select("doc_id", "payload").mapInPandas(gen, DHASH_SCHEMA)
 
 
@@ -675,7 +676,7 @@ VIDEO_META_SCHEMA = T.StructType(
 )
 
 
-def video_meta(media: DataFrame, batch_size_hint: int = 1024) -> DataFrame:
+def video_meta(media: DataFrame) -> DataFrame:
     """Binary payloads -> real MP4 container metadata (duration, display
     dims, track count) at header-parse cost — the video filter stage
     ('drop clips under 2s / over 4k') without any codec. Arrow-batched
@@ -693,7 +694,7 @@ def video_meta(media: DataFrame, batch_size_hint: int = 1024) -> DataFrame:
 
     gen = _batched_rows_gen(
         ["doc_id", "container", "duration_s", "width", "height", "n_tracks"],
-        one, batch_size_hint,
+        one,
     )
     return media.select("doc_id", "payload").mapInPandas(gen, VIDEO_META_SCHEMA)
 
@@ -739,7 +740,7 @@ AUDIO_META_SCHEMA = T.StructType(
 )
 
 
-def audio_meta(media: DataFrame, batch_size_hint: int = 1024) -> DataFrame:
+def audio_meta(media: DataFrame) -> DataFrame:
     """Binary payloads -> real WAV container metadata; Arrow-batched like
     video_meta. Non-WAV payloads yield nulls. PCM sample
     DECODE is trivial from here (the data chunk IS the samples) but out
@@ -756,7 +757,7 @@ def audio_meta(media: DataFrame, batch_size_hint: int = 1024) -> DataFrame:
     gen = _batched_rows_gen(
         ["doc_id", "container", "sample_rate", "n_channels",
          "bits_per_sample", "duration_s"],
-        one, batch_size_hint,
+        one,
     )
     return media.select("doc_id", "payload").mapInPandas(gen, AUDIO_META_SCHEMA)
 
@@ -772,7 +773,7 @@ AUDIO_FEATURES_SCHEMA = T.StructType(
 )
 
 
-def audio_features(media: DataFrame, batch_size_hint: int = 1024) -> DataFrame:
+def audio_features(media: DataFrame) -> DataFrame:
     """REAL audio feature extraction over 16-bit PCM WAV payloads: peak
     amplitude, RMS level and the full-scale clipping ratio — the quality
     gates of an audio corpus ('drop silent / clipped clips') computed
@@ -806,6 +807,6 @@ def audio_features(media: DataFrame, batch_size_hint: int = 1024) -> DataFrame:
         yield (doc_id, int(x.size), peak, rms, clip)
 
     gen = _batched_rows_gen(
-        ["doc_id", "n_samples", "peak", "rms", "clip_ratio"], one, batch_size_hint
+        ["doc_id", "n_samples", "peak", "rms", "clip_ratio"], one
     )
     return media.select("doc_id", "payload").mapInPandas(gen, AUDIO_FEATURES_SCHEMA)

@@ -7,10 +7,9 @@ single wide row unpivots to one row per column via stack() — no second
 scan, no per-column jobs.
 
 Scale notes: exact count(DISTINCT) per column plans one Expand pass per
-distinct aggregate — fine to a few dozen columns; at extreme width or
-corpus size switch `distinct_mode='approx'` (HyperLogLog++, one pass, no
-Expand). Min/max of numeric/timestamp columns are formatted to fixed
-strings so profiles are engine-portable and diffable across runs.
+distinct aggregate — fine to a few dozen columns. Min/max of
+numeric/timestamp columns are formatted to fixed strings so profiles are
+engine-portable and diffable across runs.
 """
 
 from __future__ import annotations
@@ -31,29 +30,20 @@ def _fmt(col, dtype) -> "F.Column":
 def profile_columns(
     df: DataFrame,
     cols: list[str] | None = None,
-    distinct_mode: str = "exact",
 ) -> DataFrame:
     """-> (column, dtype, n_rows, n_nulls, n_distinct, min_value, max_value).
 
     One aggregation pass; min/max emitted as portable strings (%.6f for
-    floating point, ISO-style timestamps). distinct_mode='approx' swaps
-    exact count(DISTINCT) for approx_count_distinct — the 100 TB default.
+    floating point, ISO-style timestamps); distinct counts are exact.
     """
-    if distinct_mode not in ("exact", "approx"):
-        raise ValueError(f"profile_columns: unknown distinct_mode {distinct_mode!r}")
     fields = {f.name: f.dataType for f in df.schema.fields}
     cols = cols or list(fields)
     aggs = [F.count(F.lit(1)).alias("__n")]
     for c in cols:
         col, dtype = F.col(c), fields[c]
-        n_distinct = (
-            F.countDistinct(col)
-            if distinct_mode == "exact"
-            else F.approx_count_distinct(col)
-        )
         aggs += [
             F.sum(F.when(col.isNull(), 1).otherwise(0)).alias(f"__nn_{c}"),
-            n_distinct.alias(f"__nd_{c}"),
+            F.countDistinct(col).alias(f"__nd_{c}"),
             # min/max in the NATIVE type (string-formatting first would
             # turn numeric ordering lexicographic: "10" < "9"); the
             # portable formatting applies to the single result value

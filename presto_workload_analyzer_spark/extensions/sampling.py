@@ -12,8 +12,7 @@ bucket filter straight down onto the scan's residual predicate.
 Hash choice: first two hex digits of md5(id) (256 buckets) — md5 is
 bit-identical in every engine (the DuckDB oracle reproduces it digit by
 digit), and 256 buckets give 0.4% split-granularity, plenty for train/val
-splits. xxhash64 mod B is the (faster) JVM-only variant when cross-engine
-reproducibility isn't needed.
+splits.
 """
 
 from __future__ import annotations
@@ -25,25 +24,17 @@ from presto_workload_analyzer_spark.materialize import materialize
 HASH_BUCKETS = 256
 
 
-def hash_bucket(id_col: Column | str, mode: str = "md5") -> Column:
-    """Deterministic bucket in [0, 256) from a document id.
-
-    md5 mode: value of the first two hex digits — portable to any engine.
-    xxhash64 mode: JVM-side, ~10x cheaper, Spark-only.
-    """
+def hash_bucket(id_col: Column | str) -> Column:
+    """Deterministic bucket in [0, 256) from a document id: the value of
+    the first two hex digits of its md5 — portable to any engine."""
     c = F.col(id_col) if isinstance(id_col, str) else id_col
-    if mode == "md5":
-        return F.conv(F.substring(F.md5(c.cast("string")), 1, 2), 16, 10).cast("int")
-    if mode == "xxhash64":
-        return F.pmod(F.xxhash64(c.cast("string")), F.lit(HASH_BUCKETS)).cast("int")
-    raise ValueError(f"unknown hash mode {mode!r}")
+    return F.conv(F.substring(F.md5(c.cast("string")), 1, 2), 16, 10).cast("int")
 
 
 def hash_split(
     df: DataFrame,
     id_col: str,
     splits: dict[str, float] | None = None,
-    mode: str = "md5",
 ) -> DataFrame:
     """Assign every row a reproducible split label by hash-bucket range.
 
@@ -55,7 +46,7 @@ def hash_split(
     splits = splits or {"train": 0.90, "val": 0.05, "test": 0.05}
     if sum(splits.values()) > 1.0 + 1e-9:
         raise ValueError("split fractions must sum to <= 1")
-    b = hash_bucket(id_col, mode=mode)
+    b = hash_bucket(id_col)
     expr: Column | None = None
     lo = 0
     for label, frac in splits.items():
@@ -66,7 +57,7 @@ def hash_split(
     return df.withColumn("split", expr)
 
 
-def hash_sample(df: DataFrame, id_col: str, fraction: float, mode: str = "md5") -> DataFrame:
+def hash_sample(df: DataFrame, id_col: str, fraction: float) -> DataFrame:
     """Keep a reproducible ~fraction of rows (bucket < fraction*256).
 
     Unlike df.sample(), re-running — or running on a different cluster —
@@ -74,7 +65,7 @@ def hash_sample(df: DataFrame, id_col: str, fraction: float, mode: str = "md5") 
     sharing the id (sample documents and their embeddings consistently).
     """
     cutoff = int(round(fraction * HASH_BUCKETS))
-    return df.filter(hash_bucket(id_col, mode=mode) < cutoff)
+    return df.filter(hash_bucket(id_col) < cutoff)
 
 
 def _hierarchical_row_number(
@@ -242,28 +233,22 @@ def stratified_cap(
     )
 
 
-def _dsir_features(df: DataFrame, id_col: str, text_col: str,
-                   n_features: int, mode: str) -> DataFrame:
+# DSIR feature space: the first three hex digits of md5(word), 16^3 buckets
+_DSIR_FEATURES = 4096
+
+
+def _dsir_features(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, feat, c): hashed-unigram feature counts per document.
 
-    md5 mode hashes into 16^3 = 4096 buckets via the first three hex
-    digits — portable to any engine (the hash_bucket recipe, one digit
-    wider); xxhash64 mode is the JVM-cheap production path. n_features
-    is fixed at 4096 for md5 (the digit width IS the modulus); xxhash64
-    accepts any modulus.
+    Words hash into 16^3 = 4096 buckets via the first three hex digits
+    of their md5 — portable to any engine (the hash_bucket recipe, one
+    digit wider).
     """
     tok = df.select(
         F.col(id_col).alias("id"),
         F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("__w"),
     ).filter(F.col("__w") != "")
-    if mode == "md5":
-        if n_features != 4096:
-            raise ValueError("md5 mode fixes n_features at 4096 (3 hex digits)")
-        feat = F.conv(F.substring(F.md5(F.col("__w")), 1, 3), 16, 10).cast("int")
-    elif mode == "xxhash64":
-        feat = F.pmod(F.xxhash64(F.col("__w")), F.lit(n_features)).cast("int")
-    else:
-        raise ValueError(f"unknown hash mode {mode!r}")
+    feat = F.conv(F.substring(F.md5(F.col("__w")), 1, 3), 16, 10).cast("int")
     return tok.select("id", feat.alias("feat")).groupBy("id", "feat").agg(
         F.count(F.lit(1)).alias("c")
     )
@@ -274,14 +259,11 @@ def dsir_log_weights(
     target: DataFrame,
     id_col: str,
     text_col: str,
-    n_features: int = 4096,
-    alpha: float = 1.0,
-    mode: str = "md5",
 ) -> DataFrame:
     """Data Selection with Importance Resampling (DSIR, Xie et al. 2023,
     public paper): per-source-document log importance weight of a TARGET
     distribution over a SOURCE distribution, under hashed-unigram
-    bag-of-words language models with add-alpha smoothing.
+    bag-of-words language models with add-one smoothing.
 
         log w(doc) = sum_f c_doc[f] * [log p_target(f) - log p_source(f)]
 
@@ -292,8 +274,8 @@ def dsir_log_weights(
     quantile.
 
     100 TB posture: token explode -> (id, feat) count is the only
-    corpus-grain shuffle; the feature-ratio table is n_features rows
-    (4096) and BROADCAST into the per-doc join, so the scoring pass is
+    corpus-grain shuffle; the feature-ratio table is at most 4096 rows
+    and BROADCAST into the per-doc join, so the scoring pass is
     map-side. Nothing driver-side, no UDFs.
 
     Output: (id, log_w, n_tokens) — one row per source document with at
@@ -305,22 +287,21 @@ def dsir_log_weights(
     # full hash-feature explodes un-materialized); tgt feeds two.
     # (id, feat, c) grain — the hashed-ngram count table DSIR
     # materializes by construction.
-    src = _dsir_features(source, id_col, text_col, n_features, mode).transform(materialize)
-    tgt = _dsir_features(target, id_col, text_col, n_features, mode).transform(materialize)
+    src = _dsir_features(source, id_col, text_col).transform(materialize)
+    tgt = _dsir_features(target, id_col, text_col).transform(materialize)
     s_tot = src.groupBy("feat").agg(F.sum("c").alias("cs"))
     t_tot = tgt.groupBy("feat").agg(F.sum("c").alias("ct"))
     # full outer over the feature space observed on either side; features
     # on neither side never appear in any document, so they cannot
     # contribute to a doc's sum — the smoothed ratio table stays exact
-    denom_s = F.lit(alpha) * n_features
-    denom_t = F.lit(alpha) * n_features
+    denom = float(_DSIR_FEATURES)  # add-one smoothing: alpha * D, alpha = 1
     ratio = (
         s_tot.join(t_tot, "feat", "full_outer")
         .select(
             "feat",
             (
-                F.log(F.coalesce(F.col("ct"), F.lit(0)) + alpha)
-                - F.log(F.coalesce(F.col("cs"), F.lit(0)) + alpha)
+                F.log(F.coalesce(F.col("ct"), F.lit(0)) + 1.0)
+                - F.log(F.coalesce(F.col("cs"), F.lit(0)) + 1.0)
             ).alias("__lr_unnorm"),
         )
     )
@@ -334,8 +315,8 @@ def dsir_log_weights(
         "feat",
         (
             F.col("__lr_unnorm")
-            - F.log(F.col("__T") + denom_t)
-            + F.log(F.col("__S") + denom_s)
+            - F.log(F.col("__T") + denom)
+            + F.log(F.col("__S") + denom)
         ).alias("log_ratio"),
     )
     return (
@@ -445,7 +426,6 @@ def cluster_balanced_sample(
     id_col: str,
     clusters: DataFrame,
     m: int = 2,
-    mode: str = "md5",
 ) -> DataFrame:
     """Dedup-aware sampling: keep at most `m` deterministic
     representatives per duplicate cluster (the near-dup components from
@@ -480,18 +460,8 @@ def cluster_balanced_sample(
     full = ids.join(cl, "__id", "left").select(
         "__id", F.coalesce("__cl", "__id").alias("__cl")
     )
-    if mode == "md5":
-        key = F.md5(F.col("__id").cast("string"))
-        shard = F.conv(F.substring(key, 1, 2), 16, 10).cast("int")
-    elif mode == "xxhash64":
-        key = F.xxhash64(F.col("__id").cast("string"))
-        # sign-bit flip makes unsigned top-byte order match the signed
-        # long ordering the rank sorts by
-        shard = F.shiftrightunsigned(
-            key.bitwiseXOR(F.lit(-(2**63))), 56
-        ).cast("int")
-    else:
-        raise ValueError(f"unknown hash mode {mode!r}")
+    key = F.md5(F.col("__id").cast("string"))
+    shard = F.conv(F.substring(key, 1, 2), 16, 10).cast("int")
     full = full.withColumn("__k", key)
     ranked = _hierarchical_row_number(
         full,

@@ -60,24 +60,14 @@ def asof_join(
     left_ts: str,
     right_ts: str,
     value_cols: list[str],
-    *,
-    allow_exact_matches: bool = True,
-    tolerance_seconds: float | None = None,
-    direction: str = "backward",
 ) -> DataFrame:
     """For every left row, attach the most recent right row at-or-before
-    (or strictly before, with allow_exact_matches=False) its timestamp,
-    per key — pandas.merge_asof(direction='backward') / DuckDB ASOF LEFT
-    JOIN semantics, left rows with no match keep NULLs.
-    direction='forward' flips the scan: the EARLIEST right row at-or-after
-    each left row (the same union-window formulation traversed in
-    descending time order).
+    its timestamp, per key — pandas.merge_asof(direction='backward') /
+    DuckDB ASOF LEFT JOIN semantics, left rows with no match keep NULLs.
 
     Right-side ties on (key, right_ts) are resolved deterministically by
     the lexicographic max of the value struct (engine-portable — no
-    reliance on input order). With `tolerance_seconds`, matches staler
-    than the tolerance are nulled out (the match must satisfy
-    left_ts - right_ts <= tolerance).
+    reliance on input order).
 
     Output: all left columns + `matched_ts` + the right value columns.
     Plan shape: one hash exchange on the key; windows are partitioned by
@@ -92,7 +82,7 @@ def asof_join(
     l_tag = left.select(
         F.col(key).alias("__k"),
         _ts(left_ts).alias("__ts"),
-        F.lit(1 if allow_exact_matches else 0).alias("__side"),
+        F.lit(1).alias("__side"),
         F.struct(*left.columns).alias("__l"),
         F.lit(None).cast(packed.schema["__v"].dataType).alias("__v"),
         F.lit(None).cast("timestamp").alias("__vts"),
@@ -100,20 +90,17 @@ def asof_join(
     r_tag = packed.select(
         "__k",
         "__ts",
-        # exact matches allowed: right sorts before left at equal ts so the
-        # left row sees it; strict mode flips the order
-        F.lit(0 if allow_exact_matches else 1).alias("__side"),
+        # right sorts before left at equal ts so the left row sees an
+        # exact match
+        F.lit(0).alias("__side"),
         F.lit(None).cast(l_tag.schema["__l"].dataType).alias("__l"),
         "__v",
         F.col("__ts").alias("__vts"),
     )
 
-    if direction not in ("backward", "forward"):
-        raise ValueError(f"asof_join: unknown direction {direction!r}")
-    ts_order = F.col("__ts").asc() if direction == "backward" else F.col("__ts").desc()
     w = (
         Window.partitionBy("__k")
-        .orderBy(ts_order, F.col("__side").asc())
+        .orderBy(F.col("__ts").asc(), F.col("__side").asc())
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     carried = (
@@ -122,30 +109,6 @@ def asof_join(
         .withColumn("__mts", F.last("__vts", ignorenulls=True).over(w))
         .filter(F.col("__l").isNotNull())
     )
-    if tolerance_seconds is not None:
-        if float(tolerance_seconds) < 0:
-            raise ValueError(
-                f"asof_join: tolerance_seconds must be >= 0, got {tolerance_seconds}"
-            )
-        if 0 < float(tolerance_seconds) < 1e-6:
-            # the interval literal below carries 6 fractional digits;
-            # anything smaller would silently format to INTERVAL 0 and
-            # null every non-exact match instead of applying the tolerance
-            raise ValueError(
-                "asof_join: tolerance_seconds below 1e-6 (one microsecond, the"
-                f" timestamp resolution) is not representable, got {tolerance_seconds}"
-            )
-        # fixed-point format: float repr of small tolerances (1e-05) is
-        # scientific notation, which the interval literal grammar rejects
-        tol = F.expr(f"INTERVAL {float(tolerance_seconds):.6f} SECONDS")
-        fresh = (
-            F.col("__mts") >= F.col("__ts") - tol
-            if direction == "backward"
-            else F.col("__mts") <= F.col("__ts") + tol
-        )
-        carried = carried.withColumn(
-            "__mv", F.when(fresh, F.col("__mv"))
-        ).withColumn("__mts", F.when(fresh, F.col("__mts")))
 
     out = carried.select(
         *[F.col(f"__l.{c}").alias(c) for c in left.columns],

@@ -220,7 +220,6 @@ def tfidf_cosine_pairs(
     text_col: str,
     threshold: float = 0.4,
     max_df_ratio: float = 0.5,
-    prefix_filter: bool = False,
 ) -> DataFrame:
     """Document-pair cosine similarity over L2-normalized TF-IDF vectors,
     computed through an INVERTED INDEX — the sparse-text twin of the
@@ -247,27 +246,10 @@ def tfidf_cosine_pairs(
     scale-sane semantics are cluster-survivor materialization
     (drop_near_duplicates / connected_components), not pair listing.
 
-    `prefix_filter=True` additionally applies LOSSLESS L2 prefix
-    filtering (Bayardo et al., "Scaling Up All Pairs Similarity Search",
-    WWW'07). Under a GLOBAL term order (df asc, term asc — rarest first),
-    let rest(x, t) = L2 norm of x's weights from t onward in that order.
-    For any qualifying pair, its FIRST shared term t* satisfies
-    cos(x,y) <= ||x_{>=t*}|| * ||y_{>=t*}|| (Cauchy-Schwarz over the
-    shared suffix) <= min(rest(x,t*), rest(y,t*)), so both docs' t*
-    entries lie in the index prefix {entries with rest >= threshold}:
-    candidates come from a prefix-only self-join and are verified with
-    the exact dot product joined on candidates only — identical output.
-    This prunes when weight mass concentrates in rare terms (Zipfian
-    real-world corpora at high thresholds: prefix = the top 1-t^2 of
-    squared mass); on the synthetic templates' FLAT weights it cannot
-    prune (measured: no candidate reduction, window+verify overhead only),
-    hence default off for the bench corpus.
-
     Shuffle shape at 100 TB: token-stream groupBy to (id, term) grain,
     vocabulary-grain df aggregate + broadcast N, join on term (posting
-    lists; prefix-only when enabled — the suffix-norm window partitions by
-    doc id, a corpus-cardinality key), pair-grain groupBy — all
-    key-partitioned, AQE handles residual term skew.
+    lists), pair-grain groupBy — all key-partitioned, AQE handles residual
+    term skew.
     """
     toks = df.select(
         F.col(id_col).alias("id"),
@@ -297,50 +279,17 @@ def tfidf_cosine_pairs(
         .filter(F.col("nrm") > 0)
         .select("id", "term", "dfq", (F.col("w") / F.col("nrm")).alias("u"))
         # materialize the inverted index once: both sides of the
-        # posting-list self-join (and, on the prefix path, the suffix-norm
-        # window plus two verify joins) read this frame — un-materialized,
-        # the whole scan+tokenize+tf+df chain executes once per reference
-        # (r15 plan-audit discipline). (id, term, u) grain is exactly what
+        # posting-list self-join read this frame — un-materialized, the
+        # whole scan+tokenize+tf+df chain executes once per side (r15
+        # plan-audit discipline). (id, term, u) grain is exactly what
         # a materialized inverted index holds at any scale.
         .transform(materialize)
     )
-    if not prefix_filter:
-        a = unit.select(F.col("id").alias("id_a"), "term", F.col("u").alias("ua"))
-        b = unit.select(F.col("id").alias("id_b"), "term", F.col("u").alias("ub"))
-        return (
-            a.join(b, on="term")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .groupBy("id_a", "id_b")
-            .agg(F.sum(F.col("ua") * F.col("ub")).alias("cosine"))
-            .filter(F.col("cosine") > threshold)
-        )
-
-    # suffix norm from each entry onward under the global (df asc, term asc)
-    # order; the window key is the doc id (corpus-cardinality), never a
-    # low-cardinality column. The -1e-9 guards float rounding of rest vs
-    # the mathematically-exact bound at the threshold boundary.
-    w_sfx = (
-        Window.partitionBy("id")
-        .orderBy(F.asc("dfq"), F.asc("term"))
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    )
-    prefix = (
-        unit.withColumn("__rest", F.sqrt(F.sum(F.col("u") * F.col("u")).over(w_sfx)))
-        .filter(F.col("__rest") >= threshold - 1e-9)
-        .select("id", "term")
-    )
-    cand = (
-        prefix.select(F.col("id").alias("id_a"), "term")
-        .join(prefix.select(F.col("id").alias("id_b"), "term"), on="term")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    ua = unit.select(F.col("id").alias("id_a"), "term", F.col("u").alias("ua"))
-    ub = unit.select(F.col("id").alias("id_b"), "term", F.col("u").alias("ub"))
+    a = unit.select(F.col("id").alias("id_a"), "term", F.col("u").alias("ua"))
+    b = unit.select(F.col("id").alias("id_b"), "term", F.col("u").alias("ub"))
     return (
-        cand.join(ua, on="id_a")
-        .join(ub, on=["id_b", "term"])
+        a.join(b, on="term")
+        .filter(F.col("id_a") < F.col("id_b"))
         .groupBy("id_a", "id_b")
         .agg(F.sum(F.col("ua") * F.col("ub")).alias("cosine"))
         .filter(F.col("cosine") > threshold)
@@ -2108,21 +2057,24 @@ def reference_delta_scores(
     )
 
 
-def kneser_ney_nll(
+def heldout_jm_kn_nll(
     df: DataFrame,
     id_col: str,
     text_col: str,
     holdout: Column,
+    lam: float = 0.7,
     discount: float = 0.75,
 ) -> DataFrame:
-    """Held-out NLL under an interpolated KNESER-NEY bigram LM fit on
-    the rest of the corpus — the smoothing family production perplexity
+    """Held-out NLL under two bigram LMs fit on the rest of the corpus,
+    over ONE held-out bigram stream and one join tree (xs36's smoothing
+    comparison): heldout_bigram_nll's Jelinek-Mercer mix (its per-row
+    expression verbatim, equality pinned by test) and an interpolated
+    KNESER-NEY bigram LM — the smoothing family production perplexity
     filters actually use (CCNet's KenLM models are modified-KN; this is
     the classic single-discount interpolated form, Kneser & Ney 1995 /
-    Chen & Goodman 1999, public papers) beside the Jelinek-Mercer mix
-    of heldout_bigram_nll. The lower-order distribution is the
-    CONTINUATION distribution (how many distinct left-contexts a word
-    follows), not raw frequency — the property that makes KN the
+    Chen & Goodman 1999, public papers). The KN lower-order distribution
+    is the CONTINUATION distribution (how many distinct left-contexts a
+    word follows), not raw frequency — the property that makes KN the
     published default:
 
         p_cont(w)    = (N1+(.w) + 1) / (T + V + 1)
@@ -2135,116 +2087,13 @@ def kneser_ney_nll(
     T the total distinct bigram types and V the train vocabulary — the
     (+1, +V+1) add-one floor mirrors heldout_bigram_nll's unseen-slot
     convention so held-out OOV words score finitely. First token of a
-    doc scores under p_cont; D = 0.75 (exactly representable in binary,
-    so the discount subtraction is cross-engine exact).
+    doc scores under the unigram (JM) and p_cont (KN); D = 0.75 (exactly
+    representable in binary, so the discount subtraction is cross-engine
+    exact).
 
     Shuffle shape at 100 TB: identical to heldout_bigram_nll — every
-    count table lives at vocabulary grain (c2/cL/N1L at bigram-left
-    grain, N1R at word grain), held-out instances LEFT-join them, the
-    two scalars (T, V) broadcast via a 1-row cross join. Output:
-    (id, n_scored, sum_nll) doc-grain UNROUNDED sums.
-    """
-    from presto_workload_analyzer_spark.extensions.dedup import gram_array_of
-
-    d = float(discount)
-    if not 0.0 < d < 1.0:
-        raise ValueError(f"discount must be in (0, 1), got {discount}")
-    lower = F.transform(tokens(text_col), lambda t: F.lower(t))
-    base = df.select(
-        F.col(id_col).alias("id"),
-        lower.alias("__toks"),
-        holdout.alias("__ho"),
-    )
-    train = base.filter(~F.col("__ho"))
-    # same materialization discipline as heldout_bigram_nll: the held
-    # slice feeds two consumers, the bigram count table four — an
-    # un-materialized reference re-executes the scan+tokenize chain
-    held = base.filter(F.col("__ho")).select("id", "__toks").transform(materialize)
-
-    vocab = (
-        train.select(F.explode("__toks").alias("w"))
-        .where(F.col("w") != "")
-        .agg(F.countDistinct("w").cast("double").alias("__vv"))
-    )
-    bi = (
-        train.select(
-            F.explode(gram_array_of(_bigram_toks(F.col("__toks")), 2)).alias("bg")
-        )
-        .select(
-            F.split(F.col("bg"), " ", 2)[0].alias("w_prev"),
-            F.split(F.col("bg"), " ", 2)[1].alias("w"),
-        )
-        .groupBy("w_prev", "w")
-        .agg(F.count(F.lit(1)).alias("c2"))
-        .transform(materialize)
-    )
-    left = bi.groupBy("w_prev").agg(
-        F.sum("c2").cast("double").alias("cl"),
-        F.count(F.lit(1)).cast("double").alias("n1l"),
-    )
-    right = bi.groupBy("w").agg(F.count(F.lit(1)).cast("double").alias("n1r"))
-    scal = right.agg(F.sum("n1r").cast("double").alias("__t")).crossJoin(
-        F.broadcast(vocab)
-    )
-
-    p_cont = (F.coalesce(F.col("n1r"), F.lit(0.0)) + 1.0) / (
-        F.col("__t") + F.col("__vv") + 1.0
-    )
-    p_bi = F.when(
-        F.coalesce(F.col("cl"), F.lit(0.0)) > 0,
-        F.greatest(F.coalesce(F.col("c2"), F.lit(0)).cast("double") - d, F.lit(0.0))
-        / F.col("cl")
-        + (d * F.col("n1l") / F.col("cl")) * p_cont,
-    ).otherwise(p_cont)
-
-    held_bi = held.select(
-        "id",
-        F.explode(gram_array_of(_bigram_toks(F.col("__toks")), 2)).alias("bg"),
-    ).select(
-        "id",
-        F.split(F.col("bg"), " ", 2)[0].alias("w_prev"),
-        F.split(F.col("bg"), " ", 2)[1].alias("w"),
-    )
-    scored_bi = (
-        held_bi.join(bi, on=["w_prev", "w"], how="left")
-        .join(left, on="w_prev", how="left")
-        .join(right, on="w", how="left")
-        .crossJoin(F.broadcast(scal))
-        .select("id", (-F.log(p_bi)).alias("nll"))
-    )
-    first = (
-        held.select("id", F.col("__toks").getItem(0).alias("w"))
-        .where(F.col("w").isNotNull() & (F.col("w") != ""))
-        .join(right, on="w", how="left")
-        .crossJoin(F.broadcast(scal))
-        .select("id", (-F.log(p_cont)).alias("nll"))
-    )
-    return (
-        scored_bi.unionByName(first)
-        .groupBy("id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_scored"),
-            F.sum("nll").alias("sum_nll"),
-        )
-    )
-
-
-def heldout_jm_kn_nll(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    holdout: Column,
-    lam: float = 0.7,
-    discount: float = 0.75,
-) -> DataFrame:
-    """Fused single-pass scorer: BOTH heldout_bigram_nll's Jelinek-Mercer
-    mix and kneser_ney_nll's interpolated KN over ONE held-out bigram
-    stream and one join tree — the fast path for consumers that want the
-    smoothing comparison (xs36's shape), where running the two standalone
-    scorers costs two full explode+join chains for the same token
-    stream. Per-row probability expressions are verbatim the standalone
-    functions' (equality pinned by test), so the fusion can never drift
-    from the canonical single-smoothing entry points.
+    count table lives at vocabulary grain, held-out instances LEFT-join
+    them, the scalars broadcast via a 1-row cross join.
 
     Output: (id, n_scored, sum_nll_jm, sum_nll_kn) doc-grain UNROUNDED.
     """

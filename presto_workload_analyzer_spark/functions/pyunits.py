@@ -12,8 +12,14 @@ from presto_workload_analyzer_spark.functions.units import SIZE_UNITS, TIME_UNIT
 
 
 def _parse(s: str | None, units: list[tuple[str, float]]) -> float | None:
+    """A unit string -> its value in base units; None for None or an
+    unparsable string. Any other type (a JSON object, array or number
+    where QueryInfo writes a string) raises ValueError, which the extract
+    stage treats like a missing mandatory key: the record is skipped."""
     if s is None:
         return None
+    if not isinstance(s, str):
+        raise ValueError(f"expected a unit string, got {type(s).__name__}")
     for suffix, factor in units:
         if s.endswith(suffix):
             try:

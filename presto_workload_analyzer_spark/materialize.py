@@ -47,9 +47,9 @@ from pyspark.sql import DataFrame
 _LEVEL = StorageLevel.MEMORY_AND_DISK
 
 
-def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
+def materialize(df: DataFrame) -> DataFrame:
     # parse the kill-switch value: PWA_NO_MATERIALIZE=0/false/no must NOT
     # silently disable materialization (ADVICE r15)
     if os.environ.get("PWA_NO_MATERIALIZE", "").lower() in ("1", "true", "yes"):
         return df
-    return df.localCheckpoint(eager=eager, storageLevel=_LEVEL)
+    return df.localCheckpoint(eager=False, storageLevel=_LEVEL)

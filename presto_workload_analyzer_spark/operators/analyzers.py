@@ -423,54 +423,37 @@ def task_stage_stats(tasks: DataFrame) -> DataFrame:
     )
 
 
-def latency_percentiles(queries: DataFrame, approximate: bool = False) -> DataFrame:
+def latency_percentiles(queries: DataFrame) -> DataFrame:
     """Per-user p50/p95/p99 elapsed-time — latency-SLO view of the workload.
 
     Beyond-reference: the reference plots raw per-query scatters
     (elapsed_time_by_query, analyze.py:277-302) and leaves percentile
     reading to the eye; this rolls them up per user. Exact `percentile`
     (linear interpolation over the sorted group) for oracle-checkable
-    results; approximate=True swaps in `approx_percentile` (t-digest-style
-    sketch, map-side combinable, no per-group sort buffer) — the right
-    trade at 100 TB where an exact percentile would shuffle every row of
-    the corpus to its group and hold it sorted.
+    results.
     """
-    pctl = F.approx_percentile if approximate else F.percentile
     return queries.groupBy("user").agg(
         F.count(F.lit(1)).alias("n_queries"),
-        pctl("elapsed_time", F.lit(0.5)).alias("p50_elapsed"),
-        pctl("elapsed_time", F.lit(0.95)).alias("p95_elapsed"),
-        pctl("elapsed_time", F.lit(0.99)).alias("p99_elapsed"),
+        F.percentile("elapsed_time", F.lit(0.5)).alias("p50_elapsed"),
+        F.percentile("elapsed_time", F.lit(0.95)).alias("p95_elapsed"),
+        F.percentile("elapsed_time", F.lit(0.99)).alias("p99_elapsed"),
     )
 
 
 # --- report header metrics (reference analyze.py:1177-1193) ------------------
 
 
-def collect_metrics(queries: DataFrame, approximate: bool = False) -> DataFrame:
+def collect_metrics(queries: DataFrame) -> DataFrame:
     """Single-row corpus metrics for the report header.
 
-    approximate=True swaps the two exact count-distincts for HyperLogLog++
-    sketches (SURVEY.md §2B-agg): single-pass partial aggregate with ~2%
-    relative error — the right trade for a dashboard header.
-
-    The exact variant pre-aggregates by (day, user) first: a naive
+    Day and user counts are exact, as in the reference (analyze.py:1183-1184).
+    The aggregate pre-aggregates by (day, user) first: a naive
     multi-countDistinct agg plans an Expand (one replicated pass over the
     FULL corpus per distinct aggregate); grouping to the (day, user) grain
     is map-side combinable and shrinks the corpus to days*users rows, so
     the Expand runs over a tiny frame. Sums are recombined from the
     pre-aggregate (fp reassociation absorbed by report-side rounding).
     """
-    if approximate:
-        return queries.agg(
-            F.count(F.lit(1)).alias("n_queries"),
-            (F.sum("cpu_time") / SECONDS_PER_DAY).alias("cpu_days"),
-            (F.sum("scheduled_time") / SECONDS_PER_DAY).alias("scheduled_days"),
-            F.sum("input_rows").alias("input_rows"),
-            (F.sum("input_size") / BYTES_PER_TB).alias("input_tb"),
-            F.approx_count_distinct(trunc_date("query_ts")).alias("n_days"),
-            F.approx_count_distinct("user").alias("n_users"),
-        )
     pre = queries.groupBy(
         trunc_date("query_ts").alias("__day"), F.col("user").alias("__user")
     ).agg(

@@ -22,7 +22,7 @@ common ones.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 # name -> (partial aggregate over raw rows, final aggregate over partials)
 MERGEABLE = {
@@ -38,20 +38,17 @@ def salted_agg(
     keys: list[str],
     aggs: dict[str, tuple[str, str]],
     buckets: int = 16,
-    salt_expr: Column | None = None,
 ) -> DataFrame:
     """Two-phase skew-spread aggregation.
 
     aggs: output_name -> (fn_name in MERGEABLE, input column). The salt is
-    deterministic (xxhash64 of the whole row by default) so results are
-    reproducible run-to-run; any row->int expression works.
+    deterministic (xxhash64 of the whole row mod `buckets`) so results are
+    reproducible run-to-run.
 
     salted_agg(li, ["l_returnflag"], {"qty": ("sum", "l_quantity")})
       == li.groupBy("l_returnflag").agg(sum("l_quantity").alias("qty"))
     bit-for-bit for min/max/count and up to fp-summation-order for sum.
     """
-    if salt_expr is None:
-        salt_expr = F.pmod(F.xxhash64(*df.columns), F.lit(buckets))
     partials = [
         MERGEABLE[fn][0](F.col(src)).alias(f"__p_{name}")
         for name, (fn, src) in aggs.items()
@@ -61,7 +58,7 @@ def salted_agg(
         for name, (fn, src) in aggs.items()
     ]
     return (
-        df.withColumn("__salt", salt_expr)
+        df.withColumn("__salt", F.pmod(F.xxhash64(*df.columns), F.lit(buckets)))
         .groupBy(*keys, "__salt")
         .agg(*partials)
         .groupBy(*keys)

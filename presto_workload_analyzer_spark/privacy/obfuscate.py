@@ -316,19 +316,13 @@ def k_anonymize(
     df: DataFrame,
     quasi_cols: list[str],
     k: int = 5,
-    mode: str = "suppress",
-    mask_value: str = "*",
 ) -> DataFrame:
     """k-anonymity enforcement over a quasi-identifier combination.
 
     A row is re-identifiable when its quasi-identifier tuple (e.g. user x
-    update-type x date) is shared by fewer than k rows. Two standard
-    treatments, both fully distributed (no collect):
-
-      * mode='suppress' — drop the under-k rows (output schema unchanged);
-      * mode='mask'     — keep them, but replace every quasi column with
-        `mask_value` (cast to string), merging all rare combinations into
-        one indistinguishable group.
+    update-type x date) is shared by fewer than k rows; those rows are
+    suppressed (dropped; output schema unchanged), fully distributed with
+    no collect.
 
     Group sizes come from a groupBy + equi-join back on the quasi columns,
     NOT a quasi-partitioned window (round-7 skew fix): a window must
@@ -341,8 +335,6 @@ def k_anonymize(
     surface (jsonl_process.py rename/remove obfuscation) with a
     grouping-based guarantee the rename map alone cannot give.
     """
-    if mode not in ("suppress", "mask"):
-        raise ValueError(f"k_anonymize: unknown mode {mode!r}")
     sizes = df.groupBy(*quasi_cols).agg(F.count(F.lit(1)).alias("__gsize"))
     # null-safe equality: groupBy puts NULL quasi values in a real group,
     # and a plain equi-join would silently unmatch those rows (NULL != NULL
@@ -358,17 +350,7 @@ def k_anonymize(
     sized = df.join(renamed, on=cond, how="left").drop(
         *[f"__q_{c}" for c in quasi_cols]
     )
-    if mode == "suppress":
-        return sized.filter(F.col("__gsize") >= k).drop("__gsize")
-    masked = sized
-    for c in quasi_cols:
-        masked = masked.withColumn(
-            c,
-            F.when(F.col("__gsize") >= k, F.col(c).cast("string")).otherwise(
-                F.lit(mask_value)
-            ),
-        )
-    return masked.drop("__gsize")
+    return sized.filter(F.col("__gsize") >= k).drop("__gsize")
 
 
 def laplace_noise(key: "Column", scale: float = 1.0, salt: str = "noise") -> "Column":

@@ -2,8 +2,9 @@
 
 Local mode is the test bed (local[N], one JVM); the configuration is written
 so the same code lands well on a multi-executor cluster at 100 TB scale:
-AQE handles runtime coalesce/skew, shuffle partitions default to the core
-count locally (a cluster deployment should raise it to ~2-3x total cores),
+AQE handles runtime coalesce/skew, shuffle partitions equal the core count
+locally (a cluster deployment should raise them to ~2-3x total cores
+through `extra_conf`),
 and the session timezone is pinned to UTC so timestamp semantics match the
 DuckDB correctness oracle.
 """
@@ -18,17 +19,14 @@ from pyspark.sql import SparkSession
 def get_spark(
     app_name: str = "presto-workload-analyzer-spark",
     cpus: int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
-    if shuffle_partitions is None:
-        shuffle_partitions = cpus
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -4,10 +4,9 @@ Reference collect.py:73-123. Deliberately NOT a Spark job (SURVEY.md
 §2B-sources): acquisition is a low-rate HTTP poll against one coordinator —
 "negligible compute-cost" by design (reference README.md:11) — so it stays
 a plain-Python process that writes `<query_id>.json.gz` files into a
-landing directory. Spark picks the directory up either as a batch read
-(sources.queryinfo.extract_queryinfo) or as a file-source stream
-(streaming.stream_summaries); the file-per-query layout makes the handoff
-idempotent and replayable.
+landing directory. Spark picks the directory up as a batch read
+(sources.queryinfo.extract_queryinfo); the file-per-query layout makes the
+handoff idempotent and replayable.
 
 Parity with the reference:
   * poll `GET {coordinator}{endpoint}`, keep ids with state in
@@ -88,13 +87,12 @@ def collect_once(
     endpoint: str,
     output_dir: pathlib.Path,
     delay: float = 0.1,
-    done_states: frozenset = DONE_STATES,
 ) -> list[str]:
     """One poll cycle; returns the newly-downloaded query ids."""
     body = client.get(endpoint)
     if body is None:
         return []
-    ids = [q["queryId"] for q in json.loads(body) if q.get("state") in done_states]
+    ids = [q["queryId"] for q in json.loads(body) if q.get("state") in DONE_STATES]
     log.debug("found %d completed queries", len(ids))
 
     downloaded = []
@@ -126,12 +124,9 @@ def collect(
     loop: bool = False,
     loop_delay: float = 1.0,
     client: Client | None = None,
-    max_cycles: int | None = None,
 ) -> int:
-    """Poll-and-download loop (reference collect.py:90-122).
-
-    `max_cycles` bounds the loop for tests; None = reference behavior
-    (single pass, or forever with loop=True). Returns total downloads.
+    """Poll-and-download loop (reference collect.py:90-122): a single
+    pass, or forever with loop=True. Returns total downloads.
     """
     client = client or Client()
     endpoint = f"{coordinator}{query_endpoint}"
@@ -139,14 +134,8 @@ def collect(
     out.mkdir(parents=True, exist_ok=True)
 
     total = 0
-    cycles = 0
     while True:
         total += len(collect_once(client, endpoint, out, delay=delay))
-        cycles += 1
-        if max_cycles is not None and cycles >= max_cycles:
-            break
-        if loop:
-            time.sleep(loop_delay)
-        else:
-            break
-    return total
+        if not loop:
+            return total
+        time.sleep(loop_delay)

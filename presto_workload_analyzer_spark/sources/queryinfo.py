@@ -153,9 +153,14 @@ def _collect_substages(stage: dict) -> list[dict]:
 def summarize_queryinfo(doc: dict) -> dict | None:
     """One QueryInfo document -> one summary record (or None to skip).
 
-    Reference extract.py:123-169.
+    Reference extract.py:123-169. A root or `session` that is not a JSON
+    object (a top-level array, a string) is no QueryInfo document: skipped.
     """
+    if not isinstance(doc, dict):
+        return None
     session = doc.get("session", {})
+    if not isinstance(session, dict):
+        return None
     varada = session.get("catalogProperties", {}).get("varada", {})
     if varada.get("internal_query", "") == "true":
         return None

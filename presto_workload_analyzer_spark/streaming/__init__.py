@@ -10,7 +10,6 @@ from presto_workload_analyzer_spark.streaming.ingest import (
     run_to_memory,
     state_partitions,
     stream_sf_table,
-    stream_summaries,
 )
 
 __all__ = [
@@ -21,5 +20,4 @@ __all__ = [
     "run_to_memory",
     "state_partitions",
     "stream_sf_table",
-    "stream_summaries",
 ]

@@ -1,20 +1,10 @@
-"""Structured Streaming ingest: continuous workload-log analytics.
-
-Reference surface: the collector's poll loop (collect.py:83-122) — an
-unbounded, at-least-once, dedup-by-file-id ingest of completed queries
-(SURVEY.md §2B-streaming). The reference has no streaming engine; it
-re-runs analyze.py over the whole corpus. Here the landing directory
-written by a thin collector becomes a file-source stream
-(`stream_summaries`), which the registry's streaming queries and the
+"""Structured Streaming ingest: synthetic tables as file-source streams
+(`stream_sf_table`), which the registry's streaming queries and the
 stateful operators (sessions, joins, funnel) consume.
 
 Scale posture:
-  * file source with `maxFilesPerTrigger` — bounded micro-batches no matter
-    how far behind the stream falls;
-  * dedup state bounded by `dropDuplicatesWithinWatermark` — the reference
-    dedups by file existence forever (collect.py:101-103), which is
-    unbounded state; a watermark on the query timestamp (encoded in
-    query_id) keeps state proportional to the late-data horizon;
+  * per-stream state partitions (`state_partitions`) sized to the stream,
+    not to the batch shuffle default;
   * `drain` runs a stream to completion and hands back a batch DataFrame
     (the registry's streaming queries and their tests): one bounded wait,
     no leftover memory-sink view, no partial result on timeout.
@@ -26,37 +16,6 @@ import contextlib as _contextlib
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
-
-from presto_workload_analyzer_spark.functions import query_timestamp
-from presto_workload_analyzer_spark.sources.queryinfo import SUMMARY_SCHEMA
-
-DEFAULT_WATERMARK = "2 hours"
-
-
-def stream_summaries(
-    spark: SparkSession,
-    landing_dir: str,
-    watermark: str = DEFAULT_WATERMARK,
-    max_files_per_trigger: int | None = None,
-    dedup: bool = True,
-) -> DataFrame:
-    """Landing dir of summary JSONL(.gz) -> deduped streaming DataFrame.
-
-    Adds `query_ts` (from the query_id prefix, analyze.py:62-63) and a
-    watermark; duplicate query_ids within the watermark horizon are dropped
-    (the collector's at-least-once delivery, collect.py:101-103).
-    """
-    reader = spark.readStream.schema(SUMMARY_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    df = (
-        reader.json(landing_dir)
-        .withColumn("query_ts", query_timestamp(F.col("query_id")))
-        .withWatermark("query_ts", watermark)
-    )
-    if dedup:
-        df = df.dropDuplicatesWithinWatermark(["query_id"])
-    return df
 
 
 def stream_sf_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -32,6 +32,21 @@ def test_chart_registry_resolves_to_gated_queries():
     assert sections <= set(curation._SECTION_ORDER)
 
 
+def test_cross_source_chart_query_ends_in_a_sort(spark):
+    """x60 feeds a curation chart: its plan ends in a sort on the source
+    pair, so two reports over one corpus list the rows in one order."""
+    from presto_workload_analyzer_spark import driver_queries
+
+    if not os.path.isdir(SF_DIR):
+        pytest.skip(f"{SF_DIR} not present")
+    df = driver_queries.queries()["x60_cross_source_dups"](spark, SF_DIR)
+    root = df._jdf.queryExecution().optimizedPlan().toString().splitlines()[0]
+    assert re.fullmatch(
+        r"Sort \[source_a#\d+ ASC NULLS FIRST, source_b#\d+ ASC NULLS FIRST\], true",
+        root,
+    ), root
+
+
 @pytest.fixture(scope="module")
 def report(spark):
     if not os.path.isdir(SF_DIR):

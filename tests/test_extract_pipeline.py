@@ -278,18 +278,6 @@ def test_task_stage_stats(silver):
     assert r.straggler_ratio == pytest.approx(1.0)
 
 
-def test_collect_metrics_approximate(silver):
-    from presto_workload_analyzer_spark.operators.analyzers import collect_metrics
-
-    exact = collect_metrics(silver["queries"]).collect()[0]
-    approx = collect_metrics(silver["queries"], approximate=True).collect()[0]
-    assert approx.n_queries == exact.n_queries
-    assert approx.input_rows == exact.input_rows
-    # HLL++ on tiny cardinalities is exact; at scale the bound is ~2% rsd
-    assert abs(approx.n_users - exact.n_users) <= max(1, 0.05 * exact.n_users)
-    assert abs(approx.n_days - exact.n_days) <= max(1, 0.05 * exact.n_days)
-
-
 def test_read_summary_drops_corrupt_lines(spark, tmp_path):
     """A corrupt JSONL line materializes as an all-null row under the fixed
     schema; the reader must drop it (the reference crashes there)."""
@@ -374,6 +362,40 @@ def test_deep_document_is_skipped_not_fatal(spark, tmp_path):
 
     frags = '[{"id": "0", "root": ' + _deep_plan_json(depth) + "}]"
     assert list(iter_plan_rows("q", frags)) == []
+
+
+_BAD_ID = "20240101_090000_00098_bad00"
+# documents of valid JSON whose types no QueryInfo has
+_MALFORMED = {
+    "top_level_array": [make_queryinfo(_BAD_ID)],
+    "session_string": {**make_queryinfo(_BAD_ID), "session": "alice"},
+    "elapsed_time_object": make_queryinfo(
+        _BAD_ID, stats_over={"elapsedTime": {"value": 2.0, "unit": "s"}}
+    ),
+}
+
+
+def _extract_rows(spark, directory):
+    return sorted(extract_queryinfo(spark, str(directory)).collect(), key=lambda r: r.query_id)
+
+
+@pytest.fixture(scope="module")
+def fixture_rows(spark, tmp_path_factory):
+    d = tmp_path_factory.mktemp("fixtures_only")
+    for i, doc in enumerate(fixtures()):
+        (d / f"q{i:03d}.json").write_text(json.dumps(doc))
+    return _extract_rows(spark, d)
+
+
+@pytest.mark.parametrize("bad", sorted(_MALFORMED))
+def test_malformed_document_is_skipped_not_fatal(spark, tmp_path, fixture_rows, bad):
+    """A root, `session` or unit value of the wrong JSON type skips that
+    one document: the extract job succeeds and every other record is the
+    same as without it."""
+    for i, doc in enumerate(fixtures()):
+        (tmp_path / f"q{i:03d}.json").write_text(json.dumps(doc))
+    (tmp_path / "bad.json").write_text(json.dumps(_MALFORMED[bad]))
+    assert _extract_rows(spark, tmp_path) == fixture_rows
 
 
 def test_min_row_parallelism_is_noop_when_scan_is_wide(spark):

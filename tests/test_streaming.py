@@ -1,20 +1,19 @@
-"""Structured Streaming ingest: dedup, drains, stateful sessions.
+"""Structured Streaming: drains and stateful operators.
 
 Strategy: write summary JSONL files into a landing dir, drain with
-availableNow triggers, then append late + duplicate files and assert
-dedup and incremental emission across checkpointed restarts.
+availableNow triggers, then append late files and assert incremental
+emission across checkpointed restarts.
 """
 
 import json
 
 import pytest
 
+from pyspark.sql import functions as F
+
+from presto_workload_analyzer_spark.functions import query_timestamp
 from presto_workload_analyzer_spark.sources.queryinfo import SUMMARY_SCHEMA
-from presto_workload_analyzer_spark.streaming import (
-    drain,
-    run_to_memory,
-    stream_summaries,
-)
+from presto_workload_analyzer_spark.streaming import drain, stream_sf_table
 
 
 def _line(query_id: str, scheduled: float = 3600.0, state: str = "FINISHED") -> str:
@@ -55,35 +54,6 @@ def landing(tmp_path):
     return d
 
 
-def test_stream_dedup_and_schema(spark, landing):
-    stream = stream_summaries(spark, str(landing))
-    assert stream.isStreaming
-    out = drain(stream, timeout=120)
-    assert out.count() == 4
-    assert {f.name for f in SUMMARY_SCHEMA.fields} <= {c for c in out.columns}
-
-    # duplicate + one new arrival in a second file: only the new id lands
-    (landing / "batch2.jsonl").write_text(
-        "\n".join(
-            [
-                _line("20240101_080500_00001_aaaaa"),  # dup within watermark
-                _line("20240101_093000_00005_aaaaa", scheduled=3600.0),
-            ]
-        )
-    )
-    stream2 = stream_summaries(spark, str(landing))
-    q = run_to_memory(stream2, "t_raw2")
-    q.awaitTermination(120)
-    ids = [r.query_id for r in spark.table("t_raw2").select("query_id").collect()]
-    assert sorted(ids) == [
-        "20240101_080500_00001_aaaaa",
-        "20240101_081500_00002_aaaaa",
-        "20240101_091000_00003_aaaaa",
-        "20240101_091500_00004_aaaaa",
-        "20240101_093000_00005_aaaaa",
-    ]
-
-
 def test_registry_stream_query_leaves_no_view_or_stream(spark, sf_dir):
     """A registered streaming query drops its memory-sink view and stops
     its stream before returning."""
@@ -96,12 +66,12 @@ def test_registry_stream_query_leaves_no_view_or_stream(spark, sf_dir):
     assert spark.streams.active == []
 
 
-def test_drain_timeout_stops_stream_and_raises(spark, landing):
+def test_drain_timeout_stops_stream_and_raises(spark, sf_dir):
     """A drain that outlives its timeout stops the stream and raises
     instead of returning a partial table."""
     before = {t.name for t in spark.catalog.listTables()}
     with pytest.raises(TimeoutError):
-        drain(stream_summaries(spark, str(landing)), timeout=0.001)
+        drain(stream_sf_table(spark, sf_dir, "events"), timeout=0.001)
     assert spark.streams.active == []
     assert {t.name for t in spark.catalog.listTables()} == before
 
@@ -115,7 +85,12 @@ def test_query_sessions_stateful(spark, landing, tmp_path):
     out, ckpt = str(tmp_path / "sessions"), str(tmp_path / "ckpt_s")
 
     def run():
-        stream = stream_summaries(spark, str(landing), watermark="10 minutes", dedup=False)
+        stream = (
+            spark.readStream.schema(SUMMARY_SCHEMA)
+            .json(str(landing))
+            .withColumn("query_ts", query_timestamp(F.col("query_id")))
+            .withWatermark("query_ts", "10 minutes")
+        )
         q = (
             query_sessions(stream, gap_seconds=1800.0)
             .writeStream.format("parquet")
