@@ -952,11 +952,40 @@ def shared_prefix_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
 
-_SHINGLE_SQL = r"""
-tok AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents),
-sh AS (SELECT DISTINCT doc_id AS id, array_to_string(w[i:i+2], ' ') AS shingle
-       FROM tok, UNNEST(range(1, greatest(len(w)-2, 0)+1)) AS t(i))
-"""
+
+def _shingle_sql(src: str, p: str = "") -> str:
+    """CTEs `{p}tok` and `{p}sh(id, shingle)`: the distinct word 3-shingles
+    of each document in `src`."""
+    return (
+        f"{p}tok AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w FROM {src}),"
+        f" {p}sh AS (SELECT DISTINCT doc_id AS id, array_to_string(w[i:i+2], ' ') AS shingle"
+        f" FROM {p}tok, UNNEST(range(1, greatest(len(w)-2, 0)+1)) AS t(i))"
+    )
+
+
+# the trailing space keeps the pinned oracle text's " ," after the CTE
+_SHINGLE_SQL = _shingle_sql("documents") + " "
+# shingle-set sizes and the shingle overlap of every pair id_a < id_b of `sh`
+_OVERLAP_SQL = (
+    "sizes AS (SELECT id, count(*) AS n FROM sh GROUP BY id),"
+    " inter AS (SELECT a.id AS id_a, b.id AS id_b, count(*) AS ni"
+    " FROM sh a JOIN sh b USING (shingle) WHERE a.id < b.id GROUP BY 1, 2)"
+)
+# the same, for the candidate pairs `cand(id_a, id_b)` only
+_CAND_OVERLAP_SQL = (
+    "sizes AS (SELECT id, count(*) AS n FROM sh GROUP BY id),"
+    " inter AS (SELECT c.id_a, c.id_b, count(*) AS ni FROM cand c"
+    " JOIN sh a ON a.id = c.id_a JOIN sh b ON b.id = c.id_b AND b.shingle = a.shingle"
+    " GROUP BY 1, 2)"
+)
+# the candidate pairs with shingle Jaccard >= 0.3, and that Jaccard
+_CAND_JACCARD_SQL = (
+    f"{_SHINGLE_SQL}, {_CAND_OVERLAP_SQL}"
+    " SELECT id_a, id_b,"
+    "  round(CAST(ni AS DOUBLE) / (sa.n + sb.n - ni) + 1e-9, 6) AS jaccard"
+    " FROM inter JOIN sizes sa ON sa.id = id_a JOIN sizes sb ON sb.id = id_b"
+    " WHERE CAST(ni AS DOUBLE) / (sa.n + sb.n - ni) >= 0.3"
+)
 
 _register(
     "x01_dedup_exact",
@@ -978,19 +1007,50 @@ _X02_SIGS = ", ".join(
     f"min(substr(md5(shingle || '#{i // 4}'), {1 + 8 * (i % 4)}, 8)) AS sig_{i}"
     for i in range(16)
 )
-_X02_BANDS = " UNION ALL ".join(
-    f"SELECT id, {b} AS band, md5(concat_ws('|', sig_{b*4}, sig_{b*4+1},"
-    f" sig_{b*4+2}, sig_{b*4+3})) AS band_hash FROM sig"
-    for b in range(4)
+
+
+def _lsh_bands_sql(p: str = "") -> str:
+    """x02's LSH table over the shingle CTE `{p}sh`: CTEs `{p}sig` (the
+    16 signature slices of each id) and `{p}bands` (4 bands of 4 slices)."""
+    bands = " UNION ALL ".join(
+        f"SELECT id, {b} AS band, md5(concat_ws('|', sig_{b*4}, sig_{b*4+1},"
+        f" sig_{b*4+2}, sig_{b*4+3})) AS band_hash FROM {p}sig"
+        for b in range(4)
+    )
+    return f"{p}sig AS (SELECT id, {_X02_SIGS} FROM {p}sh GROUP BY id), {p}bands AS ({bands})"
+
+
+_LSH_BANDS_SQL = _lsh_bands_sql()
+_LSH_PAIR_SQL = (
+    "SELECT DISTINCT a.id AS id_a, b.id AS id_b"
+    " FROM bands a JOIN bands b USING (band, band_hash) WHERE a.id < b.id"
 )
+
+
+def _lsh_pairs_sql(name: str) -> str:
+    """x02's LSH candidate pairs (id_a < id_b) over `sh` as the CTE `name`."""
+    return f"{_LSH_BANDS_SQL}, {name} AS ({_LSH_PAIR_SQL})"
+
+
+def _cc_sql(pairs: str, e: str) -> str:
+    """Connected components of the pair CTE `pairs` by a recursive min-label
+    walk, ending at `cc(id, cluster_id)`; `e` aliases the edge CTE (it
+    must not shadow a CTE of the enclosing query)."""
+    return (
+        f"edges AS (SELECT id_a AS src, id_b AS dst FROM {pairs}"
+        f"  UNION SELECT id_b, id_a FROM {pairs}),"
+        " walk(id, lab) AS ("
+        "  SELECT src, src FROM edges"
+        "  UNION"
+        f"  SELECT {e}.src, w.lab FROM walk w JOIN edges {e} ON {e}.dst = w.id),"
+        " cc AS (SELECT id, min(lab) AS cluster_id FROM walk GROUP BY id)"
+    )
+
 
 _register(
     "x02_minhash_lsh_pairs",
     _x02,
-    f"WITH {_SHINGLE_SQL}, sig AS (SELECT id, {_X02_SIGS} FROM sh GROUP BY id),"
-    f" bands AS ({_X02_BANDS})"
-    " SELECT DISTINCT a.id AS id_a, b.id AS id_b"
-    " FROM bands a JOIN bands b USING (band, band_hash) WHERE a.id < b.id",
+    f"WITH {_SHINGLE_SQL}, {_LSH_BANDS_SQL} {_LSH_PAIR_SQL}",
 )
 
 
@@ -1025,10 +1085,7 @@ _register(
     _x20,
     # the exact J >= 0.9 pair universe — hash-independent expected output
     # of the verified LSH pipeline (see _x20 docstring for the recall bound)
-    f"WITH {_SHINGLE_SQL},"
-    " sizes AS (SELECT id, count(*) AS n FROM sh GROUP BY id),"
-    " inter AS (SELECT a.id AS id_a, b.id AS id_b, count(*) AS ni"
-    "  FROM sh a JOIN sh b USING (shingle) WHERE a.id < b.id GROUP BY 1, 2),"
+    f"WITH {_SHINGLE_SQL}, {_OVERLAP_SQL},"
     " j AS (SELECT id_a, id_b, CAST(ni AS DOUBLE) / (sa.n + sb.n - ni) AS jac"
     "  FROM inter JOIN sizes sa ON sa.id = id_a JOIN sizes sb ON sb.id = id_b)"
     " SELECT id_a, id_b, round(jac + 1e-9, 6) AS jaccard FROM j WHERE jac >= 0.9",
@@ -1040,17 +1097,7 @@ _register(
 # DuckDB oracle: reachability via WITH RECURSIVE, min label per component.
 
 _X14_CC_SQL = (
-    f"WITH RECURSIVE {_SHINGLE_SQL}, sig AS (SELECT id, {_X02_SIGS} FROM sh GROUP BY id),"
-    f" bands AS ({{bands}}),"
-    " pairs AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b"
-    "   FROM bands a JOIN bands b USING (band, band_hash) WHERE a.id < b.id),"
-    " edges AS (SELECT id_a AS src, id_b AS dst FROM pairs"
-    "   UNION SELECT id_b, id_a FROM pairs),"
-    " walk(id, lab) AS ("
-    "   SELECT src, src FROM edges"
-    "   UNION"
-    "   SELECT e.src, w.lab FROM walk w JOIN edges e ON e.dst = w.id),"
-    " cc AS (SELECT id, min(lab) AS cluster_id FROM walk GROUP BY id)"
+    f"WITH RECURSIVE {_SHINGLE_SQL}, {_lsh_pairs_sql('pairs')}, {_cc_sql('pairs', 'e')}"
 )
 
 
@@ -1062,7 +1109,7 @@ def _x14(spark: SparkSession, sf: str) -> DataFrame:
 _register(
     "x14_dedup_clusters",
     _x14,
-    _X14_CC_SQL.format(bands=_X02_BANDS) + " SELECT id, cluster_id FROM cc",
+    _X14_CC_SQL + " SELECT id, cluster_id FROM cc",
 )
 
 
@@ -1075,7 +1122,7 @@ def _x15(spark: SparkSession, sf: str) -> DataFrame:
 _register(
     "x15_near_dedup_keep",
     _x15,
-    _X14_CC_SQL.format(bands=_X02_BANDS)
+    _X14_CC_SQL
     + " SELECT doc_id FROM documents"
     " WHERE doc_id NOT IN (SELECT id FROM cc WHERE id <> cluster_id)",
 )
@@ -1095,13 +1142,7 @@ def _x03(spark: SparkSession, sf: str) -> DataFrame:
 _register(
     "x03_ngram_jaccard",
     _x03,
-    "WITH tok AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w"
-    " FROM documents WHERE doc_id < 60),"
-    " sh AS (SELECT DISTINCT doc_id AS id, array_to_string(w[i:i+2], ' ') AS shingle"
-    "        FROM tok, UNNEST(range(1, greatest(len(w)-2, 0)+1)) AS t(i)),"
-    " sizes AS (SELECT id, count(*) AS n FROM sh GROUP BY id),"
-    " inter AS (SELECT a.id AS id_a, b.id AS id_b, count(*) AS ni"
-    "           FROM sh a JOIN sh b USING (shingle) WHERE a.id < b.id GROUP BY 1, 2)"
+    f"WITH {_shingle_sql('documents WHERE doc_id < 60')}, {_OVERLAP_SQL}"
     " SELECT id_a, id_b,"
     "  round(CAST(ni AS DOUBLE) / (sa.n + sb.n - ni) + 1e-9, 6) AS jaccard"
     " FROM inter JOIN sizes sa ON sa.id = id_a JOIN sizes sb ON sb.id = id_b",
@@ -1137,9 +1178,9 @@ _register(
 )
 
 
-def _x05(spark: SparkSession, sf: str) -> DataFrame:
-    emb = read_indexable_embeddings(spark, sf)
-    out = X_sim.cosine_topk(emb, emb.filter(F.col("vec_id") < 10), k=5)
+def _rounded_topk(out: DataFrame) -> DataFrame:
+    """A top-k operator's rows as the oracles emit them: cosine rounded to 6
+    places, rank as a long."""
     return out.select(
         "query_id",
         "neighbor_id",
@@ -1148,34 +1189,55 @@ def _x05(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-_COS = (
-    "list_dot_product(qv, cv) /"
-    " (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv)))"
+def _x05(spark: SparkSession, sf: str) -> DataFrame:
+    emb = read_indexable_embeddings(spark, sf)
+    out = X_sim.cosine_topk(emb, emb.filter(F.col("vec_id") < 10), k=5)
+    return _rounded_topk(out)
+
+
+def _cos_sql(a: str, b: str) -> str:
+    """The cosine of the DOUBLE[] vectors `a` and `b`."""
+    return (
+        f"list_dot_product({a}, {b}) / (sqrt(list_dot_product({a}, {a}))"
+        f" * sqrt(list_dot_product({b}, {b})))"
+    )
+
+
+# the top 5 neighbours of each query_id in the scored pair CTE `s`
+_TOPK_RANK_SQL = (
+    "r AS (SELECT *, row_number() OVER (PARTITION BY query_id"
+    " ORDER BY cosine DESC, neighbor_id) AS rank FROM s)"
 )
+_TOPK5_SQL = (
+    f"{_TOPK_RANK_SQL}"
+    " SELECT query_id, neighbor_id, round(cosine, 6) AS cosine, rank FROM r WHERE rank <= 5"
+)
+
+
+def _cosine_topk_sql(q_where: str, c_where: str) -> str:
+    """Exact cosine top-5 of the embeddings matching `q_where` against the
+    other embeddings matching `c_where`."""
+    return (
+        "WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv"
+        f" FROM embeddings WHERE {q_where}),"
+        " c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv"
+        f" FROM embeddings WHERE {c_where}),"
+        f" s AS (SELECT query_id, neighbor_id, {_cos_sql('qv', 'cv')} AS cosine"
+        " FROM q, c WHERE query_id <> neighbor_id),"
+        f" {_TOPK5_SQL}"
+    )
+
 
 _register(
     "x05_cosine_topk",
     _x05,
-    "WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv"
-    f" FROM embeddings WHERE vec_id < 10 AND {_EMB_OK}),"
-    " c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv"
-    f" FROM embeddings WHERE {_EMB_OK}),"
-    f" s AS (SELECT query_id, neighbor_id, {_COS} AS cosine"
-    " FROM q, c WHERE query_id <> neighbor_id),"
-    " r AS (SELECT *, row_number() OVER (PARTITION BY query_id"
-    " ORDER BY cosine DESC, neighbor_id) AS rank FROM s)"
-    " SELECT query_id, neighbor_id, round(cosine, 6) AS cosine, rank FROM r WHERE rank <= 5",
+    _cosine_topk_sql(f"vec_id < 10 AND {_EMB_OK}", _EMB_OK),
 )
 
 def _x19(spark: SparkSession, sf: str) -> DataFrame:
     emb = read_indexable_embeddings(spark, sf)
     out = X_sim.cosine_topk_pandas(emb, emb.filter(F.col("vec_id") < 10), k=5)
-    return out.select(
-        "query_id",
-        "neighbor_id",
-        F.round("cosine", 6).alias("cosine"),
-        F.col("rank").cast("long").alias("rank"),
-    )
+    return _rounded_topk(out)
 
 
 # same oracle as x05: the Arrow/BLAS physical path must produce the same
@@ -1195,11 +1257,9 @@ _register(
     "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v"
     " FROM embeddings WHERE vec_id < 150)"
     " SELECT a.vec_id AS id_a, b.vec_id AS id_b,"
-    " round(list_dot_product(a.v, b.v) / (sqrt(list_dot_product(a.v, a.v))"
-    " * sqrt(list_dot_product(b.v, b.v))), 6) AS cosine"
+    f" round({_cos_sql('a.v', 'b.v')}, 6) AS cosine"
     " FROM e a JOIN e b ON a.vec_id < b.vec_id"
-    " WHERE list_dot_product(a.v, b.v) / (sqrt(list_dot_product(a.v, a.v))"
-    " * sqrt(list_dot_product(b.v, b.v))) > 0.25",
+    f" WHERE {_cos_sql('a.v', 'b.v')} > 0.25",
 )
 
 
@@ -1244,8 +1304,7 @@ def _x33_sql() -> str:
         "  FROM bk a JOIN bk b ON a.band = b.band AND a.bucket = b.bucket"
         "  AND a.id < b.id),"
         " scored AS (SELECT id_a, id_b,"
-        "  list_dot_product(ea.v, eb.v) / (sqrt(list_dot_product(ea.v, ea.v))"
-        "  * sqrt(list_dot_product(eb.v, eb.v))) AS cosine"
+        f"  {_cos_sql('ea.v', 'eb.v')} AS cosine"
         "  FROM cand JOIN e ea ON cand.id_a = ea.vec_id"
         "  JOIN e eb ON cand.id_b = eb.vec_id)"
         " SELECT id_a, id_b, round(cosine, 6) AS cosine FROM scored"
@@ -1304,6 +1363,17 @@ def _x07(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+# textstats.mean_token_length, punct_ratio and quality_score
+_MEAN_TOKLEN_SQL = (
+    "CAST(list_sum(list_transform(string_split_regex(trim(text), '\\s+'),"
+    " x -> len(x))) AS DOUBLE) / len(string_split_regex(trim(text), '\\s+'))"
+)
+_PUNCT_SQL = (
+    "CASE WHEN len(regexp_replace(text, '\\s', '', 'g')) > 0"
+    " THEN CAST(len(regexp_replace(text, '[A-Za-z0-9\\s]', '', 'g')) AS DOUBLE)"
+    " / len(regexp_replace(text, '\\s', '', 'g')) ELSE 0.0 END"
+)
+
 _register(
     "x07_text_stats",
     _x07,
@@ -1311,13 +1381,8 @@ _register(
     " CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT) AS n_tokens,"
     " CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]')) AS BIGINT)"
     "   AS n_bpe_tokens,"
-    " round(CAST(list_sum(list_transform(string_split_regex(trim(text), '\\s+'),"
-    "   x -> len(x))) AS DOUBLE) / len(string_split_regex(trim(text), '\\s+')) + 1e-9, 6)"
-    "   AS mean_token_len,"
-    " round(CASE WHEN len(regexp_replace(text, '\\s', '', 'g')) > 0"
-    "   THEN CAST(len(regexp_replace(text, '[A-Za-z0-9\\s]', '', 'g')) AS DOUBLE)"
-    "        / len(regexp_replace(text, '\\s', '', 'g'))"
-    "   ELSE 0.0 END + 1e-9, 6) AS punct_ratio"
+    f" round({_MEAN_TOKLEN_SQL} + 1e-9, 6) AS mean_token_len,"
+    f" round({_PUNCT_SQL} + 1e-9, 6) AS punct_ratio"
     " FROM documents",
 )
 
@@ -1326,6 +1391,12 @@ _RATIO_SQL = (
     "CAST(len(list_filter(list_transform(string_split_regex(trim(text), '\\s+'),"
     " x -> lower(x)), x -> x IN {lst})) AS DOUBLE)"
     " / len(string_split_regex(trim(text), '\\s+'))"
+)
+# the leading space keeps the pinned oracle text's "round( 0.4"
+_QUALITY_SQL = (
+    f" 0.4 * least(({_RATIO_SQL.format(lst=_EN_LIST)}) / 0.25, 1.0)"
+    f" + 0.3 * (1.0 - least(({_PUNCT_SQL}) * 5.0, 1.0))"
+    f" + 0.3 * least(({_MEAN_TOKLEN_SQL}) / 8.0, 1.0)"
 )
 
 
@@ -1339,14 +1410,7 @@ def _x08(spark: SparkSession, sf: str) -> DataFrame:
 _register(
     "x08_quality_score",
     _x08,
-    "SELECT doc_id, round("
-    f" 0.4 * least(({_RATIO_SQL.format(lst=_EN_LIST)}) / 0.25, 1.0)"
-    " + 0.3 * (1.0 - least((CASE WHEN len(regexp_replace(text, '\\s', '', 'g')) > 0"
-    "   THEN CAST(len(regexp_replace(text, '[A-Za-z0-9\\s]', '', 'g')) AS DOUBLE)"
-    "        / len(regexp_replace(text, '\\s', '', 'g')) ELSE 0.0 END) * 5.0, 1.0))"
-    " + 0.3 * least((CAST(list_sum(list_transform(string_split_regex(trim(text), '\\s+'),"
-    "   x -> len(x))) AS DOUBLE) / len(string_split_regex(trim(text), '\\s+'))) / 8.0, 1.0)"
-    " + 1e-9, 6) AS quality FROM documents",
+    f"SELECT doc_id, round({_QUALITY_SQL} + 1e-9, 6) AS quality FROM documents",
 )
 
 
@@ -1371,21 +1435,23 @@ _X09_LISTS = {
     "zh": "('de', 'shi', 'le', 'bu', 'wo')",
 }
 
-_register(
-    "x09_language_id",
-    _x09,
-    "WITH r AS (SELECT doc_id, "
-    + ", ".join(
-        f"({_RATIO_SQL.format(lst=lst)}) AS r_{lang}"
-        for lang, lst in _X09_LISTS.items()
-    )
-    + " FROM documents)"
-    " SELECT doc_id,"
+# textstats.language_id: the r_<lang> marker ratios and the argmax over them
+_LANG_RATIOS_SQL = ", ".join(
+    f"({_RATIO_SQL.format(lst=lst)}) AS r_{lang}" for lang, lst in _X09_LISTS.items()
+)
+_LANG_CASE_SQL = (
     " CASE WHEN r_en >= r_de AND r_en >= r_fr AND r_en >= r_es AND r_en >= r_zh THEN 'en'"
     "      WHEN r_de >= r_fr AND r_de >= r_es AND r_de >= r_zh THEN 'de'"
     "      WHEN r_fr >= r_es AND r_fr >= r_zh THEN 'fr'"
     "      WHEN r_es >= r_zh THEN 'es'"
-    "      ELSE 'zh' END AS pred_lang,"
+    "      ELSE 'zh' END"
+)
+
+_register(
+    "x09_language_id",
+    _x09,
+    f"WITH r AS (SELECT doc_id, {_LANG_RATIOS_SQL} FROM documents)"
+    f" SELECT doc_id, {_LANG_CASE_SQL} AS pred_lang,"
     " round(r_en + 1e-9, 6) AS en_score FROM r",
 )
 
@@ -1433,12 +1499,7 @@ _register(
 def _x12(spark: SparkSession, sf: str) -> DataFrame:
     emb = read_indexable_embeddings(spark, sf)
     out = X_sim.lsh_topk(emb, n_planes=8, k=5, n_dims=64)
-    return out.select(
-        "query_id",
-        "neighbor_id",
-        F.round("cosine", 6).alias("cosine"),
-        F.col("rank").cast("long").alias("rank"),
-    )
+    return _rounded_topk(out)
 
 
 def _hyperplane_bucket_sql(n_planes: int = 8, n_dims: int = 64) -> str:
@@ -1464,13 +1525,9 @@ def _x12_sql() -> str:
         f" FROM embeddings WHERE {_EMB_OK}),"
         f" bk AS (SELECT id, v, {bucket} AS bucket FROM e),"
         " s AS (SELECT a.id AS query_id, b.id AS neighbor_id,"
-        " list_dot_product(a.v, b.v) / (sqrt(list_dot_product(a.v, a.v))"
-        " * sqrt(list_dot_product(b.v, b.v))) AS cosine"
+        f" {_cos_sql('a.v', 'b.v')} AS cosine"
         " FROM bk a JOIN bk b USING (bucket) WHERE a.id <> b.id),"
-        " r AS (SELECT *, row_number() OVER (PARTITION BY query_id"
-        " ORDER BY cosine DESC, neighbor_id) AS rank FROM s)"
-        " SELECT query_id, neighbor_id, round(cosine, 6) AS cosine, rank"
-        " FROM r WHERE rank <= 5"
+        f" {_TOPK5_SQL}"
     )
 
 
@@ -1534,17 +1591,8 @@ def _x17(spark: SparkSession, sf: str) -> DataFrame:
 
 
 _X17_LANG_SQL = (
-    "SELECT doc_id,"
-    " CASE WHEN r_en >= r_de AND r_en >= r_fr AND r_en >= r_es AND r_en >= r_zh THEN 'en'"
-    "      WHEN r_de >= r_fr AND r_de >= r_es AND r_de >= r_zh THEN 'de'"
-    "      WHEN r_fr >= r_es AND r_fr >= r_zh THEN 'fr'"
-    "      WHEN r_es >= r_zh THEN 'es'"
-    "      ELSE 'zh' END AS pred_lang"
-    " FROM (SELECT doc_id, "
-    + ", ".join(
-        f"({_RATIO_SQL.format(lst=lst)}) AS r_{lang}" for lang, lst in _X09_LISTS.items()
-    )
-    + " FROM documents)"
+    f"SELECT doc_id, {_LANG_CASE_SQL} AS pred_lang"
+    f" FROM (SELECT doc_id, {_LANG_RATIOS_SQL} FROM documents)"
 )
 
 _register(
@@ -1712,12 +1760,7 @@ def _x13(spark: SparkSession, sf: str) -> DataFrame:
         emb.filter(F.col("vec_id") < 200).coalesce(4),
         n_cells=8, n_probe=8, k=5, seed=42, max_iter=8,
     )
-    return out.select(
-        "query_id",
-        "neighbor_id",
-        F.round("cosine", 6).alias("cosine"),
-        F.col("rank").cast("long").alias("rank"),
-    )
+    return _rounded_topk(out)
 
 
 _register(
@@ -1725,16 +1768,7 @@ _register(
     _x13,
     # n_probe == n_cells ≡ brute force: the oracle is x05's shape over the
     # same corpus-vs-itself subset
-    "WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv"
-    " FROM embeddings WHERE vec_id < 200),"
-    " c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv"
-    " FROM embeddings WHERE vec_id < 200),"
-    f" s AS (SELECT query_id, neighbor_id, {_COS} AS cosine"
-    " FROM q, c WHERE query_id <> neighbor_id),"
-    " r AS (SELECT *, row_number() OVER (PARTITION BY query_id"
-    " ORDER BY cosine DESC, neighbor_id) AS rank FROM s)"
-    " SELECT query_id, neighbor_id, round(cosine, 6) AS cosine, rank"
-    " FROM r WHERE rank <= 5",
+    _cosine_topk_sql("vec_id < 200", "vec_id < 200"),
 )
 
 
@@ -1803,13 +1837,7 @@ def _x21(spark: SparkSession, sf: str) -> DataFrame:
 _register(
     "x21_shingle_containment",
     _x21,
-    "WITH tok AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w"
-    " FROM documents WHERE doc_id < 60),"
-    " sh AS (SELECT DISTINCT doc_id AS id, array_to_string(w[i:i+2], ' ') AS shingle"
-    "        FROM tok, UNNEST(range(1, greatest(len(w)-2, 0)+1)) AS t(i)),"
-    " sizes AS (SELECT id, count(*) AS n FROM sh GROUP BY id),"
-    " inter AS (SELECT a.id AS id_a, b.id AS id_b, count(*) AS ni"
-    "           FROM sh a JOIN sh b USING (shingle) WHERE a.id < b.id GROUP BY 1, 2)"
+    f"WITH {_shingle_sql('documents WHERE doc_id < 60')}, {_OVERLAP_SQL}"
     " SELECT id_a, id_b,"
     "  round(CAST(ni AS DOUBLE) / least(sa.n, sb.n) + 1e-9, 6) AS containment"
     " FROM inter JOIN sizes sa ON sa.id = id_a JOIN sizes sb ON sb.id = id_b",
@@ -1944,12 +1972,10 @@ _register(
 )
 
 
-def _s04(spark: SparkSession, sf: str) -> DataFrame:
-    """Watermarked stream-stream interval join: purchases within 2 hours of
-    the same user's signup. Inner join + range bound => each side's state
-    evicts as the other side's watermark passes the horizon (bounded state
-    at any corpus size); one availableNow drain makes the result equal to
-    the batch SQL interval join the oracle runs."""
+def _signup_purchase_streams(spark: SparkSession, sf: str) -> tuple[DataFrame, DataFrame]:
+    """The events stream's signups (su_user, signup_id, signup_ts) and
+    purchases (pu_user, purchase_id, purchase_ts, value), each with a
+    1-minute watermark: the two sides of s04's and s09's interval joins."""
     signups = (
         stream_sf_table(spark, sf, "events")
         .filter(F.col("event_type") == "signup")
@@ -1971,6 +1997,16 @@ def _s04(spark: SparkSession, sf: str) -> DataFrame:
         )
         .withWatermark("purchase_ts", "1 minute")
     )
+    return signups, purchases
+
+
+def _s04(spark: SparkSession, sf: str) -> DataFrame:
+    """Watermarked stream-stream interval join: purchases within 2 hours of
+    the same user's signup. Inner join + range bound => each side's state
+    evicts as the other side's watermark passes the horizon (bounded state
+    at any corpus size); one availableNow drain makes the result equal to
+    the batch SQL interval join the oracle runs."""
+    signups, purchases = _signup_purchase_streams(spark, sf)
     joined = interval_join(
         signups, purchases, [("su_user", "pu_user")],
         "signup_ts", "purchase_ts", upper="2 hours",
@@ -2461,22 +2497,6 @@ def _x35(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _x35_sql() -> str:
-    def band_ctes(src: str, p: str) -> str:
-        bands = " UNION ALL ".join(
-            f"SELECT id, {b} AS band, md5(concat_ws('|', sig_{b*4}, sig_{b*4+1},"
-            f" sig_{b*4+2}, sig_{b*4+3})) AS band_hash FROM {p}sig"
-            for b in range(4)
-        )
-        return (
-            f"{p}tok AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w"
-            f"  FROM {src}),"
-            f" {p}sh AS (SELECT DISTINCT doc_id AS id,"
-            f"  array_to_string(w[i:i+2], ' ') AS shingle"
-            f"  FROM {p}tok, UNNEST(range(1, greatest(len(w)-2, 0)+1)) AS t(i)),"
-            f" {p}sig AS (SELECT id, {_X02_SIGS} FROM {p}sh GROUP BY id),"
-            f" {p}bands AS ({bands})"
-        )
-
     return (
         # NOT EXISTS, not NOT IN: matches Spark's left_anti semantics when a
         # text/id is NULL (NOT IN's three-valued logic would empty the result)
@@ -2484,10 +2504,9 @@ def _x35_sql() -> str:
         " newb AS (SELECT doc_id, text FROM documents WHERE doc_id % 5 = 0),"
         " nex AS (SELECT * FROM newb n WHERE NOT EXISTS"
         "   (SELECT 1 FROM corpus c WHERE c.text = n.text)),"
-        + band_ctes("nex", "n")
-        + ", "
-        + band_ctes("corpus", "c")
-        + ", hits AS (SELECT DISTINCT n.id FROM nbands n"
+        + f"{_shingle_sql('nex', 'n')}, {_lsh_bands_sql('n')},"
+        f" {_shingle_sql('corpus', 'c')}, {_lsh_bands_sql('c')}"
+        ", hits AS (SELECT DISTINCT n.id FROM nbands n"
         "   JOIN cbands c USING (band, band_hash))"
         " SELECT doc_id FROM nex WHERE NOT EXISTS"
         "  (SELECT 1 FROM hits h WHERE h.id = nex.doc_id)"
@@ -2527,8 +2546,7 @@ _register(
     "  WHERE vec_id < 10),"
     " cc AS (SELECT vec_id AS neighbor_id, CAST(c AS DOUBLE[]) AS nc FROM coded),"
     " s AS (SELECT query_id, neighbor_id,"
-    "  list_dot_product(qc, nc) / (sqrt(list_dot_product(qc, qc))"
-    "  * sqrt(list_dot_product(nc, nc))) AS qcosine"
+    f"  {_cos_sql('qc', 'nc')} AS qcosine"
     "  FROM q, cc WHERE query_id <> neighbor_id),"
     " r AS (SELECT *, row_number() OVER (PARTITION BY query_id"
     "  ORDER BY qcosine DESC, neighbor_id) AS rank FROM s)"
@@ -2557,24 +2575,11 @@ def _x37(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-_X37_PRED_CASE = (
-    " CASE WHEN r_en >= r_de AND r_en >= r_fr AND r_en >= r_es AND r_en >= r_zh THEN 'en'"
-    "      WHEN r_de >= r_fr AND r_de >= r_es AND r_de >= r_zh THEN 'de'"
-    "      WHEN r_fr >= r_es AND r_fr >= r_zh THEN 'fr'"
-    "      WHEN r_es >= r_zh THEN 'es'"
-    "      ELSE 'zh' END"
-)
-
 _register(
     "x37_langid_confusion",
     _x37,
-    "WITH r AS (SELECT lang, "
-    + ", ".join(
-        f"({_RATIO_SQL.format(lst=lst)}) AS r_{lang}"
-        for lang, lst in _X09_LISTS.items()
-    )
-    + " FROM documents),"
-    f" p AS (SELECT lang, {_X37_PRED_CASE} AS pred_lang FROM r),"
+    f"WITH r AS (SELECT lang, {_LANG_RATIOS_SQL} FROM documents),"
+    f" p AS (SELECT lang, {_LANG_CASE_SQL} AS pred_lang FROM r),"
     " m AS (SELECT lang, pred_lang, CAST(count(*) AS BIGINT) AS n"
     "  FROM p GROUP BY 1, 2)"
     " SELECT lang, pred_lang, n,"
@@ -2716,16 +2721,6 @@ _register(
 )
 
 
-_X38_QUALITY_SQL = (
-    f" 0.4 * least(({_RATIO_SQL.format(lst=_EN_LIST)}) / 0.25, 1.0)"
-    " + 0.3 * (1.0 - least((CASE WHEN len(regexp_replace(text, '\\s', '', 'g')) > 0"
-    "   THEN CAST(len(regexp_replace(text, '[A-Za-z0-9\\s]', '', 'g')) AS DOUBLE)"
-    "        / len(regexp_replace(text, '\\s', '', 'g')) ELSE 0.0 END) * 5.0, 1.0))"
-    " + 0.3 * least((CAST(list_sum(list_transform(string_split_regex(trim(text), '\\s+'),"
-    "   x -> len(x))) AS DOUBLE) / len(string_split_regex(trim(text), '\\s+'))) / 8.0, 1.0)"
-)
-
-
 def _x38(spark: SparkSession, sf: str) -> DataFrame:
     """Per-source corpus triage: the table a data curator reads before
     deciding which sources to keep, cap, or re-crawl — doc count, size,
@@ -2759,7 +2754,7 @@ _register(
     "x38_source_triage",
     _x38,
     "WITH q AS (SELECT source, n_chars, text,"
-    f" ({_X38_QUALITY_SQL}) AS q FROM documents)"
+    f" ({_QUALITY_SQL}) AS q FROM documents)"
     " SELECT source, CAST(count(*) AS BIGINT) AS n_docs,"
     "  CAST(sum(n_chars) AS BIGINT) AS total_chars,"
     "  round(avg(q) + 1e-9, 6) AS avg_quality,"
@@ -3109,11 +3104,8 @@ def _x43(spark: SparkSession, sf: str) -> DataFrame:
 _X43_Z = (
     "(-2.0 + 0.35 * ln(1.0 + len(text))"
     f" + 2.5 * ({_RATIO_SQL.format(lst=_EN_LIST)})"
-    " - 3.0 * (CASE WHEN len(regexp_replace(text, '\\s', '', 'g')) > 0"
-    "   THEN CAST(len(regexp_replace(text, '[A-Za-z0-9\\s]', '', 'g')) AS DOUBLE)"
-    "        / len(regexp_replace(text, '\\s', '', 'g')) ELSE 0.0 END)"
-    " + 0.15 * (CAST(list_sum(list_transform(string_split_regex(trim(text), '\\s+'),"
-    "   x -> len(x))) AS DOUBLE) / len(string_split_regex(trim(text), '\\s+'))))"
+    f" - 3.0 * ({_PUNCT_SQL})"
+    f" + 0.15 * ({_MEAN_TOKLEN_SQL}))"
 )
 
 _register(
@@ -3141,12 +3133,11 @@ def _x44(spark: SparkSession, sf: str) -> DataFrame:
     return X_sim.ann_recall(ann, exact, k=5)
 
 
-def _x44_sql() -> str:
-    bucket = _hyperplane_bucket_sql(n_planes=8, n_dims=64)
-    cos = (
-        "list_dot_product(a.v, b.v) / (sqrt(list_dot_product(a.v, a.v))"
-        " * sqrt(list_dot_product(b.v, b.v)))"
-    )
+def _bucket_recall_sql(bucket: str, q: str) -> str:
+    """Per-query recall@5 of the ANN that ranks only the embeddings sharing
+    the query's `bucket` (an expression over `v`), for the queries id < 10;
+    `q` names the CTE of exact-set sizes."""
+    cos = _cos_sql("a.v", "b.v")
     return (
         "WITH e AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v"
         f"  FROM embeddings WHERE {_EMB_OK}),"
@@ -3165,12 +3156,16 @@ def _x44_sql() -> str:
         "   FROM ex JOIN an USING (query_id, neighbor_id) GROUP BY 1),"
         # denominator = per-query exact-set size (== 5 whenever the corpus
         # holds >= 5 neighbors), matching similarity.ann_recall's contract
-        " q AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_exact"
+        f" {q} AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_exact"
         "   FROM ex GROUP BY 1)"
-        " SELECT q.query_id, CAST(coalesce(n_hits, 0) AS BIGINT) AS n_hits,"
+        f" SELECT {q}.query_id, CAST(coalesce(n_hits, 0) AS BIGINT) AS n_hits,"
         "  round(coalesce(n_hits, 0) / CAST(n_exact AS DOUBLE), 6) AS recall"
-        " FROM q LEFT JOIN hits USING (query_id)"
+        f" FROM {q} LEFT JOIN hits USING (query_id)"
     )
+
+
+def _x44_sql() -> str:
+    return _bucket_recall_sql(_hyperplane_bucket_sql(n_planes=8, n_dims=64), "q")
 
 
 _register("x44_ann_recall", _x44, _x44_sql())
@@ -3352,27 +3347,7 @@ def _s09(spark: SparkSession, sf: str) -> DataFrame:
     # watermark is the MIN of both sides — it would stall 3 h early and
     # withhold exactly the outer rows the cutoff was meant to protect. The
     # stream runs over everything; the cutoff applies to the DRAINED batch.
-    signups = (
-        stream_sf_table(spark, sf, "events")
-        .filter(F.col("event_type") == "signup")
-        .select(
-            F.col("user_id").alias("su_user"),
-            F.col("event_id").alias("signup_id"),
-            F.col("ts").alias("signup_ts"),
-        )
-        .withWatermark("signup_ts", "1 minute")
-    )
-    purchases = (
-        stream_sf_table(spark, sf, "events")
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("pu_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-            F.col("value"),
-        )
-        .withWatermark("purchase_ts", "1 minute")
-    )
+    signups, purchases = _signup_purchase_streams(spark, sf)
     joined = interval_join(
         signups, purchases, [("su_user", "pu_user")],
         "signup_ts", "purchase_ts", upper="2 hours", how="left_outer",
@@ -3626,20 +3601,9 @@ _register(
     f"  AND round(1.0 / (1.0 + exp(-{_X43_Z})) + 1e-9, 6) >= 0.5),"
     " canon AS (SELECT min(doc_id) AS doc_id FROM kept GROUP BY text),"
     " exd AS (SELECT k.* FROM kept k JOIN canon USING (doc_id)),"
-    " tok AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w FROM exd),"
-    " sh AS (SELECT DISTINCT doc_id AS id, array_to_string(w[i:i+2], ' ') AS shingle"
-    "        FROM tok, UNNEST(range(1, greatest(len(w)-2, 0)+1)) AS t(i)),"
-    f" sig AS (SELECT id, {_X02_SIGS} FROM sh GROUP BY id),"
-    f" bands AS ({_X02_BANDS}),"
-    " prs AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b"
-    "   FROM bands a JOIN bands b USING (band, band_hash) WHERE a.id < b.id),"
-    " edges AS (SELECT id_a AS src, id_b AS dst FROM prs"
-    "   UNION SELECT id_b, id_a FROM prs),"
-    " walk(id, lab) AS ("
-    "   SELECT src, src FROM edges"
-    "   UNION"
-    "   SELECT e.src, w.lab FROM walk w JOIN edges e ON e.dst = w.id),"
-    " cc AS (SELECT id, min(lab) AS cluster_id FROM walk GROUP BY id),"
+    f" {_shingle_sql('exd')},"
+    f" {_lsh_pairs_sql('prs')},"
+    f" {_cc_sql('prs', 'e')},"
     " nd AS (SELECT * FROM exd"
     "   WHERE doc_id NOT IN (SELECT id FROM cc WHERE id <> cluster_id)),"
     " ctok AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w FROM nd),"
@@ -3846,16 +3810,7 @@ _register(
     "   (ORDER BY key ASC NULLS FIRST, id ASC) AS rnk FROM nk),"
     " cand AS (SELECT a.id AS id_a, b.id AS id_b FROM r a JOIN r b"
     "   ON b.rnk > a.rnk AND b.rnk - a.rnk <= 9),"
-    f" {_SHINGLE_SQL},"
-    " sizes AS (SELECT id, count(*) AS n FROM sh GROUP BY id),"
-    " inter AS (SELECT c.id_a, c.id_b, count(*) AS ni FROM cand c"
-    "   JOIN sh a ON a.id = c.id_a"
-    "   JOIN sh b ON b.id = c.id_b AND b.shingle = a.shingle"
-    "   GROUP BY 1, 2)"
-    " SELECT id_a, id_b,"
-    "  round(CAST(ni AS DOUBLE) / (sa.n + sb.n - ni) + 1e-9, 6) AS jaccard"
-    " FROM inter JOIN sizes sa ON sa.id = id_a JOIN sizes sb ON sb.id = id_b"
-    " WHERE CAST(ni AS DOUBLE) / (sa.n + sb.n - ni) >= 0.3",
+    f" {_CAND_JACCARD_SQL}",
 )
 
 
@@ -3957,7 +3912,7 @@ def _x59(spark: SparkSession, sf: str) -> DataFrame:
 _register(
     "x59_near_dedup_keep_best",
     _x59,
-    _X14_CC_SQL.format(bands=_X02_BANDS)
+    _X14_CC_SQL
     + ", ranked AS (SELECT cc.id, row_number() OVER (PARTITION BY cluster_id"
     "    ORDER BY d.n_chars DESC, cc.id DESC) AS rn"
     "   FROM cc JOIN documents d ON d.doc_id = cc.id)"
@@ -4036,10 +3991,7 @@ def _x60(spark: SparkSession, sf: str) -> DataFrame:
 _register(
     "x60_cross_source_dups",
     _x60,
-    f"WITH {_SHINGLE_SQL}, sig AS (SELECT id, {_X02_SIGS} FROM sh GROUP BY id),"
-    f" bands AS ({_X02_BANDS}),"
-    " prs AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b"
-    "  FROM bands a JOIN bands b USING (band, band_hash) WHERE a.id < b.id)"
+    f"WITH {_SHINGLE_SQL}, {_lsh_pairs_sql('prs')}"
     " SELECT least(da.source, db.source) AS source_a,"
     "  greatest(da.source, db.source) AS source_b,"
     "  CAST(count(*) AS BIGINT) AS n_pairs"
@@ -4063,27 +4015,13 @@ def _x62(spark: SparkSession, sf: str) -> DataFrame:
         n_cells=8, n_probe=8, k=5, seed=42, max_iter=8,
         corpus_filter=F.col("label") % 2 == 0,
     )
-    return out.select(
-        "query_id",
-        "neighbor_id",
-        F.round("cosine", 6).alias("cosine"),
-        F.col("rank").cast("long").alias("rank"),
-    )
+    return _rounded_topk(out)
 
 
 _register(
     "x62_filtered_ann",
     _x62,
-    "WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv"
-    " FROM embeddings WHERE vec_id < 200),"
-    " c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv"
-    " FROM embeddings WHERE vec_id < 200 AND label % 2 = 0),"
-    f" s AS (SELECT query_id, neighbor_id, {_COS} AS cosine"
-    " FROM q, c WHERE query_id <> neighbor_id),"
-    " r AS (SELECT *, row_number() OVER (PARTITION BY query_id"
-    " ORDER BY cosine DESC, neighbor_id) AS rank FROM s)"
-    " SELECT query_id, neighbor_id, round(cosine, 6) AS cosine, rank"
-    " FROM r WHERE rank <= 5",
+    _cosine_topk_sql("vec_id < 200", "vec_id < 200 AND label % 2 = 0"),
 )
 
 
@@ -4117,10 +4055,7 @@ def _x61(spark: SparkSession, sf: str) -> DataFrame:
 _register(
     "x61_split_leakage",
     _x61,
-    f"WITH {_SHINGLE_SQL}, sig AS (SELECT id, {_X02_SIGS} FROM sh GROUP BY id),"
-    f" bands AS ({_X02_BANDS}),"
-    " prs AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b"
-    "  FROM bands a JOIN bands b USING (band, band_hash) WHERE a.id < b.id),"
+    f"WITH {_SHINGLE_SQL}, {_lsh_pairs_sql('prs')},"
     f" sp AS (SELECT doc_id, CASE WHEN {_X16_BUCKET_SQL} < 230 THEN 'train'"
     f"   WHEN {_X16_BUCKET_SQL} < 243 THEN 'val'"
     "   ELSE 'test' END AS split FROM documents)"
@@ -4147,12 +4082,14 @@ def _x63(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+# textstats' lowercase token array
+_LOWER_TOKS_SQL = "list_transform(string_split_regex(trim(text), '\\s+'), t -> lower(t))"
+
 _register(
     "x63_bigram_logprob",
     _x63,
     "WITH base AS (SELECT doc_id AS id,"
-    "   list_transform(string_split_regex(trim(text), '\\s+'),"
-    "    t -> lower(t)) AS toks"
+    f"   {_LOWER_TOKS_SQL} AS toks"
     "  FROM documents WHERE text IS NOT NULL),"
     " ui AS (SELECT id, unnest(toks) AS w FROM base),"
     " ui2 AS (SELECT * FROM ui WHERE w <> ''),"
@@ -4202,13 +4139,7 @@ def _x64_sql() -> str:
     return (
         "WITH RECURSIVE " + head[len("WITH "):]
         + ", prs AS (SELECT id_a, id_b FROM scored WHERE cosine > 0.25),"
-        " edges AS (SELECT id_a AS src, id_b AS dst FROM prs"
-        "  UNION SELECT id_b, id_a FROM prs),"
-        " walk(id, lab) AS ("
-        "  SELECT src, src FROM edges"
-        "  UNION"
-        "  SELECT e2.src, w.lab FROM walk w JOIN edges e2 ON e2.dst = w.id),"
-        " cc AS (SELECT id, min(lab) AS cluster_id FROM walk GROUP BY id)"
+        f" {_cc_sql('prs', 'e2')}"
         " SELECT vec_id FROM embeddings"
         " WHERE vec_id NOT IN (SELECT id FROM cc WHERE id <> cluster_id)"
     )
@@ -4263,16 +4194,7 @@ _register(
     "   ON b.rnk > a.rnk AND b.rnk - a.rnk <= 9"
     "  UNION SELECT a.id, b.id FROM r2 a JOIN r2 b"
     "   ON b.rnk > a.rnk AND b.rnk - a.rnk <= 9),"
-    f" {_SHINGLE_SQL},"
-    " sizes AS (SELECT id, count(*) AS n FROM sh GROUP BY id),"
-    " inter AS (SELECT c.id_a, c.id_b, count(*) AS ni FROM cand c"
-    "   JOIN sh a ON a.id = c.id_a"
-    "   JOIN sh b ON b.id = c.id_b AND b.shingle = a.shingle"
-    "   GROUP BY 1, 2)"
-    " SELECT id_a, id_b,"
-    "  round(CAST(ni AS DOUBLE) / (sa.n + sb.n - ni) + 1e-9, 6) AS jaccard"
-    " FROM inter JOIN sizes sa ON sa.id = id_a JOIN sizes sb ON sb.id = id_b"
-    " WHERE CAST(ni AS DOUBLE) / (sa.n + sb.n - ni) >= 0.3",
+    f" {_CAND_JACCARD_SQL}",
 )
 
 
@@ -4684,7 +4606,7 @@ def _x72(spark: SparkSession, sf: str) -> DataFrame:
 _register(
     "x72_cluster_size_histogram",
     _x72,
-    _X14_CC_SQL.format(bands=_X02_BANDS)
+    _X14_CC_SQL
     + ", sizes AS (SELECT cluster_id, count(*) AS sz FROM cc GROUP BY 1)"
     " SELECT CAST(power(2.0, floor(log2(sz))) AS BIGINT) AS size_bucket,"
     "  CAST(count(*) AS BIGINT) AS n_clusters,"
@@ -5020,11 +4942,9 @@ _register(
     "WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv"
     "  FROM embeddings WHERE vec_id < 200),"
     " s AS (SELECT a.query_id, b.query_id AS neighbor_id,"
-    "   list_dot_product(a.qv, b.qv) / (sqrt(list_dot_product(a.qv, a.qv))"
-    "    * sqrt(list_dot_product(b.qv, b.qv))) AS cosine"
+    f"   {_cos_sql('a.qv', 'b.qv')} AS cosine"
     "  FROM q a, q b WHERE a.query_id <> b.query_id),"
-    " r AS (SELECT *, row_number() OVER (PARTITION BY query_id"
-    "   ORDER BY cosine DESC, neighbor_id) AS rank FROM s),"
+    f" {_TOPK_RANK_SQL},"
     " e AS (SELECT query_id, neighbor_id FROM r WHERE rank <= 5),"
     " m AS (SELECT a.query_id AS ida, a.neighbor_id AS idb FROM e a"
     "  JOIN e b ON a.query_id = b.neighbor_id AND a.neighbor_id = b.query_id"
@@ -5118,17 +5038,11 @@ def _x81(spark: SparkSession, sf: str) -> DataFrame:
 _register(
     "x81_lsh_dedup_eval",
     _x81,
-    f"WITH {_SHINGLE_SQL},"
-    " sizes AS (SELECT id, count(*) AS n FROM sh GROUP BY id),"
-    " inter AS (SELECT a.id AS id_a, b.id AS id_b, count(*) AS ni"
-    "  FROM sh a JOIN sh b USING (shingle) WHERE a.id < b.id GROUP BY 1, 2),"
+    f"WITH {_SHINGLE_SQL}, {_OVERLAP_SQL},"
     " truth AS (SELECT id_a, id_b FROM inter"
     "  JOIN sizes sa ON sa.id = id_a JOIN sizes sb ON sb.id = id_b"
     "  WHERE CAST(ni AS DOUBLE) / (sa.n + sb.n - ni) >= 0.5),"
-    f" sig AS (SELECT id, {_X02_SIGS} FROM sh GROUP BY id),"
-    f" bands AS ({_X02_BANDS}),"
-    " lsh AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b"
-    "  FROM bands a JOIN bands b USING (band, band_hash) WHERE a.id < b.id),"
+    f" {_lsh_pairs_sql('lsh')},"
     " j AS (SELECT coalesce(t.id_a, l.id_a) AS ia,"
     "   t.id_a IS NOT NULL AS in_t, l.id_a IS NOT NULL AS in_l"
     "  FROM truth t FULL JOIN lsh l ON t.id_a = l.id_a AND t.id_b = l.id_b),"
@@ -5333,10 +5247,7 @@ def _x83_oracle() -> str:
             f" JOIN deg ON deg.src = ed.src GROUP BY ed.dst)"
         )
     return (
-        f"WITH {_SHINGLE_SQL}, sig AS (SELECT id, {_X02_SIGS} FROM sh GROUP BY id),"
-        f" bands AS ({_X02_BANDS}),"
-        " pairs AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b"
-        "  FROM bands a JOIN bands b USING (band, band_hash) WHERE a.id < b.id),"
+        f"WITH {_SHINGLE_SQL}, {_lsh_pairs_sql('pairs')},"
         + ", ".join(ctes)
         + " SELECT id, round(rank + 1e-9, 6) AS rank FROM pr5"
     )
@@ -5710,23 +5621,7 @@ def _s14(spark: SparkSession, sf: str) -> DataFrame:
     return X_sk.histogram_readout(hist, "event_type", resolution=100, qs=(0.5, 0.9, 0.99))
 
 
-_register(
-    "s14_stream_percentiles",
-    _s14,
-    "WITH bins AS (SELECT event_type,"
-    "   CAST(round(\"value\" * 100, 0) AS BIGINT) AS bin, count(*) AS n"
-    "  FROM events WHERE \"value\" IS NOT NULL GROUP BY 1, 2),"
-    " cum AS (SELECT event_type, bin, n,"
-    "   sum(n) OVER (PARTITION BY event_type ORDER BY bin"
-    "    ROWS UNBOUNDED PRECEDING) AS c,"
-    "   sum(n) OVER (PARTITION BY event_type) AS tot"
-    "  FROM bins)"
-    " SELECT event_type, CAST(max(tot) AS BIGINT) AS n,"
-    "  round(min(CASE WHEN c >= ceil(0.5 * tot) THEN bin END) / 100.0, 6) AS p50,"
-    "  round(min(CASE WHEN c >= ceil(0.9 * tot) THEN bin END) / 100.0, 6) AS p90,"
-    "  round(min(CASE WHEN c >= ceil(0.99 * tot) THEN bin END) / 100.0, 6) AS p99"
-    " FROM cum GROUP BY 1",
-)
+_register("s14_stream_percentiles", _s14, _ORACLES["x85_histogram_quantiles"])
 
 
 def _x90(spark: SparkSession, sf: str) -> DataFrame:
@@ -5916,10 +5811,7 @@ def _x92(spark: SparkSession, sf: str) -> DataFrame:
 _register(
     "x92_source_report_card",
     _x92,
-    f"WITH {_SHINGLE_SQL}, sig AS (SELECT id, {_X02_SIGS} FROM sh GROUP BY id),"
-    f" bands AS ({_X02_BANDS}),"
-    " pairs AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b"
-    "  FROM bands a JOIN bands b USING (band, band_hash) WHERE a.id < b.id),"
+    f"WITH {_SHINGLE_SQL}, {_lsh_pairs_sql('pairs')},"
     " ch AS (SELECT source, unnest(string_split(text, '')) AS c FROM documents),"
     " ccounts AS (SELECT source, c, count(*) AS n FROM ch WHERE c <> ''"
     "  GROUP BY 1, 2),"
@@ -6025,14 +5917,8 @@ def _x93(spark: SparkSession, sf: str) -> DataFrame:
 _register(
     "x93_minhash_calibration",
     _x93,
-    f"WITH {_SHINGLE_SQL}, sig AS (SELECT id, {_X02_SIGS} FROM sh GROUP BY id),"
-    f" bands AS ({_X02_BANDS}),"
-    " cand AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b"
-    "  FROM bands a JOIN bands b USING (band, band_hash) WHERE a.id < b.id),"
-    " sizes AS (SELECT id, count(*) AS n FROM sh GROUP BY id),"
-    " inter AS (SELECT c.id_a, c.id_b, count(*) AS ni FROM cand c"
-    "  JOIN sh a ON a.id = c.id_a JOIN sh b ON b.id = c.id_b"
-    "   AND b.shingle = a.shingle GROUP BY 1, 2),"
+    f"WITH {_SHINGLE_SQL}, {_lsh_pairs_sql('cand')},"
+    f" {_CAND_OVERLAP_SQL},"
     " exact AS (SELECT id_a, id_b,"
     "   CAST(ni AS DOUBLE) / (sa.n + sb.n - ni) AS jac FROM inter"
     "  JOIN sizes sa ON sa.id = id_a JOIN sizes sb ON sb.id = id_b),"
@@ -6573,10 +6459,7 @@ def _x100(spark: SparkSession, sf: str) -> DataFrame:
 _register(
     "x100_dup_triangles",
     _x100,
-    f"WITH {_SHINGLE_SQL}, sig AS (SELECT id, {_X02_SIGS} FROM sh GROUP BY id),"
-    f" bands AS ({_X02_BANDS}),"
-    " pairs AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b"
-    "  FROM bands a JOIN bands b USING (band, band_hash) WHERE a.id < b.id),"
+    f"WITH {_SHINGLE_SQL}, {_lsh_pairs_sql('pairs')},"
     " tri AS (SELECT p1.id_a AS x, p1.id_b AS y, p2.id_b AS z"
     "  FROM pairs p1 JOIN pairs p2 ON p2.id_a = p1.id_b"
     "  JOIN pairs p3 ON p3.id_a = p1.id_a AND p3.id_b = p2.id_b),"
@@ -6649,7 +6532,7 @@ _X101_BUCKET = (
 _register(
     "x101_leakage_free_split",
     _x101,
-    _X14_CC_SQL.format(bands=_X02_BANDS)
+    _X14_CC_SQL
     + ", canon AS (SELECT d.doc_id, coalesce(cc.cluster_id, d.doc_id) AS split_key"
     "   FROM documents d LEFT JOIN cc ON cc.id = d.doc_id),"
     f" lab AS (SELECT doc_id, split_key, {_X101_BUCKET} AS bucket FROM canon)"
@@ -6733,10 +6616,7 @@ def _x102(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _x102_sql() -> str:
-    cos = (
-        "list_dot_product(a.v, b.v) / (sqrt(list_dot_product(a.v, a.v))"
-        " * sqrt(list_dot_product(b.v, b.v)))"
-    )
+    cos = _cos_sql("a.v", "b.v")
 
     def topk(name: str, src: str) -> str:
         return (
@@ -6813,7 +6693,7 @@ def _x103(spark: SparkSession, sf: str) -> DataFrame:
 _register(
     "x103_effective_tokens",
     _x103,
-    _X14_CC_SQL.format(bands=_X02_BANDS)
+    _X14_CC_SQL
     + ", sz AS (SELECT cluster_id, count(*) AS s FROM cc GROUP BY 1),"
     " mem AS (SELECT cc.id AS doc_id, sz.s FROM cc JOIN sz USING (cluster_id)),"
     " t AS (SELECT d.doc_id, d.source,"
@@ -6901,7 +6781,7 @@ def _x104(spark: SparkSession, sf: str) -> DataFrame:
 _register(
     "x104_dup_concentration",
     _x104,
-    _X14_CC_SQL.format(bands=_X02_BANDS)
+    _X14_CC_SQL
     + ", szs AS (SELECT cluster_id, count(*) AS s FROM cc GROUP BY 1),"
     " h0 AS (SELECT s, CAST(count(*) AS BIGINT) AS c FROM szs GROUP BY 1),"
     " ones AS (SELECT 1 AS s, CAST((SELECT count(*) FROM documents)"
@@ -6978,14 +6858,8 @@ def _x105(spark: SparkSession, sf: str) -> DataFrame:
 _register(
     "x105_quality_quantile_norm",
     _x105,
-    "WITH q AS (SELECT doc_id, source, round("
-    f" 0.4 * least(({_RATIO_SQL.format(lst=_EN_LIST)}) / 0.25, 1.0)"
-    " + 0.3 * (1.0 - least((CASE WHEN len(regexp_replace(text, '\\s', '', 'g')) > 0"
-    "   THEN CAST(len(regexp_replace(text, '[A-Za-z0-9\\s]', '', 'g')) AS DOUBLE)"
-    "        / len(regexp_replace(text, '\\s', '', 'g')) ELSE 0.0 END) * 5.0, 1.0))"
-    " + 0.3 * least((CAST(list_sum(list_transform(string_split_regex(trim(text), '\\s+'),"
-    "   x -> len(x))) AS DOUBLE) / len(string_split_regex(trim(text), '\\s+'))) / 8.0, 1.0)"
-    " + 1e-9, 6) AS quality FROM documents"
+    f"WITH q AS (SELECT doc_id, source, round({_QUALITY_SQL} + 1e-9, 6) AS quality"
+    " FROM documents"
     "  WHERE text IS NOT NULL AND source IS NOT NULL)"
     " SELECT doc_id, source, quality,"
     "  round(percent_rank() OVER (PARTITION BY source ORDER BY quality), 6)"
@@ -7057,10 +6931,7 @@ def _x106(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _x106_sql() -> str:
-    cos = (
-        "list_dot_product(a.v, b.v) / (sqrt(list_dot_product(a.v, a.v))"
-        " * sqrt(list_dot_product(b.v, b.v)))"
-    )
+    cos = _cos_sql("a.v", "b.v")
     return (
         f"WITH {_SHINGLE_SQL},"
         " e AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v"
@@ -7593,84 +7464,67 @@ def _x111(spark: SparkSession, sf: str) -> DataFrame:
 _register(
     "x111_dup_embedding_consistency",
     _x111,
-    f"WITH {_SHINGLE_SQL}, sig AS (SELECT id, {_X02_SIGS} FROM sh GROUP BY id),"
-    f" bands AS ({_X02_BANDS}),"
-    " pairs AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b"
-    "  FROM bands a JOIN bands b USING (band, band_hash) WHERE a.id < b.id),"
+    f"WITH {_SHINGLE_SQL}, {_lsh_pairs_sql('pairs')},"
     " e AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v"
     "  FROM embeddings)"
     " SELECT id_a, id_b,"
-    "  round(list_dot_product(ea.v, eb.v) / (sqrt(list_dot_product(ea.v, ea.v))"
-    "   * sqrt(list_dot_product(eb.v, eb.v))) + 1e-9, 6) AS emb_cosine"
+    f"  round({_cos_sql('ea.v', 'eb.v')} + 1e-9, 6) AS emb_cosine"
     " FROM pairs JOIN e ea ON ea.id = id_a JOIN e eb ON eb.id = id_b",
 )
 
 
-def _x112(spark: SparkSession, sf: str) -> DataFrame:
-    """Content-defined chunking (storage-dedup style): a chunk boundary
-    opens wherever md5(word-4-gram) % 16 == 0, so boundaries move WITH
-    the content — insert one word near the head of a doc and only the
-    chunk containing the edit changes its digest, where x24's fixed-size
-    chunking re-digests everything downstream (the whole point of CDC:
-    rsync/LBFS/backup dedup, and incremental re-embedding of edited
-    docs). Output is chunk grain: (doc_id, chunk_id, n_tokens,
-    chunk_md5). Expected chunk length is the modulus (16 words); the
-    segment id is a running boundary count over a doc-keyed window
-    (corpus-cardinality key, lint-fine)."""
-    docs = read_sf_table(spark, sf, "documents")
-    grams = docs.select(
+def _positioned_words(docs: DataFrame) -> DataFrame:
+    """(doc_id, pos, w): one row per whitespace token, pos from 0."""
+    return docs.select(
         "doc_id",
         F.posexplode(F.split(F.trim("text"), r"\s+")).alias("pos", "w"),
     )
-    toks = grams.withColumn(
+
+
+def _words_md5() -> Column:
+    """md5 of a group's words `w` joined by spaces in `pos` order
+    (collect_list order is partition-merge-dependent, so sort first)."""
+    return F.md5(
+        F.array_join(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("pos", "w"))),
+                lambda s: s.getField("w"),
+            ),
+            " ",
+        )
+    )
+
+
+def _cdc_segments(docs: DataFrame) -> DataFrame:
+    """x112's content-defined chunks at token grain: (doc_id, pos, w) with
+    `chunk_id`, where a chunk opens after every word 4-gram whose md5
+    prefix is 0 mod 16."""
+    wdoc = Window.partitionBy("doc_id").orderBy("pos")
+    toks = _positioned_words(docs).withColumn(
         "__g4",
         F.concat_ws(
-            " ",
-            "w",
-            F.lead("w", 1).over(
-                Window.partitionBy("doc_id").orderBy("pos")
-            ),
-            F.lead("w", 2).over(Window.partitionBy("doc_id").orderBy("pos")),
-            F.lead("w", 3).over(Window.partitionBy("doc_id").orderBy("pos")),
+            " ", "w", F.lead("w", 1).over(wdoc), F.lead("w", 2).over(wdoc),
+            F.lead("w", 3).over(wdoc),
         ),
     ).withColumn(
         "__brk",
         (
             (F.conv(F.substring(F.md5("__g4"), 1, 4), 16, 10) % 16 == 0)
-            & (F.lead("w", 3).over(Window.partitionBy("doc_id").orderBy("pos")).isNotNull())
+            & (F.lead("w", 3).over(wdoc).isNotNull())
         ).cast("long"),
     )
-    seg = toks.withColumn(
+    return toks.withColumn(
         "chunk_id",
         F.coalesce(
-            F.sum("__brk").over(
-                Window.partitionBy("doc_id")
-                .orderBy("pos")
-                .rowsBetween(Window.unboundedPreceding, -1)
-            ),
+            F.sum("__brk").over(wdoc.rowsBetween(Window.unboundedPreceding, -1)),
             F.lit(0),
         ),
     )
-    return seg.groupBy("doc_id", "chunk_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_tokens"),
-        # collect_list order is partition-merge-dependent: sort the
-        # (pos, w) structs before joining or the digest is nondeterministic
-        F.md5(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "w"))),
-                    lambda s: s.getField("w"),
-                ),
-                " ",
-            )
-        ).alias("chunk_md5"),
-    )
 
 
-_register(
-    "x112_cdc_chunking",
-    _x112,
-    r"WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w"
+# x112's chunks in SQL: CTE `s(doc_id, pos, wd, chunk_id)`
+_CDC_SQL = (
+    r"t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w"
     "  FROM documents),"
     " g AS (SELECT doc_id, i.pos, w[i.pos] AS wd,"
     "   CASE WHEN i.pos + 3 <= len(w) THEN"
@@ -7685,6 +7539,31 @@ _register(
     "   coalesce(sum(brk) OVER (PARTITION BY doc_id ORDER BY pos"
     "    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS chunk_id"
     "  FROM b)"
+)
+
+
+def _x112(spark: SparkSession, sf: str) -> DataFrame:
+    """Content-defined chunking (storage-dedup style): a chunk boundary
+    opens wherever md5(word-4-gram) % 16 == 0, so boundaries move WITH
+    the content — insert one word near the head of a doc and only the
+    chunk containing the edit changes its digest, where x24's fixed-size
+    chunking re-digests everything downstream (the whole point of CDC:
+    rsync/LBFS/backup dedup, and incremental re-embedding of edited
+    docs). Output is chunk grain: (doc_id, chunk_id, n_tokens,
+    chunk_md5). Expected chunk length is the modulus (16 words); the
+    segment id is a running boundary count over a doc-keyed window
+    (corpus-cardinality key, lint-fine)."""
+    seg = _cdc_segments(read_sf_table(spark, sf, "documents"))
+    return seg.groupBy("doc_id", "chunk_id").agg(
+        F.count(F.lit(1)).cast("long").alias("n_tokens"),
+        _words_md5().alias("chunk_md5"),
+    )
+
+
+_register(
+    "x112_cdc_chunking",
+    _x112,
+    f"WITH {_CDC_SQL}"
     " SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id,"
     "  CAST(count(*) AS BIGINT) AS n_tokens,"
     "  md5(string_agg(wd, ' ' ORDER BY pos)) AS chunk_md5"
@@ -7915,8 +7794,7 @@ _register(
     "    p -> abs(p[1] - p[2]))) AS mx_err,"
     "   list_sum(list_transform(list_zip(v, rv),"
     "    p -> (p[1] - p[2]) * (p[1] - p[2]))) / len(v) AS mse,"
-    "   list_dot_product(v, rv) / (sqrt(list_dot_product(v, v))"
-    "    * sqrt(list_dot_product(rv, rv))) AS cosr"
+    f"   {_cos_sql('v', 'rv')} AS cosr"
     "  FROM r)"
     " SELECT source, CAST(count(*) AS BIGINT) AS n_vecs,"
     "  round(max(mx_err) + 1e-9, 6) AS max_abs_err,"
@@ -8007,16 +7885,7 @@ def _x116(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _x116_sql() -> str:
-    qual = (
-        "round("
-        f" 0.4 * least(({_RATIO_SQL.format(lst=_EN_LIST)}) / 0.25, 1.0)"
-        " + 0.3 * (1.0 - least((CASE WHEN len(regexp_replace(text, '\\s', '', 'g')) > 0"
-        "   THEN CAST(len(regexp_replace(text, '[A-Za-z0-9\\s]', '', 'g')) AS DOUBLE)"
-        "        / len(regexp_replace(text, '\\s', '', 'g')) ELSE 0.0 END) * 5.0, 1.0))"
-        " + 0.3 * least((CAST(list_sum(list_transform(string_split_regex(trim(text), '\\s+'),"
-        "   x -> len(x))) AS DOUBLE) / len(string_split_regex(trim(text), '\\s+'))) / 8.0, 1.0)"
-        " + 1e-9, 6)"
-    )
+    qual = f"round({_QUALITY_SQL} + 1e-9, 6)"
     return (
         f"WITH sc AS (SELECT source, {qual} AS q FROM documents),"
         " per AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs,"
@@ -8106,42 +7975,9 @@ def _x118(spark: SparkSession, sf: str) -> DataFrame:
     so pair fan-out is sum-of-df^2 over CAPPED dfs. Catches partial
     plagiarism/mirroring that whole-doc digests miss and span-shingles
     (x47) price at much finer grain."""
-    docs = read_sf_table(spark, sf, "documents")
-    grams = docs.select(
-        "doc_id",
-        F.posexplode(F.split(F.trim("text"), r"\s+")).alias("pos", "w"),
-    )
-    wdoc = Window.partitionBy("doc_id").orderBy("pos")
-    toks = grams.withColumn(
-        "__g4",
-        F.concat_ws(
-            " ", "w", F.lead("w", 1).over(wdoc), F.lead("w", 2).over(wdoc),
-            F.lead("w", 3).over(wdoc),
-        ),
-    ).withColumn(
-        "__brk",
-        (
-            (F.conv(F.substring(F.md5("__g4"), 1, 4), 16, 10) % 16 == 0)
-            & (F.lead("w", 3).over(wdoc).isNotNull())
-        ).cast("long"),
-    )
-    seg = toks.withColumn(
-        "chunk_id",
-        F.coalesce(
-            F.sum("__brk").over(wdoc.rowsBetween(Window.unboundedPreceding, -1)),
-            F.lit(0),
-        ),
-    )
+    seg = _cdc_segments(read_sf_table(spark, sf, "documents"))
     chunks = seg.groupBy("doc_id", "chunk_id").agg(
-        F.md5(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "w"))),
-                    lambda s: s.getField("w"),
-                ),
-                " ",
-            )
-        ).alias("h")
+        _words_md5().alias("h")
     ).select("doc_id", "h").distinct()
     dfreq = chunks.groupBy("h").agg(F.count(F.lit(1)).alias("__df"))
     keep = chunks.join(
@@ -8161,21 +7997,7 @@ def _x118(spark: SparkSession, sf: str) -> DataFrame:
 _register(
     "x118_shared_chunks",
     _x118,
-    r"WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w"
-    "  FROM documents),"
-    " g AS (SELECT doc_id, i.pos, w[i.pos] AS wd,"
-    "   CASE WHEN i.pos + 3 <= len(w) THEN"
-    "    array_to_string(w[i.pos:i.pos+3], ' ') END AS g4"
-    "  FROM t, UNNEST(range(1, len(w) + 1)) AS i(pos)),"
-    " b AS (SELECT doc_id, pos, wd,"
-    "   CASE WHEN g4 IS NOT NULL AND"
-    "    CAST(('0x' || substr(md5(g4), 1, 4)) AS BIGINT) % 16 = 0"
-    "    THEN 1 ELSE 0 END AS brk"
-    "  FROM g),"
-    " s AS (SELECT doc_id, pos, wd,"
-    "   coalesce(sum(brk) OVER (PARTITION BY doc_id ORDER BY pos"
-    "    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS chunk_id"
-    "  FROM b),"
+    f"WITH {_CDC_SQL},"
     " ch AS (SELECT DISTINCT doc_id,"
     "   md5(string_agg(wd, ' ' ORDER BY pos)) AS h"
     "  FROM s GROUP BY doc_id, chunk_id),"
@@ -8505,9 +8327,8 @@ def _x123(spark: SparkSession, sf: str) -> DataFrame:
 
 def _x123_sql(k: int = 3, rounds: int = 12) -> str:
     ctes = [
-        f"{_SHINGLE_SQL}",
-        f"sig AS (SELECT id, {_X02_SIGS} FROM sh GROUP BY id)",
-        f"bands AS ({_X02_BANDS})",
+        _SHINGLE_SQL,
+        _LSH_BANDS_SQL,
         "e0 AS MATERIALIZED (SELECT DISTINCT a.id AS a, b.id AS b"
         "  FROM bands x JOIN bands y USING (band, band_hash),"
         "  LATERAL (SELECT least(x.id, y.id) AS id) a,"
@@ -8680,10 +8501,7 @@ def _x125(spark: SparkSession, sf: str) -> DataFrame:
 _register(
     "x125_source_modularity",
     _x125,
-    f"WITH {_SHINGLE_SQL}, sig AS (SELECT id, {_X02_SIGS} FROM sh GROUP BY id),"
-    f" bands AS ({_X02_BANDS}),"
-    " pairs AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b"
-    "  FROM bands a JOIN bands b USING (band, band_hash) WHERE a.id < b.id),"
+    f"WITH {_SHINGLE_SQL}, {_lsh_pairs_sql('pairs')},"
     " e AS (SELECT p.id_a, p.id_b, da.source AS sa, db.source AS sb"
     "  FROM pairs p JOIN documents da ON da.doc_id = p.id_a"
     "  JOIN documents db ON db.doc_id = p.id_b),"
@@ -8747,40 +8565,13 @@ def _x126(spark: SparkSession, sf: str) -> DataFrame:
 
 def _x126_sql() -> str:
     signs = _jl_signs()
-    cos = (
-        "list_dot_product(a.v, b.v) / (sqrt(list_dot_product(a.v, a.v))"
-        " * sqrt(list_dot_product(b.v, b.v)))"
-    )
     bucket = " + ".join(
         "(CASE WHEN list_dot_product(v, ["
         + ", ".join(f"{c!r}" for c in signs[o])
         + f"]) >= 0 THEN {1 << o} ELSE 0 END)"
         for o in range(4)
     )
-    return (
-        "WITH e AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v"
-        f"  FROM embeddings WHERE {_EMB_OK}),"
-        f" bk AS (SELECT id, v, {bucket} AS bucket FROM e),"
-        f" es AS (SELECT a.id AS query_id, b.id AS neighbor_id, {cos} AS cosine"
-        "   FROM e a, e b WHERE a.id < 10 AND a.id <> b.id),"
-        " er AS (SELECT query_id, neighbor_id, row_number() OVER ("
-        "   PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rnk"
-        "  FROM es),"
-        " ex AS (SELECT query_id, neighbor_id FROM er WHERE rnk <= 5),"
-        f" ans AS (SELECT a.id AS query_id, b.id AS neighbor_id, {cos} AS cosine"
-        "   FROM bk a JOIN bk b USING (bucket) WHERE a.id < 10 AND a.id <> b.id),"
-        " anr AS (SELECT query_id, neighbor_id, row_number() OVER ("
-        "   PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rnk"
-        "  FROM ans),"
-        " an AS (SELECT query_id, neighbor_id FROM anr WHERE rnk <= 5),"
-        " hits AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_hits"
-        "   FROM ex JOIN an USING (query_id, neighbor_id) GROUP BY 1),"
-        " qd AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_exact"
-        "   FROM ex GROUP BY 1)"
-        " SELECT qd.query_id, CAST(coalesce(n_hits, 0) AS BIGINT) AS n_hits,"
-        "  round(coalesce(n_hits, 0) / CAST(n_exact AS DOUBLE), 6) AS recall"
-        " FROM qd LEFT JOIN hits USING (query_id)"
-    )
+    return _bucket_recall_sql(bucket, "qd")
 
 
 _register("x126_ann_serving_chain", _x126, _x126_sql())
@@ -8845,8 +8636,7 @@ def _x127_sql() -> str:
         " tr AS (SELECT id_a, id_b FROM itr"
         "  JOIN szs sa ON sa.id = id_a JOIN szs sb ON sb.id = id_b"
         "  WHERE CAST(i AS DOUBLE) / (sa.m + sb.m - i) >= 0.5),"
-        f" sig AS (SELECT id, {_X02_SIGS} FROM sh GROUP BY id),"
-        f" bands AS ({_X02_BANDS}),"
+        f" {_LSH_BANDS_SQL},"
         " lp AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b"
         "  FROM bands a JOIN bands b USING (band, band_hash)"
         "  WHERE a.id < b.id AND a.id < 300 AND b.id < 300),"
@@ -8923,16 +8713,7 @@ def _x128(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _x128_sql() -> str:
-    qual = (
-        "round("
-        f" 0.4 * least(({_RATIO_SQL.format(lst=_EN_LIST)}) / 0.25, 1.0)"
-        " + 0.3 * (1.0 - least((CASE WHEN len(regexp_replace(text, '\\s', '', 'g')) > 0"
-        "   THEN CAST(len(regexp_replace(text, '[A-Za-z0-9\\s]', '', 'g')) AS DOUBLE)"
-        "        / len(regexp_replace(text, '\\s', '', 'g')) ELSE 0.0 END) * 5.0, 1.0))"
-        " + 0.3 * least((CAST(list_sum(list_transform(string_split_regex(trim(text), '\\s+'),"
-        "   x -> len(x))) AS DOUBLE) / len(string_split_regex(trim(text), '\\s+'))) / 8.0, 1.0)"
-        " + 1e-9, 6)"
-    )
+    qual = f"round({_QUALITY_SQL} + 1e-9, 6)"
     bucket = (
         "((strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 16"
         " + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1))"
@@ -9195,19 +8976,12 @@ def _x130(spark: SparkSession, sf: str) -> DataFrame:
 _register(
     "x130_dedup_impact",
     _x130,
-    _X14_CC_SQL.format(bands=_X02_BANDS)
+    _X14_CC_SQL
     + ", kept AS (SELECT doc_id FROM documents WHERE doc_id NOT IN"
     "   (SELECT id FROM cc WHERE id <> cluster_id)),"
     " b AS (SELECT d.source, d.doc_id,"
     "   CAST(len(string_split_regex(trim(d.text), '\\s+')) AS BIGINT) AS t,"
-    "   round("
-    f" 0.4 * least(({_RATIO_SQL.format(lst=_EN_LIST)}) / 0.25, 1.0)"
-    " + 0.3 * (1.0 - least((CASE WHEN len(regexp_replace(text, '\\s', '', 'g')) > 0"
-    "   THEN CAST(len(regexp_replace(text, '[A-Za-z0-9\\s]', '', 'g')) AS DOUBLE)"
-    "        / len(regexp_replace(text, '\\s', '', 'g')) ELSE 0.0 END) * 5.0, 1.0))"
-    " + 0.3 * least((CAST(list_sum(list_transform(string_split_regex(trim(text), '\\s+'),"
-    "   x -> len(x))) AS DOUBLE) / len(string_split_regex(trim(text), '\\s+'))) / 8.0, 1.0)"
-    "   + 1e-9, 6) AS q,"
+    f"   round({_QUALITY_SQL} + 1e-9, 6) AS q,"
     "   CASE WHEN k.doc_id IS NOT NULL THEN 1 ELSE 0 END AS kept"
     "  FROM documents d LEFT JOIN kept k ON k.doc_id = d.doc_id)"
     " SELECT source, CAST(count(*) AS BIGINT) AS n_docs,"
@@ -9372,6 +9146,42 @@ def _x132_sql() -> str:
 _register("x132_cms_error_profile", _x132, _x132_sql())
 
 
+def _synth_media(docs: DataFrame, payload: Callable[..., bytes]) -> DataFrame:
+    """Media rows (doc_id, payload) built executor-side, one per row of
+    `docs`, whose first column is doc_id: `payload` gets the row's values
+    as ints and returns the encoded bytes."""
+
+    def synth(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            yield pd.DataFrame(
+                [(int(row[0]), payload(*map(int, row))) for row in pdf.itertuples(index=False)],
+                columns=["doc_id", "payload"],
+            )
+
+    return docs.mapInPandas(
+        synth,
+        T.StructType(
+            [
+                T.StructField("doc_id", T.LongType()),
+                T.StructField("payload", T.BinaryType()),
+            ]
+        ),
+    )
+
+
+def _decoded(media: DataFrame) -> DataFrame:
+    """multimodal.decode_media's rows, mean intensity rounded to 6 places."""
+    return X_mm.decode_media(media).select(
+        "doc_id",
+        "width",
+        "height",
+        "n_channels",
+        F.round("mean_intensity", 6).alias("mean_intensity"),
+    )
+
+
 def _x133(spark: SparkSession, sf: str) -> DataFrame:
     """Audio metadata pipeline: deterministic WAV payloads synthesized
     per doc (rate 8 kHz, channels = 1 + doc_id%2, 16-bit, n_chars
@@ -9381,47 +9191,25 @@ def _x133(spark: SparkSession, sf: str) -> DataFrame:
     hash mismatch (the x11 synthesize-then-run move, now for audio).
     Payloads are built and parsed executor-side (declared Arrow
     surfaces); only the metadata rows move."""
-    import pandas as pd_  # noqa: F401
-
     docs = read_sf_table(spark, sf, "documents").select("doc_id", "n_chars")
 
-    def synth(batches):
-        import pandas as pd
+    def wav(doc_id: int, n_chars: int) -> bytes:
+        ch, rate, bits = 1 + doc_id % 2, 8000, 16
+        fmt = (
+            (1).to_bytes(2, "little") + ch.to_bytes(2, "little")
+            + rate.to_bytes(4, "little")
+            + (rate * ch * bits // 8).to_bytes(4, "little")
+            + (ch * bits // 8).to_bytes(2, "little")
+            + bits.to_bytes(2, "little")
+        )
+        data = b"\x00" * (n_chars * ch * bits // 8)
+        chunks = (
+            b"fmt " + len(fmt).to_bytes(4, "little") + fmt
+            + b"data" + len(data).to_bytes(4, "little") + data
+        )
+        return b"RIFF" + (4 + len(chunks)).to_bytes(4, "little") + b"WAVE" + chunks
 
-        for pdf in batches:
-            rows = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                ch = 1 + int(doc_id) % 2
-                rate, bits = 8000, 16
-                n_samples = int(n_chars)
-                fmt = (
-                    (1).to_bytes(2, "little") + ch.to_bytes(2, "little")
-                    + rate.to_bytes(4, "little")
-                    + (rate * ch * bits // 8).to_bytes(4, "little")
-                    + (ch * bits // 8).to_bytes(2, "little")
-                    + bits.to_bytes(2, "little")
-                )
-                data = b"\x00" * (n_samples * ch * bits // 8)
-                chunks = (
-                    b"fmt " + len(fmt).to_bytes(4, "little") + fmt
-                    + b"data" + len(data).to_bytes(4, "little") + data
-                )
-                payload = (
-                    b"RIFF" + (4 + len(chunks)).to_bytes(4, "little")
-                    + b"WAVE" + chunks
-                )
-                rows.append((int(doc_id), payload))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    media = docs.mapInPandas(
-        synth,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType()),
-                T.StructField("payload", T.BinaryType()),
-            ]
-        ),
-    )
+    media = _synth_media(docs, wav)
     out = X_mm.audio_meta(media)
     return out.select(
         "doc_id",
@@ -9451,52 +9239,36 @@ def _x134(spark: SparkSession, sf: str) -> DataFrame:
     (multimodal.video_meta); oracle from construction params."""
     docs = read_sf_table(spark, sf, "documents").select("doc_id", "n_chars")
 
-    def synth(batches):
-        import pandas as pd
+    def box(typ, payload):
+        return (8 + len(payload)).to_bytes(4, "big") + typ + payload
 
-        def box(typ, payload):
-            return (8 + len(payload)).to_bytes(4, "big") + typ + payload
+    def mp4(doc_id: int, dur: int) -> bytes:
+        w, h = 160 + (doc_id % 8) * 16, 120 + (doc_id % 8) * 16
+        v1 = doc_id % 3 == 0
+        if v1:
+            mvhd = (
+                bytes([1, 0, 0, 0]) + b"\x00" * 16
+                + (600).to_bytes(4, "big") + dur.to_bytes(8, "big")
+                + b"\x00" * 80
+            )
+            tkhd = (
+                bytes([1, 0, 0, 0]) + b"\x00" * 84
+                + (w << 16).to_bytes(4, "big") + (h << 16).to_bytes(4, "big")
+            )
+        else:
+            mvhd = (
+                bytes([0, 0, 0, 0]) + b"\x00" * 8
+                + (600).to_bytes(4, "big") + dur.to_bytes(4, "big")
+                + b"\x00" * 76
+            )
+            tkhd = (
+                bytes([0, 0, 0, 0]) + b"\x00" * 72
+                + (w << 16).to_bytes(4, "big") + (h << 16).to_bytes(4, "big")
+            )
+        moov = box(b"moov", box(b"mvhd", mvhd) + box(b"trak", box(b"tkhd", tkhd)))
+        return box(b"ftyp", b"isom\x00\x00\x02\x00isom") + moov
 
-        for pdf in batches:
-            rows = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                doc_id, dur = int(doc_id), int(n_chars)
-                w, h = 160 + (doc_id % 8) * 16, 120 + (doc_id % 8) * 16
-                v1 = doc_id % 3 == 0
-                if v1:
-                    mvhd = (
-                        bytes([1, 0, 0, 0]) + b"\x00" * 16
-                        + (600).to_bytes(4, "big") + dur.to_bytes(8, "big")
-                        + b"\x00" * 80
-                    )
-                    tkhd = (
-                        bytes([1, 0, 0, 0]) + b"\x00" * 84
-                        + (w << 16).to_bytes(4, "big") + (h << 16).to_bytes(4, "big")
-                    )
-                else:
-                    mvhd = (
-                        bytes([0, 0, 0, 0]) + b"\x00" * 8
-                        + (600).to_bytes(4, "big") + dur.to_bytes(4, "big")
-                        + b"\x00" * 76
-                    )
-                    tkhd = (
-                        bytes([0, 0, 0, 0]) + b"\x00" * 72
-                        + (w << 16).to_bytes(4, "big") + (h << 16).to_bytes(4, "big")
-                    )
-                moov = box(b"moov", box(b"mvhd", mvhd) + box(b"trak", box(b"tkhd", tkhd)))
-                payload = box(b"ftyp", b"isom\x00\x00\x02\x00isom") + moov
-                rows.append((doc_id, payload))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    media = docs.mapInPandas(
-        synth,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType()),
-                T.StructField("payload", T.BinaryType()),
-            ]
-        ),
-    )
+    media = _synth_media(docs, mp4)
     out = X_mm.video_meta(media)
     return out.select(
         "doc_id",
@@ -9530,46 +9302,27 @@ def _x135(spark: SparkSession, sf: str) -> DataFrame:
     decode/endianness/ratio bug is a hash mismatch."""
     docs = read_sf_table(spark, sf, "documents").select("doc_id")
 
-    def synth(batches):
-        import pandas as pd
+    def wav(doc_id: int) -> bytes:
+        amp = min(32767, 1000 + (doc_id % 25) * 1500)
+        n, rate, bits, ch = 100, 8000, 16, 1
+        data = b"".join(
+            (amp if i % 2 == 0 else -amp).to_bytes(2, "little", signed=True)
+            for i in range(n)
+        )
+        fmt = (
+            (1).to_bytes(2, "little") + ch.to_bytes(2, "little")
+            + rate.to_bytes(4, "little")
+            + (rate * ch * bits // 8).to_bytes(4, "little")
+            + (ch * bits // 8).to_bytes(2, "little")
+            + bits.to_bytes(2, "little")
+        )
+        chunks = (
+            b"fmt " + len(fmt).to_bytes(4, "little") + fmt
+            + b"data" + len(data).to_bytes(4, "little") + data
+        )
+        return b"RIFF" + (4 + len(chunks)).to_bytes(4, "little") + b"WAVE" + chunks
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                amp = min(32767, 1000 + (doc_id % 25) * 1500)
-                n, rate, bits, ch = 100, 8000, 16, 1
-                data = b"".join(
-                    (amp if i % 2 == 0 else -amp).to_bytes(2, "little", signed=True)
-                    for i in range(n)
-                )
-                fmt = (
-                    (1).to_bytes(2, "little") + ch.to_bytes(2, "little")
-                    + rate.to_bytes(4, "little")
-                    + (rate * ch * bits // 8).to_bytes(4, "little")
-                    + (ch * bits // 8).to_bytes(2, "little")
-                    + bits.to_bytes(2, "little")
-                )
-                chunks = (
-                    b"fmt " + len(fmt).to_bytes(4, "little") + fmt
-                    + b"data" + len(data).to_bytes(4, "little") + data
-                )
-                payload = (
-                    b"RIFF" + (4 + len(chunks)).to_bytes(4, "little")
-                    + b"WAVE" + chunks
-                )
-                rows.append((doc_id, payload))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    media = docs.mapInPandas(
-        synth,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType()),
-                T.StructField("payload", T.BinaryType()),
-            ]
-        ),
-    )
+    media = _synth_media(docs, wav)
     out = X_mm.audio_features(media)
     return out.select(
         "doc_id",
@@ -9603,36 +9356,12 @@ def _x136(spark: SparkSession, sf: str) -> DataFrame:
     stride bug anywhere in the codec pair is a hash mismatch."""
     docs = read_sf_table(spark, sf, "documents").select("doc_id")
 
-    def synth(batches):
-        import pandas as pd
+    def png(doc_id: int) -> bytes:
+        side = 4 + doc_id % 5
+        return X_mm._encode_png(side, side, 1, bytes([doc_id % 256]) * (side * side))
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                side = 4 + doc_id % 5
-                v = doc_id % 256
-                payload = X_mm._encode_png(side, side, 1, bytes([v]) * (side * side))
-                rows.append((doc_id, payload))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    media = docs.mapInPandas(
-        synth,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType()),
-                T.StructField("payload", T.BinaryType()),
-            ]
-        ),
-    )
-    out = X_mm.decode_media(media)
-    return out.select(
-        "doc_id",
-        "width",
-        "height",
-        "n_channels",
-        F.round("mean_intensity", 6).alias("mean_intensity"),
-    )
+    media = _synth_media(docs, png)
+    return _decoded(media)
 
 
 _register(
@@ -9655,31 +9384,14 @@ def _x137(spark: SparkSession, sf: str) -> DataFrame:
     direction bugs all flip known hex digits."""
     docs = read_sf_table(spark, sf, "documents").select("doc_id")
 
-    def synth(batches):
-        import pandas as pd
+    def png(doc_id: int) -> bytes:
+        if doc_id % 2 == 0:
+            px = b"".join(bytes(255 - x * 16 for x in range(16)) for _ in range(16))
+        else:
+            px = bytes([128]) * 256
+        return X_mm._encode_png(16, 16, 1, px)
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                if doc_id % 2 == 0:
-                    px = b"".join(
-                        bytes(255 - x * 16 for x in range(16)) for _ in range(16)
-                    )
-                else:
-                    px = bytes([128]) * 256
-                rows.append((doc_id, X_mm._encode_png(16, 16, 1, px)))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    media = docs.mapInPandas(
-        synth,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType()),
-                T.StructField("payload", T.BinaryType()),
-            ]
-        ),
-    )
+    media = _synth_media(docs, png)
     return X_mm.dhash_media(media).select("doc_id", "container", "dhash")
 
 
@@ -9704,37 +9416,12 @@ def _x138(spark: SparkSession, sf: str) -> DataFrame:
     the code path; the constant value pins the palette/LZW arithmetic)."""
     docs = read_sf_table(spark, sf, "documents").select("doc_id")
 
-    def synth(batches):
-        import pandas as pd
+    def gif(doc_id: int) -> bytes:
+        v = [0, 85, 170, 255][doc_id % 4]
+        return encode_gif(8, 8, bytes([v, v, v]) * 64, interlace=doc_id % 3 == 0)
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                v = [0, 85, 170, 255][doc_id % 4]
-                rgb = bytes([v, v, v]) * 64
-                rows.append(
-                    (doc_id, encode_gif(8, 8, rgb, interlace=doc_id % 3 == 0))
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    media = docs.mapInPandas(
-        synth,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType()),
-                T.StructField("payload", T.BinaryType()),
-            ]
-        ),
-    )
-    out = X_mm.decode_media(media)
-    return out.select(
-        "doc_id",
-        "width",
-        "height",
-        "n_channels",
-        F.round("mean_intensity", 6).alias("mean_intensity"),
-    )
+    media = _synth_media(docs, gif)
+    return _decoded(media)
 
 
 _register(
@@ -9757,44 +9444,18 @@ def _x139(spark: SparkSession, sf: str) -> DataFrame:
     hash-gated end to end."""
     docs = read_sf_table(spark, sf, "documents").select("doc_id")
 
-    def synth(batches):
-        import pandas as pd
+    def png(doc_id: int) -> bytes:
+        side = 8 + doc_id % 9
+        return X_mm._encode_png(side, side, 1, bytes([doc_id % 256]) * (side * side))
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                side = 8 + doc_id % 9
-                v = doc_id % 256
-                rows.append(
-                    (doc_id, X_mm._encode_png(side, side, 1, bytes([v]) * (side * side)))
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    media = docs.mapInPandas(
-        synth,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType()),
-                T.StructField("payload", T.BinaryType()),
-            ]
-        ),
-    ).withColumn(
+    media = _synth_media(docs, png).withColumn(
         "meta",
         F.struct(
             F.lit("image/png").alias("mime"),
             F.octet_length("payload").cast("long").alias("n_bytes"),
         ),
     )
-    resized = X_mm.resize_media(media, 6, 6)
-    out = X_mm.decode_media(resized)
-    return out.select(
-        "doc_id",
-        "width",
-        "height",
-        "n_channels",
-        F.round("mean_intensity", 6).alias("mean_intensity"),
-    )
+    return _decoded(X_mm.resize_media(media, 6, 6))
 
 
 _register(
@@ -9865,6 +9526,14 @@ _register(
 )
 
 
+# _positioned_words in SQL: CTE `t(doc_id, pos, w)`
+_POS_WORDS_SQL = (
+    "t AS (SELECT doc_id, t.p - 1 AS pos, ws[t.p] AS w"
+    r"  FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS ws"
+    "   FROM documents) d, UNNEST(range(1, len(ws) + 1)) AS t(p))"
+)
+
+
 def _x141(spark: SparkSession, sf: str) -> DataFrame:
     """Deterministic data augmentation: token dropout with md5-coin
     probability 1/8 per (doc, position) — the contrastive-pair /
@@ -9875,11 +9544,7 @@ def _x141(spark: SparkSession, sf: str) -> DataFrame:
     reassembled string byte-for-byte. Pure Column expressions: filter
     over a posexploded token frame + ordered re-aggregation at doc
     grain."""
-    docs = read_sf_table(spark, sf, "documents")
-    toks = docs.select(
-        "doc_id",
-        F.posexplode(F.split(F.trim("text"), r"\s+")).alias("pos", "w"),
-    )
+    toks = _positioned_words(read_sf_table(spark, sf, "documents"))
     coin = (
         F.conv(
             F.substring(
@@ -9897,24 +9562,14 @@ def _x141(spark: SparkSession, sf: str) -> DataFrame:
     kept = toks.filter(coin != 0)
     return kept.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_kept"),
-        F.md5(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "w"))),
-                    lambda s: s.getField("w"),
-                ),
-                " ",
-            )
-        ).alias("aug_md5"),
+        _words_md5().alias("aug_md5"),
     )
 
 
 _register(
     "x141_token_dropout_augment",
     _x141,
-    r"WITH t AS (SELECT doc_id, t.p - 1 AS pos, ws[t.p] AS w"
-    r"  FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS ws"
-    "   FROM documents) d, UNNEST(range(1, len(ws) + 1)) AS t(p)),"
+    f"WITH {_POS_WORDS_SQL},"
     " k AS (SELECT doc_id, pos, w FROM t WHERE"
     "  CAST(('0x' || substr(md5('aug|' || CAST(doc_id AS VARCHAR) || '|'"
     "   || CAST(pos AS VARCHAR)), 1, 2)) AS BIGINT) % 8 <> 0)"
@@ -9934,11 +9589,7 @@ def _x142(spark: SparkSession, sf: str) -> DataFrame:
     (masked and predecessor unmasked) number the sentinels via a
     doc-keyed running sum. Output: token/sentinel counts + the corrupted
     text's md5, byte-replayed by the oracle."""
-    docs = read_sf_table(spark, sf, "documents")
-    toks = docs.select(
-        "doc_id",
-        F.posexplode(F.split(F.trim("text"), r"\s+")).alias("pos", "w"),
-    )
+    toks = _positioned_words(read_sf_table(spark, sf, "documents"))
     start = (
         F.conv(
             F.substring(
@@ -9977,24 +9628,14 @@ def _x142(spark: SparkSession, sf: str) -> DataFrame:
     return out_tok.groupBy("doc_id").agg(
         F.sum((F.col("__m") == 0).cast("long")).alias("n_kept_tokens"),
         F.sum(F.col("__m").cast("long")).alias("n_sentinels"),
-        F.md5(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "w"))),
-                    lambda s: s.getField("w"),
-                ),
-                " ",
-            )
-        ).alias("corrupted_md5"),
+        _words_md5().alias("corrupted_md5"),
     )
 
 
 _register(
     "x142_span_corruption",
     _x142,
-    r"WITH t AS (SELECT doc_id, t.p - 1 AS pos, ws[t.p] AS w"
-    r"  FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS ws"
-    "   FROM documents) d, UNNEST(range(1, len(ws) + 1)) AS t(p)),"
+    f"WITH {_POS_WORDS_SQL},"
     " s AS (SELECT doc_id, pos, w,"
     "  CASE WHEN CAST(('0x' || substr(md5('span|' || CAST(doc_id AS VARCHAR)"
     "   || '|' || CAST(pos AS VARCHAR)), 1, 2)) AS BIGINT) % 16 = 0"
@@ -10125,10 +9766,7 @@ def _x144(spark: SparkSession, sf: str) -> DataFrame:
 _register(
     "x144_dup_assortativity",
     _x144,
-    f"WITH {_SHINGLE_SQL}, sig AS (SELECT id, {_X02_SIGS} FROM sh GROUP BY id),"
-    f" bands AS ({_X02_BANDS}),"
-    " pairs AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b"
-    "  FROM bands a JOIN bands b USING (band, band_hash) WHERE a.id < b.id),"
+    f"WITH {_SHINGLE_SQL}, {_lsh_pairs_sql('pairs')},"
     " deg AS (SELECT id, count(*) AS dg FROM (SELECT id_a AS id FROM pairs"
     "  UNION ALL SELECT id_b FROM pairs) GROUP BY 1),"
     " sym AS (SELECT id_a, id_b FROM pairs"
@@ -10180,10 +9818,7 @@ def _x145(spark: SparkSession, sf: str) -> DataFrame:
 _register(
     "x145_dup_transitivity",
     _x145,
-    f"WITH {_SHINGLE_SQL}, sig AS (SELECT id, {_X02_SIGS} FROM sh GROUP BY id),"
-    f" bands AS ({_X02_BANDS}),"
-    " pairs AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b"
-    "  FROM bands a JOIN bands b USING (band, band_hash) WHERE a.id < b.id),"
+    f"WITH {_SHINGLE_SQL}, {_lsh_pairs_sql('pairs')},"
     " tri AS (SELECT p1.id_a AS x, p1.id_b AS y, p2.id_b AS z"
     "  FROM pairs p1 JOIN pairs p2 ON p2.id_a = p1.id_b"
     "  JOIN pairs p3 ON p3.id_a = p1.id_a AND p3.id_b = p2.id_b),"
@@ -10298,16 +9933,8 @@ def _xs1_sql() -> str:
         "  WHERE embedding IS NOT NULL),"
         " prs AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b"
         "  FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id"
-        "  WHERE list_dot_product(a.v, b.v)"
-        "   / (sqrt(list_dot_product(a.v, a.v))"
-        f"   * sqrt(list_dot_product(b.v, b.v))) >= {t!r}),"
-        " edges AS (SELECT id_a AS src, id_b AS dst FROM prs"
-        "  UNION SELECT id_b, id_a FROM prs),"
-        " walk(id, lab) AS ("
-        "  SELECT src, src FROM edges"
-        "  UNION"
-        "  SELECT e2.src, w.lab FROM walk w JOIN edges e2 ON e2.dst = w.id),"
-        " cc AS (SELECT id, min(lab) AS cluster_id FROM walk GROUP BY id)"
+        f"  WHERE {_cos_sql('a.v', 'b.v')} >= {t!r}),"
+        f" {_cc_sql('prs', 'e2')}"
         " SELECT vec_id FROM embeddings"
         " WHERE vec_id NOT IN (SELECT id FROM cc WHERE id <> cluster_id)"
     )
@@ -10431,30 +10058,15 @@ def _xs4(spark: SparkSession, sf: str) -> DataFrame:
         read_sf_table(spark, sf, "documents").select("doc_id")
     )
 
-    def synth(batches):
-        import pandas as pd
+    def avi(doc_id: int) -> bytes:
+        w, h = 8 * (1 + doc_id % 3), 8 * (1 + doc_id % 2)
+        frames = [
+            encode_jpeg(w, h, 1, bytes([(doc_id * 37 + i * 59) % 256]) * (w * h))
+            for i in range(2 + doc_id % 3)
+        ]
+        return X_mm.encode_avi_mjpeg(frames, fps=10, width=w, height=h)
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                w, h = 8 * (1 + doc_id % 3), 8 * (1 + doc_id % 2)
-                frames = [
-                    encode_jpeg(w, h, 1, bytes([(doc_id * 37 + i * 59) % 256]) * (w * h))
-                    for i in range(2 + doc_id % 3)
-                ]
-                rows.append((doc_id, X_mm.encode_avi_mjpeg(frames, fps=10, width=w, height=h)))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    media = docs.mapInPandas(
-        synth,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType()),
-                T.StructField("payload", T.BinaryType()),
-            ]
-        ),
-    )
+    media = _synth_media(docs, avi)
     out = X_mm.mjpeg_frame_stats(media, every_n_frames=2)
     return out.select(
         "doc_id",
@@ -10511,8 +10123,7 @@ def _xs5_sql() -> str:
     # ones (star from the bucket-min id)
     cap = _XS5_MAX_BUCKET
     return (
-        f"WITH {_SHINGLE_SQL}, sig AS (SELECT id, {_X02_SIGS} FROM sh GROUP BY id),"
-        f" bands AS ({_X02_BANDS}),"
+        f"WITH {_SHINGLE_SQL}, {_LSH_BANDS_SQL},"
         " bk AS (SELECT band, band_hash, count(*) AS n, min(id) AS min_id"
         "  FROM bands GROUP BY 1, 2)"
         " SELECT DISTINCT id_a, id_b FROM ("
@@ -10571,30 +10182,38 @@ def _xs6(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _xs6_sql() -> str:
-    b, e = _XS6_BUDGET, _XS6_EPOCH_CAP
+def _unimax_sql(b: float, e: float, c: str) -> str:
+    """sampling.unimax_mix's allocation of budget `b` with epoch cap `e`
+    over the CTE `per(source, t)`; `c` names the capped-flag CTE."""
     return (
-        "WITH per AS (SELECT source,"
-        "   CAST(sum(len(string_split_regex(trim(text), '\\s+'))) AS BIGINT) AS t"
-        "  FROM documents WHERE source IS NOT NULL GROUP BY 1),"
         " r AS (SELECT source, t,"
         "   CAST(count(*) OVER (ORDER BY t, source) AS BIGINT) AS rnk,"
         "   CAST(sum(t) OVER (ORDER BY t, source) AS BIGINT) AS cum_le,"
         "   CAST(count(*) OVER () AS BIGINT) AS n"
         "  FROM per),"
-        f" c AS (SELECT *, {e!r} * (t * (n - rnk + 1) + (cum_le - t)) < {b!r}"
+        f" {c} AS (SELECT *, {e!r} * (t * (n - rnk + 1) + (cum_le - t)) < {b!r}"
         "    AS capped FROM r),"
         " g AS (SELECT CAST(sum(CASE WHEN capped THEN t ELSE 0 END) AS BIGINT)"
         "    AS ct,"
         "   CAST(sum(CASE WHEN capped THEN 1 ELSE 0 END) AS BIGINT) AS nc"
-        "  FROM c)"
+        f"  FROM {c})"
         " SELECT source, t AS tokens_available, capped,"
         f"  round(CASE WHEN capped THEN {e!r} * t"
         f"   ELSE ({b!r} - {e!r} * ct) / (n - nc) END + 1e-9, 6)"
         "   AS tokens_allocated,"
         f"  round((CASE WHEN capped THEN {e!r} * t"
         f"   ELSE ({b!r} - {e!r} * ct) / (n - nc) END) / t + 1e-9, 6) AS epochs"
-        " FROM c, g"
+        f" FROM {c}, g"
+    )
+
+
+def _xs6_sql() -> str:
+    b, e = _XS6_BUDGET, _XS6_EPOCH_CAP
+    return (
+        "WITH per AS (SELECT source,"
+        "   CAST(sum(len(string_split_regex(trim(text), '\\s+'))) AS BIGINT) AS t"
+        "  FROM documents WHERE source IS NOT NULL GROUP BY 1),"
+        + _unimax_sql(b, e, "c")
     )
 
 
@@ -10649,8 +10268,7 @@ def _xs7_perdoc_sql() -> str:
     lam = _XS7_LAM
     return (
         "WITH base AS (SELECT doc_id AS id, source, (doc_id % 5 = 0) AS ho,"
-        "   list_transform(string_split_regex(trim(text), '\\s+'),"
-        "    t -> lower(t)) AS toks"
+        f"   {_LOWER_TOKS_SQL} AS toks"
         "  FROM documents WHERE text IS NOT NULL),"
         " tr AS (SELECT * FROM base WHERE NOT ho),"
         " hd AS (SELECT * FROM base WHERE ho),"
@@ -10719,7 +10337,7 @@ def _xs8(spark: SparkSession, sf: str) -> DataFrame:
 
 def _xs8_sql() -> str:
     return (
-        _X14_CC_SQL.format(bands=_X02_BANDS)
+        _X14_CC_SQL
         + ", funi AS (SELECT doc_id AS fid,"
         "   coalesce(cc.cluster_id, doc_id) AS cluster_id"
         "  FROM documents LEFT JOIN cc ON cc.id = documents.doc_id),"
@@ -10764,13 +10382,10 @@ def _xs9(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _xs9_sql() -> str:
-    b, t = _XS9_BUDGET, _XS9_TEMPERATURE
+def _temperature_mix_sql(b: float, t: float) -> str:
+    """sampling.temperature_mix's weights and allocation of budget `b` at
+    temperature `t`, over the CTE `per(source, tok)`."""
     return (
-        "WITH per AS (SELECT source,"
-        "   CAST(sum(len(string_split_regex(trim(text), '\\s+'))) AS BIGINT)"
-        "    AS tok"
-        "  FROM documents GROUP BY 1),"
         f" p AS (SELECT source, tok, power(tok, 1.0 / {t!r}) AS pw FROM per),"
         " z AS (SELECT sum(pw) AS zt FROM p)"
         " SELECT source, tok AS tokens_available,"
@@ -10778,6 +10393,17 @@ def _xs9_sql() -> str:
         f"  round({b!r} * pw / zt + 1e-9, 6) AS tokens_allocated,"
         f"  round({b!r} * pw / zt / tok + 1e-9, 6) AS epochs"
         " FROM p, z"
+    )
+
+
+def _xs9_sql() -> str:
+    b, t = _XS9_BUDGET, _XS9_TEMPERATURE
+    return (
+        "WITH per AS (SELECT source,"
+        "   CAST(sum(len(string_split_regex(trim(text), '\\s+'))) AS BIGINT)"
+        "    AS tok"
+        "  FROM documents GROUP BY 1),"
+        + _temperature_mix_sql(b, t)
     )
 
 
@@ -10814,8 +10440,7 @@ def _xs10_sql() -> str:
         "WITH base AS (SELECT doc_id, text,"
         "   string_split_regex(trim(text), '\\s+') AS toks,"
         "   string_split(text, chr(10)) AS lines,"
-        "   list_transform(string_split_regex(trim(text), '\\s+'),"
-        "    t -> lower(t)) AS lt"
+        f"   {_LOWER_TOKS_SQL} AS lt"
         "  FROM documents),"
         " m AS (SELECT doc_id,"
         "   CAST(len(toks) AS BIGINT) AS n_words,"
@@ -10939,8 +10564,7 @@ def _xs11_sql() -> str:
     )
     return (
         "WITH base AS (SELECT doc_id AS id,"
-        "   list_transform(string_split_regex(trim(text), '\\s+'),"
-        "    t -> lower(t)) AS toks"
+        f"   {_LOWER_TOKS_SQL} AS toks"
         "  FROM documents),"
         " tot AS (SELECT id, CAST(list_sum(list_transform(toks, t -> len(t)))"
         "   AS BIGINT) AS chars FROM base),"
@@ -11484,7 +11108,7 @@ def _xs18(spark: SparkSession, sf: str) -> DataFrame:
 def _xs18_sql() -> str:
     b, e = _XS18_BUDGET, _XS18_EPOCH_CAP
     return (
-        _X14_CC_SQL.format(bands=_X02_BANDS)
+        _X14_CC_SQL
         + ", c4 AS (" + _xs14_sql() + "),"
         " per AS (SELECT d.source,"
         "   CAST(sum(len(string_split_regex(trim(d.text), '\\s+'))) AS BIGINT)"
@@ -11492,24 +11116,7 @@ def _xs18_sql() -> str:
         "  FROM documents d JOIN c4 ON c4.doc_id = d.doc_id AND c4.keep"
         "  WHERE d.doc_id NOT IN (SELECT id FROM cc WHERE id <> cluster_id)"
         "  GROUP BY 1),"
-        " r AS (SELECT source, t,"
-        "   CAST(count(*) OVER (ORDER BY t, source) AS BIGINT) AS rnk,"
-        "   CAST(sum(t) OVER (ORDER BY t, source) AS BIGINT) AS cum_le,"
-        "   CAST(count(*) OVER () AS BIGINT) AS n"
-        "  FROM per),"
-        f" cx AS (SELECT *, {e!r} * (t * (n - rnk + 1) + (cum_le - t)) < {b!r}"
-        "    AS capped FROM r),"
-        " g AS (SELECT CAST(sum(CASE WHEN capped THEN t ELSE 0 END) AS BIGINT)"
-        "    AS ct,"
-        "   CAST(sum(CASE WHEN capped THEN 1 ELSE 0 END) AS BIGINT) AS nc"
-        "  FROM cx)"
-        " SELECT source, t AS tokens_available, capped,"
-        f"  round(CASE WHEN capped THEN {e!r} * t"
-        f"   ELSE ({b!r} - {e!r} * ct) / (n - nc) END + 1e-9, 6)"
-        "   AS tokens_allocated,"
-        f"  round((CASE WHEN capped THEN {e!r} * t"
-        f"   ELSE ({b!r} - {e!r} * ct) / (n - nc) END) / t + 1e-9, 6) AS epochs"
-        " FROM cx, g"
+        + _unimax_sql(b, e, "cx")
     )
 
 
@@ -11546,7 +11153,7 @@ def _xs19(spark: SparkSession, sf: str) -> DataFrame:
 
 def _xs19_sql() -> str:
     return (
-        _X14_CC_SQL.format(bands=_X02_BANDS)
+        _X14_CC_SQL
         + ", mem AS (SELECT doc_id,"
         "   coalesce(cc.cluster_id, doc_id) AS cluster_id"
         "  FROM documents LEFT JOIN cc ON cc.id = documents.doc_id),"
@@ -11940,7 +11547,7 @@ def xs22_sql() -> str:
 
     names = ", ".join(f"'{n}'" for n in _XS22_STAGES)
     return (
-        _X14_CC_SQL.format(bands=_X02_BANDS)
+        _X14_CC_SQL
         + ", gop AS ("
         + _xs10_sql()
         + "), c4 AS ("
@@ -12035,18 +11642,26 @@ def xs24_rho_delta_select(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def xs24_sql() -> str:
+def _held_bigrams_sql(held: str) -> str:
+    """CTEs `nbase(id, source, toks)` over the documents, and for its rows
+    matching `held`: `hd`, their non-empty bigrams `bh(id, w_prev, w)` and
+    first tokens `fh(id, w)`."""
     return (
         "WITH nbase AS (SELECT doc_id AS id, source,"
-        "   list_transform(string_split_regex(trim(text), '\\s+'),"
-        "    t -> lower(t)) AS toks"
+        f"   {_LOWER_TOKS_SQL} AS toks"
         "  FROM documents WHERE text IS NOT NULL),"
-        " hd AS (SELECT * FROM nbase WHERE id % 5 = 0 AND id % 10 <> 0),"
+        f" hd AS (SELECT * FROM nbase WHERE {held}),"
         " bh AS (SELECT id, toks[i] AS w_prev, toks[i+1] AS w"
         "  FROM hd, UNNEST(range(1, greatest(len(toks)-1, 0)+1)) AS t(i)"
         "  WHERE len(toks) >= 2 AND toks[i] <> '' AND toks[i+1] <> ''),"
         " fh AS (SELECT id, toks[1] AS w FROM hd"
         "   WHERE len(toks) >= 1 AND toks[1] <> ''),"
+    )
+
+
+def xs24_sql() -> str:
+    return (
+        _held_bigrams_sql("id % 5 = 0 AND id % 10 <> 0")
         + _xs24_nll_chain_sql("b_", "id % 5 <> 0")
         + ","
         + _xs24_nll_chain_sql("t_", "id % 10 = 0")
@@ -12216,16 +11831,7 @@ def xs26_delta_source_weights(spark: SparkSession, sf: str) -> DataFrame:
 def xs26_sql() -> str:
     t = _XS26_T
     return (
-        "WITH nbase AS (SELECT doc_id AS id, source,"
-        "   list_transform(string_split_regex(trim(text), '\\s+'),"
-        "    t -> lower(t)) AS toks"
-        "  FROM documents WHERE text IS NOT NULL),"
-        " hd AS (SELECT * FROM nbase WHERE id % 7 = 0 AND id % 5 <> 0),"
-        " bh AS (SELECT id, toks[i] AS w_prev, toks[i+1] AS w"
-        "  FROM hd, UNNEST(range(1, greatest(len(toks)-1, 0)+1)) AS t(i)"
-        "  WHERE len(toks) >= 2 AND toks[i] <> '' AND toks[i+1] <> ''),"
-        " fh AS (SELECT id, toks[1] AS w FROM hd"
-        "   WHERE len(toks) >= 1 AND toks[1] <> ''),"
+        _held_bigrams_sql("id % 7 = 0 AND id % 5 <> 0")
         + _xs24_nll_chain_sql("b_", "id % 5 <> 0 AND id % 7 <> 0")
         + ","
         + _xs24_nll_chain_sql("t_", "id % 10 = 0")
@@ -12310,13 +11916,7 @@ def xs27_sql() -> str:
         "   JOIN gop ON gop.doc_id = d.doc_id AND gop.ok_word_count"
         "   JOIN c4 ON c4.doc_id = d.doc_id AND c4.keep"
         "  GROUP BY 1),"
-        f" p AS (SELECT source, tok, power(tok, 1.0 / {t!r}) AS pw FROM per),"
-        " z AS (SELECT sum(pw) AS zt FROM p)"
-        " SELECT source, tok AS tokens_available,"
-        "  round(pw / zt + 1e-9, 6) AS weight,"
-        f"  round({b!r} * pw / zt + 1e-9, 6) AS tokens_allocated,"
-        f"  round({b!r} * pw / zt / tok + 1e-9, 6) AS epochs"
-        " FROM p, z"
+        + _temperature_mix_sql(b, t)
     )
 
 
@@ -12426,13 +12026,7 @@ def _emb_cc_sql_head() -> str:
         "WITH RECURSIVE "
         + head[len("WITH "):]
         + ", prs AS (SELECT id_a, id_b FROM scored WHERE cosine > 0.25),"
-        " edges AS (SELECT id_a AS src, id_b AS dst FROM prs"
-        "  UNION SELECT id_b, id_a FROM prs),"
-        " walk(id, lab) AS ("
-        "  SELECT src, src FROM edges"
-        "  UNION"
-        "  SELECT e2.src, w.lab FROM walk w JOIN edges e2 ON e2.dst = w.id),"
-        " cc AS (SELECT id, min(lab) AS cluster_id FROM walk GROUP BY id)"
+        f" {_cc_sql('prs', 'e2')}"
     )
 
 
@@ -12480,10 +12074,7 @@ def xs29_d4_prototypes(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def xs29_sql() -> str:
-    cos = (
-        "list_dot_product(mem.ev, cv) / (sqrt(list_dot_product(mem.ev, mem.ev))"
-        " * sqrt(list_dot_product(cv, cv)))"
-    )
+    cos = _cos_sql("mem.ev", "cv")
     # reuses _x33_sql's `e(vec_id, v)` DOUBLE[] CTE (aliased to ev here)
     return (
         _emb_cc_sql_head()
@@ -12659,12 +12250,6 @@ def xs32_kcenter_coreset(spark: SparkSession, sf: str) -> DataFrame:
 def xs32_sql() -> str:
     k = _XS32_K
 
-    def cos(a: str, b: str) -> str:
-        return (
-            f"list_dot_product({a}, {b}) / (sqrt(list_dot_product({a}, {a}))"
-            f" * sqrt(list_dot_product({b}, {b})))"
-        )
-
     # MATERIALIZED pins: each s{r} is one row but inlines the whole
     # m{r-1} chain; without materialization the m-chain re-expands at
     # every reference (exponential plan text + one parquet re-open per
@@ -12674,7 +12259,7 @@ def xs32_sql() -> str:
         " FROM embeddings)",
         "s1 AS MATERIALIZED (SELECT min(vec_id) AS id FROM e)",
         "v1 AS (SELECT e.v FROM e JOIN s1 ON e.vec_id = s1.id)",
-        f"m1 AS (SELECT e.vec_id, round(1.0 - {cos('e.v', 'v1.v')} + 1e-9, 6)"
+        f"m1 AS (SELECT e.vec_id, round(1.0 - {_cos_sql('e.v', 'v1.v')} + 1e-9, 6)"
         " AS d FROM e, v1)",
     ]
     for r in range(2, k + 1):
@@ -12688,7 +12273,7 @@ def xs32_sql() -> str:
             )
             parts.append(
                 f"m{r} AS (SELECT m.vec_id,"
-                f" least(m.d, round(1.0 - {cos('e.v', f'v{r}.v')} + 1e-9, 6))"
+                f" least(m.d, round(1.0 - {_cos_sql('e.v', f'v{r}.v')} + 1e-9, 6))"
                 f" AS d FROM m{r - 1} m JOIN e ON e.vec_id = m.vec_id, v{r})"
             )
     sel = [
@@ -12698,6 +12283,43 @@ def xs32_sql() -> str:
     for r in range(2, k + 1):
         sel.append(f"SELECT CAST({r} AS BIGINT), id, d FROM s{r}")
     return "WITH " + ", ".join(parts) + " " + " UNION ALL ".join(sel)
+
+
+def _source_words(docs: DataFrame) -> DataFrame:
+    """(source, w): the non-empty lowercased tokens of every non-null text."""
+    return (
+        docs.filter(F.col("text").isNotNull())
+        .select(
+            "source",
+            F.explode(F.transform(X_text.tokens("text"), lambda t: F.lower(t))).alias(
+                "w"
+            ),
+        )
+        .filter(F.col("w") != "")
+    )
+
+
+def _source_kl(corpus: DataFrame, counts: DataFrame) -> DataFrame:
+    """Per source, KL(p_source ‖ p_corpus) in nats from the corpus counts
+    `corpus(w, c)` and the per-source counts `counts(source, w, cs)`,
+    p_source add-1 smoothed over the corpus vocabulary."""
+    scal = corpus.agg(
+        F.sum("c").alias("n"), F.count(F.lit(1)).cast("double").alias("v")
+    )
+    stot = counts.groupBy("source").agg(F.sum("cs").alias("ns"))
+    x = (
+        corpus.join(F.broadcast(stot))
+        .join(counts, ["source", "w"], "left")
+        .join(F.broadcast(scal))
+        .withColumn("__cs", F.coalesce(F.col("cs"), F.lit(0.0)))
+    )
+    p = (F.col("__cs") + F.lit(1.0)) / (F.col("ns") + F.col("v"))
+    q = F.col("c") / F.col("n")
+    return x.groupBy("source").agg(
+        F.min("ns").cast("long").alias("n_tokens"),
+        F.min("v").cast("long").alias("corpus_vocab"),
+        F.round(F.sum(p * F.log(p / q)) + F.lit(1e-9), 6).alias("kl_nats"),
+    )
 
 
 def xs33_source_unigram_kl(spark: SparkSession, sf: str) -> DataFrame:
@@ -12715,45 +12337,18 @@ def xs33_source_unigram_kl(spark: SparkSession, sf: str) -> DataFrame:
     (never the reverse; vocab is the big side). One shuffle per count
     table, all map-side combinable; the KL rollup shuffles source-grain
     partials only."""
-    docs = read_sf_table(spark, sf, "documents")
-    toks = (
-        docs.filter(F.col("text").isNotNull())
-        .select(
-            "source",
-            F.explode(F.transform(X_text.tokens("text"), lambda t: F.lower(t))).alias(
-                "w"
-            ),
-        )
-        .filter(F.col("w") != "")
-    )
+    toks = _source_words(read_sf_table(spark, sf, "documents"))
     corpus = toks.groupBy("w").agg(F.count(F.lit(1)).cast("double").alias("c"))
-    scal = corpus.agg(
-        F.sum("c").alias("n"), F.count(F.lit(1)).cast("double").alias("v")
-    )
     srcc = toks.groupBy("source", "w").agg(
         F.count(F.lit(1)).cast("double").alias("cs")
     )
-    stot = srcc.groupBy("source").agg(F.sum("cs").alias("ns"))
-    x = (
-        corpus.join(F.broadcast(stot))
-        .join(srcc, ["source", "w"], "left")
-        .join(F.broadcast(scal))
-        .withColumn("__cs", F.coalesce(F.col("cs"), F.lit(0.0)))
-    )
-    p = (F.col("__cs") + F.lit(1.0)) / (F.col("ns") + F.col("v"))
-    q = F.col("c") / F.col("n")
-    return x.groupBy("source").agg(
-        F.min("ns").cast("long").alias("n_tokens"),
-        F.min("v").cast("long").alias("corpus_vocab"),
-        F.round(F.sum(p * F.log(p / q)) + F.lit(1e-9), 6).alias("kl_nats"),
-    )
+    return _source_kl(corpus, srcc)
 
 
 def xs33_sql() -> str:
     return (
         "WITH b AS (SELECT source,"
-        "   list_transform(string_split_regex(trim(text), '\\s+'),"
-        "    t -> lower(t)) AS toks"
+        f"   {_LOWER_TOKS_SQL} AS toks"
         "  FROM documents WHERE text IS NOT NULL),"
         " u AS (SELECT source, w FROM ("
         "   SELECT source, unnest(toks) AS w FROM b) q0 WHERE w <> ''),"
@@ -12834,12 +12429,6 @@ def xs34_sql() -> str:
     lam, k, pool, qid = _XS34_LAM, _XS34_K, _XS34_POOL, _XS34_QUERY
     om = 1.0 - lam  # embedded via repr: 0.7 -> 0.30000000000000004 in IEEE
 
-    def cos(a: str, b: str) -> str:
-        return (
-            f"list_dot_product({a}, {b}) / (sqrt(list_dot_product({a}, {a}))"
-            f" * sqrt(list_dot_product({b}, {b})))"
-        )
-
     # MATERIALIZED pins: cand/ps/g{r} are pool-sized (or one-row) but
     # inline the whole upstream chain per reference; un-materialized,
     # the m-chain's 4 references per level expand exponentially (plan
@@ -12848,14 +12437,14 @@ def xs34_sql() -> str:
         "e AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v"
         " FROM embeddings)",
         f"qv AS (SELECT v FROM e WHERE vec_id = {qid})",
-        f"sc AS (SELECT e.vec_id, {cos('e.v', 'qv.v')} AS c"
+        f"sc AS (SELECT e.vec_id, {_cos_sql('e.v', 'qv.v')} AS c"
         f" FROM e, qv WHERE e.vec_id <> {qid})",
         "rk AS (SELECT vec_id, c,"
         " row_number() OVER (ORDER BY c DESC, vec_id) AS r FROM sc)",
         f"cand AS MATERIALIZED (SELECT vec_id, round(c + 1e-9, 6) AS rel"
         f" FROM rk WHERE r <= {pool})",
         "ps AS MATERIALIZED (SELECT a.vec_id AS id_a, b.vec_id AS id_b,"
-        f" round({cos('ea.v', 'eb.v')} + 1e-9, 6) AS s"
+        f" round({_cos_sql('ea.v', 'eb.v')} + 1e-9, 6) AS s"
         " FROM cand a JOIN cand b ON a.vec_id < b.vec_id"
         " JOIN e ea ON ea.vec_id = a.vec_id"
         " JOIN e eb ON eb.vec_id = b.vec_id)",
@@ -12974,7 +12563,7 @@ def xs35_contrastive_pairs(spark: SparkSession, sf: str) -> DataFrame:
 
 def xs35_sql() -> str:
     return (
-        _X14_CC_SQL.format(bands=_X02_BANDS)
+        _X14_CC_SQL
         + " SELECT id AS anchor_id,"
         "  coalesce(lead(id) OVER (PARTITION BY cluster_id ORDER BY id),"
         "   first_value(id) OVER (PARTITION BY cluster_id ORDER BY id))"
@@ -13071,15 +12660,7 @@ def s22_stream_source_kl(spark: SparkSession, sf: str) -> DataFrame:
     foreachBatch and publishes the KL time-series). Token stream is
     xs33's verbatim (lowercased, empty-dropped)."""
     counts = (
-        stream_sf_table(spark, sf, "documents")
-        .filter(F.col("text").isNotNull())
-        .select(
-            "source",
-            F.explode(F.transform(X_text.tokens("text"), lambda t: F.lower(t))).alias(
-                "w"
-            ),
-        )
-        .filter(F.col("w") != "")
+        _source_words(stream_sf_table(spark, sf, "documents"))
         .groupBy("source", "w")
         .agg(F.count(F.lit(1)).cast("double").alias("cs"))
     )
@@ -13087,24 +12668,7 @@ def s22_stream_source_kl(spark: SparkSession, sf: str) -> DataFrame:
     # join branches below
     st = drain(counts, output_mode="complete", partitions=8)
 
-    corpus = st.groupBy("w").agg(F.sum("cs").alias("c"))
-    scal = corpus.agg(
-        F.sum("c").alias("n"), F.count(F.lit(1)).cast("double").alias("v")
-    )
-    stot = st.groupBy("source").agg(F.sum("cs").alias("ns"))
-    x = (
-        corpus.join(F.broadcast(stot))
-        .join(st, ["source", "w"], "left")
-        .join(F.broadcast(scal))
-        .withColumn("__cs", F.coalesce(F.col("cs"), F.lit(0.0)))
-    )
-    p = (F.col("__cs") + F.lit(1.0)) / (F.col("ns") + F.col("v"))
-    q_ = F.col("c") / F.col("n")
-    return x.groupBy("source").agg(
-        F.min("ns").cast("long").alias("n_tokens"),
-        F.min("v").cast("long").alias("corpus_vocab"),
-        F.round(F.sum(p * F.log(p / q_)) + F.lit(1e-9), 6).alias("kl_nats"),
-    )
+    return _source_kl(st.groupBy("w").agg(F.sum("cs").alias("c")), st)
 
 
 _register("xs35_contrastive_pairs", xs35_contrastive_pairs, xs35_sql())

@@ -14,6 +14,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from presto_workload_analyzer_spark.materialize import materialize
+
 
 def _to_double(v: Column) -> Column:
     return F.transform(v, lambda x: x.cast("double"))
@@ -372,6 +374,7 @@ def ivf_topk(
     # lineage (scan + cast) re-executes per pass
     train = vecs.select(array_to_vector("v").alias("features")).cache()
     model = KMeans(k=n_cells, seed=seed, maxIter=max_iter, featuresCol="features").fit(train)
+    train.unpersist()
     centroids = train.sparkSession.createDataFrame(
         [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
         "cell_id INT, centroid ARRAY<DOUBLE>",
@@ -393,7 +396,7 @@ def ivf_topk(
                 Window.partitionBy("id").orderBy(F.asc("d2"), F.asc("cell_id"))
             ),
         )
-        .cache()  # consumed twice: corpus assignment + query probes
+        .transform(materialize)  # consumed twice: corpus assignment + query probes
     )
     corpus = ranked.filter((F.col("cell_rank") == 1) & F.col("__keep")).select(
         F.col("id").alias("neighbor_id"), F.col("v").alias("cv"), "cell_id"

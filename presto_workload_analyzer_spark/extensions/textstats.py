@@ -31,6 +31,11 @@ def tokens(text: Column | str) -> Column:
     return F.split(F.trim(col), r"\s+")
 
 
+def _lower_tokens(text: Column | str) -> Column:
+    """Lowercased whitespace tokens."""
+    return F.transform(tokens(text), F.lower)
+
+
 def _bigram_toks(toks: Column) -> Column:
     """Normalize a token array to what join-then-resplit would yield —
     the exact input the LM scorers' historical bigram builder
@@ -66,7 +71,7 @@ def bpe_ish_token_count(text: Column | str) -> Column:
 
 def stopword_ratio(text: Column | str, words: list[str]) -> Column:
     """Fraction of whitespace tokens found in `words` (lowercased)."""
-    toks = F.transform(tokens(text), lambda t: F.lower(t))
+    toks = _lower_tokens(text)
     hits = F.size(F.filter(toks, lambda t: t.isin(*words)))
     return hits.cast("double") / F.size(toks)
 
@@ -191,7 +196,7 @@ def tfidf_top_terms(
     """
     toks = df.select(
         F.col(id_col).alias("id"),
-        F.explode(F.transform(tokens(text_col), lambda t: F.lower(t))).alias("term"),
+        F.explode(_lower_tokens(text_col)).alias("term"),
     )
     tf = toks.groupBy("id", "term").agg(F.count(F.lit(1)).alias("tf"))
     docfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -253,7 +258,7 @@ def tfidf_cosine_pairs(
     """
     toks = df.select(
         F.col(id_col).alias("id"),
-        F.explode(F.transform(tokens(text_col), lambda t: F.lower(t))).alias("term"),
+        F.explode(_lower_tokens(text_col)).alias("term"),
     )
     tf = toks.groupBy("id", "term").agg(
         F.count(F.lit(1)).cast("double").alias("tf")
@@ -267,7 +272,6 @@ def tfidf_cosine_pairs(
         .select(
             "id",
             "term",
-            "dfq",
             (F.col("tf") * F.log(F.col("__n") / F.col("dfq"))).alias("w"),
         )
     )
@@ -277,7 +281,7 @@ def tfidf_cosine_pairs(
     unit = (
         weighted.join(norms, on="id")
         .filter(F.col("nrm") > 0)
-        .select("id", "term", "dfq", (F.col("w") / F.col("nrm")).alias("u"))
+        .select("id", "term", (F.col("w") / F.col("nrm")).alias("u"))
         # materialize the inverted index once: both sides of the
         # posting-list self-join read this frame — un-materialized, the
         # whole scan+tokenize+tf+df chain executes once per side (r15
@@ -340,7 +344,7 @@ def unigram_logprob(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """
     toks = df.select(
         F.col(id_col).alias("id"),
-        F.explode(F.transform(tokens(text_col), lambda t: F.lower(t))).alias("term"),
+        F.explode(_lower_tokens(text_col)).alias("term"),
     )
     tf = toks.groupBy("id", "term").agg(F.count(F.lit(1)).alias("tf"))
     vocab = tf.groupBy("term").agg(F.sum("tf").alias("cnt"))
@@ -788,7 +792,7 @@ def gopher_repetition(
     honest price of the dup-coverage semantics; no window, no UDF, cost
     linear in corpus tokens times len(top_ns) + len(dup_ns).
     """
-    lower = F.transform(tokens(text_col), lambda t: F.lower(t))
+    lower = _lower_tokens(text_col)
     # tokenize ONCE: four consumers (char totals, top-gram stream, dup
     # positional stream, token-position chars) each re-ran the full
     # scan+tokenize without this (r15 plan-audit discipline)
@@ -1084,6 +1088,77 @@ def vocab_coverage(
     return out.select(*sel)
 
 
+def _bigram_instances(toks: DataFrame, *keep: str) -> DataFrame:
+    """One (*keep, w_prev, w) row per bigram of each row's `__toks`."""
+    from presto_workload_analyzer_spark.extensions.dedup import gram_array_of
+
+    return toks.select(
+        *keep, F.explode(gram_array_of(_bigram_toks(F.col("__toks")), 2)).alias("bg")
+    ).select(
+        *keep,
+        F.split(F.col("bg"), " ", 2)[0].alias("w_prev"),
+        F.split(F.col("bg"), " ", 2)[1].alias("w"),
+    )
+
+
+def _first_tokens(toks: DataFrame) -> DataFrame:
+    """(id, w): each row's first token, where it has a non-empty one — the
+    token a bigram LM scores under its unigram term alone."""
+    return toks.select("id", F.col("__toks").getItem(0).alias("w")).where(
+        F.col("w").isNotNull() & (F.col("w") != "")
+    )
+
+
+def _train_counts(train: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """A bigram LM's materialized count tables over the fit slice `train`:
+    (w, c1) at vocabulary grain, read by three joins and the scalar
+    aggregate, and (w_prev, w, c2) at bigram-type grain."""
+    uni = (
+        train.select(F.explode("__toks").alias("w"))
+        .where(F.col("w") != "")
+        .groupBy("w")
+        .agg(F.count(F.lit(1)).alias("c1"))
+        .transform(materialize)
+    )
+    bi = (
+        _bigram_instances(train)
+        .groupBy("w_prev", "w")
+        .agg(F.count(F.lit(1)).alias("c2"))
+        .transform(materialize)
+    )
+    return uni, bi
+
+
+def _held_bigram_counts(held: DataFrame, uni: DataFrame, bi: DataFrame) -> DataFrame:
+    """(w, w_prev, id, c2, c_prev, c1): every bigram of the held slice with
+    the train counts of the bigram, its context and its word, NULL where
+    the train slice never saw them."""
+    return (
+        _bigram_instances(held, "id")
+        .join(bi, on=["w_prev", "w"], how="left")
+        .join(
+            uni.select(F.col("w").alias("w_prev"), F.col("c1").alias("c_prev")),
+            on="w_prev",
+            how="left",
+        )
+        .join(uni, on="w", how="left")
+    )
+
+
+def _p_uni(c1: str, n: str, v: str) -> Column:
+    """Add-one smoothed unigram probability over a train vocabulary of `v`
+    words and `n` tokens, with one unseen slot."""
+    return (F.coalesce(F.col(c1), F.lit(0)) + 1.0) / (F.col(n) + F.col(v) + 1.0)
+
+
+def _bi_term(c2: str, c_prev: str) -> Column:
+    """The maximum-likelihood bigram term c2 / c_prev, 0 for an unseen context."""
+    return F.when(
+        F.coalesce(F.col(c_prev), F.lit(0)) > 0,
+        F.coalesce(F.col(c2), F.lit(0)).cast("double") / F.col(c_prev),
+    ).otherwise(F.lit(0.0))
+
+
 def bigram_logprob(
     df: DataFrame, id_col: str, text_col: str, lam: float = 0.7
 ) -> DataFrame:
@@ -1105,10 +1180,7 @@ def bigram_logprob(
     (key-partitioned, AQE-skew-handled — identical posture to
     unigram_logprob and tfidf); N broadcasts.
     """
-    from presto_workload_analyzer_spark.extensions.dedup import gram_array_of
-
-    lower = F.transform(tokens(text_col), lambda t: F.lower(t))
-    base = df.select(F.col(id_col).alias("id"), lower.alias("__toks"))
+    base = df.select(F.col(id_col).alias("id"), _lower_tokens(text_col).alias("__toks"))
 
     uni_inst = base.select("id", F.explode("__toks").alias("w")).where(
         F.col("w") != ""
@@ -1124,14 +1196,7 @@ def bigram_logprob(
     )
     total = uni.select(F.sum("c1").cast("double").alias("__n"))
 
-    bi_inst = base.select(
-        "id",
-        F.explode(gram_array_of(_bigram_toks(F.col("__toks")), 2)).alias("bg"),
-    ).select(
-        "id",
-        F.split(F.col("bg"), " ", 2)[0].alias("w_prev"),
-        F.split(F.col("bg"), " ", 2)[1].alias("w"),
-    ).transform(materialize)
+    bi_inst = _bigram_instances(base, "id").transform(materialize)
     bi = bi_inst.groupBy("w_prev", "w").agg(F.count(F.lit(1)).alias("c2"))
 
     # every non-first token scores under the interpolated bigram
@@ -1153,8 +1218,7 @@ def bigram_logprob(
     )
     # the first token of each doc scores under the unigram alone
     first = (
-        base.select("id", F.col("__toks").getItem(0).alias("w"))
-        .where(F.col("w").isNotNull() & (F.col("w") != ""))
+        _first_tokens(base)
         .join(uni, on="w")
         .crossJoin(F.broadcast(total))
         .select("id", (-F.log(F.col("c1") / F.col("__n"))).alias("nll"))
@@ -1214,12 +1278,9 @@ def heldout_bigram_nll(
     cross join. Output: (id, n_scored, sum_nll) doc-grain UNROUNDED sums
     so callers can aggregate to any grain before rounding.
     """
-    from presto_workload_analyzer_spark.extensions.dedup import gram_array_of
-
-    lower = F.transform(tokens(text_col), lambda t: F.lower(t))
     base = df.select(
         F.col(id_col).alias("id"),
-        lower.alias("__toks"),
+        _lower_tokens(text_col).alias("__toks"),
         holdout.alias("__ho"),
         (train if train is not None else ~holdout).alias("__tr"),
     )
@@ -1233,65 +1294,23 @@ def heldout_bigram_nll(
     # grain, the data any reference-model scorer must hold anyway.
     held = base.filter(F.col("__ho")).select("id", "__toks").transform(materialize)
 
-    uni = (
-        train.select(F.explode("__toks").alias("w"))
-        .where(F.col("w") != "")
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("c1"))
-        # vocabulary-grain count table, read by three joins + the scalar
-        # aggregate below — one scan+tokenize instead of four
-        .transform(materialize)
-    )
+    uni, bi = _train_counts(train)
     scal = uni.agg(
         F.sum("c1").cast("double").alias("__n"),
         F.count(F.lit(1)).cast("double").alias("__v"),
     )
-    bi = (
-        train.select(
-            F.explode(gram_array_of(_bigram_toks(F.col("__toks")), 2)).alias("bg")
-        )
-        .select(
-            F.split(F.col("bg"), " ", 2)[0].alias("w_prev"),
-            F.split(F.col("bg"), " ", 2)[1].alias("w"),
-        )
-        .groupBy("w_prev", "w")
-        .agg(F.count(F.lit(1)).alias("c2"))
-        # bigram-type grain (bounded by distinct type count, not corpus)
-        .transform(materialize)
-    )
+    p_uni = _p_uni("c1", "__n", "__v")
+    bi_term = _bi_term("c2", "c_prev")
 
-    p_uni = (F.coalesce(F.col("c1"), F.lit(0)) + 1.0) / (
-        F.col("__n") + F.col("__v") + 1.0
-    )
-    bi_term = F.when(
-        F.coalesce(F.col("c_prev"), F.lit(0)) > 0,
-        F.coalesce(F.col("c2"), F.lit(0)).cast("double") / F.col("c_prev"),
-    ).otherwise(F.lit(0.0))
-
-    held_bi = held.select(
-        "id",
-        F.explode(gram_array_of(_bigram_toks(F.col("__toks")), 2)).alias("bg"),
-    ).select(
-        "id",
-        F.split(F.col("bg"), " ", 2)[0].alias("w_prev"),
-        F.split(F.col("bg"), " ", 2)[1].alias("w"),
-    )
     scored_bi = (
-        held_bi.join(bi, on=["w_prev", "w"], how="left")
-        .join(
-            uni.select(F.col("w").alias("w_prev"), F.col("c1").alias("c_prev")),
-            on="w_prev",
-            how="left",
-        )
-        .join(uni, on="w", how="left")
+        _held_bigram_counts(held, uni, bi)
         .crossJoin(F.broadcast(scal))
         .select(
             "id", (-F.log(lam * bi_term + (1.0 - lam) * p_uni)).alias("nll")
         )
     )
     first = (
-        held.select("id", F.col("__toks").getItem(0).alias("w"))
-        .where(F.col("w").isNotNull() & (F.col("w") != ""))
+        _first_tokens(held)
         .join(uni, on="w", how="left")
         .crossJoin(F.broadcast(scal))
         .select("id", (-F.log(p_uni)).alias("nll"))
@@ -1337,7 +1356,7 @@ def distinctive_terms(
 
     toks = df.select(
         F.col(group_col).alias("grp"),
-        F.explode(F.transform(tokens(text_col), lambda t: F.lower(t))).alias("term"),
+        F.explode(_lower_tokens(text_col)).alias("term"),
     ).where(F.col("term") != "")
     y_kw = toks.groupBy("grp", "term").agg(F.count(F.lit(1)).alias("y"))
     y_w = y_kw.groupBy("term").agg(F.sum("y").alias("yg"))
@@ -1489,6 +1508,34 @@ def winnowing_overlap_pairs(
     )
 
 
+# separates the merged output from the symbol still pending in the BPE
+# accumulator string; symbols never contain it
+_US = "\x1f"
+
+
+def _bpe_merge_step(a: str, b: str, merged: str):
+    """The F.aggregate step that applies one merge rule (a, b) -> merged,
+    greedy from the left — shared by training and encoding, which must
+    agree."""
+
+    def step(acc, s):
+        o = F.substring_index(acc, _US, 1)
+        p = F.substring_index(acc, _US, -1)
+        join_out = lambda tail: F.when(o == "", tail).otherwise(
+            F.concat(o, F.lit(" "), tail)
+        )
+        return (
+            F.when(p == "", F.concat(o, F.lit(_US), s))
+            .when(
+                (p == a) & (s == b),
+                F.concat(join_out(F.lit(merged)), F.lit(_US)),
+            )
+            .otherwise(F.concat(join_out(p), F.lit(_US), s))
+        )
+
+    return step
+
+
 def bpe_merges(
     df: DataFrame,
     text_col: str,
@@ -1521,7 +1568,6 @@ def bpe_merges(
     practical bound; symbols therefore never contain spaces or the
     \\x1f sentinel.
     """
-    US = "\x1f"
     words = (
         df.select(F.explode(tokens(text_col)).alias("w"))
         .filter(F.col("w").rlike("^[a-z]+$"))
@@ -1563,28 +1609,10 @@ def bpe_merges(
         a_sym, b_sym = best[0]["pair"].split(" ")
         merged = a_sym + b_sym
         out.append((r, a_sym, b_sym, merged, int(best[0]["pc"])))
-
-        def make_step(_a, _b, _m):
-            def step(acc, s):
-                o = F.substring_index(acc, US, 1)
-                p = F.substring_index(acc, US, -1)
-                join_out = lambda tail: F.when(o == "", tail).otherwise(
-                    F.concat(o, F.lit(" "), tail)
-                )
-                return (
-                    F.when(p == "", F.concat(o, F.lit(US), s))
-                    .when(
-                        (p == _a) & (s == _b),
-                        F.concat(join_out(F.lit(_m)), F.lit(US)),
-                    )
-                    .otherwise(F.concat(join_out(p), F.lit(US), s))
-                )
-            return step
-
-        step = make_step(a_sym, b_sym, merged)
+        step = _bpe_merge_step(a_sym, b_sym, merged)
 
         new_syms = F.trim(
-            F.regexp_replace(F.aggregate(arr, F.lit(US), step), US, " ")
+            F.regexp_replace(F.aggregate(arr, F.lit(_US), step), _US, " ")
         )
         cur = cur.select(new_syms.alias("syms"), "cnt").localCheckpoint(eager=True)
     return out
@@ -1602,7 +1630,6 @@ def bpe_apply(
     train or fertility numbers lie). Vocabulary-grain input expected;
     lineage checkpointed every other rule to keep the 2R-deep lambda
     plan flat."""
-    US = "\x1f"
     # same trailing-empty-match filter as bpe_merges' sym construction
     cur = words.withColumn(
         "__syms",
@@ -1612,33 +1639,14 @@ def bpe_apply(
         ),
     )
     for i, (_r, a_sym, b_sym, merged, _pc) in enumerate(merges):
-
-        def make_step(_a, _b, _m):
-            def step(acc, s):
-                o = F.substring_index(acc, US, 1)
-                p = F.substring_index(acc, US, -1)
-                join_out = lambda tail: F.when(o == "", tail).otherwise(
-                    F.concat(o, F.lit(" "), tail)
-                )
-                return (
-                    F.when(p == "", F.concat(o, F.lit(US), s))
-                    .when(
-                        (p == _a) & (s == _b),
-                        F.concat(join_out(F.lit(_m)), F.lit(US)),
-                    )
-                    .otherwise(F.concat(join_out(p), F.lit(US), s))
-                )
-
-            return step
-
         new_syms = F.trim(
             F.regexp_replace(
                 F.aggregate(
                     F.split(F.col("__syms"), " "),
-                    F.lit(US),
-                    make_step(a_sym, b_sym, merged),
+                    F.lit(_US),
+                    _bpe_merge_step(a_sym, b_sym, merged),
                 ),
-                US,
+                _US,
                 " ",
             )
         )
@@ -1746,7 +1754,7 @@ def bm25_scores(
     broadcast row. Output: (id, bm25) rounded to 6.
     """
     query_terms = tuple(dict.fromkeys(t.lower() for t in query_terms))
-    toks_lc = F.transform(tokens(text_col), lambda t: F.lower(t))
+    toks_lc = _lower_tokens(text_col)
     base = df.select(F.col(id_col).alias("id"), toks_lc.alias("__toks"))
     dl = base.select("id", F.size("__toks").cast("long").alias("__dl"))
     scal = dl.agg(
@@ -1902,10 +1910,9 @@ def reference_delta_scores(
     """
     from presto_workload_analyzer_spark.extensions.dedup import gram_array_of
 
-    lower = F.transform(tokens(text_col), lambda t: F.lower(t))
     base = df.select(
         F.col(id_col).alias("id"),
-        lower.alias("__toks"),
+        _lower_tokens(text_col).alias("__toks"),
         candidates.alias("__ho"),
         base_train.alias("__trb"),
         target_train.alias("__trt"),
@@ -1945,11 +1952,10 @@ def reference_delta_scores(
         F.sum("c1t").cast("double").alias("__nt"),
         F.sum((F.col("c1t") > 0).cast("long")).cast("double").alias("__vt"),
     )
+    # not _bigram_instances: the slice flags follow the bigram columns here
     bi = (
         train.select(
-            F.explode(
-                gram_array_of(_bigram_toks(F.col("__toks")), 2)
-            ).alias("bg"),
+            F.explode(gram_array_of(_bigram_toks(F.col("__toks")), 2)).alias("bg"),
             "__trb",
             "__trt",
         )
@@ -1971,31 +1977,11 @@ def reference_delta_scores(
         .transform(materialize)
     )
 
-    # heldout_bigram_nll's per-model expressions, verbatim; a count that
-    # is 0 in the combined table behaves exactly like the NULL a left
-    # join against a per-slice table would produce (both coalesce to 0,
-    # and the c_prev>0 guard keeps the division unevaluated either way)
-    def _p_uni(c1: str, n: str, v: str) -> Column:
-        return (F.coalesce(F.col(c1), F.lit(0)) + 1.0) / (
-            F.col(n) + F.col(v) + 1.0
-        )
-
-    def _bi_term(c2: str, c_prev: str) -> Column:
-        return F.when(
-            F.coalesce(F.col(c_prev), F.lit(0)) > 0,
-            F.coalesce(F.col(c2), F.lit(0)).cast("double") / F.col(c_prev),
-        ).otherwise(F.lit(0.0))
-
-    held_bi = held.select(
-        "id",
-        F.explode(
-            gram_array_of(_bigram_toks(F.col("__toks")), 2)
-        ).alias("bg"),
-    ).select(
-        "id",
-        F.split(F.col("bg"), " ", 2)[0].alias("w_prev"),
-        F.split(F.col("bg"), " ", 2)[1].alias("w"),
-    )
+    held_bi = _bigram_instances(held, "id")
+    # heldout_bigram_nll's per-model expressions; a count that is 0 in
+    # the combined table behaves exactly like the NULL a left join
+    # against a per-slice table would produce (both coalesce to 0, and
+    # the c_prev>0 guard keeps the division unevaluated either way)
     scored_bi = (
         held_bi.join(bi, on=["w_prev", "w"], how="left")
         .join(
@@ -2026,8 +2012,7 @@ def reference_delta_scores(
         )
     )
     first = (
-        held.select("id", F.col("__toks").getItem(0).alias("w"))
-        .where(F.col("w").isNotNull() & (F.col("w") != ""))
+        _first_tokens(held)
         .join(uni, on="w", how="left")
         .crossJoin(F.broadcast(scal))
         .select(
@@ -2097,15 +2082,12 @@ def heldout_jm_kn_nll(
 
     Output: (id, n_scored, sum_nll_jm, sum_nll_kn) doc-grain UNROUNDED.
     """
-    from presto_workload_analyzer_spark.extensions.dedup import gram_array_of
-
     d = float(discount)
     if not 0.0 < d < 1.0:
         raise ValueError(f"discount must be in (0, 1), got {discount}")
-    lower = F.transform(tokens(text_col), lambda t: F.lower(t))
     base = df.select(
         F.col(id_col).alias("id"),
-        lower.alias("__toks"),
+        _lower_tokens(text_col).alias("__toks"),
         holdout.alias("__ho"),
     )
     train = base.filter(~F.col("__ho"))
@@ -2113,25 +2095,7 @@ def heldout_jm_kn_nll(
     # audit): held feeds three consumers, uni four, bi four
     held = base.filter(F.col("__ho")).select("id", "__toks").transform(materialize)
 
-    uni = (
-        train.select(F.explode("__toks").alias("w"))
-        .where(F.col("w") != "")
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("c1"))
-        .transform(materialize)
-    )
-    bi = (
-        train.select(
-            F.explode(gram_array_of(_bigram_toks(F.col("__toks")), 2)).alias("bg")
-        )
-        .select(
-            F.split(F.col("bg"), " ", 2)[0].alias("w_prev"),
-            F.split(F.col("bg"), " ", 2)[1].alias("w"),
-        )
-        .groupBy("w_prev", "w")
-        .agg(F.count(F.lit(1)).alias("c2"))
-        .transform(materialize)
-    )
+    uni, bi = _train_counts(train)
     left = bi.groupBy("w_prev").agg(
         F.sum("c2").cast("double").alias("cl"),
         F.count(F.lit(1)).cast("double").alias("n1l"),
@@ -2147,13 +2111,8 @@ def heldout_jm_kn_nll(
         )
     )
 
-    p_uni = (F.coalesce(F.col("c1"), F.lit(0)) + 1.0) / (
-        F.col("__n") + F.col("__v") + 1.0
-    )
-    bi_term = F.when(
-        F.coalesce(F.col("c_prev"), F.lit(0)) > 0,
-        F.coalesce(F.col("c2"), F.lit(0)).cast("double") / F.col("c_prev"),
-    ).otherwise(F.lit(0.0))
+    p_uni = _p_uni("c1", "__n", "__v")
+    bi_term = _bi_term("c2", "c_prev")
     p_cont = (F.coalesce(F.col("n1r"), F.lit(0.0)) + 1.0) / (
         F.col("__t") + F.col("__v") + 1.0
     )
@@ -2164,22 +2123,8 @@ def heldout_jm_kn_nll(
         + (d * F.col("n1l") / F.col("cl")) * p_cont,
     ).otherwise(p_cont)
 
-    held_bi = held.select(
-        "id",
-        F.explode(gram_array_of(_bigram_toks(F.col("__toks")), 2)).alias("bg"),
-    ).select(
-        "id",
-        F.split(F.col("bg"), " ", 2)[0].alias("w_prev"),
-        F.split(F.col("bg"), " ", 2)[1].alias("w"),
-    )
     scored_bi = (
-        held_bi.join(bi, on=["w_prev", "w"], how="left")
-        .join(
-            uni.select(F.col("w").alias("w_prev"), F.col("c1").alias("c_prev")),
-            on="w_prev",
-            how="left",
-        )
-        .join(uni, on="w", how="left")
+        _held_bigram_counts(held, uni, bi)
         .join(left, on="w_prev", how="left")
         .join(right, on="w", how="left")
         .crossJoin(F.broadcast(scal))
@@ -2190,8 +2135,7 @@ def heldout_jm_kn_nll(
         )
     )
     first = (
-        held.select("id", F.col("__toks").getItem(0).alias("w"))
-        .where(F.col("w").isNotNull() & (F.col("w") != ""))
+        _first_tokens(held)
         .join(uni, on="w", how="left")
         .join(right, on="w", how="left")
         .crossJoin(F.broadcast(scal))

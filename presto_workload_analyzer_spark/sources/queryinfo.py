@@ -88,8 +88,19 @@ SUMMARY_SCHEMA = T.StructType(
 _SUMMARY_COLUMNS = [f.name for f in SUMMARY_SCHEMA.fields]
 
 
+def _object(value) -> dict:
+    """`value` itself if it is a JSON object; TypeError otherwise, which
+    skips the document."""
+    if not isinstance(value, dict):
+        raise TypeError(f"expected a JSON object, got {type(value).__name__}")
+    return value
+
+
 def _operator_summary(op: dict) -> dict | None:
-    """One operatorSummaries entry -> operator dict. Reference extract.py:66-91."""
+    """One operatorSummaries entry -> operator dict, or None to drop it.
+    Reference extract.py:66-91."""
+    if not isinstance(op, dict):
+        return None
     try:
         raw_size = parse_size_py(op.get("rawInputDataSize") or op.get("inputDataSize"))
         return {
@@ -121,8 +132,9 @@ def _operator_summary(op: dict) -> dict | None:
 def _collect_fragments(stage: dict) -> list[dict]:
     """Recursive descent over outputStage -> [{id, root}]. Reference extract.py:94-99."""
     out = []
-    plan = stage.get("plan")
+    plan = _object(stage).get("plan")
     if plan:
+        plan = _object(plan)
         out.append({"id": plan.get("id"), "root": plan.get("root")})
     for sub in stage.get("subStages", []):
         out.extend(_collect_fragments(sub))
@@ -134,9 +146,9 @@ def _collect_substages(stage: dict) -> list[dict]:
     result = []
     for sub in stage.get("subStages", []):
         tasks = []
-        for task in sub.get("tasks", []):
-            stats = task.get("stats", {})
-            status = task.get("taskStatus", {})
+        for task in _object(sub).get("tasks", []):
+            stats = _object(_object(task).get("stats", {}))
+            status = _object(task.get("taskStatus", {}))
             tasks.append(
                 {
                     "taskStatus": {k: status.get(k) for k in ("taskId", "state", "self")},
@@ -153,34 +165,35 @@ def _collect_substages(stage: dict) -> list[dict]:
 def summarize_queryinfo(doc: dict) -> dict | None:
     """One QueryInfo document -> one summary record (or None to skip).
 
-    Reference extract.py:123-169. A root or `session` that is not a JSON
-    object (a top-level array, a string) is no QueryInfo document: skipped.
+    Reference extract.py:123-169. A root, `session`, catalog property
+    map, stage, task or task stats that is not a JSON object (a top-level
+    array, a string), or an operatorSummaries that is not an array, is no
+    QueryInfo document: skipped. An operatorSummaries entry that is not an
+    object drops that operator.
     """
     if not isinstance(doc, dict):
         return None
     session = doc.get("session", {})
     if not isinstance(session, dict):
         return None
-    varada = session.get("catalogProperties", {}).get("varada", {})
-    if varada.get("internal_query", "") == "true":
-        return None
-
-    stage = doc.get("outputStage")
-    fragments = _collect_fragments(stage) if stage else None
-    substages = _collect_substages(stage) if stage else None
 
     try:
+        catalogs = _object(session.get("catalogProperties", {}))
+        if _object(catalogs.get("varada", {})).get("internal_query", "") == "true":
+            return None
+        stage = doc.get("outputStage")
+        fragments = _collect_fragments(stage) if stage else None
+        substages = _collect_substages(stage) if stage else None
         stats = doc["queryStats"]
         input_size = (
             parse_size_py(stats["rawInputDataSize"])
             or parse_size_py(stats.get("inputDataSize"))
             or 0.0
         )
-        operators = [
-            op
-            for op in (_operator_summary(o) for o in stats.get("operatorSummaries", []))
-            if op is not None
-        ]
+        summaries = stats.get("operatorSummaries", [])
+        if not isinstance(summaries, list):
+            return None
+        operators = [op for op in map(_operator_summary, summaries) if op is not None]
         return {
             "query": doc["query"],
             "query_id": doc["queryId"],
@@ -210,9 +223,8 @@ def summarize_queryinfo(doc: dict) -> dict | None:
         return None  # RecursionError: nesting too deep for json.dumps
 
 
-def extract_queryinfo(spark: SparkSession, input_path: str | list[str]) -> DataFrame:
-    """Directory (or list of files) of *.json / *.json.gz QueryInfo files
-    -> summary DF.
+def extract_queryinfo(spark: SparkSession, input_path: str) -> DataFrame:
+    """Directory of *.json / *.json.gz QueryInfo files -> summary DF.
 
     `wholetext` keeps one document per row; gzip decompression is
     transparent. Each task parses its own files — the reference's per-file
@@ -227,16 +239,13 @@ def extract_queryinfo(spark: SparkSession, input_path: str | list[str]) -> DataF
     loose files beside partition directories raise ValueError, because
     Spark would silently skip them.
     """
-    if isinstance(input_path, str):
-        raw = spark.read.option("pathGlobFilter", "*.json*").text(input_path, wholetext=True)
-        if len(raw.columns) > 1 and _has_loose_files(spark, input_path):
-            raise ValueError(
-                f"{input_path} holds *.json* files beside partition directories "
-                f"({', '.join(raw.columns[1:])}); pass one partition directory, "
-                "or move the loose files into a partition"
-            )
-    else:
-        raw = spark.read.text(list(input_path), wholetext=True)
+    raw = spark.read.option("pathGlobFilter", "*.json*").text(input_path, wholetext=True)
+    if len(raw.columns) > 1 and _has_loose_files(spark, input_path):
+        raise ValueError(
+            f"{input_path} holds *.json* files beside partition directories "
+            f"({', '.join(raw.columns[1:])}); pass one partition directory, "
+            "or move the loose files into a partition"
+        )
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

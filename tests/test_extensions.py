@@ -1662,6 +1662,23 @@ def test_near_dedup_keep_best_survivor_policy(spark):
     assert kept2 == [3, 4]
 
 
+def test_ivf_topk_leaves_no_cached_data(spark):
+    """ivf_topk releases its KMeans training cache after the fit and reads
+    its twice-used cell ranking from a checkpoint, so the session's cache
+    manager holds nothing new after the query ran."""
+    import random
+
+    rng = random.Random(3)
+    emb = spark.createDataFrame(
+        [Row(vec_id=i, embedding=[rng.uniform(-1, 1) for _ in range(8)]) for i in range(200)]
+    )
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert cache.isEmpty()
+    similarity.ivf_topk(emb, n_cells=4, n_probe=4, k=3, seed=1, max_iter=5).collect()
+    assert cache.isEmpty()
+
+
 def test_ivf_filtered_ann_matches_filtered_brute_force(spark):
     import random
 

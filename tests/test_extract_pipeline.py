@@ -7,6 +7,7 @@ table-name cascade, join pairing), analyzer outputs checked against
 hand-computed values.
 """
 
+import copy
 import gzip
 import json
 import math
@@ -396,6 +397,52 @@ def test_malformed_document_is_skipped_not_fatal(spark, tmp_path, fixture_rows, 
         (tmp_path / f"q{i:03d}.json").write_text(json.dumps(doc))
     (tmp_path / "bad.json").write_text(json.dumps(_MALFORMED[bad]))
     assert _extract_rows(spark, tmp_path) == fixture_rows
+
+
+def _one_value_replaced(path, value):
+    """The first fixture document as _BAD_ID with the value at `path` replaced."""
+    doc = copy.deepcopy(fixtures()[0])
+    doc["queryId"] = _BAD_ID
+    node = doc
+    for key in path[:-1]:
+        node = node[key]
+    node[path[-1]] = value
+    return doc
+
+
+# (path, value, operators the document keeps; None: the document is skipped)
+_WRONG_SHAPES = {
+    "catalog_properties_string": (("session", "catalogProperties"), "x", None),
+    "varada_string": (("session", "catalogProperties"), {"varada": "x"}, None),
+    "output_stage_string": (("outputStage",), "x", None),
+    "operator_string": (("queryStats", "operatorSummaries", 1), "x", [0, 2]),
+    "operator_summaries_object": (("queryStats", "operatorSummaries"), {"0": {}}, None),
+    "substage_string": (("outputStage", "subStages", 0), "x", None),
+    "task_stats_string": (("outputStage", "subStages", 0, "tasks", 0, "stats"), "x", None),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_WRONG_SHAPES))
+def test_wrong_shape_value_skips_document_or_operator(spark, tmp_path, fixture_rows, case):
+    """A nested QueryInfo value of the wrong JSON type skips its document,
+    or, for an operatorSummaries entry, drops that operator: the extract
+    job succeeds and every other record is unchanged."""
+    path, value, kept = _WRONG_SHAPES[case]
+    for i, doc in enumerate(fixtures()):
+        (tmp_path / f"q{i:03d}.json").write_text(json.dumps(doc))
+    (tmp_path / "bad.json").write_text(json.dumps(_one_value_replaced(path, value)))
+    rows = _extract_rows(spark, tmp_path)
+    assert [r for r in rows if r.query_id != _BAD_ID] == fixture_rows
+    bad = [r.asDict(recursive=True) for r in rows if r.query_id == _BAD_ID]
+    if kept is None:
+        assert bad == []
+    else:
+        source = next(
+            r.asDict(recursive=True) for r in fixture_rows
+            if r.query_id == fixtures()[0]["queryId"]
+        )
+        source.update(query_id=_BAD_ID, operators=[source["operators"][i] for i in kept])
+        assert bad == [source]
 
 
 def test_min_row_parallelism_is_noop_when_scan_is_wide(spark):
